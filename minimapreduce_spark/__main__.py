@@ -11,8 +11,9 @@ Here both entry points are::
     python -m minimapreduce_spark --sequential wc OUT_DIR data/a.txt ...
 
 The app name replaces the reference's ``.so`` plugin selection
-(main/mrworker.go:36-55); ``--n-reduce`` replaces the hardcoded
-nReduce=10 (main/mrmaster.go:23). Output is the reference's sink
+(main/mrworker.go:36-55); ``--n-reduce`` pins the reduce width that
+the reference hardcodes as nReduce=10 (main/mrmaster.go:23); left out,
+Spark sizes it from the input. Output is the reference's sink
 format: ``"key value"`` lines, one part file per reduce partition
 (mr/worker.go:159-174), or a single ``mr-out-0`` in sequential mode
 (main/mrsequential.go:81).
@@ -27,12 +28,7 @@ import re
 import sys
 
 from minimapreduce_spark import mrapps
-from minimapreduce_spark.mapreduce import (
-    DEFAULT_N_REDUCE,
-    run_job,
-    run_job_sequential,
-    write_text_output,
-)
+from minimapreduce_spark.mapreduce import run_job, run_job_sequential, write_text_output
 
 APPS = {
     "wc": (mrapps.wc_map, mrapps.wc_reduce),
@@ -118,7 +114,12 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     )
     ap.add_argument("out_dir")
     ap.add_argument("inputs", nargs="+", help="input text files or globs")
-    ap.add_argument("--n-reduce", type=int, default=DEFAULT_N_REDUCE)
+    ap.add_argument(
+        "--n-reduce",
+        type=int,
+        default=None,
+        help="reduce partitions (default: Spark picks the width from the input)",
+    )
     ap.add_argument(
         "--master",
         default=None,

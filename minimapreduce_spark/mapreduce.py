@@ -15,6 +15,15 @@ per-partition sort → streaming run-detection grouping
                   portable_hash)``. The exact hash differs (FNV vs
                   Python's portable hash) — the contract is only "same
                   key → same partition", which both satisfy.
+- nReduce       → Spark's default reduce width unless the caller pins
+                  one: ``spark.default.parallelism`` if set, else the
+                  map side's partition count, which Spark sizes from
+                  the input (R follows the data, Dean & Ghemawat, OSDI
+                  2004, §3.5). The reference's constant nReduce=10
+                  (main/mrmaster.go:23) is not copied: each reduce
+                  partition is a Python task with a fixed set-up cost
+                  that no amount of data amortizes, so a width wider
+                  than the data only adds tasks.
 - sorted group  → ``itertools.groupby`` over the partition iterator:
                   the same single-pass run detection as the reference,
                   but streaming — it never materializes a whole bucket
@@ -27,7 +36,8 @@ per-partition sort → streaming run-detection grouping
 Scale note (SURVEY §7 "hard parts"): whole-file-per-record matches the
 reference (one file = one split, mr/master.go:327-338) and is fine for
 book-sized inputs, but wrong for 100 TB; ``source_mode="lines"`` reads
-line-split records instead so map tasks scale with bytes, not files.
+line-split records instead so map tasks scale with bytes, not files;
+with the default width the reduce side then scales with them too.
 """
 
 from __future__ import annotations
@@ -41,7 +51,18 @@ from pyspark.sql import functions as F
 MapF = Callable[[str, str], Iterable[tuple[str, str]]]
 ReduceF = Callable[[str, list[str]], str]
 
-DEFAULT_N_REDUCE = 10  # the reference driver's hardcoded width, main/mrmaster.go:23
+
+def _glob(spark: SparkSession, pattern: str) -> list[str]:
+    """The paths a Hadoop glob matches, listed through the JVM's
+    ``FileSystem`` so every scheme Spark can read works. Handing
+    ``spark.read.text`` the concrete paths keeps it from probing
+    ``<glob>/_spark_metadata``, which logs a FileNotFoundException
+    stack trace on every read of a glob."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(pattern)
+    matches = path.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(path)
+    if not matches:
+        raise FileNotFoundError(f"no input matches {pattern!r}")
+    return [m.getPath().toString() for m in matches]
 
 
 def _source_rdd(spark: SparkSession, source, source_mode: str):
@@ -58,7 +79,7 @@ def _source_rdd(spark: SparkSession, source, source_mode: str):
         # the real input filename (mr/worker.go:68); input_file_name()
         # preserves that contract for line-split records too (the URI
         # scheme prefix is stripped so names match the whole-file mode).
-        text = spark.read.text(source).select(
+        text = spark.read.text(_glob(spark, source)).select(
             F.regexp_replace(F.input_file_name(), r"^file:/*", "/").alias("name"),
             F.col("value"),
         )
@@ -76,10 +97,16 @@ def run_job(
     source,
     mapf: MapF,
     reducef: ReduceF,
-    n_reduce: int = DEFAULT_N_REDUCE,
+    n_reduce: int | None = None,
     source_mode: str = "whole_files",
 ) -> DataFrame:
     """Run a reference-style MapReduce job; returns DataFrame(key, value).
+
+    ``n_reduce=None`` lets Spark pick the reduce width: the session's
+    ``spark.default.parallelism`` if set, else the number of map
+    partitions. Each reduce partition is a Python task with a fixed
+    start-up cost, so the width follows the input rather than a
+    constant. An explicit ``n_reduce`` (floored at 1) pins it.
 
     Output is partition-count invariant: any ``n_reduce`` yields the same
     (key, value) set, exactly as the reference's output is invariant to
@@ -91,7 +118,9 @@ def run_job(
     records = _source_rdd(spark, source, source_mode)
     kvs = records.flatMap(lambda nc: mapf(nc[0], nc[1]))
     parted = kvs.repartitionAndSortWithinPartitions(
-        numPartitions=max(int(n_reduce), 1), partitionFunc=portable_hash, ascending=True
+        numPartitions=None if n_reduce is None else max(int(n_reduce), 1),
+        partitionFunc=portable_hash,
+        ascending=True,
     )
 
     def reduce_partition(it: Iterator[tuple[str, str]]):

@@ -38,7 +38,7 @@ def _docs_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """wc via the compat layer (mrapps/wc.go semantics, run_job engine)."""
-    out = run_job(spark, _docs_source(spark, sf_dir), mrapps.wc_map, mrapps.wc_reduce, n_reduce=8)
+    out = run_job(spark, _docs_source(spark, sf_dir), mrapps.wc_map, mrapps.wc_reduce)
     return out.select(F.col("key").alias("word"), F.col("value").cast("bigint").alias("cnt"))
 
 
@@ -65,9 +65,7 @@ def mr_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """indexer via the compat layer — note the reference sorts doc names
     as STRINGS (mrapps/indexer.go:37), so the oracle orders by the varchar
     cast, unlike the numeric sort in the native inverted_index query."""
-    out = run_job(
-        spark, _docs_source(spark, sf_dir), mrapps.indexer_map, mrapps.indexer_reduce, n_reduce=8
-    )
+    out = run_job(spark, _docs_source(spark, sf_dir), mrapps.indexer_map, mrapps.indexer_reduce)
     return out.select(F.col("key").alias("word"), F.col("value").alias("index_entry"))
 
 
@@ -116,5 +114,5 @@ def mr_reduce_side_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("nation").alias("name"),
         F.concat_ws("|", "n_regionkey", "n_name").alias("contents"),
     )
-    out = run_job(spark, region.unionByName(nation), _join_map, _join_reduce, n_reduce=4)
+    out = run_job(spark, region.unionByName(nation), _join_map, _join_reduce)
     return out

@@ -3,9 +3,10 @@
 The reference engine's only tunables were ``nReduce`` (shuffle width,
 mr/master.go:305-345) and a 10 s straggler timeout (mr/master.go:240).
 Spark subsumes both: shuffle width is ``spark.sql.shuffle.partitions``
-(+ AQE coalescing at runtime), and straggler recovery is speculation /
-task retry config. Everything here is config, not code — per SURVEY §4
-no custom scheduler is needed.
+(+ AQE coalescing at runtime) for DataFrames and Spark's default reduce
+width for ``run_job``'s RDD shuffle (mapreduce.py says why), and
+straggler recovery is speculation / task retry config. Everything here
+is config, not code — per SURVEY §4 no custom scheduler is needed.
 """
 
 from __future__ import annotations

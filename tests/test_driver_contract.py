@@ -151,7 +151,7 @@ def rotation_violations(
             f"never-driver-verified queries missing from the window: "
             f"{sorted(closure - window)}"
         )
-    touched &= registry
+    touched = touched & registry
     if not touched <= window:
         viol.append(
             f"touched-since-verified queries missing from the window: "

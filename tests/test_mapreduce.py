@@ -50,9 +50,21 @@ def test_n_reduce_invariance(spark):
     """Same (key, value) set for any shuffle width — the reference's
     nReduce-invariance (output compared as sorted concatenation)."""
     results = {
-        n: _distributed(spark, mrapps.wc_map, mrapps.wc_reduce, n_reduce=n) for n in (1, 3, 7)
+        n: _distributed(spark, mrapps.wc_map, mrapps.wc_reduce, n_reduce=n)
+        for n in (1, 3, 7, None)
     }
-    assert results[1] == results[3] == results[7]
+    assert results[1] == results[3] == results[7] == results[None]
+
+
+def test_default_width_follows_the_input(spark):
+    """With no n_reduce the reduce side is as wide as the map side (the
+    test session sets no spark.default.parallelism), not a constant."""
+    assert not spark.sparkContext.getConf().contains("spark.default.parallelism")
+    docs = spark.createDataFrame(SMALL_CORPUS, "name string, contents string")
+    for width in (1, 3):
+        source = docs.repartition(width)
+        df = run_job(spark, source, mrapps.wc_map, mrapps.wc_reduce)
+        assert df.rdd.getNumPartitions() == source.rdd.getNumPartitions() == width
 
 
 def test_reduce_parallelism(spark):
@@ -171,7 +183,7 @@ _corpus = st.lists(
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(corpus=_corpus, n_reduce=st.sampled_from([1, 3, 10]))
+@given(corpus=_corpus, n_reduce=st.sampled_from([1, 3, 10, None]))
 def test_runjob_equals_sequential_for_any_corpus(spark, corpus, n_reduce):
     for mapf, reducef in (
         (mrapps.wc_map, mrapps.wc_reduce),
@@ -405,3 +417,13 @@ def test_line_mode_passes_real_filenames(spark, tmp_path):
         assert got == expected_counts, (mode, rows)
         # full paths, not synthetic constants
         assert all(r.key.endswith((".txt",)) and "/" in r.key for r in rows), rows
+
+
+def test_line_mode_glob_without_matches_raises(spark, tmp_path):
+    """An empty lines-mode glob is an error, not an empty result."""
+    import pytest
+
+    with pytest.raises(FileNotFoundError, match="no input matches"):
+        run_job(
+            spark, str(tmp_path / "*.txt"), mrapps.wc_map, mrapps.wc_reduce, source_mode="lines"
+        )
