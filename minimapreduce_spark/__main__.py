@@ -28,7 +28,12 @@ import re
 import sys
 
 from minimapreduce_spark import mrapps
-from minimapreduce_spark.mapreduce import run_job, run_job_sequential, write_text_output
+from minimapreduce_spark.mapreduce import (
+    read_lines,
+    run_job,
+    run_job_sequential,
+    write_text_output,
+)
 
 APPS = {
     "wc": (mrapps.wc_map, mrapps.wc_reduce),
@@ -159,7 +164,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         # reference CLI (one task per file) even for local paths
         source = _read_files(args.inputs)
     else:
-        source = ",".join(args.inputs)
+        source = read_lines(spark, args.inputs)
     df = run_job(
         spark, source, mapf, reducef, n_reduce=args.n_reduce, source_mode=args.source_mode
     )

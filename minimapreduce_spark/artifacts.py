@@ -1,32 +1,42 @@
-"""Artifact retention (VACUUM) for the persisted index/view families.
+"""Publish and retention (VACUUM) for the persisted index/view families.
 
-Every artifact family in the engine shares one storage discipline:
-a deterministic base root (``minimapreduce_minhash_<tag>``,
-``minimapreduce_ivfpq_<tag>``, ``minimapreduce_joinview_<tag>``)
-published by atomic rename, then derived roots whose names STRICTLY
-EXTEND the parent's — ``<root>_<sha8(tag)>`` for appends (chainable),
-``<root>_compact`` for compactions, ``<root>_rebuilt`` /
-``<root>_stream_rebuilt`` for the IVM fold-ins. Appends fold the
-parent's data files in as HARDLINKS, so a derived root is
-self-contained: unlinking the parent's directory entries decrements
-link counts but never destroys an inode a derived root still names.
+Every create-once artifact in the engine — the index and view roots,
+the staged stream sources — is published by ``publish``, the task
+output discipline of MapReduce (Dean & Ghemawat, OSDI 2004, §3.3)
+applied to a directory: ``write`` fills a private hidden stage
+(``.stage-*``) next to the root, the stage must carry the artifact's
+marker (``buckets``, ``codes``, ``view``, ``_SUCCESS``, ``_DONE``), a
+derived root records its parent in ``_PARENT``, and one
+``os.rename`` moves the stage into place. A reader therefore sees the
+whole artifact or none of it; a racing publisher whose rename loses to
+a complete root returns that root; any other failure raises, and the
+stage never outlives the call. The one replace-in-place swap, for
+mutable state tables, is ``sources.formats.publish_atomic``.
 
-That gives retention a DERIVATION-AWARE liveness rule (round-11, the
-round-10 ADVICE fix — the earlier purely name-based rule had false
-positives: ``ivfpq_base_index_build`` publishes at
-``<full-index-root>_base13``, a SIBLING whose name extends the live
-full index's without deriving from it, so a name-based vacuum would
-delete a live serving artifact whose data the sibling does NOT
-hardlink-protect):
+The families share a naming scheme (``FAMILIES``): a deterministic
+base root ``<prefix><tag>`` under the temp dir, then derived roots
+whose names STRICTLY EXTEND the parent's — ``<root>_<sha8(tag)>`` for
+appends (chainable), ``<root>_compact`` for compactions,
+``<root>_rebuilt`` / ``<root>_stream_rebuilt`` for the IVM fold-ins.
+Appends fold the parent's data files in as HARDLINKS
+(``link_parent_files``), so a derived root is self-contained:
+unlinking the parent's directory entries decrements link counts but
+never destroys an inode a derived root still names.
 
-  every derived root (append / compact / rebuild) records its parent's
-  basename in a ``_PARENT`` marker file written into the stage BEFORE
-  the atomic publish; a published root is SUPERSEDED iff some other
-  PUBLISHED root explicitly CLAIMS it as parent. Unclaimed roots —
-  leaves, siblings, independently-built bases — are live. A root
-  published before this discipline carries no claim and therefore
-  never supersedes anything (the safe direction: storage kept, never
-  data destroyed).
+That gives retention a DERIVATION-AWARE liveness rule (the earlier
+purely name-based rule had false positives: ``ivfpq_base_index_build``
+publishes at ``<full-index-root>_base13``, a SIBLING whose name
+extends the live full index's without deriving from it, so a
+name-based vacuum would delete a live serving artifact whose data the
+sibling does NOT hardlink-protect):
+
+  every derived root (append / compact / rebuild) publishes with a
+  ``_PARENT`` marker naming its parent's basename; a published root is
+  SUPERSEDED iff some other PUBLISHED root explicitly CLAIMS it as
+  parent. Unclaimed roots — leaves, siblings, independently-built
+  bases — are live. A root published before this discipline carries
+  no claim and therefore never supersedes anything (the safe
+  direction: storage kept, never data destroyed).
 
 ``vacuum_superseded_roots`` deletes superseded roots once the grace
 window has elapsed SINCE SUPERSESSION — age is measured from the
@@ -49,18 +59,85 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 import time
+from typing import Callable
 
 
 PARENT_MARKER = "_PARENT"
 
+# family descriptors: (root-name prefix, published-marker subdir)
+FAMILIES: dict[str, tuple[str, str]] = {
+    "minhash_band_index": ("minimapreduce_minhash_", "buckets"),
+    "ivfpq_index": ("minimapreduce_ivfpq_", "codes"),
+    "join_view": ("minimapreduce_joinview_", "view"),
+}
+
+
+def family_root(family: str, tag: str) -> str:
+    """The deterministic base root of ``family`` for ``tag``."""
+    return os.path.join(tempfile.gettempdir(), FAMILIES[family][0] + tag)
+
+
+def publish(
+    root: str,
+    marker: str,
+    write: Callable[[str], None],
+    parent: str | None = None,
+) -> str:
+    """Create ``root`` once: return it untouched if ``root/marker``
+    exists, else call ``write(stage)`` on a fresh hidden stage next to
+    ``root`` (same filesystem, so the rename is atomic), require
+    ``stage/marker``, claim ``parent`` if given, and rename the stage
+    into place. A failed rename is a lost race only when ``root/marker``
+    now exists; otherwise it raises. The stage is removed on every
+    path out."""
+    if os.path.exists(os.path.join(root, marker)):
+        return root
+    stage = tempfile.mkdtemp(
+        prefix=".stage-", dir=os.path.dirname(os.path.abspath(root))
+    )
+    try:
+        write(stage)
+        if not os.path.exists(os.path.join(stage, marker)):
+            raise RuntimeError(f"publish {root}: the write left no {marker!r}")
+        if parent is not None:
+            claim_parent(stage, parent)
+        try:
+            os.rename(stage, root)
+        except OSError:
+            if not os.path.exists(os.path.join(root, marker)):
+                raise
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return root
+
+
+def link_parent_files(stage: str, parent_root: str, subdirs) -> None:
+    """Fold a parent root's parquet files into an append's stage by
+    HARDLINK, each as ``base-<name>`` under the same relative
+    directory (partition dirs included): zero bytes copied, and the
+    derived root stays readable after the parent is vacuumed."""
+    for sub in subdirs:
+        src_dir = os.path.join(parent_root, sub)
+        for dirpath, _dirs, files in os.walk(src_dir):
+            dst_dir = os.path.normpath(
+                os.path.join(stage, sub, os.path.relpath(dirpath, src_dir))
+            )
+            os.makedirs(dst_dir, exist_ok=True)
+            for f in files:
+                if f.endswith(".parquet"):
+                    os.link(
+                        os.path.join(dirpath, f), os.path.join(dst_dir, f"base-{f}")
+                    )
+
 
 def claim_parent(stage_or_root: str, parent_root: str) -> None:
     """Record inside a derived root WHICH root it was derived from —
-    called by every append/compact/rebuild publisher on its staging
-    dir before the atomic rename, so the claim is part of the same
-    all-or-nothing publish. The claim is what makes a parent
-    vacuum-able: retention never infers derivation from names."""
+    ``publish`` calls it on the stage before the rename, so the claim
+    is part of the same all-or-nothing publish. The claim is what
+    makes a parent vacuum-able: retention never infers derivation from
+    names."""
     with open(os.path.join(stage_or_root, PARENT_MARKER), "w") as f:
         f.write(os.path.basename(os.path.normpath(parent_root)))
 
@@ -184,22 +261,12 @@ def vacuum_superseded_roots(
     return report
 
 
-# family descriptors: (root-name prefix, published-marker subdir)
-FAMILIES: dict[str, tuple[str, str]] = {
-    "minhash_band_index": ("minimapreduce_minhash_", "buckets"),
-    "ivfpq_index": ("minimapreduce_ivfpq_", "codes"),
-    "join_view": ("minimapreduce_joinview_", "view"),
-}
-
-
 def vacuum_all_families(
     parent: str | None = None, min_age_s: float = 0.0, dry_run: bool = False
 ) -> dict[str, dict]:
     """Run retention over every artifact family in one sweep (the
     scheduled nightly job). ``parent`` defaults to the tempdir the
     deterministic roots publish into."""
-    import tempfile
-
     parent = parent or tempfile.gettempdir()
     return {
         fam: vacuum_superseded_roots(parent, prefix, marker, min_age_s, dry_run)
@@ -259,8 +326,6 @@ def nightly_maintenance(
     Idempotent by construction: a compacted leaf is not fragmented, so
     the second run compacts nothing; vacuum with nothing superseded
     deletes nothing."""
-    import tempfile
-
     from minimapreduce_spark.operators.dedup import minhash_index_compact
     from minimapreduce_spark.operators.similarity import ivfpq_index_compact
 

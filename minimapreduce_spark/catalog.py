@@ -126,7 +126,6 @@ def fan_out(
     spark: SparkSession,
     df: DataFrame,
     keys: list[str] | None = None,
-    width: int | None = None,
 ) -> DataFrame:
     """Repartition a *small* scan up to the session's core count before
     an expensive per-row derivation (shingling, tokenizing, regex
@@ -148,16 +147,8 @@ def fan_out(
     hash repartition on a high-cardinality deterministic key skips
     that sort and is retry-safe by construction. Prefer keys whenever
     the frame has a natural unique key.
-
-    ``width``: cap the fan-out below the session's core count — for
-    lanes whose per-row work crosses the Python boundary, where a
-    32-way fan-out of a few hundred rows spends more on per-task
-    Arrow/worker fixed costs than the work itself (round-11 verdict
-    item 5). Callers derive it from row volume, never a constant.
     """
     n = spark.sparkContext.defaultParallelism
-    if width is not None:
-        n = max(1, min(n, width))
     if df.rdd.getNumPartitions() >= n:
         return df
     if keys:

@@ -65,6 +65,19 @@ def _glob(spark: SparkSession, pattern: str) -> list[str]:
     return [m.getPath().toString() for m in matches]
 
 
+def read_lines(spark: SparkSession, patterns: list[str]) -> DataFrame:
+    """(name, value) per line of every file the globs match: the
+    lines-mode input. The reference ALWAYS hands mapf the real input
+    filename (mr/worker.go:68); input_file_name() preserves that
+    contract for line-split records too (the URI scheme prefix is
+    stripped so names match the whole-file mode)."""
+    paths = [p for pattern in patterns for p in _glob(spark, pattern)]
+    return spark.read.text(paths).select(
+        F.regexp_replace(F.input_file_name(), r"^file:/*", "/").alias("name"),
+        F.col("value"),
+    )
+
+
 def _source_rdd(spark: SparkSession, source, source_mode: str):
     """Normalize the input to RDD[(name, contents)].
 
@@ -75,15 +88,7 @@ def _source_rdd(spark: SparkSession, source, source_mode: str):
     if isinstance(source, str):
         if source_mode == "whole_files":
             return sc.wholeTextFiles(source)
-        # line mode: one record per line. The reference ALWAYS hands mapf
-        # the real input filename (mr/worker.go:68); input_file_name()
-        # preserves that contract for line-split records too (the URI
-        # scheme prefix is stripped so names match the whole-file mode).
-        text = spark.read.text(_glob(spark, source)).select(
-            F.regexp_replace(F.input_file_name(), r"^file:/*", "/").alias("name"),
-            F.col("value"),
-        )
-        return text.rdd.map(tuple)
+        return read_lines(spark, [source]).rdd.map(tuple)
     if isinstance(source, DataFrame):
         c0, c1 = source.columns[:2]
         return source.select(

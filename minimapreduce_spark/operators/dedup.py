@@ -48,6 +48,12 @@ from pyspark.sql.window import Window as W
 
 import os
 
+from minimapreduce_spark.artifacts import (
+    FAMILIES,
+    family_root,
+    link_parent_files,
+    publish,
+)
 from minimapreduce_spark.catalog import fan_out, load_table, table_path
 from minimapreduce_spark.registry import register
 
@@ -706,10 +712,9 @@ def minhash_index_root(sf_dir: str, batch_mod: int | None = None) -> str:
     never share one artifact — round-9 review finding), so a
     regenerated fixture gets a fresh root instead of silently probing a
     stale index; NOT session-keyed (write-once/probe-many across
-    sessions is the point). Concurrency is handled by the atomic-rename
-    publish in `minhash_index_build`."""
+    sessions is the point). Concurrency is handled by
+    `artifacts.publish`."""
     import hashlib
-    import tempfile
 
     from minimapreduce_spark.catalog import content_fingerprint, table_path
 
@@ -718,7 +723,10 @@ def minhash_index_root(sf_dir: str, batch_mod: int | None = None) -> str:
     fp = content_fingerprint(table_path(sf_dir, "documents"))
     key = f"{os.path.abspath(sf_dir)}|{fp}|m{batch_mod}"
     tag = hashlib.sha256(key.encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"minimapreduce_minhash_{tag}")
+    return family_root("minhash_band_index", tag)
+
+
+MINHASH_INDEX_MARKER = FAMILIES["minhash_band_index"][1]
 
 
 def minhash_index_build(
@@ -745,44 +753,41 @@ def minhash_index_build(
     rows (doc_id % batch_mod != 0), matching the registered probe's
     batch predicate by construction.
 
-    Publish is ATOMIC: build in a unique temp dir, os.rename into
-    place; a racing builder loses the rename and discards its copy, so
-    concurrent sessions share one artifact and never observe a
-    half-written index. Rebuild happens only when the root is absent;
-    the artifact is a deterministic pure function of the fixture
-    (xxhash shingles/signatures, no RNG), which is what makes
-    probe-from-artifact ≡ inline-recompute — pinned in pytest both
-    frame-by-frame (DuckDB reading the artifact parquet) and
+    Published by `artifacts.publish`, so concurrent sessions share one
+    artifact and never observe a half-written index. Rebuild happens
+    only when the root is absent; the artifact is a deterministic pure
+    function of the fixture (xxhash shingles/signatures, no RNG), which
+    is what makes probe-from-artifact ≡ inline-recompute — pinned in
+    pytest both frame-by-frame (DuckDB reading the artifact parquet) and
     end-to-end (probe output == `dedup_minhash_incremental`)."""
-    import shutil
-    import tempfile
 
-    root = root or minhash_index_root(sf_dir, batch_mod)
-    if os.path.isdir(os.path.join(root, "buckets")):
-        return root
-    corpus = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") % batch_mod != 0)
+    def write(stage: str) -> None:
+        corpus = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text")
+            .where(F.col("doc_id") % batch_mod != 0)
+        )
+        base = shingle_hashes(
+            spark, sf_dir, distinct=False, docs=fan_out(spark, corpus)
+        ).localCheckpoint(eager=False)
+        sigs = minhash_signatures(spark, sf_dir, shingles=base)
+        _write_band_index(stage, minhash_band_buckets(sigs), base.distinct())
+
+    return publish(
+        root or minhash_index_root(sf_dir, batch_mod), MINHASH_INDEX_MARKER, write
     )
-    base = shingle_hashes(
-        spark, sf_dir, distinct=False, docs=fan_out(spark, corpus)
-    ).localCheckpoint(eager=False)
-    sigs = minhash_signatures(spark, sf_dir, shingles=base)
-    buckets = minhash_band_buckets(sigs)
-    stage = tempfile.mkdtemp(prefix="minhash_build_")
+
+
+def _write_band_index(stage: str, buckets: DataFrame, shingles: DataFrame) -> None:
+    """The band index's two tables: ``buckets`` partitioned by band,
+    one task per band, and ``shingles``."""
     (
         buckets.repartition("band")
         .write.mode("overwrite")
         .partitionBy("band")
         .parquet(os.path.join(stage, "buckets"))
     )
-    base.distinct().write.mode("overwrite").parquet(os.path.join(stage, "shingles"))
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race: reuse winner's
-    return root
+    shingles.write.mode("overwrite").parquet(os.path.join(stage, "shingles"))
 
 
 def probe_band_index(
@@ -937,57 +942,25 @@ def minhash_index_append(
     HARDLINK the base artifact's data files alongside them (metadata-
     only, never rewrites corpus bytes — the manifest-append discipline
     of log-structured table formats: an append adds files to the
-    partition, it does not compact yesterday), (4) atomic-rename
-    publish. A racing appender loses the rename and reuses the
-    winner's copy; the appended artifact is a deterministic pure
-    function of (fixture, batch predicate), which is what makes
-    probe-after-append ≡ full rebuild — pinned in pytest frame-by-
-    frame against `minhash_index_build` over corpus ∪ batch.
+    partition, it does not compact yesterday), (4) `artifacts.publish`
+    with the base as the claimed parent. The appended artifact is a
+    deterministic pure function of (fixture, batch predicate), which
+    is what makes probe-after-append ≡ full rebuild — pinned in pytest
+    frame-by-frame against `minhash_index_build` over corpus ∪ batch.
 
     Per-band partition pruning survives the append: batch bucket files
     land inside the same band=N partition dirs the base files link
     into. Returns the appended artifact's root."""
     import hashlib
-    import shutil
-    import tempfile
 
     if root is None:
         root = f"{base_root}_{hashlib.sha256(tag.encode()).hexdigest()[:8]}"
-    if os.path.isdir(os.path.join(root, "buckets")):
-        return root
-    buckets_b, shingles_b = _batch_band_frames(spark, sf_dir, batch)
-    stage = tempfile.mkdtemp(prefix="minhash_append_")
-    (
-        buckets_b.repartition("band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(os.path.join(stage, "buckets"))
-    )
-    shingles_b.write.mode("overwrite").parquet(os.path.join(stage, "shingles"))
-    # fold the base artifact in by hardlink: one link per data file,
-    # zero bytes copied, zero corpus-side compute
-    for sub in ("buckets", "shingles"):
-        src_dir = os.path.join(base_root, sub)
-        for dirpath, _dirs, files in os.walk(src_dir):
-            rel = os.path.relpath(dirpath, src_dir)
-            dst_dir = os.path.join(stage, sub, rel) if rel != "." else os.path.join(stage, sub)
-            os.makedirs(dst_dir, exist_ok=True)
-            for f in files:
-                if f.endswith(".parquet"):
-                    os.link(
-                        os.path.join(dirpath, f),
-                        os.path.join(dst_dir, f"base-{f}"),
-                    )
-    # derivation claim for retention (artifacts.vacuum_superseded_roots):
-    # written into the stage so it publishes atomically with the data
-    from minimapreduce_spark.artifacts import claim_parent
 
-    claim_parent(stage, base_root)
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race: reuse winner's
-    return root
+    def write(stage: str) -> None:
+        _write_band_index(stage, *_batch_band_frames(spark, sf_dir, batch))
+        link_parent_files(stage, base_root, ("buckets", "shingles"))
+
+    return publish(root, MINHASH_INDEX_MARKER, write, parent=base_root)
 
 
 def minhash_index_compact(
@@ -1002,8 +975,8 @@ def minhash_index_compact(
     by construction — the same rows, read back through the explicit
     artifact schemas and re-written with `repartition("band")` +
     `partitionBy("band")` so each band's rows land in exactly one
-    task → one file per band dir on disk. Atomic-rename publish, same
-    racing-loser discipline as build/append.
+    task → one file per band dir on disk. Published by
+    `artifacts.publish`, like build/append.
 
     This is the half of the LSM contract append deliberately defers:
     append is O(batch compute + #files metadata) and leaves small
@@ -1012,36 +985,18 @@ def minhash_index_compact(
     job, not part of the probe path). Zero documents-table scans —
     pytest-pinned, along with compact(append(append)) ≡ rebuild
     row-set equality and the one-file-per-band layout."""
-    import shutil
-    import tempfile
+
+    def write(stage: str) -> None:
+        buckets = spark.read.schema(MINHASH_BUCKET_SCHEMA).parquet(
+            os.path.join(root, "buckets")
+        )
+        shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
+            os.path.join(root, "shingles")
+        )
+        _write_band_index(stage, buckets, shingles.repartition(4))
 
     out_root = out_root or f"{root}_compact"
-    if os.path.isdir(os.path.join(out_root, "buckets")):
-        return out_root
-    buckets = spark.read.schema(MINHASH_BUCKET_SCHEMA).parquet(
-        os.path.join(root, "buckets")
-    )
-    shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
-    stage = tempfile.mkdtemp(prefix="minhash_compact_")
-    (
-        buckets.repartition("band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(os.path.join(stage, "buckets"))
-    )
-    shingles.repartition(4).write.mode("overwrite").parquet(
-        os.path.join(stage, "shingles")
-    )
-    from minimapreduce_spark.artifacts import claim_parent
-
-    claim_parent(stage, root)  # retention derivation claim
-    try:
-        os.rename(stage, out_root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race
-    return out_root
+    return publish(out_root, MINHASH_INDEX_MARKER, write, parent=root)
 
 
 @register(

@@ -954,12 +954,6 @@ def jpeg_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-# Fan-out width cap for the JPEG codec lane's Python stages (None =
-# the session's defaultParallelism). Probed interleaved in round 12
-# (tools/fanout_width_probe.py) per the round-11 verdict item 5.
-JPEG_FANOUT_WIDTH: int | None = None
-
-
 @register(
     "multimodal_jpeg_decode",
     bench=True,  # the compressed-codec lane: chained Arrow stages, zero shuffles
@@ -1013,7 +1007,6 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         keys=["doc_id"],
-        width=JPEG_FANOUT_WIDTH,
     )
     jpgs = docs.mapInPandas(encode_jpeg, schema="doc_id bigint, payload binary")
     return jpgs.mapInPandas(jpeg_features, schema=JPEG_SCHEMA)

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window as W
 
 import os
 
+from minimapreduce_spark.artifacts import FAMILIES, family_root, publish
 from minimapreduce_spark.catalog import load_table
 from minimapreduce_spark.operators.money import exact_revenue_sum, exact_sum, grid_c
 from minimapreduce_spark.registry import register
@@ -770,7 +771,6 @@ def join_view_root(sf_dir: str) -> str:
     artifact-root discipline (path + content fingerprint of BOTH input
     tables, so a regenerated fixture gets a fresh root)."""
     import hashlib
-    import tempfile
 
     from minimapreduce_spark.catalog import content_fingerprint, table_path
 
@@ -778,39 +778,33 @@ def join_view_root(sf_dir: str) -> str:
     for t in ("orders", "customer"):
         parts.append(content_fingerprint(table_path(sf_dir, t)))
     tag = hashlib.sha256("|".join(parts).encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"minimapreduce_joinview_{tag}")
+    return family_root("join_view", tag)
+
+
+JOIN_VIEW_MARKER = FAMILIES["join_view"][1]
 
 
 def join_view_build(spark: SparkSession, sf_dir: str, root: str | None = None) -> str:
     """BUILD-ONCE: materialize the BASE join view (yesterday's orders ⋈
-    yesterday's customers) as a parquet artifact with atomic-rename
-    publish — the `minhash_index_build` discipline applied to a
-    materialized join view."""
-    import shutil
-    import tempfile
+    yesterday's customers) as a parquet artifact, published by
+    `artifacts.publish` — the `minhash_index_build` discipline applied
+    to a materialized join view."""
 
-    root = root or join_view_root(sf_dir)
-    if os.path.isdir(os.path.join(root, "view")):
-        return root
-    o = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderkey") % IVM_FACT_MOD != 0
-    )
-    c = load_table(spark, sf_dir, "customer").where(
-        F.col("c_custkey") % IVM_DIM_MOD != 0
-    )
-    v = o.join(c, o.o_custkey == c.c_custkey).select(
-        "o_orderkey",
-        "o_custkey",
-        "c_mktsegment",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
-    )
-    stage = tempfile.mkdtemp(prefix="joinview_build_")
-    v.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race
-    return root
+    def write(stage: str) -> None:
+        o = load_table(spark, sf_dir, "orders").where(
+            F.col("o_orderkey") % IVM_FACT_MOD != 0
+        )
+        c = load_table(spark, sf_dir, "customer").where(
+            F.col("c_custkey") % IVM_DIM_MOD != 0
+        )
+        o.join(c, o.o_custkey == c.c_custkey).select(
+            "o_orderkey",
+            "o_custkey",
+            "c_mktsegment",
+            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
+        ).write.mode("overwrite").parquet(os.path.join(stage, JOIN_VIEW_MARKER))
+
+    return publish(root or join_view_root(sf_dir), JOIN_VIEW_MARKER, write)
 
 
 @register("incremental_join_view", oracle=_IVM_VIEW_SQL)
@@ -1000,30 +994,21 @@ def join_view_rebuild(spark: SparkSession, sf_dir: str, root: str | None = None)
     lifecycle that `incremental_join_view_upserts` (merge-on-read)
     defers: fold the day's tombstones, updates, inserts and fact
     arrivals into a FRESH base-view artifact (the maintained view
-    materialized), atomic-rename published next to the original.
+    materialized), published next to the original by `artifacts.publish`.
     After the fold-in, reads are one artifact scan — no anti-join, no
     delta joins — and the next day's deltas maintain against the new
     base. The rebuild pays one maintained-view scan + write (I/O ∝
     view size), which is why it is the scheduled job and merge-on-read
     is the daily path — the compaction discipline
     (`minhash_index_compact`) applied to a materialized view."""
-    import shutil
-    import tempfile
+    base = join_view_root(sf_dir)
 
-    root = root or f"{join_view_root(sf_dir)}_rebuilt"
-    if os.path.isdir(os.path.join(root, "view")):
-        return root
-    maintained = incremental_join_view_upserts(spark, sf_dir)
-    stage = tempfile.mkdtemp(prefix="joinview_rebuild_")
-    maintained.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-    from minimapreduce_spark.artifacts import claim_parent
+    def write(stage: str) -> None:
+        incremental_join_view_upserts(spark, sf_dir).write.mode("overwrite").parquet(
+            os.path.join(stage, JOIN_VIEW_MARKER)
+        )
 
-    claim_parent(stage, join_view_root(sf_dir))  # retention derivation claim
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race
-    return root
+    return publish(root or f"{base}_rebuilt", JOIN_VIEW_MARKER, write, parent=base)
 
 
 @register("incremental_join_view_rebuild", oracle=IVM_UPSERTS_ORACLE, bench=True)

@@ -22,6 +22,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from minimapreduce_spark.artifacts import (
+    FAMILIES,
+    family_root,
+    link_parent_files,
+    publish,
+)
 from minimapreduce_spark.catalog import load_table
 from minimapreduce_spark.registry import register
 
@@ -2785,18 +2791,39 @@ def ivfpq_index_root(sf_dir: str) -> str:
     fixture at the same path gets a fresh root instead of silently
     serving the stale index (round-8 ADVICE). NOT session-keyed — the
     whole point is write-once/serve-many across sessions. Concurrency
-    is handled by the atomic-rename publish in `ivfpq_index_build`, not
-    by per-session paths (contrast `bucketed_join`'s staging, which is
-    rewritten per run and therefore session-keyed)."""
+    is handled by `artifacts.publish`, not by per-session paths
+    (contrast `bucketed_join`'s staging, which is rewritten per run and
+    therefore session-keyed)."""
     import hashlib
-    import tempfile
 
     from minimapreduce_spark.catalog import content_fingerprint, table_path
 
     fp = content_fingerprint(table_path(sf_dir, "embeddings"))
     key = f"{os.path.abspath(sf_dir)}|{fp}"
     tag = hashlib.sha256(key.encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"minimapreduce_ivfpq_{tag}")
+    return family_root("ivfpq_index", tag)
+
+
+IVFPQ_INDEX_MARKER = FAMILIES["ivfpq_index"][1]
+
+
+def _write_ivfpq_index(
+    stage: str, cg: DataFrame, cb: DataFrame, codes: DataFrame
+) -> None:
+    """The index's three tables; ``codes`` partitioned by cell, one
+    task per cell."""
+    cg.write.mode("overwrite").parquet(os.path.join(stage, "centroids"))
+    cb.write.mode("overwrite").parquet(os.path.join(stage, "codebook"))
+    _write_ivfpq_codes(stage, codes)
+
+
+def _write_ivfpq_codes(stage: str, codes: DataFrame) -> None:
+    (
+        codes.repartition("label")
+        .write.mode("overwrite")
+        .partitionBy("label")
+        .parquet(os.path.join(stage, "codes"))
+    )
 
 
 def ivfpq_index_build(spark: SparkSession, sf_dir: str, root: str | None = None) -> str:
@@ -2814,36 +2841,17 @@ def ivfpq_index_build(spark: SparkSession, sf_dir: str, root: str | None = None)
     routed serve scan is partition pruning on disk — the bucketed-by-
     cell layout the IVF posture notes have been naming all along.
 
-    Publish is ATOMIC: the build lands in a unique temp dir and is
-    os.rename'd into place — a racing builder loses the rename and
-    discards its copy, so concurrent sessions share one artifact and
-    never observe a half-written index (the round-7 ADVICE concurrency
-    discipline). Rebuild only happens when the root is absent; the
-    artifact content is a deterministic pure function of the fixture
-    (integer-grid training, deterministic seeds, exact-floor Lloyd),
-    which is what makes serve-from-artifact ≡ inline-train — pinned in
+    Published by `artifacts.publish`, so concurrent sessions share one
+    artifact and never observe a half-written index. Rebuild only
+    happens when the root is absent; the artifact content is a
+    deterministic pure function of the fixture (integer-grid training,
+    deterministic seeds, exact-floor Lloyd), which is what makes serve-from-artifact ≡ inline-train — pinned in
     pytest both frame-by-frame and end-to-end."""
-    import shutil
-    import tempfile
 
-    root = root or ivfpq_index_root(sf_dir)
-    if os.path.isdir(os.path.join(root, "codes")):
-        return root
-    cg, cb, code_arr = _ivfpq_index_frames(spark, sf_dir)
-    stage = tempfile.mkdtemp(prefix="ivfpq_build_")
-    cg.write.mode("overwrite").parquet(os.path.join(stage, "centroids"))
-    cb.write.mode("overwrite").parquet(os.path.join(stage, "codebook"))
-    (
-        code_arr.repartition("label")
-        .write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(os.path.join(stage, "codes"))
-    )
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race: reuse winner's
-    return root
+    def write(stage: str) -> None:
+        _write_ivfpq_index(stage, *_ivfpq_index_frames(spark, sf_dir))
+
+    return publish(root or ivfpq_index_root(sf_dir), IVFPQ_INDEX_MARKER, write)
 
 
 @register("ann_ivfpq_served_topk", oracle=_ivfpq_oracle(), bench=True)
@@ -2951,36 +2959,20 @@ def ivfpq_base_index_build(
     encode on the base population (everything except the
     ``APPEND_MOD`` arrival batch), persisted exactly like
     `ivfpq_index_build` — same three tables, same cell-partitioned
-    codes layout, same atomic-rename publish. The batch's codes are
+    codes layout, same `artifacts.publish`. The batch's codes are
     deliberately ABSENT: they arrive later via `ivfpq_index_append`,
     which is what makes the appended artifact's content an actual
     fold-in rather than a rebuild in disguise."""
-    import shutil
-    import tempfile
+
+    def write(stage: str) -> None:
+        pred = ~(
+            (F.col("vec_id") % APPEND_MOD == 0) & (F.col("vec_id") >= N_QUERIES)
+        )
+        frames = _ivfpq_index_frames(spark, sf_dir, train_pred=pred, encode_pred=pred)
+        _write_ivfpq_index(stage, *frames)
 
     root = root or f"{ivfpq_index_root(sf_dir)}_base{APPEND_MOD}"
-    if os.path.isdir(os.path.join(root, "codes")):
-        return root
-    pred = ~(
-        (F.col("vec_id") % APPEND_MOD == 0) & (F.col("vec_id") >= N_QUERIES)
-    )
-    cg, cb, code_arr = _ivfpq_index_frames(
-        spark, sf_dir, train_pred=pred, encode_pred=pred
-    )
-    stage = tempfile.mkdtemp(prefix="ivfpq_base_")
-    cg.write.mode("overwrite").parquet(os.path.join(stage, "centroids"))
-    cb.write.mode("overwrite").parquet(os.path.join(stage, "codebook"))
-    (
-        code_arr.repartition("label")
-        .write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(os.path.join(stage, "codes"))
-    )
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race
-    return root
+    return publish(root, IVFPQ_INDEX_MARKER, write)
 
 
 def ivfpq_index_append(
@@ -2999,59 +2991,26 @@ def ivfpq_index_append(
     batch's code rows into their cell partitions, and fold the base
     artifact in BY HARDLINK (one link per data file, zero corpus bytes
     copied, centroids/codebook linked unchanged — the
-    `minhash_index_append` manifest-append discipline). Atomic-rename
-    publish; a racing appender loses the rename and reuses the
-    winner's copy.
+    `minhash_index_append` manifest-append discipline), published by
+    `artifacts.publish` with the base as the claimed parent.
 
     Append cost = one narrow encode pass over the batch (two bounded
     broadcasts) + #base-files metadata — independent of base-corpus
     size. Cell-partition pruning survives: batch code files land
     inside the same label=N dirs the base files link into."""
     import hashlib
-    import shutil
-    import tempfile
 
     if root is None:
         root = f"{base_root}_{hashlib.sha256(tag.encode()).hexdigest()[:8]}"
-    if os.path.isdir(os.path.join(root, "codes")):
-        return root
-    cg = spark.read.parquet(os.path.join(base_root, "centroids"))
-    cb = spark.read.parquet(os.path.join(base_root, "codebook"))
-    rsub_b = _ivfpq_rsub(spark, sf_dir, cg, pred=batch_pred)
-    codes_b = _ivfpq_encode(spark, rsub_b, cg, cb)
-    stage = tempfile.mkdtemp(prefix="ivfpq_append_")
-    (
-        codes_b.repartition("label")
-        .write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(os.path.join(stage, "codes"))
-    )
-    for sub in ("codes", "centroids", "codebook"):
-        src_dir = os.path.join(base_root, sub)
-        for dirpath, _dirs, files in os.walk(src_dir):
-            rel = os.path.relpath(dirpath, src_dir)
-            dst_dir = (
-                os.path.join(stage, sub, rel)
-                if rel != "."
-                else os.path.join(stage, sub)
-            )
-            os.makedirs(dst_dir, exist_ok=True)
-            for f in files:
-                if f.endswith(".parquet"):
-                    os.link(
-                        os.path.join(dirpath, f),
-                        os.path.join(dst_dir, f"base-{f}"),
-                    )
-    # derivation claim for retention (artifacts.vacuum_superseded_roots):
-    # written into the stage so it publishes atomically with the data
-    from minimapreduce_spark.artifacts import claim_parent
 
-    claim_parent(stage, base_root)
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race
-    return root
+    def write(stage: str) -> None:
+        cg = spark.read.parquet(os.path.join(base_root, "centroids"))
+        cb = spark.read.parquet(os.path.join(base_root, "codebook"))
+        rsub_b = _ivfpq_rsub(spark, sf_dir, cg, pred=batch_pred)
+        _write_ivfpq_codes(stage, _ivfpq_encode(spark, rsub_b, cg, cb))
+        link_parent_files(stage, base_root, ("codes", "centroids", "codebook"))
+
+    return publish(root, IVFPQ_INDEX_MARKER, write, parent=base_root)
 
 
 def ivfpq_index_compact(
@@ -3065,36 +3024,20 @@ def ivfpq_index_compact(
     fold-ins never rewrite), so the scheduled offline job rewrites
     each label=N partition's files into ONE (centroids/codebook into a
     bounded handful) — content-identical by construction, published by
-    atomic rename with the racing-loser discipline. Compaction pays
+    `artifacts.publish`. Compaction pays
     the codes-table rewrite (I/O ∝ artifact, the scheduled-job half of
     the LSM contract); the serve path afterwards opens one file per
     routed cell instead of one per append day."""
-    import shutil
-    import tempfile
+
+    def write(stage: str) -> None:
+        _write_ivfpq_codes(stage, spark.read.parquet(os.path.join(root, "codes")))
+        for sub in ("centroids", "codebook"):
+            spark.read.parquet(os.path.join(root, sub)).repartition(1).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(stage, sub))
 
     out_root = out_root or f"{root}_compact"
-    if os.path.isdir(os.path.join(out_root, "codes")):
-        return out_root
-    codes = spark.read.parquet(os.path.join(root, "codes"))
-    stage = tempfile.mkdtemp(prefix="ivfpq_compact_")
-    (
-        codes.repartition("label")
-        .write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(os.path.join(stage, "codes"))
-    )
-    for sub in ("centroids", "codebook"):
-        spark.read.parquet(os.path.join(root, sub)).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage, sub))
-    from minimapreduce_spark.artifacts import claim_parent
-
-    claim_parent(stage, root)  # retention derivation claim
-    try:
-        os.rename(stage, out_root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race
-    return out_root
+    return publish(out_root, IVFPQ_INDEX_MARKER, write, parent=root)
 
 
 @register(

@@ -22,16 +22,17 @@ _REPAIR_LOCK_STALE_S = 300.0
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from minimapreduce_spark.artifacts import publish
 from minimapreduce_spark.catalog import content_fingerprint, table_path
 
 _SINK_IDS = itertools.count()
 
 
 def _publish_shards(spark: SparkSession, src_path: str, d: str, n_shards: int) -> None:
-    """Shared atomic shard publish for the two staged stream sources:
-    write ``n_shards`` parquet files to a private stage and os.rename
-    into ``d``; the rename loser discards its stage, so racing sessions
-    share one shard set and a reader never observes a half-written one.
+    """Shared shard publish for the two staged stream sources: write
+    ``n_shards`` parquet files and publish them at ``d`` with
+    `artifacts.publish`, so racing sessions share one shard set and a
+    reader never observes a half-written one.
 
     Self-repair (a pre-atomic-publish crash leaves ``d`` without
     _SUCCESS, making the rename fail forever): repair is SERIALIZED by
@@ -42,10 +43,10 @@ def _publish_shards(spark: SparkSession, src_path: str, d: str, n_shards: int) -
     reader treats as duplicate arrivals). Under the lock _SUCCESS is
     re-checked and only then is the corpse renamed ASIDE to a junk
     path (never rmtree'd in place); a contender that cannot take the
-    lock skips repair entirely — its stage+rename below simply loses
-    to whoever publishes first. A lockfile older than
-    ``_REPAIR_LOCK_STALE_S`` is treated as a crashed repairer's corpse
-    and removed. Junk directories are cleaned up once ``d`` is
+    lock skips repair entirely, and its publish below returns the
+    winner's shard set if one has landed by its rename, or raises. A
+    lockfile older than ``_REPAIR_LOCK_STALE_S`` is treated as a
+    crashed repairer's corpse and removed. Junk directories are cleaned up once ``d`` is
     published (they were only kept so a mid-window move-aside could
     never destroy data)."""
     os.makedirs(os.path.dirname(d), exist_ok=True)
@@ -84,14 +85,14 @@ def _publish_shards(spark: SparkSession, src_path: str, d: str, n_shards: int) -
                     os.unlink(lock)
                 except OSError:
                     pass
-    stage = tempfile.mkdtemp(prefix="stream_shard_stage_", dir=os.path.dirname(d))
-    spark.read.parquet(src_path).repartition(n_shards).write.mode(
-        "overwrite"
-    ).parquet(stage)
-    try:
-        os.rename(stage, d)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race
+    publish(
+        d,
+        "_SUCCESS",
+        lambda stage: spark.read.parquet(src_path)
+        .repartition(n_shards)
+        .write.mode("overwrite")
+        .parquet(stage),
+    )
     if junk is not None and os.path.exists(os.path.join(d, "_SUCCESS")):
         shutil.rmtree(junk, ignore_errors=True)  # publish done: corpse obsolete
 
@@ -201,30 +202,23 @@ def events_stream_redelivered(
         "minimapreduce_stream_redelivered",
         f"{key}_{n_shards}_{redeliver_mod}",
     )
-    if not os.path.exists(os.path.join(d, "_DONE")):
-        # Stage into a process-private temp dir and atomically rename into
-        # place: the shard loop appends n_shards times, so an interrupted
-        # build that a retry appended onto would silently duplicate rows
-        # beyond the planted redelivery. With rename(2) the final directory
-        # either exists complete (with _DONE) or not at all (round-4
-        # ADVICE; the sibling events_stream_sharded is immune because its
-        # build is a single overwrite write).
-        tmp = f"{d}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    # The shard loop appends n_shards times, so an interrupted build
+    # that a retry appended onto would duplicate rows beyond the planted
+    # redelivery; `artifacts.publish` builds each attempt in a fresh
+    # stage, so ``d`` exists complete (with _DONE) or not at all.
+    def write(stage: str) -> None:
         base = spark.read.parquet(path)
         for i in range(n_shards):
             shard = base.where(
                 (F.col("event_id") % n_shards == i)
                 | (F.col("event_id") % redeliver_mod == 0)
             )
-            shard.coalesce(1).write.mode("append").parquet(tmp)
-        with open(os.path.join(tmp, "_DONE"), "w") as f:
-            f.write("ok")
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            # a concurrent builder won the rename; its complete copy stands
-            shutil.rmtree(tmp, ignore_errors=True)
+            shard.coalesce(1).write.mode("append").parquet(stage)
+        open(os.path.join(stage, "_DONE"), "w").close()
+
+    os.makedirs(os.path.dirname(d), exist_ok=True)
+    publish(d, "_DONE", write)
     schema = spark.read.parquet(d).schema
     sdf = (
         spark.readStream.schema(schema)
@@ -260,8 +254,8 @@ def events_stream_time_sliced_redelivered(
     needs (the hash-sharded sibling ``events_stream_redelivered``
     models the UNBOUNDED-horizon source, which forces the full-ledger
     consumer). Built with pyarrow (slices are verbatim row copies, the
-    parquet schema survives bit-for-bit) and staged atomically (temp
-    dir + rename) like the sibling."""
+    parquet schema survives bit-for-bit) and published by
+    `artifacts.publish` like the sibling."""
     from pyspark.sql.types import LongType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -275,15 +269,13 @@ def events_stream_time_sliced_redelivered(
         "minimapreduce_stream_timesliced",
         f"{key}_{n_slices}_{redeliver_mod}",
     )
-    if not os.path.exists(os.path.join(d, "_DONE")):
+
+    def write(stage: str) -> None:
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        tmp = f"{d}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
         t = pq.read_table(path)
         t = t.take(
             pc.sort_indices(
@@ -301,16 +293,14 @@ def events_stream_time_sliced_redelivered(
                 parts.append(
                     t.filter(pa.array((sl == i - 1) & (ids % redeliver_mod == 0)))
                 )
-            f = os.path.join(tmp, f"slice{i:02d}.parquet")
+            f = os.path.join(stage, f"slice{i:02d}.parquet")
             pq.write_table(pa.concat_tables(parts), f)
             # deterministic strictly-increasing mtimes = replay order
             os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
-        with open(os.path.join(tmp, "_DONE"), "w") as fh:
-            fh.write("ok")
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+        open(os.path.join(stage, "_DONE"), "w").close()
+
+    os.makedirs(os.path.dirname(d), exist_ok=True)
+    publish(d, "_DONE", write)
     schema = spark.read.parquet(os.path.join(d, "slice00.parquet")).schema
     sdf = (
         spark.readStream.schema(schema)

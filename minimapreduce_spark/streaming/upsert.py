@@ -21,9 +21,7 @@ associative, commutative fold.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -97,56 +95,54 @@ def stream_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from minimapreduce_spark.session import narrow_clone
     from minimapreduce_spark.sources.formats import publish_atomic
 
-    work = os.path.join(
-        tempfile.gettempdir(), "minimapreduce_upsert", uuid.uuid4().hex
-    )
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(work, exist_ok=True)
+    with tempfile.TemporaryDirectory(
+        prefix="minimapreduce_upsert_", ignore_cleanup_errors=True
+    ) as work:
+        state_dir = os.path.join(work, "state")
+        ckpt = os.path.join(work, "ckpt")
 
-    # Size the per-batch merge shuffle to the per-batch volume, not the
-    # session's batch-shuffle width (the stream_exactly_once_watermarked
-    # discipline): each micro-batch's read-modify-publish pays one
-    # shuffle + one parquet write PER PARTITION per batch, so a 4-batch
-    # replay at width 32 spends most of its wall on 128 shuffle-write/
-    # commit fan-outs for ~25k-row batches (measured at sf0.1: 2.9 →
-    # 2.4 s at width 8, identical output — the merge is a keyed agg,
-    # partition-count invariant by the repo-wide pytest). Round 12:
-    # width derived from batch volume (_upsert_state_width).
-    s2 = narrow_clone(spark, _upsert_state_width(spark, sf_dir))
-    sdf = events_stream_sharded(s2, sf_dir, n_shards=UPSERT_N_SHARDS).select(
-        "user_id",
-        F.col("ts").alias("last_ts"),
-        F.col("event_id").alias("last_event_id"),
-        F.round("value", 4).alias("last_value"),
-    )
+        # Size the per-batch merge shuffle to the per-batch volume, not the
+        # session's batch-shuffle width (the stream_exactly_once_watermarked
+        # discipline): each micro-batch's read-modify-publish pays one
+        # shuffle + one parquet write PER PARTITION per batch, so a 4-batch
+        # replay at width 32 spends most of its wall on 128 shuffle-write/
+        # commit fan-outs for ~25k-row batches (measured at sf0.1: 2.9 →
+        # 2.4 s at width 8, identical output — the merge is a keyed agg,
+        # partition-count invariant by the repo-wide pytest). Round 12:
+        # width derived from batch volume (_upsert_state_width).
+        s2 = narrow_clone(spark, _upsert_state_width(spark, sf_dir))
+        sdf = events_stream_sharded(s2, sf_dir, n_shards=UPSERT_N_SHARDS).select(
+            "user_id",
+            F.col("ts").alias("last_ts"),
+            F.col("event_id").alias("last_event_id"),
+            F.round("value", 4).alias("last_value"),
+        )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        updates = _latest_per_user(batch_df)
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            current = sess.read.schema(STATE_SCHEMA).parquet(state_dir)
-            merged = _latest_per_user(current.unionByName(updates))
-        else:
-            merged = updates
-        # Materialize BEFORE the swap: the plan reads the directory the
-        # swap is about to replace.
-        merged = merged.localCheckpoint(eager=True)
-        publish_atomic(merged, state_dir)
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            sess = batch_df.sparkSession
+            updates = _latest_per_user(batch_df)
+            if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
+                current = sess.read.schema(STATE_SCHEMA).parquet(state_dir)
+                merged = _latest_per_user(current.unionByName(updates))
+            else:
+                merged = updates
+            # Materialize BEFORE the swap: the plan reads the directory the
+            # swap is about to replace.
+            merged = merged.localCheckpoint(eager=True)
+            publish_atomic(merged, state_dir)
 
-    q = (
-        sdf.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.schema(STATE_SCHEMA).parquet(state_dir).localCheckpoint(
-        eager=True
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        q = (
+            sdf.writeStream.foreachBatch(merge_batch)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        out = spark.read.schema(STATE_SCHEMA).parquet(state_dir).localCheckpoint(
+            eager=True
+        )
+        return out
 
 
 @register(
@@ -178,8 +174,6 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stateless enrichment — the serving tier's whole point); results
     append to the sink. Latency is the micro-batch trigger, capacity
     is executors × cells-per-second — both independent of index build."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from minimapreduce_spark.operators.similarity import (
@@ -204,59 +198,58 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("label").cast("int").alias("label"), "code", "n2hat"
     )
 
-    work = os.path.join(
-        tempfile.gettempdir(), "minimapreduce_ann_serve", uuid.uuid4().hex
-    )
-    out_dir = os.path.join(work, "results")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
-    n_batches = {"nonempty": 0}
+    with tempfile.TemporaryDirectory(
+        prefix="minimapreduce_ann_serve_", ignore_cleanup_errors=True
+    ) as work:
+        out_dir = os.path.join(work, "results")
+        ckpt = os.path.join(work, "ckpt")
+        os.makedirs(out_dir, exist_ok=True)
+        n_batches = {"nonempty": 0}
 
-    qstream = (
-        table_stream_sharded(spark, sf_dir, "embeddings", n_shards=4)
-        .where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("q_vec_id"),
-            F.transform(
-                "embedding",
-                lambda x: F.round(x.cast("double") * KMEANS_SCALE).cast("bigint"),
-            ).alias("qe"),
+        qstream = (
+            table_stream_sharded(spark, sf_dir, "embeddings", n_shards=4)
+            .where(F.col("vec_id") < N_QUERIES)
+            .select(
+                F.col("vec_id").alias("q_vec_id"),
+                F.transform(
+                    "embedding",
+                    lambda x: F.round(x.cast("double") * KMEANS_SCALE).cast("bigint"),
+                ).alias("qe"),
+            )
         )
-    )
 
-    def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        n_batches["nonempty"] += 1
-        res = _ivfpq_serve(
-            batch_df.sparkSession,
-            sf_dir,
-            cg,
-            cb,
-            code_arr,
-            nprobe=1,
-            query_frame=batch_df,
-        )
-        res.write.mode("append").parquet(out_dir)
+        def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if not batch_df.head(1):
+                return
+            n_batches["nonempty"] += 1
+            res = _ivfpq_serve(
+                batch_df.sparkSession,
+                sf_dir,
+                cg,
+                cb,
+                code_arr,
+                nprobe=1,
+                query_frame=batch_df,
+            )
+            res.write.mode("append").parquet(out_dir)
 
-    q = (
-        qstream.writeStream.foreachBatch(serve_batch)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    stream_ann_serve_ivfpq.last_nonempty_batches = n_batches["nonempty"]
-    out = (
-        spark.read.schema(
-            "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
+        q = (
+            qstream.writeStream.foreachBatch(serve_batch)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
         )
-        .parquet(out_dir)
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        q.awaitTermination()
+        stream_ann_serve_ivfpq.last_nonempty_batches = n_batches["nonempty"]
+        out = (
+            spark.read.schema(
+                "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
+            )
+            .parquet(out_dir)
+            .localCheckpoint(eager=True)
+        )
+        return out
 
 
 def _set_serve_oracle() -> None:
@@ -351,66 +344,65 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(root, "shingles")
     )
 
-    work = os.path.join(
-        tempfile.gettempdir(), "minimapreduce_dedup_probe", uuid.uuid4().hex
-    )
-    out_dir = os.path.join(work, "results")
-    arrived_b = os.path.join(work, "arrived_buckets")
-    arrived_s = os.path.join(work, "arrived_shingles")
-    ckpt = os.path.join(work, "ckpt")
-    for d in (out_dir, arrived_b, arrived_s):
-        os.makedirs(d, exist_ok=True)
-    n_batches = {"nonempty": 0}
-    arrived_bucket_schema = "doc_id bigint, band int, bh bigint"
-    pair_schema = "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"
+    with tempfile.TemporaryDirectory(
+        prefix="minimapreduce_dedup_probe_", ignore_cleanup_errors=True
+    ) as work:
+        out_dir = os.path.join(work, "results")
+        arrived_b = os.path.join(work, "arrived_buckets")
+        arrived_s = os.path.join(work, "arrived_shingles")
+        ckpt = os.path.join(work, "ckpt")
+        for d in (out_dir, arrived_b, arrived_s):
+            os.makedirs(d, exist_ok=True)
+        n_batches = {"nonempty": 0}
+        arrived_bucket_schema = "doc_id bigint, band int, bh bigint"
+        pair_schema = "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"
 
-    arrivals = table_stream_sharded(spark, sf_dir, "documents", n_shards=4).where(
-        F.col("doc_id") % INCR_BATCH_MOD == 0
-    ).select("doc_id", "text")
+        arrivals = table_stream_sharded(spark, sf_dir, "documents", n_shards=4).where(
+            F.col("doc_id") % INCR_BATCH_MOD == 0
+        ).select("doc_id", "text")
 
-    def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        n_batches["nonempty"] += 1
-        s = batch_df.sparkSession
-        base_s = shingle_hashes(
-            s, sf_dir, distinct=False, docs=fan_out(s, batch_df)
-        ).localCheckpoint(eager=False)
-        buckets_s = minhash_band_buckets(
-            minhash_signatures(s, sf_dir, shingles=base_s)
-        ).localCheckpoint(eager=True)
-        sh_s = base_s.distinct().localCheckpoint(eager=True)
-        pairs = probe_band_index(
-            s,
-            sf_dir,
-            batch_buckets=buckets_s,
-            batch_shingles=sh_s,
-            index_buckets=idx_buckets,
-            index_shingles=idx_shingles,
-            prior_buckets=s.read.schema(arrived_bucket_schema).parquet(arrived_b),
-            prior_shingles=s.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(arrived_s),
+        def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if not batch_df.head(1):
+                return
+            n_batches["nonempty"] += 1
+            s = batch_df.sparkSession
+            base_s = shingle_hashes(
+                s, sf_dir, distinct=False, docs=fan_out(s, batch_df)
+            ).localCheckpoint(eager=False)
+            buckets_s = minhash_band_buckets(
+                minhash_signatures(s, sf_dir, shingles=base_s)
+            ).localCheckpoint(eager=True)
+            sh_s = base_s.distinct().localCheckpoint(eager=True)
+            pairs = probe_band_index(
+                s,
+                sf_dir,
+                batch_buckets=buckets_s,
+                batch_shingles=sh_s,
+                index_buckets=idx_buckets,
+                index_shingles=idx_shingles,
+                prior_buckets=s.read.schema(arrived_bucket_schema).parquet(arrived_b),
+                prior_shingles=s.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(arrived_s),
+            )
+            pairs.write.mode("append").parquet(out_dir)
+            # admit this slice to the arrived store AFTER probing, so the
+            # next slice sees it and every cross-slice pair emits once
+            buckets_s.select("doc_id", "band", "bh").write.mode("append").parquet(
+                arrived_b
+            )
+            sh_s.write.mode("append").parquet(arrived_s)
+
+        q = (
+            arrivals.writeStream.foreachBatch(probe_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        pairs.write.mode("append").parquet(out_dir)
-        # admit this slice to the arrived store AFTER probing, so the
-        # next slice sees it and every cross-slice pair emits once
-        buckets_s.select("doc_id", "band", "bh").write.mode("append").parquet(
-            arrived_b
+        q.awaitTermination()
+        stream_minhash_index_probe.last_nonempty_batches = n_batches["nonempty"]
+        out = (
+            spark.read.schema(pair_schema).parquet(out_dir).localCheckpoint(eager=True)
         )
-        sh_s.write.mode("append").parquet(arrived_s)
-
-    q = (
-        arrivals.writeStream.foreachBatch(probe_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    stream_minhash_index_probe.last_nonempty_batches = n_batches["nonempty"]
-    out = (
-        spark.read.schema(pair_schema).parquet(out_dir).localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        return out
 
 
 def _set_dedup_probe_oracle() -> None:
@@ -580,77 +572,76 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         band.alias("band"),
     )
 
-    work = os.path.join(
-        tempfile.gettempdir(), "minimapreduce_scd2", uuid.uuid4().hex
-    )
-    closed_dir = os.path.join(work, "closed")
-    open_dir = os.path.join(work, "open")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(closed_dir, exist_ok=True)
-    closed_schema = (
-        "user_id bigint, band string, valid_from timestamp_ntz,"
-        " valid_to timestamp_ntz"
-    )
-    open_schema = "user_id bigint, band string, valid_from timestamp_ntz"
-    n_batches = {"nonempty": 0}
-    open_ver = {"cur": None}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        n_batches["nonempty"] += 1
-        s = batch_df.sparkSession
-        if open_ver["cur"] is None:
-            open_rows = s.createDataFrame([], open_schema)
-        else:
-            open_rows = s.read.schema(open_schema).parquet(open_ver["cur"])
-        pseudo = open_rows.select(
-            "user_id",
-            F.col("valid_from").alias("ts"),
-            F.lit(-1).cast("bigint").alias("event_id"),
-            "band",
+    with tempfile.TemporaryDirectory(
+        prefix="minimapreduce_scd2_", ignore_cleanup_errors=True
+    ) as work:
+        closed_dir = os.path.join(work, "closed")
+        open_dir = os.path.join(work, "open")
+        ckpt = os.path.join(work, "ckpt")
+        os.makedirs(closed_dir, exist_ok=True)
+        closed_schema = (
+            "user_id bigint, band string, valid_from timestamp_ntz,"
+            " valid_to timestamp_ntz"
         )
-        merged = pseudo.unionByName(
-            batch_df.select("user_id", "ts", "event_id", "band")
-        )
-        isl = _scd2_islands(merged).localCheckpoint(eager=True)
-        isl.where(~F.col("is_current")).select(
-            "user_id", "band", "valid_from", "valid_to"
-        ).write.mode("append").parquet(closed_dir)
-        nxt = os.path.join(work, f"open_v{batch_id}")
-        isl.where(F.col("is_current")).select(
-            "user_id", "band", "valid_from"
-        ).write.mode("overwrite").parquet(nxt)
-        open_ver["cur"] = nxt
+        open_schema = "user_id bigint, band string, valid_from timestamp_ntz"
+        n_batches = {"nonempty": 0}
+        open_ver = {"cur": None}
 
-    q = (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    stream_scd2_band_history.last_nonempty_batches = n_batches["nonempty"]
-    closed = spark.read.schema(closed_schema).parquet(closed_dir)
-    if open_ver["cur"] is None:
-        open_rows = spark.createDataFrame([], open_schema)
-    else:
-        open_rows = spark.read.schema(open_schema).parquet(open_ver["cur"])
-    out = (
-        closed.withColumn("is_current", F.lit(False))
-        .unionByName(
-            open_rows.select(
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if not batch_df.head(1):
+                return
+            n_batches["nonempty"] += 1
+            s = batch_df.sparkSession
+            if open_ver["cur"] is None:
+                open_rows = s.createDataFrame([], open_schema)
+            else:
+                open_rows = s.read.schema(open_schema).parquet(open_ver["cur"])
+            pseudo = open_rows.select(
                 "user_id",
+                F.col("valid_from").alias("ts"),
+                F.lit(-1).cast("bigint").alias("event_id"),
                 "band",
-                "valid_from",
-                F.lit(None).cast("timestamp_ntz").alias("valid_to"),
-                F.lit(True).alias("is_current"),
             )
+            merged = pseudo.unionByName(
+                batch_df.select("user_id", "ts", "event_id", "band")
+            )
+            isl = _scd2_islands(merged).localCheckpoint(eager=True)
+            isl.where(~F.col("is_current")).select(
+                "user_id", "band", "valid_from", "valid_to"
+            ).write.mode("append").parquet(closed_dir)
+            nxt = os.path.join(work, f"open_v{batch_id}")
+            isl.where(F.col("is_current")).select(
+                "user_id", "band", "valid_from"
+            ).write.mode("overwrite").parquet(nxt)
+            open_ver["cur"] = nxt
+
+        q = (
+            sdf.writeStream.foreachBatch(apply_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        q.awaitTermination()
+        stream_scd2_band_history.last_nonempty_batches = n_batches["nonempty"]
+        closed = spark.read.schema(closed_schema).parquet(closed_dir)
+        if open_ver["cur"] is None:
+            open_rows = spark.createDataFrame([], open_schema)
+        else:
+            open_rows = spark.read.schema(open_schema).parquet(open_ver["cur"])
+        out = (
+            closed.withColumn("is_current", F.lit(False))
+            .unionByName(
+                open_rows.select(
+                    "user_id",
+                    "band",
+                    "valid_from",
+                    F.lit(None).cast("timestamp_ntz").alias("valid_to"),
+                    F.lit(True).alias("is_current"),
+                )
+            )
+            .localCheckpoint(eager=True)
+        )
+        return out
 
 
 @register(
@@ -733,109 +724,114 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_del = (~is_ins) & (ck % IVM_DEL_MOD == 0)
     is_upd = (~is_ins) & (~is_del) & (ck % IVM_UPD_MOD == 0)
 
-    work = os.path.join(
-        tempfile.gettempdir(), "minimapreduce_stream_ivm", uuid.uuid4().hex
-    )
-    tombs_dir = os.path.join(work, "tombs")
-    delta_dir = os.path.join(work, "delta")
-    ckpt = os.path.join(work, "ckpt")
-    tombs_schema = "c_custkey bigint"
-    # seed both logs so the explicit-schema reads below never hit a
-    # footerless dir (the MINHASH_BUCKET_SCHEMA lesson)
-    spark.createDataFrame([], tombs_schema).write.mode("overwrite").parquet(tombs_dir)
-    spark.createDataFrame([], IVM_VIEW_SCHEMA).write.mode("overwrite").parquet(
-        delta_dir
-    )
-    n_batches = {"nonempty": 0}
+    with tempfile.TemporaryDirectory(
+        prefix="minimapreduce_stream_ivm_", ignore_cleanup_errors=True
+    ) as work:
+        tombs_dir = os.path.join(work, "tombs")
+        delta_dir = os.path.join(work, "delta")
+        ckpt = os.path.join(work, "ckpt")
+        tombs_schema = "c_custkey bigint"
+        # seed both logs so the explicit-schema reads below never hit a
+        # footerless dir (the MINHASH_BUCKET_SCHEMA lesson)
+        spark.createDataFrame([], tombs_schema).write.mode("overwrite").parquet(
+            tombs_dir
+        )
+        spark.createDataFrame([], IVM_VIEW_SCHEMA).write.mode("overwrite").parquet(
+            delta_dir
+        )
+        n_batches = {"nonempty": 0}
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        deltas = batch_df.where(is_ins | is_del | is_upd).localCheckpoint(
-            eager=True
-        )
-        if not deltas.head(1):
-            return
-        n_batches["nonempty"] += 1
-        s = deltas.sparkSession
-        # IDEMPOTENT per-batch log writes (round-10 ADVICE): foreachBatch
-        # side effects are at-least-once — a micro-batch re-run after a
-        # failed drain must not double-append. Each batch OVERWRITES its
-        # own batch_id-keyed subdirectory, so a WAL replay rewrites the
-        # same files instead of appending duplicates (the run_to_parquet
-        # sink discipline); the log readers below glob recursively.
-        deltas.where(is_del | is_upd).select("c_custkey").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tombs_dir, f"b{batch_id:05d}"))
-        plus_c = (
-            deltas.where(is_upd)
-            .withColumn("c_mktsegment", F.lit(IVM_UPD_SEGMENT))
-            .unionByName(deltas.where(is_ins))
-        )
-        b_o = load_table(s, sf_dir, "orders").where(
-            F.col("o_orderkey") % IVM_FACT_MOD != 0
-        )
-        (
-            b_o.join(F.broadcast(plus_c), b_o.o_custkey == plus_c.c_custkey)
-            .select(
-                "o_orderkey",
-                "o_custkey",
-                "c_mktsegment",
-                F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            deltas = batch_df.where(is_ins | is_del | is_upd).localCheckpoint(
+                eager=True
             )
-            .write.mode("overwrite")
-            .parquet(os.path.join(delta_dir, f"b{batch_id:05d}"))
-        )
-
-    q = (
-        table_stream_sharded(spark, sf_dir, "customer")
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    stream_incremental_join_view.last_nonempty_batches = n_batches["nonempty"]
-
-    tombs = (
-        spark.read.schema(tombs_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(tombs_dir)
-    )
-    delta_rows = (
-        spark.read.schema(IVM_VIEW_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(delta_dir)
-    )
-    cust = load_table(spark, sf_dir, "customer")
-    b_c_final = (
-        cust.where(~is_ins & ~is_del)
-        .withColumn(
-            "c_mktsegment",
-            F.when(is_upd, F.lit(IVM_UPD_SEGMENT)).otherwise(F.col("c_mktsegment")),
-        )
-        .unionByName(cust.where(is_ins))
-    )
-    d_o = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderkey") % IVM_FACT_MOD == 0
-    )
-    out = (
-        base_view.join(
-            F.broadcast(tombs),
-            base_view["o_custkey"] == tombs["c_custkey"],
-            "left_anti",
-        )
-        .unionByName(delta_rows)
-        .unionByName(
-            d_o.join(b_c_final, d_o.o_custkey == b_c_final.c_custkey).select(
-                "o_orderkey",
-                "o_custkey",
-                "c_mktsegment",
-                F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
+            if not deltas.head(1):
+                return
+            n_batches["nonempty"] += 1
+            s = deltas.sparkSession
+            # IDEMPOTENT per-batch log writes (round-10 ADVICE): foreachBatch
+            # side effects are at-least-once — a micro-batch re-run after a
+            # failed drain must not double-append. Each batch OVERWRITES its
+            # own batch_id-keyed subdirectory, so a WAL replay rewrites the
+            # same files instead of appending duplicates (the run_to_parquet
+            # sink discipline); the log readers below glob recursively.
+            deltas.where(is_del | is_upd).select("c_custkey").write.mode(
+                "overwrite"
+            ).parquet(os.path.join(tombs_dir, f"b{batch_id:05d}"))
+            plus_c = (
+                deltas.where(is_upd)
+                .withColumn("c_mktsegment", F.lit(IVM_UPD_SEGMENT))
+                .unionByName(deltas.where(is_ins))
             )
+            b_o = load_table(s, sf_dir, "orders").where(
+                F.col("o_orderkey") % IVM_FACT_MOD != 0
+            )
+            (
+                b_o.join(F.broadcast(plus_c), b_o.o_custkey == plus_c.c_custkey)
+                .select(
+                    "o_orderkey",
+                    "o_custkey",
+                    "c_mktsegment",
+                    F.round(F.col("o_totalprice") * 100)
+                    .cast("bigint")
+                    .alias("price_c"),
+                )
+                .write.mode("overwrite")
+                .parquet(os.path.join(delta_dir, f"b{batch_id:05d}"))
+            )
+
+        q = (
+            table_stream_sharded(spark, sf_dir, "customer")
+            .writeStream.foreachBatch(apply_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        q.awaitTermination()
+        stream_incremental_join_view.last_nonempty_batches = n_batches["nonempty"]
+
+        tombs = (
+            spark.read.schema(tombs_schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(tombs_dir)
+        )
+        delta_rows = (
+            spark.read.schema(IVM_VIEW_SCHEMA)
+            .option("recursiveFileLookup", "true")
+            .parquet(delta_dir)
+        )
+        cust = load_table(spark, sf_dir, "customer")
+        b_c_final = (
+            cust.where(~is_ins & ~is_del)
+            .withColumn(
+                "c_mktsegment",
+                F.when(is_upd, F.lit(IVM_UPD_SEGMENT)).otherwise(F.col("c_mktsegment")),
+            )
+            .unionByName(cust.where(is_ins))
+        )
+        d_o = load_table(spark, sf_dir, "orders").where(
+            F.col("o_orderkey") % IVM_FACT_MOD == 0
+        )
+        out = (
+            base_view.join(
+                F.broadcast(tombs),
+                base_view["o_custkey"] == tombs["c_custkey"],
+                "left_anti",
+            )
+            .unionByName(delta_rows)
+            .unionByName(
+                d_o.join(b_c_final, d_o.o_custkey == b_c_final.c_custkey).select(
+                    "o_orderkey",
+                    "o_custkey",
+                    "c_mktsegment",
+                    F.round(F.col("o_totalprice") * 100)
+                    .cast("bigint")
+                    .alias("price_c"),
+                )
+            )
+            .localCheckpoint(eager=True)
+        )
+        return out
 
 
 def stream_join_view_rebuild(
@@ -845,27 +841,26 @@ def stream_join_view_rebuild(
     of the streaming IVM cycle: `stream_incremental_join_view` drains
     the day's dim CDC into tombstone + delta logs and composes the
     maintained view; this job materializes that composition into a
-    FRESH base-view artifact (atomic-rename publish, the
+    FRESH base-view artifact (`artifacts.publish`, the
     `join_view_rebuild` discipline), after which the logs are obsolete
     — the next day's CDC maintains against the new base with an empty
     tombstone set. Idempotent: an existing published root is returned
-    untouched (the re-publish race loses by rename)."""
-    from minimapreduce_spark.operators.relational import join_view_root
+    untouched."""
+    from minimapreduce_spark.artifacts import publish
+    from minimapreduce_spark.operators.relational import (
+        JOIN_VIEW_MARKER,
+        join_view_root,
+    )
 
-    root = root or f"{join_view_root(sf_dir)}_stream_rebuilt"
-    if os.path.isdir(os.path.join(root, "view")):
-        return root
-    maintained = stream_incremental_join_view(spark, sf_dir)
-    stage = tempfile.mkdtemp(prefix="joinview_stream_rebuild_")
-    maintained.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-    from minimapreduce_spark.artifacts import claim_parent
+    base = join_view_root(sf_dir)
 
-    claim_parent(stage, join_view_root(sf_dir))  # retention derivation claim
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race
-    return root
+    def write(stage: str) -> None:
+        stream_incremental_join_view(spark, sf_dir).write.mode("overwrite").parquet(
+            os.path.join(stage, JOIN_VIEW_MARKER)
+        )
+
+    root = root or f"{base}_stream_rebuilt"
+    return publish(root, JOIN_VIEW_MARKER, write, parent=base)
 
 
 @register(

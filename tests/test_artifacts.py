@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -258,3 +259,138 @@ def test_nightly_maintenance_compacts_then_vacuums_idempotently(spark, tmp_path)
     rep2 = nightly_maintenance(spark, parent=parent, min_age_s=0.0)
     assert rep2["compacted"]["minhash_band_index"] == []
     assert rep2["vacuum"]["minhash_band_index"]["deleted"] == []
+
+
+# ---- artifacts.publish: the one create-once publish path
+
+
+def _stage_dirs(parent) -> list[str]:
+    return [n for n in os.listdir(parent) if n.startswith(".stage-")]
+
+
+@pytest.mark.parametrize("fault", ["missing_parent_dir", "write_raises"])
+def test_failed_publish_raises_and_leaves_no_dirs(spark, tmp_path, monkeypatch, fault):
+    """A join view whose publish cannot complete raises instead of
+    returning a root that does not exist, and leaves neither a stage nor
+    a root behind (the temp dir is the stage's fallback location, so it
+    is pointed at ``tmp_path`` too); a retry then publishes."""
+    import tempfile
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from minimapreduce_spark.operators.relational import join_view_build
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    root = str(tmp_path / "jv")
+    with monkeypatch.context() as m:
+        if fault == "missing_parent_dir":
+            bad_root = str(tmp_path / "no_such_parent" / "jv")
+        else:
+            bad_root = root
+
+            def boom(self, *args, **kwargs):
+                raise OSError("injected write failure")
+
+            m.setattr(DataFrameWriter, "parquet", boom)
+        with pytest.raises(OSError):
+            join_view_build(spark, SF_DIR, root=bad_root)
+    assert os.listdir(tmp_path) == []
+
+    assert join_view_build(spark, SF_DIR, root=root) == root
+    assert spark.read.parquet(os.path.join(root, "view")).count() > 0
+    assert _stage_dirs(tmp_path) == []
+
+
+def _write_view(tag: str):
+    def write(stage: str) -> None:
+        os.makedirs(os.path.join(stage, "view"))
+        with open(os.path.join(stage, "view", "data"), "w") as f:
+            f.write(tag)
+
+    return write
+
+
+def _read_view(root: str) -> str:
+    with open(os.path.join(root, "view", "data")) as f:
+        return f.read()
+
+
+@pytest.mark.parametrize("when", ["before", "during_write"])
+def test_publish_to_a_published_root_returns_it_untouched(tmp_path, when):
+    """A root published BEFORE the call is returned without calling
+    ``write``; one published by a racer DURING the write wins the
+    rename, and the loser returns it and discards its own stage."""
+    from minimapreduce_spark.artifacts import publish
+
+    root = str(tmp_path / "r")
+    first = _write_view("first")
+    calls = []
+
+    def second(stage: str) -> None:
+        calls.append(stage)
+        if when == "during_write":
+            publish(root, "view", first)
+        _write_view("second")(stage)
+
+    if when == "before":
+        publish(root, "view", first)
+    assert publish(root, "view", second) == root
+    assert _read_view(root) == "first"
+    assert len(calls) == (when == "during_write")
+    assert os.listdir(tmp_path) == ["r"]
+
+
+def test_publish_never_renames_a_stage_without_its_marker(tmp_path):
+    """A write that leaves no marker raises; nothing is published and
+    the stage is removed."""
+    from minimapreduce_spark.artifacts import publish
+
+    root = str(tmp_path / "r")
+    with pytest.raises(RuntimeError, match="codes"):
+        publish(root, "codes", _write_view("x"))
+    assert os.listdir(tmp_path) == []
+
+
+def test_no_hand_rolled_publish_outside_artifacts():
+    """Every create-once publish goes through ``artifacts.publish``:
+    ``os.rename(`` / ``tempfile.mkdtemp(`` appear only in artifacts.py,
+    in ``sources.formats.publish_atomic`` (the replace-in-place swap)
+    and in ``_publish_shards``' crash-corpse move-aside."""
+    import ast
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "minimapreduce_spark",
+    )
+    allowed = {
+        "sources/formats.py": {"publish_atomic"},
+        "streaming/source.py": {"_publish_shards"},
+    }
+    found = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            if rel == "artifacts.py":
+                continue
+            tree = ast.parse(open(path).read())
+            # innermost enclosing function of every node: ast.walk is
+            # breadth-first, so inner functions overwrite outer ones
+            owner = {}
+            for fn in ast.walk(tree):
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    owner.update((node, fn.name) for node in ast.walk(fn))
+            for node in ast.walk(tree):
+                name = owner.get(node, "<module>")
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and isinstance(node.func.value, ast.Name)
+                    and (node.func.value.id, node.func.attr)
+                    in {("os", "rename"), ("tempfile", "mkdtemp")}
+                    and name not in allowed.get(rel, ())
+                ):
+                    found.append(f"{rel}:{node.lineno} in {name}")
+    assert found == [], found

@@ -138,6 +138,28 @@ def test_cli_distributed_matches_sequential(spark, tmp_path):
         assert dist_lines == seq_lines, app
 
 
+def test_cli_lines_mode_takes_several_inputs(spark, tmp_path):
+    """Lines mode over two files given as two arguments reads both (each
+    argument is expanded as its own glob) and matches --sequential."""
+    from minimapreduce_spark.__main__ import main
+
+    inputs = []
+    for name, contents in SMALL_CORPUS[:2]:
+        p = tmp_path / f"pg-{name}.txt"
+        p.write_text(contents)
+        inputs.append(str(p))
+    dist, seq = tmp_path / "out", tmp_path / "seq"
+    assert main(["--source-mode", "lines", "wc", str(dist), *inputs], spark=spark) == 0
+    assert main(["--sequential", "wc", str(seq), *inputs]) == 0
+    dist_lines = sorted(
+        line
+        for p in glob.glob(str(dist / "part-*"))
+        for line in open(p).read().splitlines()
+        if line
+    )
+    assert dist_lines == sorted((seq / "mr-out-0").read_text().splitlines())
+
+
 def test_partition_invariance(spark):
     """The n_reduce contract generalized: shuffle width must never change
     results. Run shuffle-heavy queries at 2 and 32 shuffle partitions."""

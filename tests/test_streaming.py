@@ -3,6 +3,8 @@ invariants (streaming-vs-batch golden diff — the reference's
 distributed-vs-sequential protocol, main/test-mr.sh:59-67, lifted to
 streams)."""
 
+import os
+
 import pytest
 
 from tests.conftest import SF_DIR, assert_frames_match, run_and_compare
@@ -1014,3 +1016,22 @@ def test_stream_state_width_derivation(spark):
         spark, rows // UPSERT_N_SHARDS
     )
     assert _exactly_once_state_width(spark, SF_DIR) >= 2
+
+
+def test_failed_drain_leaves_no_work_dir(spark, tmp_path, monkeypatch):
+    """A drain whose foreachBatch raises propagates the error and
+    removes its work dir (state, checkpoint) on the way out."""
+    import tempfile
+
+    import minimapreduce_spark.sources.formats as formats
+    from minimapreduce_spark.streaming.upsert import stream_upsert_latest_state
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected batch failure")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(formats, "publish_atomic", boom)
+    with pytest.raises(Exception, match="injected batch failure"):
+        stream_upsert_latest_state(spark, SF_DIR)
+    left = [n for n in os.listdir(tmp_path) if n.startswith("minimapreduce_upsert")]
+    assert left == []
