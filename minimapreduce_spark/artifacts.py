@@ -14,7 +14,7 @@ stage never outlives the call. The one replace-in-place swap, for
 mutable state tables, is ``sources.formats.publish_atomic``.
 
 The families share a naming scheme (``FAMILIES``): a deterministic
-base root ``<prefix><tag>`` under the temp dir, then derived roots
+base root ``<prefix><tag>`` under ``engine_root()``, then derived roots
 whose names STRICTLY EXTEND the parent's — ``<root>_<sha8(tag)>`` for
 appends (chainable), ``<root>_compact`` for compactions,
 ``<root>_rebuilt`` / ``<root>_stream_rebuilt`` for the IVM fold-ins.
@@ -74,9 +74,16 @@ FAMILIES: dict[str, tuple[str, str]] = {
 }
 
 
+def engine_root() -> str:
+    """The directory the engine's artifact roots live under: the process
+    temp dir, read at every call because ``tempfile.tempdir`` may be
+    redirected between calls."""
+    return tempfile.gettempdir()
+
+
 def family_root(family: str, tag: str) -> str:
     """The deterministic base root of ``family`` for ``tag``."""
-    return os.path.join(tempfile.gettempdir(), FAMILIES[family][0] + tag)
+    return os.path.join(engine_root(), FAMILIES[family][0] + tag)
 
 
 def publish(
@@ -265,9 +272,9 @@ def vacuum_all_families(
     parent: str | None = None, min_age_s: float = 0.0, dry_run: bool = False
 ) -> dict[str, dict]:
     """Run retention over every artifact family in one sweep (the
-    scheduled nightly job). ``parent`` defaults to the tempdir the
-    deterministic roots publish into."""
-    parent = parent or tempfile.gettempdir()
+    scheduled nightly job). ``parent`` defaults to ``engine_root()``,
+    where the deterministic roots publish."""
+    parent = parent or engine_root()
     return {
         fam: vacuum_superseded_roots(parent, prefix, marker, min_age_s, dry_run)
         for fam, (prefix, marker) in FAMILIES.items()
@@ -333,7 +340,7 @@ def nightly_maintenance(
         "minhash_band_index": minhash_index_compact,
         "ivfpq_index": ivfpq_index_compact,
     }
-    parent = parent or tempfile.gettempdir()
+    parent = parent or engine_root()
     compacted: dict[str, list[str]] = {}
     for fam, compactor in compactors.items():
         prefix, marker = FAMILIES[fam]

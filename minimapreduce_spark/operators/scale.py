@@ -481,9 +481,9 @@ def bucketed_join(
     Write once, join many: every subsequent join on the bucket key
     reads co-located buckets instead of re-shuffling 100 TB — the
     contract behind Hive/Iceberg bucket layouts and Spark's own
-    bucketed tables. The bucketed data lands under an explicit /tmp
-    staging root (external table), so a driver running from any cwd
-    exercises the same plan.
+    bucketed tables. The bucketed data lands under an explicit staging
+    root in ``artifacts.engine_root()`` (external table), so a driver
+    running from any cwd exercises the same plan.
 
     Exactness: revenue is the money-grid BIGINT sum (``exact_sum`` —
     int128 emulation, order-free), so total_price hash-matches DuckDB
@@ -498,13 +498,14 @@ def bucketed_join(
     every job re-partitions; bucketing is the persisted generalization
     it cannot express."""
     import os
-    import tempfile
+
+    from minimapreduce_spark.artifacts import engine_root
 
     # per-session staging root (keyed by spark.app.id) — a fixed shared
     # path would let two concurrent sessions rmtree each other's tables
     # mid-query (round-7 ADVICE)
     base = os.path.join(
-        tempfile.gettempdir(),
+        engine_root(),
         f"minimapreduce_spark_bucketed_{spark.sparkContext.applicationId}",
     )
     write_bucketed(

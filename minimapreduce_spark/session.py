@@ -84,12 +84,12 @@ def get_spark(
 # widths): small enough that a shard's per-batch state-store commit is
 # amortized by real update work, large enough that shard count grows
 # linearly with streaming throughput instead of sitting at a constant.
-# Round-12 basis (tools/stream_ab_probe.py, interleaved same-session):
-# every drain's wall is FLAT across a wide width band at fixture volume
+# Basis (CHANGES.md, "Stream drain width measurements"): every drain's
+# wall is FLAT across a wide width band at fixture volume
 # (session-window 4-16 at ~100k rows/batch, upsert 1-16 at ~25k,
-# exactly-once 4-8 at ~20k) and regresses outside it (session-window 32
-# → 1.5-3.6 s vs 1.1-1.3 s inside), so the derivation only needs to
-# land inside the band — 8k rows/shard puts all three drains there.
+# exactly-once 4-8 at ~20k) and regresses outside it, so the
+# derivation only needs to land inside the band — 8k rows/shard puts
+# all three drains there.
 STREAM_STATE_ROWS_PER_SHARD = 8_000
 
 

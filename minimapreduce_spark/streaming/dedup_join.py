@@ -167,14 +167,12 @@ EXACTLY_ONCE_WM_DELAY = "84 hours"
 # reader — the CONSUMER's trigger sizing, NOT the source's slice/
 # redelivery contract (the staged slices and their one-slice
 # redelivery horizon are unchanged; dedup correctness needs only
-# delay ≥ horizon, which holds at any batching). Round-12 measurement
-# (tools/stream_ab_probe.py, interleaved same-session at sf0.1):
-# per-micro-batch FIXED cost dominated the drain — 2 files/trigger
-# (5 data batches) took it 4.7 → 2.7 s at every state width probed,
-# while 1→2 is the whole win (state width 8/4/2 all within noise at
-# either setting). Decomposition: a stateless drain of the same source
-# costs ~0.23 s/batch (planning + WAL + sink) and the dedup state adds
-# ~0.27 s/batch — both scale with batch count, neither with width.
+# delay ≥ horizon, which holds at any batching). Measured at sf0.1
+# (CHANGES.md, "Stream drain width measurements"): per-micro-batch
+# FIXED cost dominated the drain — going from 1 to 2 files/trigger
+# (5 data batches) was the whole win at every state width probed, and
+# both the stateless per-batch cost and the dedup state's cost scale
+# with batch count, not with width.
 # The price is a higher in-flight ledger peak (see the delay note
 # above); 3 files/trigger peaks at 57% under the 96 h delay and is
 # excluded by the <50% contract. At production throughput batch sizing
@@ -191,7 +189,14 @@ def _exactly_once_state_width(spark: SparkSession, sf_dir: str) -> int:
     """State shards derived from per-batch volume (round-11 verdict
     item 4 — the constant 8 was a fixture tune): rows per micro-batch
     = staged events (footer metadata, no job) / batch count, through
-    the shared ``stream_state_width`` sizing."""
+    the shared ``stream_state_width`` sizing.
+
+    The estimate counts each event once, so it leaves out the
+    redelivered copies: every slice after the first also carries the
+    ~1/13 (``redeliver_mod``) of the previous slice's rows that the
+    source replays, and the real batches are that much larger. The
+    undercount is kept on purpose: the width feeds the benchmarked
+    drain, and the derived width is the measured one."""
     import math
 
     from minimapreduce_spark.catalog import parquet_rowcount, table_path

@@ -1,10 +1,20 @@
 """Streaming source + sink plumbing.
 
-``events_stream`` turns the static events parquet into a bona-fide
-streaming DataFrame (file-stream source). ``run_to_memory`` drains a
-streaming plan with an ``availableNow`` trigger into a memory sink and
-hands back the materialized result — the bridge that lets streaming
-queries participate in the batch oracle protocol.
+The fixture tables are bare parquet files, while Spark's file-stream
+source monitors a DIRECTORY, so every stream source here is a staged
+replay directory under ``artifacts.engine_root()``. ``_stream_source``
+names it, publishes it once through ``artifacts.publish`` (a reader
+sees the whole directory or none of it, and racing sessions share one)
+and opens it as a file stream at the replay's trigger size;
+``_events`` adds the events table's ``ts`` handling. Production streams
+read real directories (or Kafka) and skip the staging.
+
+Every drain goes through ``_drain``: one ``foreachBatch`` query with a
+checkpoint and an ``availableNow`` trigger, waited on to the end.
+``run_to_parquet`` is the idempotent parquet sink on top of it;
+``run_to_memory`` drains into a memory sink and hands back the
+materialized result — the bridge that lets streaming queries
+participate in the batch oracle protocol.
 """
 
 from __future__ import annotations
@@ -12,130 +22,86 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
-import tempfile
-import time
-
-# A repair lockfile older than this is a crashed repairer's corpse and
-# may be broken by the next repairer (see _publish_shards).
-_REPAIR_LOCK_STALE_S = 300.0
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
-from minimapreduce_spark.artifacts import publish
+from minimapreduce_spark.artifacts import engine_root, publish
 from minimapreduce_spark.catalog import content_fingerprint, table_path
 
 _SINK_IDS = itertools.count()
 
 
-def _publish_shards(spark: SparkSession, src_path: str, d: str, n_shards: int) -> None:
-    """Shared shard publish for the two staged stream sources: write
-    ``n_shards`` parquet files and publish them at ``d`` with
-    `artifacts.publish`, so racing sessions share one shard set and a
-    reader never observes a half-written one.
+def _stream_source(
+    spark: SparkSession,
+    family: str,
+    path: str,
+    marker: str,
+    write: Callable[[str], None],
+    files_per_trigger: int,
+    *params,
+) -> DataFrame:
+    """Stage a replay of the parquet file ``path`` at
+    ``engine_root()/family/<name>`` and open it as a file stream that
+    reads ``files_per_trigger`` files a micro-batch.
 
-    Self-repair (a pre-atomic-publish crash leaves ``d`` without
-    _SUCCESS, making the rename fail forever): repair is SERIALIZED by
-    an O_EXCL lockfile next to ``d`` (round-10 ADVICE — the unlocked
-    version had a residual window where a concurrently published valid
-    shard set could be moved aside under a draining reader, and its
-    re-publish would arrive as new-named part files a file-stream
-    reader treats as duplicate arrivals). Under the lock _SUCCESS is
-    re-checked and only then is the corpse renamed ASIDE to a junk
-    path (never rmtree'd in place); a contender that cannot take the
-    lock skips repair entirely, and its publish below returns the
-    winner's shard set if one has landed by its rename, or raises. A
-    lockfile older than ``_REPAIR_LOCK_STALE_S`` is treated as a
-    crashed repairer's corpse and removed. Junk directories are cleaned up once ``d`` is
-    published (they were only kept so a mid-window move-aside could
-    never destroy data)."""
+    ``<name>`` is the source path; a replay shaped by ``params`` copies
+    the data, so its name also carries the source's content fingerprint
+    and the params, and a regenerated fixture at the same path never
+    replays stale shards. ``write`` fills a private stage and leaves
+    ``marker`` in it; `artifacts.publish` moves it into place."""
+    name = os.path.abspath(path).strip(os.sep).replace(os.sep, "_")
+    if params:
+        name = "_".join([name, content_fingerprint(path), *map(str, params)])
+    d = os.path.join(engine_root(), family, name)
     os.makedirs(os.path.dirname(d), exist_ok=True)
-    if os.path.exists(os.path.join(d, "_SUCCESS")):
-        return  # a racer finished the publish between check and repair
-    junk = None
-    if os.path.exists(d):
-        lock = d + ".repair_lock"
-        try:
-            if (
-                os.path.exists(lock)
-                and time.time() - os.stat(lock).st_mtime > _REPAIR_LOCK_STALE_S
-            ):
-                os.unlink(lock)  # crashed repairer's lock
-        except OSError:
-            pass
-        fd = None
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except OSError:
-            pass  # another session holds the repair lock: skip repair
-        if fd is not None:
-            try:
-                # re-check under the lock: a racer may have published
-                if not os.path.exists(os.path.join(d, "_SUCCESS")) and os.path.exists(d):
-                    junk = tempfile.mkdtemp(
-                        prefix="corpse_", dir=os.path.dirname(d)
-                    )
-                    try:
-                        os.rename(d, os.path.join(junk, "moved"))
-                    except OSError:
-                        pass  # racer's publish beat ours; fall through
-            finally:
-                os.close(fd)
-                try:
-                    os.unlink(lock)
-                except OSError:
-                    pass
-    publish(
-        d,
-        "_SUCCESS",
-        lambda stage: spark.read.parquet(src_path)
-        .repartition(n_shards)
-        .write.mode("overwrite")
-        .parquet(stage),
+    publish(d, marker, write)
+    # one footer read: a file stream needs an explicit schema
+    return (
+        spark.readStream.schema(spark.read.parquet(d).schema)
+        .option("maxFilesPerTrigger", str(files_per_trigger))
+        .parquet(d)
     )
-    if junk is not None and os.path.exists(os.path.join(d, "_SUCCESS")):
-        shutil.rmtree(junk, ignore_errors=True)  # publish done: corpse obsolete
 
 
-def _stage_dir(parquet_file: str) -> str:
-    """Spark's file-stream source monitors a DIRECTORY; the test tables
-    are bare parquet files. Stage a stable per-source directory under
-    the system tmpdir containing a link to the file (copy if the
-    filesystem refuses links). Production streams read real directories
-    (or Kafka) and skip this entirely."""
-    key = os.path.abspath(parquet_file).strip(os.sep).replace(os.sep, "_")
-    d = os.path.join(tempfile.gettempdir(), "minimapreduce_stream", key)
-    target = os.path.join(d, os.path.basename(parquet_file))
-    if not os.path.exists(target):
-        os.makedirs(d, exist_ok=True)
-        try:
-            os.symlink(parquet_file, target)
-        except OSError:
-            shutil.copy2(parquet_file, target)
-    return d
-
-
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``spark.readStream`` over the events parquet.
+def _events(
+    spark: SparkSession, sf_dir: str, stage: Callable[[str], DataFrame]
+) -> DataFrame:
+    """The events table as a stream, ``stage(path)`` opening the staged
+    replay of its parquet file.
 
     The file carries ``ts`` as either TIMESTAMP(NANOS) — which Spark's
     parquet reader only accepts as raw int64 (legacy nanosAsLong flag —
     same handling as the batch path in catalog._load_events; ns → µs
     uses integer DIV to keep full precision) — or plain
     TIMESTAMP(MICROS). ``ts`` lands as TIMESTAMP (UTC session) because
-    watermarks operate on event-time timestamps.
-    """
-    from pyspark.sql.types import LongType
-
+    watermarks operate on event-time timestamps."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema  # one footer read; stream needs explicit schema
-    sdf = spark.readStream.schema(schema).parquet(_stage_dir(path))
-    if isinstance(schema["ts"].dataType, LongType):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    else:
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    return sdf
+    sdf = stage(table_path(sf_dir, "events"))
+    if isinstance(sdf.schema["ts"].dataType, LongType):
+        return sdf.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return sdf.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A file stream over the events parquet: one micro-batch over a
+    staged directory holding a link to the file (a copy if the
+    filesystem refuses links)."""
+
+    def stage(path: str) -> DataFrame:
+        link = os.path.basename(path)
+
+        def write(d: str) -> None:
+            try:
+                os.symlink(path, os.path.join(d, link))
+            except OSError:
+                shutil.copy2(path, os.path.join(d, link))
+
+        return _stream_source(spark, "minimapreduce_stream", path, link, write, 1)
+
+    return _events(spark, sf_dir, stage)
 
 
 def events_stream_sharded(
@@ -143,39 +109,14 @@ def events_stream_sharded(
 ) -> DataFrame:
     """``events_stream`` variant that replays through MULTIPLE
     micro-batches: the table is staged once as ``n_shards`` parquet
-    files and the file source is capped at one file per trigger, so an
-    availableNow drain runs ``n_shards`` real batches — exercising
-    cross-batch state (upsert merges, stateful aggs) instead of one
-    degenerate batch. Production streams get this for free from
-    continuous file/Kafka arrival."""
-    from pyspark.sql.types import LongType
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    # The staging key includes the source's content fingerprint so a
-    # regenerated fixture at the same path can never silently replay
-    # stale shards from a previous run.
-    key = (
-        f"{os.path.abspath(path).strip(os.sep).replace(os.sep, '_')}"
-        f"_{content_fingerprint(path)}"
+    files (``table_stream_sharded``) and the file source is capped at
+    one file per trigger, so an availableNow drain runs ``n_shards``
+    real batches — exercising cross-batch state (upsert merges,
+    stateful aggs) instead of one degenerate batch. Production streams
+    get this for free from continuous file/Kafka arrival."""
+    return _events(
+        spark, sf_dir, lambda _: table_stream_sharded(spark, sf_dir, "events", n_shards)
     )
-    d = os.path.join(
-        tempfile.gettempdir(), "minimapreduce_stream_sharded", f"{key}_{n_shards}"
-    )
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        # Atomic publish + crash-corpse self-repair, TOCTOU-safe
-        _publish_shards(spark, path, d, n_shards)
-    schema = spark.read.parquet(d).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
-    if isinstance(schema["ts"].dataType, LongType):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    else:
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    return sdf
 
 
 def events_stream_redelivered(
@@ -189,47 +130,27 @@ def events_stream_redelivered(
     collapse those copies on the idempotency key; anything that merely
     counts rows overcounts by exactly the planted redelivery volume
     (which tests/test_streaming.py asserts is nonzero)."""
-    from pyspark.sql.types import LongType
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    key = (
-        f"{os.path.abspath(path).strip(os.sep).replace(os.sep, '_')}"
-        f"_{content_fingerprint(path)}"
-    )
-    d = os.path.join(
-        tempfile.gettempdir(),
-        "minimapreduce_stream_redelivered",
-        f"{key}_{n_shards}_{redeliver_mod}",
-    )
+    def stage(path: str) -> DataFrame:
+        # The shard loop appends n_shards times; `artifacts.publish`
+        # builds each attempt in a fresh stage, so an interrupted build
+        # can never leave a retry appending onto its partial shards.
+        def write(d: str) -> None:
+            base = spark.read.parquet(path)
+            for i in range(n_shards):
+                shard = base.where(
+                    (F.col("event_id") % n_shards == i)
+                    | (F.col("event_id") % redeliver_mod == 0)
+                )
+                shard.coalesce(1).write.mode("append").parquet(d)
+            open(os.path.join(d, "_DONE"), "w").close()
 
-    # The shard loop appends n_shards times, so an interrupted build
-    # that a retry appended onto would duplicate rows beyond the planted
-    # redelivery; `artifacts.publish` builds each attempt in a fresh
-    # stage, so ``d`` exists complete (with _DONE) or not at all.
-    def write(stage: str) -> None:
-        base = spark.read.parquet(path)
-        for i in range(n_shards):
-            shard = base.where(
-                (F.col("event_id") % n_shards == i)
-                | (F.col("event_id") % redeliver_mod == 0)
-            )
-            shard.coalesce(1).write.mode("append").parquet(stage)
-        open(os.path.join(stage, "_DONE"), "w").close()
+        return _stream_source(
+            spark, "minimapreduce_stream_redelivered", path, "_DONE", write, 1,
+            n_shards, redeliver_mod,
+        )
 
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    publish(d, "_DONE", write)
-    schema = spark.read.parquet(d).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
-    if isinstance(schema["ts"].dataType, LongType):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    else:
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    return sdf
+    return _events(spark, sf_dir, stage)
 
 
 def events_stream_time_sliced_redelivered(
@@ -256,62 +177,43 @@ def events_stream_time_sliced_redelivered(
     consumer). Built with pyarrow (slices are verbatim row copies, the
     parquet schema survives bit-for-bit) and published by
     `artifacts.publish` like the sibling."""
-    from pyspark.sql.types import LongType
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    key = (
-        f"{os.path.abspath(path).strip(os.sep).replace(os.sep, '_')}"
-        f"_{content_fingerprint(path)}"
-    )
-    d = os.path.join(
-        tempfile.gettempdir(),
-        "minimapreduce_stream_timesliced",
-        f"{key}_{n_slices}_{redeliver_mod}",
-    )
+    def stage(path: str) -> DataFrame:
+        def write(d: str) -> None:
+            import numpy as np
+            import pyarrow as pa
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
 
-    def write(stage: str) -> None:
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(path)
-        t = t.take(
-            pc.sort_indices(
-                t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-            )
-        )
-        ts = t["ts"].to_numpy().astype("int64")  # µs-or-ns ticks; units cancel
-        ids = t["event_id"].to_numpy()
-        span = max(int(ts[-1] - ts[0]), 1)
-        # integer slice index in [0, n_slices-1]; the max-ts row clamps
-        sl = np.minimum((ts - ts[0]) * n_slices // span, n_slices - 1)
-        for i in range(n_slices):
-            parts = [t.filter(pa.array(sl == i))]
-            if i > 0 and redeliver_mod:
-                parts.append(
-                    t.filter(pa.array((sl == i - 1) & (ids % redeliver_mod == 0)))
+            t = pq.read_table(path)
+            t = t.take(
+                pc.sort_indices(
+                    t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
                 )
-            f = os.path.join(stage, f"slice{i:02d}.parquet")
-            pq.write_table(pa.concat_tables(parts), f)
-            # deterministic strictly-increasing mtimes = replay order
-            os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
-        open(os.path.join(stage, "_DONE"), "w").close()
+            )
+            ts = t["ts"].to_numpy().astype("int64")  # µs-or-ns ticks; units cancel
+            ids = t["event_id"].to_numpy()
+            span = max(int(ts[-1] - ts[0]), 1)
+            # integer slice index in [0, n_slices-1]; the max-ts row clamps
+            sl = np.minimum((ts - ts[0]) * n_slices // span, n_slices - 1)
+            for i in range(n_slices):
+                parts = [t.filter(pa.array(sl == i))]
+                if i > 0 and redeliver_mod:
+                    parts.append(
+                        t.filter(pa.array((sl == i - 1) & (ids % redeliver_mod == 0)))
+                    )
+                f = os.path.join(d, f"slice{i:02d}.parquet")
+                pq.write_table(pa.concat_tables(parts), f)
+                # deterministic strictly-increasing mtimes = replay order
+                os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
+            open(os.path.join(d, "_DONE"), "w").close()
 
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    publish(d, "_DONE", write)
-    schema = spark.read.parquet(os.path.join(d, "slice00.parquet")).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(files_per_trigger))
-        .parquet(d)
-    )
-    if isinstance(schema["ts"].dataType, LongType):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    else:
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    return sdf
+        return _stream_source(
+            spark, "minimapreduce_stream_timesliced", path, "_DONE", write,
+            files_per_trigger, n_slices, redeliver_mod,
+        )
+
+    return _events(spark, sf_dir, stage)
 
 
 def run_to_memory(sdf: DataFrame, name: str, output_mode: str) -> DataFrame:
@@ -365,14 +267,29 @@ def run_to_parquet(
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
+    _drain(sdf, write_batch, checkpoint_dir, output_mode)
+
+
+def _drain(
+    sdf: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    output_mode: str,
+) -> None:
+    """Run ``batch_fn(batch_df, batch_id)`` on every micro-batch of
+    ``sdf`` available now and return when the query has finished. The
+    checkpoint's offset log at ``checkpoint_dir`` is the source half of
+    exactly-once; ``batch_fn`` must be idempotent per ``batch_id`` for
+    the sink half. An exception in ``batch_fn`` fails the query and is
+    raised here."""
+    (
+        sdf.writeStream.foreachBatch(batch_fn)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
 
 
 def events_stream_time_sliced(
@@ -392,26 +309,21 @@ def events_stream_time_sliced(
 def table_stream_sharded(
     spark: SparkSession, sf_dir: str, table: str, n_shards: int = 4
 ) -> DataFrame:
-    """Generic multi-micro-batch replay of ANY fixture table — the
-    ``events_stream_sharded`` staging discipline (hash shards, one file
-    per trigger, mtime/size-keyed staging) without the events-specific
-    timestamp handling. Used by the online ANN serving path to replay
-    the query vectors as a real query STREAM."""
+    """Multi-micro-batch replay of ANY fixture table: staged once as
+    ``n_shards`` hash shards (content-keyed), one file per trigger.
+    ``events_stream_sharded`` is this plus the events ``ts`` handling;
+    the online ANN serving path uses it to replay the query vectors as
+    a real query STREAM."""
     path = table_path(sf_dir, table)
-    key = (
-        f"{os.path.abspath(path).strip(os.sep).replace(os.sep, '_')}"
-        f"_{content_fingerprint(path)}"
-    )
-    d = os.path.join(
-        tempfile.gettempdir(), "minimapreduce_stream_tbl", f"{key}_{n_shards}"
-    )
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        # Atomic publish (the ivfpq_index_build discipline) + TOCTOU-
-        # safe crash-corpse self-repair — see _publish_shards
-        _publish_shards(spark, path, d, n_shards)
-    schema = spark.read.parquet(d).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
+    return _stream_source(
+        spark,
+        "minimapreduce_stream_tbl",
+        path,
+        "_SUCCESS",
+        lambda d: spark.read.parquet(path)
+        .repartition(n_shards)
+        .write.mode("overwrite")
+        .parquet(d),
+        1,
+        n_shards,
     )

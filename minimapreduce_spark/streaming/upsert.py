@@ -26,8 +26,46 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from minimapreduce_spark.artifacts import publish
+from minimapreduce_spark.operators.dedup import (
+    _JACCARD_ORACLE,
+    INCR_BATCH_MOD,
+    MINHASH_BUCKET_SCHEMA,
+    MINHASH_SHINGLE_SCHEMA,
+    MINHASH_THRESHOLD,
+    SHINGLE_K,
+    minhash_band_buckets,
+    minhash_index_build,
+    minhash_signatures,
+    probe_band_index,
+    shingle_hashes,
+)
+from minimapreduce_spark.operators.relational import (
+    IVM_DEL_MOD,
+    IVM_DIM_MOD,
+    IVM_FACT_MOD,
+    IVM_UPD_MOD,
+    IVM_UPD_SEGMENT,
+    IVM_UPSERTS_ORACLE,
+    IVM_VIEW_SCHEMA,
+    JOIN_VIEW_MARKER,
+    join_view_build,
+    join_view_root,
+)
+from minimapreduce_spark.operators.similarity import (
+    KMEANS_SCALE,
+    N_QUERIES,
+    _ivfpq_oracle,
+    _ivfpq_serve,
+    ivfpq_index_build,
+)
 from minimapreduce_spark.registry import register
-from minimapreduce_spark.streaming.source import events_stream_sharded
+from minimapreduce_spark.streaming.source import (
+    _drain,
+    events_stream_sharded,
+    events_stream_time_sliced,
+    table_stream_sharded,
+)
 
 STATE_SCHEMA = "user_id bigint, last_ts timestamp, last_event_id bigint, last_value double"
 
@@ -131,14 +169,7 @@ def stream_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = merged.localCheckpoint(eager=True)
             publish_atomic(merged, state_dir)
 
-        q = (
-            sdf.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(sdf, merge_batch, ckpt, "append")
         out = spark.read.schema(STATE_SCHEMA).parquet(state_dir).localCheckpoint(
             eager=True
         )
@@ -147,8 +178,9 @@ def stream_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_ann_serve_ivfpq",
-    oracle=None,  # set just below via registry surgery-free import: see
-    # _set_serve_oracle — the oracle IS the batch served twin's
+    # drained union over independent per-batch scoring ≡ one batch
+    # serve, so the oracle IS the batch served twin's
+    oracle=_ivfpq_oracle(),
 )
 def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE ANN SERVING — the query-stream half of the index
@@ -174,16 +206,6 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stateless enrichment — the serving tier's whole point); results
     append to the sink. Latency is the micro-batch trigger, capacity
     is executors × cells-per-second — both independent of index build."""
-    from pyspark.sql import functions as F
-
-    from minimapreduce_spark.operators.similarity import (
-        KMEANS_SCALE,
-        N_QUERIES,
-        _ivfpq_serve,
-        ivfpq_index_build,
-    )
-    from minimapreduce_spark.streaming.source import table_stream_sharded
-
     from minimapreduce_spark.catalog import load_table
 
     if load_table(spark, sf_dir, "embeddings").head(1) == []:
@@ -233,14 +255,7 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             res.write.mode("append").parquet(out_dir)
 
-        q = (
-            qstream.writeStream.foreachBatch(serve_batch)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(qstream, serve_batch, ckpt, "append")
         stream_ann_serve_ivfpq.last_nonempty_batches = n_batches["nonempty"]
         out = (
             spark.read.schema(
@@ -252,28 +267,13 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
 
 
-def _set_serve_oracle() -> None:
-    """The online serve's oracle IS the batch served twin's (drained
-    union over independent per-batch scoring ≡ one batch serve);
-    registered after the fact because the oracle text lives in
-    operators.similarity and importing it at module top would cycle."""
-    from dataclasses import replace
-
-    from minimapreduce_spark.operators.similarity import _ivfpq_oracle
-    from minimapreduce_spark.registry import REGISTRY
-
-    REGISTRY["stream_ann_serve_ivfpq"] = replace(
-        REGISTRY["stream_ann_serve_ivfpq"], oracle=_ivfpq_oracle()
-    )
-
-
-_set_serve_oracle()
-
-
 @register(
     "stream_minhash_index_probe",
-    oracle=None,  # set below by _set_dedup_probe_oracle: the oracle IS
-    # the batch index-probe twin's (restricted exact-Jaccard SQL)
+    # drained union over slice probes ≡ one batch probe, so the oracle
+    # IS the batch index-probe twin's (restricted exact-Jaccard SQL)
+    oracle="SELECT * FROM ("
+    + _JACCARD_ORACLE.format(kminus1=SHINGLE_K - 1, threshold=MINHASH_THRESHOLD)
+    + f") WHERE doc_a % {INCR_BATCH_MOD} = 0 OR doc_b % {INCR_BATCH_MOD} = 0",
 )
 def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE INCREMENTAL DEDUP — the arrival-stream rung of the dedup
@@ -306,17 +306,6 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only parquet, which is how a restartable ingest tier keeps
     it (re-deriving from the checkpoint offsets on recovery)."""
     from minimapreduce_spark.catalog import fan_out, load_table
-    from minimapreduce_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        MINHASH_BUCKET_SCHEMA,
-        MINHASH_SHINGLE_SCHEMA,
-        minhash_band_buckets,
-        minhash_index_build,
-        minhash_signatures,
-        probe_band_index,
-        shingle_hashes,
-    )
-    from minimapreduce_spark.streaming.source import table_stream_sharded
 
     docs = load_table(spark, sf_dir, "documents")
     if docs.head(1) == []:
@@ -391,47 +380,12 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             sh_s.write.mode("append").parquet(arrived_s)
 
-        q = (
-            arrivals.writeStream.foreachBatch(probe_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(arrivals, probe_batch, ckpt, "append")
         stream_minhash_index_probe.last_nonempty_batches = n_batches["nonempty"]
         out = (
             spark.read.schema(pair_schema).parquet(out_dir).localCheckpoint(eager=True)
         )
         return out
-
-
-def _set_dedup_probe_oracle() -> None:
-    """The online probe's oracle IS the batch index-probe twin's
-    (drained union over slice probes ≡ one batch probe); registered
-    after the fact to avoid importing operators.dedup at module top."""
-    from dataclasses import replace
-
-    from minimapreduce_spark.operators.dedup import (
-        _JACCARD_ORACLE,
-        INCR_BATCH_MOD,
-        MINHASH_THRESHOLD,
-        SHINGLE_K,
-    )
-    from minimapreduce_spark.registry import REGISTRY
-
-    sql = (
-        "SELECT * FROM ("
-        + _JACCARD_ORACLE.format(
-            kminus1=SHINGLE_K - 1, threshold=MINHASH_THRESHOLD
-        )
-        + f") WHERE doc_a % {INCR_BATCH_MOD} = 0 OR doc_b % {INCR_BATCH_MOD} = 0"
-    )
-    REGISTRY["stream_minhash_index_probe"] = replace(
-        REGISTRY["stream_minhash_index_probe"], oracle=sql
-    )
-
-
-_set_dedup_probe_oracle()
 
 
 # SCD2 band thresholds on the exact ten-thousandths grid (value is a
@@ -543,7 +497,6 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     No reference analog (nearest: the reduce-side key grouping of
     mr/worker.go:136-157)."""
     from minimapreduce_spark.catalog import load_table
-    from minimapreduce_spark.streaming.source import events_stream_time_sliced
 
     if load_table(spark, sf_dir, "events").head(1) == []:
         return spark.createDataFrame(
@@ -615,13 +568,7 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).write.mode("overwrite").parquet(nxt)
             open_ver["cur"] = nxt
 
-        q = (
-            sdf.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(sdf, apply_batch, ckpt, "append")
         stream_scd2_band_history.last_nonempty_batches = n_batches["nonempty"]
         closed = spark.read.schema(closed_schema).parquet(closed_dir)
         if open_ver["cur"] is None:
@@ -644,10 +591,7 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
 
 
-@register(
-    "stream_incremental_join_view",
-    oracle=None,  # set below from the shared batch-IVM oracle
-)
+@register("stream_incremental_join_view", oracle=IVM_UPSERTS_ORACLE)
 def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING IVM — the CDC rung that joins the engine's two
     maintenance stories: `incremental_join_view_upserts` proves the
@@ -693,17 +637,7 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream engine — the logs ARE the state, so a crash-restart
     replays idempotently from the checkpoint WAL."""
     from minimapreduce_spark.catalog import load_table
-    from minimapreduce_spark.operators.relational import (
-        IVM_DEL_MOD,
-        IVM_DIM_MOD,
-        IVM_FACT_MOD,
-        IVM_UPD_MOD,
-        IVM_UPD_SEGMENT,
-        IVM_VIEW_SCHEMA,
-        join_view_build,
-    )
     from minimapreduce_spark.session import narrow_clone
-    from minimapreduce_spark.streaming.source import table_stream_sharded
 
     empty_schema = IVM_VIEW_SCHEMA
     if (
@@ -780,14 +714,9 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(os.path.join(delta_dir, f"b{batch_id:05d}"))
             )
 
-        q = (
-            table_stream_sharded(spark, sf_dir, "customer")
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _drain(
+            table_stream_sharded(spark, sf_dir, "customer"), apply_batch, ckpt, "append"
         )
-        q.awaitTermination()
         stream_incremental_join_view.last_nonempty_batches = n_batches["nonempty"]
 
         tombs = (
@@ -846,12 +775,6 @@ def stream_join_view_rebuild(
     — the next day's CDC maintains against the new base with an empty
     tombstone set. Idempotent: an existing published root is returned
     untouched."""
-    from minimapreduce_spark.artifacts import publish
-    from minimapreduce_spark.operators.relational import (
-        JOIN_VIEW_MARKER,
-        join_view_root,
-    )
-
     base = join_view_root(sf_dir)
 
     def write(stage: str) -> None:
@@ -863,10 +786,7 @@ def stream_join_view_rebuild(
     return publish(root, JOIN_VIEW_MARKER, write, parent=base)
 
 
-@register(
-    "stream_incremental_join_view_rebuild",
-    oracle=None,  # set below from the shared batch-IVM oracle
-)
+@register("stream_incremental_join_view_rebuild", oracle=IVM_UPSERTS_ORACLE)
 def stream_incremental_join_view_rebuild(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -894,7 +814,6 @@ def stream_incremental_join_view_rebuild(
     (append-only logs + WAL) and the rename either happened or the
     stage directory is garbage — never a half-published base."""
     from minimapreduce_spark.catalog import load_table
-    from minimapreduce_spark.operators.relational import IVM_VIEW_SCHEMA, join_view_root
 
     # serve-path fast exit: a published artifact already encodes its
     # inputs' state, so the degenerate-input guards (two head(1) driver
@@ -908,22 +827,3 @@ def stream_incremental_join_view_rebuild(
             return spark.createDataFrame([], IVM_VIEW_SCHEMA)
         root = stream_join_view_rebuild(spark, sf_dir, root=root)
     return spark.read.schema(IVM_VIEW_SCHEMA).parquet(os.path.join(root, "view"))
-
-
-def _set_stream_ivm_oracle() -> None:
-    """Share the batch-IVM recompute oracle verbatim (import deferred:
-    relational imports are heavy and upsert must stay import-light)."""
-    from minimapreduce_spark.operators.relational import IVM_UPSERTS_ORACLE
-    from minimapreduce_spark.registry import REGISTRY, Query
-
-    for name in (
-        "stream_incremental_join_view",
-        "stream_incremental_join_view_rebuild",
-    ):
-        q = REGISTRY[name]
-        REGISTRY[name] = Query(
-            fn=q.fn, oracle=IVM_UPSERTS_ORACLE, bench=q.bench, doc=q.doc
-        )
-
-
-_set_stream_ivm_oracle()

@@ -198,32 +198,6 @@ def test_vacuum_grace_window_runs_from_supersession_not_publish(spark, tmp_path)
     assert rep["deleted"] == [base_name]
 
 
-def test_publish_shards_repair_cleans_junk_and_locks(spark, tmp_path):
-    """_publish_shards' crash-corpse repair (round-10 ADVICE): the
-    corpse moved aside during repair is REMOVED once the re-publish
-    lands (junk dirs no longer accumulate in tempdir), the repair
-    lockfile does not outlive the call, and the published shard set is
-    complete (_SUCCESS present, readable)."""
-    import glob
-
-    from minimapreduce_spark.catalog import table_path
-    from minimapreduce_spark.streaming.source import _publish_shards
-
-    src = table_path(SF_DIR, "events")
-    d = os.path.join(str(tmp_path), "shards", "events_corpse_test")
-    # plant a crash corpse: a directory without _SUCCESS
-    os.makedirs(d)
-    with open(os.path.join(d, "part-junk.parquet"), "w") as f:
-        f.write("not parquet")
-
-    _publish_shards(spark, src, d, n_shards=2)
-
-    assert os.path.exists(os.path.join(d, "_SUCCESS"))
-    assert spark.read.parquet(d).count() > 0
-    assert not os.path.exists(d + ".repair_lock")
-    assert glob.glob(os.path.join(os.path.dirname(d), "corpse_*")) == []
-
-
 def test_nightly_maintenance_compacts_then_vacuums_idempotently(spark, tmp_path):
     """The scheduled entry point (`artifacts.nightly_maintenance`):
     (a) the fragmented append leaf is compacted and the ENTIRE
@@ -351,21 +325,34 @@ def test_publish_never_renames_a_stage_without_its_marker(tmp_path):
     assert os.listdir(tmp_path) == []
 
 
+def test_publish_raises_on_a_non_empty_root_without_its_marker(tmp_path):
+    """A non-empty root that lacks the marker is not a published
+    artifact and cannot be replaced by a rename: publish raises, leaves
+    the root as it found it and removes its stage."""
+    from minimapreduce_spark.artifacts import publish
+
+    root = tmp_path / "r"
+    root.mkdir()
+    (root / "part-junk.parquet").write_text("not parquet")
+    with pytest.raises(OSError):
+        publish(str(root), "view", _write_view("x"))
+    assert _stage_dirs(tmp_path) == []
+    assert os.listdir(root) == ["part-junk.parquet"]
+
+
 def test_no_hand_rolled_publish_outside_artifacts():
-    """Every create-once publish goes through ``artifacts.publish``:
-    ``os.rename(`` / ``tempfile.mkdtemp(`` appear only in artifacts.py,
-    in ``sources.formats.publish_atomic`` (the replace-in-place swap)
-    and in ``_publish_shards``' crash-corpse move-aside."""
+    """Every create-once publish goes through ``artifacts.publish`` and
+    every artifact root is named from ``artifacts.engine_root``:
+    ``os.rename(`` / ``tempfile.mkdtemp(`` appear only in artifacts.py
+    and in ``sources.formats.publish_atomic`` (the replace-in-place
+    swap), ``tempfile.gettempdir(`` only in artifacts.py."""
     import ast
 
     pkg = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "minimapreduce_spark",
     )
-    allowed = {
-        "sources/formats.py": {"publish_atomic"},
-        "streaming/source.py": {"_publish_shards"},
-    }
+    allowed = {"sources/formats.py": {"publish_atomic"}}
     found = []
     for dirpath, _dirs, files in os.walk(pkg):
         for f in files:
@@ -383,13 +370,16 @@ def test_no_hand_rolled_publish_outside_artifacts():
                 if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     owner.update((node, fn.name) for node in ast.walk(fn))
             for node in ast.walk(tree):
-                name = owner.get(node, "<module>")
-                if (
+                if not (
                     isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
                     and isinstance(node.func.value, ast.Name)
-                    and (node.func.value.id, node.func.attr)
-                    in {("os", "rename"), ("tempfile", "mkdtemp")}
+                ):
+                    continue
+                call = (node.func.value.id, node.func.attr)
+                name = owner.get(node, "<module>")
+                if call == ("tempfile", "gettempdir") or (
+                    call in {("os", "rename"), ("tempfile", "mkdtemp")}
                     and name not in allowed.get(rel, ())
                 ):
                     found.append(f"{rel}:{node.lineno} in {name}")

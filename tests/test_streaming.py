@@ -1018,20 +1018,124 @@ def test_stream_state_width_derivation(spark):
     assert _exactly_once_state_width(spark, SF_DIR) >= 2
 
 
-def test_failed_drain_leaves_no_work_dir(spark, tmp_path, monkeypatch):
-    """A drain whose foreachBatch raises propagates the error and
-    removes its work dir (state, checkpoint) on the way out."""
+@pytest.mark.parametrize(
+    "query, work_prefix",
+    [
+        pytest.param(q, prefix, id=q)
+        for q, prefix in [
+            ("stream_upsert_latest_state", "minimapreduce_upsert_"),
+            ("stream_scd2_band_history", "minimapreduce_scd2_"),
+            ("stream_incremental_join_view", "minimapreduce_stream_ivm_"),
+        ]
+    ],
+)
+def test_failed_drain_leaves_no_work_dir(spark, tmp_path, monkeypatch, query, work_prefix):
+    """A drain whose foreachBatch raises after its first batch has
+    written state propagates the error and removes its work dir
+    (state, logs, checkpoint) on the way out."""
     import tempfile
 
-    import minimapreduce_spark.sources.formats as formats
-    from minimapreduce_spark.streaming.upsert import stream_upsert_latest_state
+    import minimapreduce_spark.streaming.upsert as upsert
 
-    def boom(*args, **kwargs):
-        raise RuntimeError("injected batch failure")
+    drain = upsert._drain
+
+    def failing_drain(sdf, batch_fn, checkpoint_dir, output_mode):
+        def fail_after(batch_df, batch_id):
+            batch_fn(batch_df, batch_id)
+            raise RuntimeError("injected batch failure")
+
+        drain(sdf, fail_after, checkpoint_dir, output_mode)
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    monkeypatch.setattr(formats, "publish_atomic", boom)
+    monkeypatch.setattr(upsert, "_drain", failing_drain)
     with pytest.raises(Exception, match="injected batch failure"):
-        stream_upsert_latest_state(spark, SF_DIR)
-    left = [n for n in os.listdir(tmp_path) if n.startswith("minimapreduce_upsert")]
-    assert left == []
+        getattr(upsert, query)(spark, SF_DIR)
+    left = os.listdir(tmp_path)
+    assert any(n.startswith("minimapreduce_stream") for n in left)  # sources staged here
+    assert [n for n in left if n.startswith(work_prefix)] == []
+
+
+def test_stream_sources_stage_under_pinned_names(spark, tmp_path, monkeypatch):
+    """The staged directory of every stager at the sf0.001 fixture: the
+    source path as the key, then, for a copied replay, the source's
+    content fingerprint and the replay's params. The events shards are
+    ``table_stream_sharded``'s, so both stagers share one directory."""
+    import tempfile
+
+    from minimapreduce_spark.catalog import content_fingerprint, table_path
+    from minimapreduce_spark.streaming import source
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    source.events_stream(spark, SF_DIR)
+    source.events_stream_sharded(spark, SF_DIR, n_shards=4)
+    source.table_stream_sharded(spark, SF_DIR, "events", n_shards=4)
+    source.table_stream_sharded(spark, SF_DIR, "customer", n_shards=3)
+    source.events_stream_redelivered(spark, SF_DIR, n_shards=4, redeliver_mod=13)
+    source.events_stream_time_sliced_redelivered(spark, SF_DIR)
+    source.events_stream_time_sliced(spark, SF_DIR)
+
+    def key(table):
+        path = table_path(SF_DIR, table)
+        return os.path.abspath(path).strip(os.sep).replace(os.sep, "_"), (
+            content_fingerprint(path)
+        )
+
+    (ev, ev_fp), (cu, cu_fp) = key("events"), key("customer")
+    staged = {fam: sorted(os.listdir(tmp_path / fam)) for fam in os.listdir(tmp_path)}
+    assert staged == {
+        "minimapreduce_stream": [ev],
+        "minimapreduce_stream_tbl": sorted([f"{ev}_{ev_fp}_4", f"{cu}_{cu_fp}_3"]),
+        "minimapreduce_stream_redelivered": [f"{ev}_{ev_fp}_4_13"],
+        "minimapreduce_stream_timesliced": sorted(
+            [f"{ev}_{ev_fp}_10_13", f"{ev}_{ev_fp}_10_0"]
+        ),
+    }
+
+
+def test_events_stream_staged_once_under_concurrent_calls(spark, tmp_path, monkeypatch):
+    """Several sessions staging the events link dir at once all get the
+    same complete directory: every stage is written before any rename,
+    one rename wins, the losers return the winner's root, and no stage
+    is left behind."""
+    import tempfile
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from minimapreduce_spark.catalog import table_path
+    from minimapreduce_spark.streaming import source
+
+    n = 4
+    barrier = threading.Barrier(n, timeout=120)
+    publish = source.publish
+    roots, errors = [], []
+
+    def racing_publish(root, marker, write):
+        def write_then_wait(stage):
+            write(stage)
+            barrier.wait()
+
+        roots.append(publish(root, marker, write_then_wait))
+        return roots[-1]
+
+    def call():
+        try:
+            source.events_stream(spark, SF_DIR)
+        except Exception as e:  # noqa: BLE001 — collected for the assert
+            errors.append(e)
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(source, "publish", racing_publish)
+    threads = [threading.Thread(target=call) for _ in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(roots) == n and len(set(roots)) == 1
+    root, path = roots[0], table_path(SF_DIR, "events")
+    assert os.listdir(root) == [os.path.basename(path)]
+    link = os.path.join(root, os.path.basename(path))
+    assert pq.read_metadata(link).num_rows == pq.read_metadata(path).num_rows
+    assert [d for d in os.listdir(os.path.dirname(root)) if d.startswith(".stage-")] == []
