@@ -11,10 +11,11 @@ files); the north star adds streams as a first-class capability. Design:
 - Window/session/stateful operators transform the stream exactly as
   their batch twins in ``operators/events.py`` do.
 - Each registered query drains the stream with
-  ``trigger(availableNow=True)``: into a memory sink
-  (``source.run_to_memory``), or through ``foreachBatch`` by the one
-  drain runner ``source._drain`` (the parquet sink and the
-  ``upsert.py`` state/log drains). It returns the result DataFrame,
+  ``trigger(availableNow=True)`` through ``foreachBatch`` by the one
+  drain runner ``source._drain``: ``source.run_to_memory`` keeps each
+  batch as a local checkpoint and returns their union, the parquet
+  sink and the ``upsert.py`` state/log drains write under their own
+  checkpoint directory. It returns the result DataFrame,
   so the DuckDB oracle protocol applies unchanged —
   streaming output must equal the batch answer over the same data
   (the streaming analog of the reference's distributed-vs-sequential

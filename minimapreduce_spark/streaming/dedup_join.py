@@ -11,7 +11,7 @@ Two more Structured Streaming operator families beyond windowed aggs
   sides carry watermarks so Spark can bound the join state buffer;
   the range condition tells it how long a left row can still match.
 
-Both are drained with availableNow into a memory sink (streaming/
+Both are drained with availableNow by ``run_to_memory`` (streaming/
 source.py) so they participate in the batch oracle protocol.
 """
 
@@ -40,7 +40,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = sdf.dropDuplicatesWithinWatermark(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    return run_to_memory(deduped, "stream_dedup_watermark", "append")
+    return run_to_memory(deduped, "append")
 
 
 @register(
@@ -95,7 +95,7 @@ def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             """
         ),
     )
-    out = run_to_memory(joined, "stream_view_purchase_join", "append")
+    out = run_to_memory(joined, "append")
     return out.select(
         "user_id",
         "view_id",
@@ -140,7 +140,7 @@ def stream_exactly_once_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = sdf.dropDuplicates(["event_id"]).select(
         "event_id", "event_type", "value"
     )
-    drained = run_to_memory(deduped, "stream_exactly_once_ingest", "append")
+    drained = run_to_memory(deduped, "append")
     return drained.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum(F.round(F.col("value") * 10000).cast("bigint")).alias("value_c_sum"),
@@ -291,11 +291,7 @@ def stream_exactly_once_watermarked(spark: SparkSession, sf_dir: str) -> DataFra
     prev = s2.conf.get(key, "true")
     s2.conf.set(key, "false")
     try:
-        drained = run_to_memory(
-            exactly_once_watermarked_plan(s2, sf_dir),
-            "stream_exactly_once_watermarked",
-            "append",
-        )
+        drained = run_to_memory(exactly_once_watermarked_plan(s2, sf_dir), "append")
     finally:
         s2.conf.set(key, prev)
     return drained.groupBy("event_type").agg(
@@ -404,7 +400,7 @@ def stream_left_outer_views(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     )
-    out = run_to_memory(joined, "stream_left_outer_views", "append")
+    out = run_to_memory(joined, "append")
     return out.select(
         "user_id",
         "view_id",
@@ -532,7 +528,7 @@ def stream_full_outer_view_purchase(spark: SparkSession, sf_dir: str) -> DataFra
         ),
         "fullOuter",
     )
-    out = run_to_memory(joined, "stream_full_outer_view_purchase", "append")
+    out = run_to_memory(joined, "append")
     return out.select(
         F.coalesce("user_id", "p_user_id").alias("user_id"),
         "view_id",

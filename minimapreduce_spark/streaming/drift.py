@@ -112,7 +112,7 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(bin_of(F.col("vc")).alias("bin"))
         .agg(F.count("*").alias("n_live"))
     )
-    live = run_to_memory(live_stream, "psi_live", "complete")
+    live = run_to_memory(live_stream, "complete")
 
     bins = spark.range(PSI_STREAM_BINS).select(F.col("id").alias("bin"))
     counts = (

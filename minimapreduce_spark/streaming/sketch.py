@@ -62,7 +62,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d", "bucket")
         .agg(F.count("*").alias("counter"))
     )
-    counters = run_to_memory(counters_stream, "cms_stream", "complete")
+    counters = run_to_memory(counters_stream, "complete")
 
     ev = load_table(spark, sf_dir, "events")
     ec = ev.groupBy("user_id").agg(F.count("*").alias("cnt"))
@@ -165,8 +165,8 @@ def stream_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: state ≤ K longs per group; each micro-batch ships
     one Arrow frame per group per batch; the estimator join is over
     |groups| rows. Production sinks would emit the running estimate per
-    trigger — the memory-sink drain here exists to compare against the
-    batch oracle exactly.
+    trigger — the ``run_to_memory`` drain here exists to compare against
+    the batch oracle exactly.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.window import Window as W
@@ -182,7 +182,7 @@ def stream_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    drained = run_to_memory(updates, "kmv_stream", "update")
+    drained = run_to_memory(updates, "update")
     w = W.partitionBy("event_type").orderBy(F.desc("n_rows"))
     final = (
         drained.withColumn("rn", F.row_number().over(w))
@@ -262,7 +262,7 @@ def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality, map-side-combined per micro-batch — jointly with the
     streaming CMS the cheapest stateful operator in the module; the
     rollup and estimator run over |groups|×64 drained rows. Production
-    emits the running estimate per trigger; the memory-sink drain
+    emits the running estimate per trigger; the ``run_to_memory`` drain
     exists to compare against the batch oracle exactly."""
     from minimapreduce_spark.operators.scale import _HLL_EST, HLL_M, hll_rho
 
@@ -290,7 +290,7 @@ def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "j")
         .agg(F.max("rho").alias("mj"))
     )
-    regs = run_to_memory(regs_stream, "hll_stream", "complete")
+    regs = run_to_memory(regs_stream, "complete")
     roll = regs.groupBy("event_type").agg(
         F.count("*").alias("nj"),
         F.sum(F.expr("CAST(pow(2.0, 55 - mj) AS BIGINT)")).alias("zp"),
@@ -404,7 +404,7 @@ def stream_ams_f2_user_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             for d in range(AMS_D)
         ],
     )
-    drained = run_to_memory(counters, "ams_stream", "complete")
+    drained = run_to_memory(counters, "complete")
 
     ev = load_table(spark, sf_dir, "events")
     ex = (
@@ -523,7 +523,7 @@ def stream_quantile_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.count("*").alias("cnt"))
     )
-    sk = run_to_memory(counters_stream, "quantile_stream", "complete")
+    sk = run_to_memory(counters_stream, "complete")
 
     ev = load_table(spark, sf_dir, "events")
     vals = (
@@ -705,9 +705,7 @@ def stream_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bits")
         )
     )
-    sk = run_to_memory(pos_stream, "bloom_stream", "complete").localCheckpoint(
-        eager=False
-    )
+    sk = run_to_memory(pos_stream, "complete")
     stats = sk.groupBy("event_type").agg(
         F.sum(F.bit_count("bits")).cast("bigint").alias("bits_set")
     )

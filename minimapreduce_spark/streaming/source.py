@@ -10,16 +10,17 @@ and opens it as a file stream at the replay's trigger size;
 read real directories (or Kafka) and skip the staging.
 
 Every drain goes through ``_drain``: one ``foreachBatch`` query with a
-checkpoint and an ``availableNow`` trigger, waited on to the end.
+checkpoint (the caller's, or Spark's temporary one) and an
+``availableNow`` trigger, waited on to the end.
 ``run_to_parquet`` is the idempotent parquet sink on top of it;
-``run_to_memory`` drains into a memory sink and hands back the
-materialized result — the bridge that lets streaming queries
-participate in the batch oracle protocol.
+``run_to_memory`` keeps each batch as a local checkpoint and hands back
+their union — the bridge that lets streaming queries participate in
+the batch oracle protocol.
 """
 
 from __future__ import annotations
 
-import itertools
+import functools
 import os
 import shutil
 from typing import Callable
@@ -30,8 +31,6 @@ from pyspark.sql.types import LongType
 
 from minimapreduce_spark.artifacts import engine_root, publish
 from minimapreduce_spark.catalog import content_fingerprint, table_path
-
-_SINK_IDS = itertools.count()
 
 
 def _stream_source(
@@ -216,26 +215,29 @@ def events_stream_time_sliced_redelivered(
     return _events(spark, sf_dir, stage)
 
 
-def run_to_memory(sdf: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Drain a streaming DataFrame into a memory sink and return it.
+def run_to_memory(sdf: DataFrame, output_mode: str) -> DataFrame:
+    """Drain a streaming DataFrame through ``_drain`` and return what a
+    sink in ``output_mode`` holds at the end.
 
     ``availableNow`` processes everything currently in the source then
     stops — deterministic, so the result is comparable to a batch oracle.
-    The sink name is uniquified per call; the memory sink is a test/
-    bridge device only (production sinks: kafka/parquet/delta via
-    ``writeStream`` on the same plan).
+    Each micro-batch is eagerly ``localCheckpoint``ed; ``complete`` mode
+    keeps the last batch, ``append`` and ``update`` keep every batch (a
+    replayed ``batch_id`` replaces its first run), and the kept batches
+    are unioned. Nothing is registered on the session, and the frames
+    belong to the query's session clone (AQE off for stateful queries).
     """
-    spark = sdf.sparkSession
-    sink = f"{name}_{next(_SINK_IDS)}"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    kept: dict[int, DataFrame] = {}
+
+    def keep(batch_df: DataFrame, batch_id: int) -> None:
+        if output_mode == "complete":
+            kept.clear()
+        kept[batch_id] = batch_df.localCheckpoint(eager=True)
+
+    _drain(sdf, keep, None, output_mode)
+    if not kept:
+        return sdf.sparkSession.createDataFrame([], sdf.schema)
+    return functools.reduce(DataFrame.union, kept.values())
 
 
 def run_to_parquet(
@@ -249,8 +251,10 @@ def run_to_parquet(
     a crash-restart rewrites the same files instead of appending
     duplicates — idempotence is the sink half of Structured Streaming's
     exactly-once contract (the checkpoint's WAL is the source half).
-    This is the production-sink twin of ``run_to_memory``; works for
-    any output mode whose batches are self-contained (append/update).
+    Like ``run_to_memory`` it drains through ``_drain``, but it writes
+    each batch out under the caller's checkpoint instead of keeping it
+    in the session; works for any output mode whose batches are
+    self-contained (append/update).
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -273,23 +277,21 @@ def run_to_parquet(
 def _drain(
     sdf: DataFrame,
     batch_fn: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
+    checkpoint_dir: str | None,
     output_mode: str,
 ) -> None:
     """Run ``batch_fn(batch_df, batch_id)`` on every micro-batch of
     ``sdf`` available now and return when the query has finished. The
     checkpoint's offset log at ``checkpoint_dir`` is the source half of
     exactly-once; ``batch_fn`` must be idempotent per ``batch_id`` for
-    the sink half. An exception in ``batch_fn`` fails the query and is
-    raised here."""
-    (
-        sdf.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    the sink half. ``checkpoint_dir=None`` sets no location: Spark uses
+    a temporary one (``java.io.tmpdir/temporary-*``) that it deletes
+    when the query stops cleanly, and at JVM exit. An exception in
+    ``batch_fn`` fails the query and is raised here."""
+    writer = sdf.writeStream.foreachBatch(batch_fn).outputMode(output_mode)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer.trigger(availableNow=True).start().awaitTermination()
 
 
 def events_stream_time_sliced(

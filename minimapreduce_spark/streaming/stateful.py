@@ -76,7 +76,7 @@ def stream_user_stats_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_to_memory(updates, "stream_user_stats_stateful", "update")
+    return run_to_memory(updates, "update")
 
 
 # ---------------------------------------------------------------------------
@@ -268,4 +268,4 @@ def stream_sessions_timer_finalized(spark: SparkSession, sf_dir: str) -> DataFra
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    return run_to_memory(out, "stream_sessions_timer_finalized", "append")
+    return run_to_memory(out, "append")

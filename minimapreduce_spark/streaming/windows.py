@@ -58,7 +58,7 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-    out = run_to_memory(agg, "stream_tumbling_hourly", "complete")
+    out = run_to_memory(agg, "complete")
     return out.select(
         F.col("win.start").cast("timestamp_ntz").alias("hour_start"),
         "event_type",
@@ -116,7 +116,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", SESSION_GAP).alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-    out = run_to_memory(agg, "stream_session_window", "complete")
+    out = run_to_memory(agg, "complete")
     return out.select(
         "user_id",
         F.col("sw.start").cast("timestamp_ntz").alias("session_start"),
@@ -156,7 +156,7 @@ def stream_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-    out = run_to_memory(agg, "stream_sliding_1h_30m", "complete")
+    out = run_to_memory(agg, "complete")
     return out.select(
         F.col("win.start").cast("timestamp_ntz").alias("win_start"),
         "event_type",
@@ -194,7 +194,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment", "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-    return run_to_memory(agg, "stream_static_enrich", "complete")
+    return run_to_memory(agg, "complete")
 
 
 @register(
@@ -235,7 +235,7 @@ def stream_tumbling_append_finalized(spark: SparkSession, sf_dir: str) -> DataFr
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count("*").alias("n_events"))
     )
-    out = run_to_memory(agg, "stream_tumbling_append_finalized", "append")
+    out = run_to_memory(agg, "append")
     return out.select(
         F.col("win.start").cast("timestamp_ntz").alias("hour_start"),
         "event_type",

@@ -340,28 +340,21 @@ def test_publish_raises_on_a_non_empty_root_without_its_marker(tmp_path):
     assert os.listdir(root) == ["part-junk.parquet"]
 
 
-def test_no_hand_rolled_publish_outside_artifacts():
-    """Every create-once publish goes through ``artifacts.publish`` and
-    every artifact root is named from ``artifacts.engine_root``:
-    ``os.rename(`` / ``tempfile.mkdtemp(`` appear only in artifacts.py
-    and in ``sources.formats.publish_atomic`` (the replace-in-place
-    swap), ``tempfile.gettempdir(`` only in artifacts.py."""
+def _engine_nodes():
+    """``(module path, innermost enclosing function, node)`` for every
+    AST node of every module in ``minimapreduce_spark/``."""
     import ast
 
     pkg = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "minimapreduce_spark",
     )
-    allowed = {"sources/formats.py": {"publish_atomic"}}
-    found = []
     for dirpath, _dirs, files in os.walk(pkg):
         for f in files:
             if not f.endswith(".py"):
                 continue
             path = os.path.join(dirpath, f)
             rel = os.path.relpath(path, pkg).replace(os.sep, "/")
-            if rel == "artifacts.py":
-                continue
             tree = ast.parse(open(path).read())
             # innermost enclosing function of every node: ast.walk is
             # breadth-first, so inner functions overwrite outer ones
@@ -370,17 +363,54 @@ def test_no_hand_rolled_publish_outside_artifacts():
                 if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     owner.update((node, fn.name) for node in ast.walk(fn))
             for node in ast.walk(tree):
-                if not (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and isinstance(node.func.value, ast.Name)
-                ):
-                    continue
-                call = (node.func.value.id, node.func.attr)
-                name = owner.get(node, "<module>")
-                if call == ("tempfile", "gettempdir") or (
-                    call in {("os", "rename"), ("tempfile", "mkdtemp")}
-                    and name not in allowed.get(rel, ())
-                ):
-                    found.append(f"{rel}:{node.lineno} in {name}")
+                yield rel, owner.get(node, "<module>"), node
+
+
+def test_no_hand_rolled_publish_outside_artifacts():
+    """Every create-once publish goes through ``artifacts.publish`` and
+    every artifact root is named from ``artifacts.engine_root``:
+    ``os.rename(`` / ``tempfile.mkdtemp(`` appear only in artifacts.py
+    and in ``sources.formats.publish_atomic`` (the replace-in-place
+    swap), ``tempfile.gettempdir(`` only in artifacts.py."""
+    import ast
+
+    allowed = {"sources/formats.py": {"publish_atomic"}}
+    found = []
+    for rel, name, node in _engine_nodes():
+        if rel == "artifacts.py" or not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and isinstance(node.func.value, ast.Name)
+        ):
+            continue
+        call = (node.func.value.id, node.func.attr)
+        if call == ("tempfile", "gettempdir") or (
+            call in {("os", "rename"), ("tempfile", "mkdtemp")}
+            and name not in allowed.get(rel, ())
+        ):
+            found.append(f"{rel}:{node.lineno} in {name}")
     assert found == [], found
+
+
+def test_one_drain_path_in_the_engine():
+    """Every streaming query drains through ``streaming.source._drain``:
+    ``writeStream`` occurs once in the engine, there, and no
+    ``format("memory")`` sink is left."""
+    import ast
+
+    write_streams, memory_sinks = [], []
+    for rel, name, node in _engine_nodes():
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+            write_streams.append((rel, name))
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "format"
+            and any(
+                isinstance(a, ast.Constant) and a.value == "memory"
+                for a in node.args
+            )
+        ):
+            memory_sinks.append(f"{rel}:{node.lineno} in {name}")
+    assert write_streams == [("streaming/source.py", "_drain")], write_streams
+    assert memory_sinks == [], memory_sinks

@@ -378,7 +378,7 @@ def test_stream_cms_state_bit_identical_to_batch_sketch(spark):
         .groupBy("d", "bucket")
         .agg(F.count("*").alias("counter"))
     )
-    drained = run_to_memory(counters_stream, "cms_state_test", "complete")
+    drained = run_to_memory(counters_stream, "complete")
     got = {(r.d, r.bucket): r.counter for r in drained.collect()}
     assert len(got) <= CMS_D * CMS_W  # bounded state
 
@@ -424,7 +424,7 @@ def test_stream_kmv_state_bit_identical_and_multibatch(spark):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    drained = run_to_memory(updates, "kmv_state_test", "update").toPandas()
+    drained = run_to_memory(updates, "update").toPandas()
     per_group = drained.groupby("event_type").size()
     assert (per_group > 1).all(), per_group  # cross-batch state exercised
 
@@ -495,7 +495,7 @@ def test_stream_hll_registers_bit_identical_and_multibatch(spark):
     )
     drained = {
         (r.event_type, r.j): r.mj
-        for r in run_to_memory(regs_stream, "hll_state_test", "complete").collect()
+        for r in run_to_memory(regs_stream, "complete").collect()
     }
 
     ev = load_table(spark, SF_DIR, "events")
@@ -669,7 +669,6 @@ def test_stream_quantile_histogram_bit_identical_and_brackets(spark):
         sdf.selectExpr(f"{_SQ_BUCKET_SPARK} AS bucket")
         .groupBy("bucket")
         .agg(F.count("*").alias("cnt")),
-        "quantile_stream_test",
         "complete",
     ).collect()
     stream_hist = {r.bucket: r.cnt for r in drained}
@@ -757,7 +756,6 @@ def test_stream_bloom_words_bit_identical_and_idempotent(spark):
                 )
             ).alias("bits")
         ),
-        "bloom_state_test",
         "complete",
     ).collect()
     assert {(r.event_type, r.word): r.bits for r in drained} == batch_distinct
@@ -1053,6 +1051,61 @@ def test_failed_drain_leaves_no_work_dir(spark, tmp_path, monkeypatch, query, wo
     left = os.listdir(tmp_path)
     assert any(n.startswith("minimapreduce_stream") for n in left)  # sources staged here
     assert [n for n in left if n.startswith(work_prefix)] == []
+
+
+def test_run_to_memory_leaves_nothing_on_the_session(spark):
+    """Three drains in each output mode, on the session and on a
+    narrowed clone, leave both sessions' temporary views and active
+    queries as they were, and every returned frame still collects the
+    sink's content after the later drains have run: ``append`` every
+    row, ``complete`` the last result table, ``update`` every batch's
+    changed rows."""
+    from pyspark.sql import functions as F
+
+    from minimapreduce_spark.catalog import load_table
+    from minimapreduce_spark.session import narrow_clone
+    from minimapreduce_spark.streaming.source import (
+        events_stream_sharded,
+        run_to_memory,
+    )
+
+    ev = load_table(spark, SF_DIR, "events")
+    want = {
+        "append": sorted(r.event_id for r in ev.select("event_id").collect()),
+        "complete": sorted(map(tuple, ev.groupBy("event_type").count().collect())),
+        "update": sorted(map(tuple, ev.groupBy("user_id").count().collect())),
+    }
+
+    def drain(s, mode):
+        sdf = events_stream_sharded(s, SF_DIR, n_shards=4)
+        if mode == "append":
+            return run_to_memory(sdf.select("event_id"), mode)
+        if mode == "complete":
+            return run_to_memory(sdf.groupBy("event_type").count(), mode)
+        return run_to_memory(sdf.groupBy("user_id").count(), mode)
+
+    def got(mode, out):
+        if mode == "append":
+            return sorted(r.event_id for r in out.collect())
+        if mode == "update":  # each key's last update carries its total
+            out = out.groupBy("user_id").agg(F.max("count").alias("count"))
+        return sorted(map(tuple, out.collect()))
+
+    def registered(s):
+        views = {t.name for t in s.catalog.listTables() if t.isTemporary}
+        return views, {q.id for q in s.streams.active}
+
+    sessions = [spark, narrow_clone(spark, 2)]
+    before = [registered(s) for s in sessions]
+    outs = [
+        (mode, drain(s, mode))
+        for s in sessions
+        for mode in ("append", "complete", "update")
+        for _ in range(3)
+    ]
+    assert [registered(s) for s in sessions] == before
+    for mode, out in outs:
+        assert got(mode, out) == want[mode], mode
 
 
 def test_stream_sources_stage_under_pinned_names(spark, tmp_path, monkeypatch):

@@ -166,10 +166,10 @@ ORACLE_SKIP_PAST_10X = {
     # 10-label cell structure (real IVF grows nlist with the corpus;
     # the ann_knn_graph_edges exclusion note documents the same
     # fixture artifact). Hash-matched at 1x and 10x; the GROWN-nlist
-    # experiment the caveat calls for is tools/bitext_nlist_octave.py
-    # (round 9): nlist = round(sqrt(N)) at 10x/40x, emitted candidates
-    # measured exactly proportional to N, output replay-matched at
-    # both scales — SCALING.md round-9 table.
+    # experiment the caveat calls for is in SCALING.md's round-9 table
+    # (its script is deleted): nlist = round(sqrt(N)) at 10x/40x,
+    # emitted candidates measured exactly proportional to N, output
+    # replay-matched at both scales.
     "bitext_margin_mining_ivf",
 }
 
