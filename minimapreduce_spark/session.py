@@ -48,14 +48,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Oracle comparison (DuckDB) is UTC-naive; pin the session TZ.
         .config("spark.sql.session.timeZone", "UTC")
-        # Streaming state store: RocksDB + changelog checkpointing —
-        # measured WIN over the HDFS-backed default on both stateful
-        # headliners at sf0.1 (tools/state_store_probe.py, round 9:
-        # exactly-once 6.3 → 4.7 s, timer sessions 22.4 → 19.4 s), and
-        # the production posture for large state: per-commit upload is
-        # the incremental CHANGELOG, not a full snapshot, so commit
-        # cost scales with per-batch updates rather than total state
-        # (SCALING.md round-8/9 state-sharding analysis).
+        # Streaming state store: RocksDB + changelog checkpointing.
+        # It beat the HDFS-backed default on both stateful headliners at
+        # sf0.1 (SCALING.md, "Round 9: RocksDB state store": exactly-once
+        # 6.3 -> 4.7 s, timer sessions 22.4 -> 19.4 s), and each commit
+        # uploads the batch's changelog rather than a full snapshot, so
+        # commit cost follows per-batch updates, not total state.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
@@ -65,6 +63,22 @@ def get_spark(
             "spark.sql.streaming.stateStore.rocksdb."
             "changelogCheckpointing.enabled",
             "true",
+        )
+        # Checkpoint files (offsets, commits, sources, state) go through
+        # FileSystem.rename: a hidden temp file, then one rename(2) on the
+        # local filesystem, which is where every checkpoint of this
+        # engine lives (engine_root(), TemporaryDirectory, Spark's
+        # java.io.tmpdir/temporary-*). The default FileContext manager
+        # calls Hadoop's FileUtil.readLink on every rename of a file:
+        # path, which forks a `readlink` (~1.4 ms each) that always
+        # fails: ~408 forks per perfbench ingest_maintain pass, none
+        # with this manager. The `chmod` forks RawLocalFileSystem makes
+        # per create and mkdir without NativeIO (~150 a pass) remain;
+        # the .crc checksum files are kept.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
         )
         # Straggler / failure posture ~= the reference's 10 s reschedule +
         # zombie eviction (mr/master.go:220-279), expressed as config.
@@ -95,8 +109,8 @@ STREAM_STATE_ROWS_PER_SHARD = 8_000
 
 def stream_state_width(spark: SparkSession, batch_rows: int) -> int:
     """State-shard count for a streaming drain, derived from per-batch
-    volume (round-11 verdict item 3: the hard-coded width 8 was a
-    fixture constant): ceil(batch_rows / STREAM_STATE_ROWS_PER_SHARD),
+    volume rather than fixed (a hard-coded width only fits the fixture
+    it was tuned on): ceil(batch_rows / STREAM_STATE_ROWS_PER_SHARD),
     floored at 2 (state stays distributed even for tiny replays) and
     clamped to the session's shuffle width — at production batch
     volumes the clamp binds and state shards = cluster width, the
@@ -120,10 +134,10 @@ def narrow_clone(spark: SparkSession, shuffle_partitions: int) -> SparkSession:
     state/commit fan-out to per-batch volume (exactly-once ingest,
     SCD2 history, streaming index probe) share a clone instead of
     each invocation leaking a fresh ``newSession()`` into a
-    long-lived driver (round-9 ADVICE). The clone shares the
-    SparkContext but has an isolated SQLConf, so the narrow width
-    can never bleed into the caller's session mid-drain (the
-    round-8 scoping fix, preserved).
+    long-lived driver. The clone shares the SparkContext but has an
+    isolated SQLConf, so the narrow width can never bleed into the
+    caller's session mid-drain; context-level settings such as the
+    state-store provider and the checkpoint file manager carry over.
 
     Cross-session frame-mixing note for callers: DataFrames built on
     the clone (e.g. artifact index frames) may be combined inside a

@@ -15,7 +15,8 @@ checkpoint (the caller's, or Spark's temporary one) and an
 ``run_to_parquet`` is the idempotent parquet sink on top of it;
 ``run_to_memory`` keeps each batch as a local checkpoint and hands back
 their union — the bridge that lets streaming queries participate in
-the batch oracle protocol.
+the batch oracle protocol. Checkpoints are local, and ``get_spark``
+writes their files through ``FileSystemBasedCheckpointFileManager``.
 """
 
 from __future__ import annotations
@@ -287,7 +288,16 @@ def _drain(
     the sink half. ``checkpoint_dir=None`` sets no location: Spark uses
     a temporary one (``java.io.tmpdir/temporary-*``) that it deletes
     when the query stops cleanly, and at JVM exit. An exception in
-    ``batch_fn`` fails the query and is raised here."""
+    ``batch_fn`` fails the query and is raised here.
+
+    Every checkpoint file is written as a hidden temp file and renamed
+    into place with ``rename(2)``. Offset and commit entries are
+    created with ``createAtomic(overwriteIfPossible=False)``, which
+    checks that the target does not exist and then renames: two steps,
+    not one. That is safe only because each drain owns its checkpoint
+    directory and no second query writes to it at the same time;
+    nothing enforces this yet (an exclusive ``flock`` on keyed drain
+    directories would)."""
     writer = sdf.writeStream.foreachBatch(batch_fn).outputMode(output_mode)
     if checkpoint_dir is not None:
         writer = writer.option("checkpointLocation", checkpoint_dir)

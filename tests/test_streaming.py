@@ -125,6 +125,131 @@ def test_foreachbatch_parquet_sink_exactly_once(spark, tmp_path):
     assert spark.read.parquet(out).count() == expected
 
 
+def test_parquet_sink_resumes_mid_stream_exactly_once(spark, tmp_path, monkeypatch):
+    """A drain that fails at batch 2 of 4 and is re-run from the same
+    checkpoint lands every source row exactly once, and the re-run
+    starts from the failed batch: the files of batches 0-1 are the
+    first run's, untouched."""
+    import minimapreduce_spark.streaming.source as source
+    from minimapreduce_spark.catalog import load_table
+
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def stream():
+        return source.events_stream_sharded(spark, SF_DIR, 4).select(
+            "event_id", "user_id", "value"
+        )
+
+    drain = source._drain
+
+    def failing_drain(sdf, batch_fn, checkpoint_dir, output_mode):
+        def fail_at_2(batch_df, batch_id):
+            if batch_id == 2:
+                raise RuntimeError("injected batch failure")
+            batch_fn(batch_df, batch_id)
+
+        drain(sdf, fail_at_2, checkpoint_dir, output_mode)
+
+    def inodes(batch_ids):
+        return {
+            os.path.join(d, f): os.stat(os.path.join(out, d, f)).st_ino
+            for d in (f"batch_id={b}" for b in batch_ids)
+            for f in os.listdir(os.path.join(out, d))
+        }
+
+    monkeypatch.setattr(source, "_drain", failing_drain)
+    with pytest.raises(Exception, match="injected batch failure"):
+        source.run_to_parquet(stream(), out, ckpt)
+    monkeypatch.undo()
+    assert sorted(n for n in os.listdir(out) if n.startswith("batch_id=")) == [
+        "batch_id=0",
+        "batch_id=1",
+    ]
+    first = inodes([0, 1])
+
+    source.run_to_parquet(stream(), out, ckpt)
+    expected = load_table(spark, SF_DIR, "events").count()
+    got = spark.read.parquet(out)
+    assert got.count() == expected
+    assert got.select("event_id").distinct().count() == expected
+    assert {r.batch_id for r in got.select("batch_id").distinct().collect()} == {0, 1, 2, 3}
+    assert inodes([0, 1]) == first
+
+
+_FORK_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from minimapreduce_spark.session import get_spark
+from minimapreduce_spark.streaming.source import events_stream_sharded, run_to_parquet
+
+spark = get_spark(master="local[2]")
+sdf = events_stream_sharded(spark, {sf!r}, 4).select("event_id", "user_id", "value")
+run_to_parquet(sdf, {out!r}, {ckpt!r})
+spark.stop()
+"""
+
+
+def test_checkpoint_writes_fork_no_readlink(spark, tmp_path):
+    """A 4-batch exactly-once drain forks no ``readlink``: checkpoint
+    files are renamed through ``FileSystem.rename``, not the
+    ``FileContext`` path that shells out to ``readlink`` on every
+    rename of a ``file:`` path. A child process runs the drain with
+    logging ``readlink`` and ``chmod`` shims first on its ``PATH``,
+    which the JVM inherits; the ``chmod`` count is only reported."""
+    import shutil
+    import subprocess
+    import sys
+
+    from minimapreduce_spark.session import narrow_clone
+
+    shims = tmp_path / "shims"
+    shims.mkdir()
+    for tool in ("readlink", "chmod"):
+        shim = shims / tool
+        shim.write_text(
+            f'#!/bin/sh\necho "$*" >> {tmp_path / (tool + ".log")}\n'
+            f'exec {shutil.which(tool)} "$@"\n'
+        )
+        shim.chmod(0o755)
+    # Python workers start from the interpreter itself: a version-manager
+    # shim on PATH may call readlink on its own.
+    env = dict(
+        os.environ,
+        PATH=f"{shims}{os.pathsep}{os.environ['PATH']}",
+        PYSPARK_PYTHON=sys.executable,
+        TMPDIR=str(tmp_path / "tmp"),
+    )
+    os.mkdir(env["TMPDIR"])
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = _FORK_SCRIPT.format(
+        repo=repo,
+        sf=os.path.abspath(SF_DIR),
+        out=str(tmp_path / "out"),
+        ckpt=str(tmp_path / "ckpt"),
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+
+    def calls(tool):
+        log = tmp_path / (tool + ".log")
+        return log.read_text().splitlines() if log.exists() else []
+
+    print(f"chmod forks: {len(calls('chmod'))}")
+    assert calls("readlink") == [], f"{len(calls('readlink'))} readlink forks"
+
+    manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == manager
+    assert narrow_clone(spark, 2).conf.get(key) == manager
+
+
 def test_append_mode_withholds_open_windows(spark, duck):
     """Append emits exactly the watermark-closed windows: a strict
     subset of the complete-mode result, missing only windows ending
