@@ -10,8 +10,10 @@ derived root records its parent in ``_PARENT``, and one
 ``os.rename`` moves the stage into place. A reader therefore sees the
 whole artifact or none of it; a racing publisher whose rename loses to
 a complete root returns that root; any other failure raises, and the
-stage never outlives the call. The one replace-in-place swap, for
-mutable state tables, is ``sources.formats.publish_atomic``.
+stage never outlives the call. The engine has no replace-in-place
+swap: a streaming drain's per-batch outputs, mutable upsert state
+included, are published once per micro-batch through this same path
+(``streaming.source.publish_batch``) and merged on read.
 
 The families share a naming scheme (``FAMILIES``): a deterministic
 base root ``<prefix><tag>`` under ``engine_root()``, then derived roots
@@ -51,8 +53,9 @@ At 100 TB this is the table-format VACUUM/`expire_snapshots` job: the
 append chain is the snapshot log, compaction is rewrite, and retention
 bounds storage at O(live artifacts) instead of O(all history). It is
 a scheduled maintenance job, not a query — evidence lives in pytest
-(liveness, hardlink survival, grace window) and
-``tools/retention_probe.py`` (measured reclaim at sf0.1).
+(liveness, hardlink survival, grace window) and SCALING.md "Round 10:
+retention (VACUUM) for the artifact families" (measured reclaim at
+sf0.1).
 """
 
 from __future__ import annotations

@@ -803,10 +803,10 @@ def probe_band_index(
 ) -> DataFrame:
     """The band-index PROBE join + exact-Jaccard verify, shared by the
     batch probe (`dedup_minhash_index_probe`), the streaming probe's
-    per-slice body (`stream_minhash_index_probe`), and the served phase
-    of tools/incremental_scale_probe.py — one implementation so the
-    candidate-dedup and shingle-union semantics cannot drift between
-    the three call sites (round-9 review finding). Candidates =
+    per-slice body (`stream_minhash_index_probe`), and the served-probe
+    measurement in SCALING.md ("Round 9: persisted band index for
+    incremental dedup") — one implementation so the candidate-dedup
+    and shingle-union semantics cannot drift between the call sites. Candidates =
     batch-buckets ⋈ (index ∪ prior ∪ batch) on (band, bh) — the
     corpus/prior sides never self-join; ``prior_*`` carry earlier
     arrivals for the streaming caller (None for one-shot probes)."""
@@ -869,8 +869,9 @@ def dedup_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume is Σ_batch-bucket |bucket| (the corpus never self-joins) and
     the per-band partition layout prunes each band join to its own
     files on disk; the index build is amortized across every probe that
-    reads it (`tools/incremental_scale_probe.py` measures candidates
-    exactly constant under 16× corpus growth for this join shape).
+    reads it (SCALING.md "Round 9: persisted band index for incremental
+    dedup" measures candidates exactly constant under 16× corpus
+    growth for this join shape).
     Batch-side content-group collapse stacks orthogonally when a
     recrawl-heavy batch needs it (see `minhash_incremental_pairs`)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1086,8 +1087,9 @@ def minhash_index_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended artifact keeps the per-band partition layout, so each
     band join still prunes to its own files); the append itself costs
     one narrow pass over day 1 plus O(#files) metadata ops —
-    `tools/append_cost_probe.py`'s batch-cost-independence claim,
-    realized for the dedup family."""
+    the batch-cost independence SCALING.md measures for both index
+    families ("Round 8: append-cost independence for the IVF-PQ
+    index", "Round 10: append-cost independence for the band index")."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     if docs.head(1) == []:
         # Degenerate-input policy: empty corpus → no index, no batches

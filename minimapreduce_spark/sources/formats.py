@@ -160,6 +160,10 @@ def publish_atomic(df, final_dir: str, fmt: str = "parquet") -> None:
     Local-filesystem only BY CONSTRUCTION: the swap uses os.rename, so
     a non-local URI (hdfs://, s3a://) is rejected up front rather than
     written via Spark and then mangled by local-path syscalls.
+
+    No engine code calls it any more; it stays only because
+    ``perfbench/probes.py`` ``WRAPPED`` names it, and goes together with
+    that entry once perfbench reads engine-native trace events.
     """
     import os
     import shutil

@@ -3,19 +3,23 @@ table.
 
 The production pattern this demonstrates: a stream of events
 continuously upserts a "latest value per key" serving table. Without a
-table format (Delta/Iceberg) the merge is read-modify-publish —
-``current state ∪ batch updates → keep latest per key → atomic swap``
-(sources.formats.publish_atomic) — which is IDEMPOTENT: a micro-batch
-replayed after a crash-restart merges to the identical state, giving
-the sink half of exactly-once on top of the checkpoint WAL's source
-half. With a table format the body becomes one MERGE INTO; every other
-line stays.
+table format (Delta/Iceberg) the merge is MERGE-ON-READ: each
+micro-batch publishes its own latest-per-key delta once
+(``source.publish_batch``), nothing rewrites the state, and a read
+folds the same latest-per-key aggregation over the union of the
+deltas. A micro-batch replayed after a crash-restart gets its published
+delta back — the sink half of exactly-once on top of the checkpoint
+WAL's source half. With a table format the body becomes one MERGE
+INTO; every other line stays.
 
 The replay is forced through MULTIPLE micro-batches (the staged events
-split into shards + ``maxFilesPerTrigger=1``) so the merge loop runs
-for real, not as one degenerate batch; the final state is independent
-of batch arrival order because "latest by (ts, event_id)" is an
-associative, commutative fold.
+split into shards + ``maxFilesPerTrigger=1``) so the merge runs for
+real, not as one degenerate batch; the final state is independent of
+batch arrival order and of how the deltas are grouped, because
+"latest by (ts, event_id)" is an associative, commutative fold.
+
+The other drains here write their per-batch outputs through the same
+sink, so each is idempotent per ``batch_id`` too.
 """
 
 from __future__ import annotations
@@ -62,8 +66,11 @@ from minimapreduce_spark.operators.similarity import (
 from minimapreduce_spark.registry import register
 from minimapreduce_spark.streaming.source import (
     _drain,
+    batch_ids,
     events_stream_sharded,
     events_stream_time_sliced,
+    publish_batch,
+    read_batches,
     table_stream_sharded,
 )
 
@@ -76,11 +83,10 @@ UPSERT_N_SHARDS = 4
 
 def _upsert_state_width(spark, sf_dir: str) -> int:
     """Merge-shuffle width DERIVED from per-batch volume (~25k rows at
-    sf0.1) through the shared ``stream_state_width`` sizing — round-12
-    replaces the fixture constant 8 (round-11 verdict item 4); the
-    interleaved width curve at sf0.1 is flat across 1-16 (best 2.0-2.1 s
-    each), so the derivation (~4) is safely inside the band and the
-    constant's removal costs nothing."""
+    sf0.1) through the shared ``stream_state_width`` sizing, not a
+    constant tuned to one fixture. The interleaved width curve at sf0.1
+    is flat across 1-16 (best 2.0-2.1 s each), so the derived width
+    (~4) sits safely inside that band."""
     from minimapreduce_spark.catalog import parquet_rowcount, table_path
     from minimapreduce_spark.session import stream_state_width
 
@@ -124,14 +130,15 @@ def stream_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     "latest row per key" query — the oracle — whatever order the
     batches land in.
 
-    Scale posture: each micro-batch shuffles only its updates plus the
-    (|keys|-bounded) current state on user_id; the swap publishes
-    atomically. With Delta/Iceberg the read-modify-publish collapses
-    into MERGE INTO and the state table stops being rewritten whole —
-    the streaming plan is unchanged.
+    Scale posture: merge-on-read. Each micro-batch shuffles only its
+    own updates on user_id and publishes their latest-per-key delta
+    (≤ |keys| rows); the state is never rewritten, so a batch costs
+    O(batch), not O(state). The read folds the deltas, O(total
+    updates) — the merge-on-read a table format does between
+    compactions; with Delta/Iceberg the body becomes MERGE INTO and the
+    streaming plan is unchanged.
     """
     from minimapreduce_spark.session import narrow_clone
-    from minimapreduce_spark.sources.formats import publish_atomic
 
     with tempfile.TemporaryDirectory(
         prefix="minimapreduce_upsert_", ignore_cleanup_errors=True
@@ -139,15 +146,14 @@ def stream_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir = os.path.join(work, "state")
         ckpt = os.path.join(work, "ckpt")
 
-        # Size the per-batch merge shuffle to the per-batch volume, not the
-        # session's batch-shuffle width (the stream_exactly_once_watermarked
-        # discipline): each micro-batch's read-modify-publish pays one
-        # shuffle + one parquet write PER PARTITION per batch, so a 4-batch
-        # replay at width 32 spends most of its wall on 128 shuffle-write/
-        # commit fan-outs for ~25k-row batches (measured at sf0.1: 2.9 →
-        # 2.4 s at width 8, identical output — the merge is a keyed agg,
-        # partition-count invariant by the repo-wide pytest). Round 12:
-        # width derived from batch volume (_upsert_state_width).
+        # Size the per-batch merge shuffle to the per-batch volume
+        # (_upsert_state_width), not the session's batch-shuffle width
+        # (the stream_exactly_once_watermarked discipline): each
+        # micro-batch pays one shuffle + one parquet write PER PARTITION,
+        # so a 4-batch replay at width 32 spends most of its wall on 128
+        # shuffle-write/commit fan-outs for ~25k-row batches (measured at
+        # sf0.1: 2.9 → 2.4 s at width 8, identical output — the merge is
+        # a keyed agg, partition-count invariant by the repo-wide pytest).
         s2 = narrow_clone(spark, _upsert_state_width(spark, sf_dir))
         sdf = events_stream_sharded(s2, sf_dir, n_shards=UPSERT_N_SHARDS).select(
             "user_id",
@@ -157,23 +163,11 @@ def stream_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-            sess = batch_df.sparkSession
-            updates = _latest_per_user(batch_df)
-            if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-                current = sess.read.schema(STATE_SCHEMA).parquet(state_dir)
-                merged = _latest_per_user(current.unionByName(updates))
-            else:
-                merged = updates
-            # Materialize BEFORE the swap: the plan reads the directory the
-            # swap is about to replace.
-            merged = merged.localCheckpoint(eager=True)
-            publish_atomic(merged, state_dir)
+            publish_batch(state_dir, batch_id, _latest_per_user(batch_df))
 
         _drain(sdf, merge_batch, ckpt, "append")
-        out = spark.read.schema(STATE_SCHEMA).parquet(state_dir).localCheckpoint(
-            eager=True
-        )
-        return out
+        state = read_batches(s2, state_dir, STATE_SCHEMA)
+        return _latest_per_user(state).localCheckpoint(eager=True)
 
 
 @register(
@@ -203,16 +197,16 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: per trigger, work = |batch queries| routed cells
     scanned from the CELL-PARTITIONED codes artifact + bounded
     broadcast codebook/centroid joins; no streaming state at all
-    (stateless enrichment — the serving tier's whole point); results
-    append to the sink. Latency is the micro-batch trigger, capacity
-    is executors × cells-per-second — both independent of index build."""
+    (stateless enrichment — the serving tier's whole point); each
+    batch's results are published once. Latency is the micro-batch
+    trigger, capacity is executors × cells-per-second — both
+    independent of index build."""
     from minimapreduce_spark.catalog import load_table
 
+    result_schema = "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
     if load_table(spark, sf_dir, "embeddings").head(1) == []:
         # Degenerate-input policy: no corpus → no index, no queries
-        return spark.createDataFrame(
-            [], "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
-        )
+        return spark.createDataFrame([], result_schema)
     root = ivfpq_index_build(spark, sf_dir)
     cg = spark.read.parquet(os.path.join(root, "centroids"))
     cb = spark.read.parquet(os.path.join(root, "codebook"))
@@ -225,8 +219,6 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) as work:
         out_dir = os.path.join(work, "results")
         ckpt = os.path.join(work, "ckpt")
-        os.makedirs(out_dir, exist_ok=True)
-        n_batches = {"nonempty": 0}
 
         qstream = (
             table_stream_sharded(spark, sf_dir, "embeddings", n_shards=4)
@@ -243,7 +235,6 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
             if not batch_df.head(1):
                 return
-            n_batches["nonempty"] += 1
             res = _ivfpq_serve(
                 batch_df.sparkSession,
                 sf_dir,
@@ -253,18 +244,11 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 nprobe=1,
                 query_frame=batch_df,
             )
-            res.write.mode("append").parquet(out_dir)
+            publish_batch(out_dir, batch_id, res)
 
         _drain(qstream, serve_batch, ckpt, "append")
-        stream_ann_serve_ivfpq.last_nonempty_batches = n_batches["nonempty"]
-        out = (
-            spark.read.schema(
-                "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
-            )
-            .parquet(out_dir)
-            .localCheckpoint(eager=True)
-        )
-        return out
+        stream_ann_serve_ivfpq.last_nonempty_batches = len(batch_ids(out_dir))
+        return read_batches(spark, out_dir, result_schema).localCheckpoint(eager=True)
 
 
 @register(
@@ -302,9 +286,11 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, and verification is candidate-driven. The arrived
     store grows only with the day's batch (bounded by contract), not
     the corpus; the corpus side stays the write-once artifact. No
-    streaming state store at all — the arrived store IS the state,
-    append-only parquet, which is how a restartable ingest tier keeps
-    it (re-deriving from the checkpoint offsets on recovery)."""
+    streaming state store at all — the arrived store IS the state, one
+    published parquet directory per batch, and a slice probes only the
+    batches below its own ``batch_id``, so a replayed slice reproduces
+    its output exactly: how a restartable ingest tier keeps it
+    (re-deriving from the checkpoint offsets on recovery)."""
     from minimapreduce_spark.catalog import fan_out, load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -318,9 +304,9 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the CACHED per-(context, width) clone (the exactly-once
     # state-sizing lesson: a ~hundred-doc slice under the session's
     # 32-wide shuffle pays pure file/commit fan-out per micro-batch;
-    # the cache stops repeated invocations leaking sessions —
-    # round-9 ADVICE, cross-session frame-mixing contract documented
-    # at session.narrow_clone)
+    # the cache stops repeated invocations leaking a session each;
+    # the cross-session frame-mixing contract is documented at
+    # session.narrow_clone)
     from minimapreduce_spark.session import narrow_clone
 
     spark = narrow_clone(spark, 8)
@@ -340,9 +326,6 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         arrived_b = os.path.join(work, "arrived_buckets")
         arrived_s = os.path.join(work, "arrived_shingles")
         ckpt = os.path.join(work, "ckpt")
-        for d in (out_dir, arrived_b, arrived_s):
-            os.makedirs(d, exist_ok=True)
-        n_batches = {"nonempty": 0}
         arrived_bucket_schema = "doc_id bigint, band int, bh bigint"
         pair_schema = "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"
 
@@ -353,7 +336,6 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
             if not batch_df.head(1):
                 return
-            n_batches["nonempty"] += 1
             s = batch_df.sparkSession
             base_s = shingle_hashes(
                 s, sf_dir, distinct=False, docs=fan_out(s, batch_df)
@@ -369,23 +351,22 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch_shingles=sh_s,
                 index_buckets=idx_buckets,
                 index_shingles=idx_shingles,
-                prior_buckets=s.read.schema(arrived_bucket_schema).parquet(arrived_b),
-                prior_shingles=s.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(arrived_s),
+                # the slices before this one only: every cross-slice pair
+                # emits once, when its later side arrives
+                prior_buckets=read_batches(
+                    s, arrived_b, arrived_bucket_schema, below=batch_id
+                ),
+                prior_shingles=read_batches(
+                    s, arrived_s, MINHASH_SHINGLE_SCHEMA, below=batch_id
+                ),
             )
-            pairs.write.mode("append").parquet(out_dir)
-            # admit this slice to the arrived store AFTER probing, so the
-            # next slice sees it and every cross-slice pair emits once
-            buckets_s.select("doc_id", "band", "bh").write.mode("append").parquet(
-                arrived_b
-            )
-            sh_s.write.mode("append").parquet(arrived_s)
+            publish_batch(out_dir, batch_id, pairs)
+            publish_batch(arrived_b, batch_id, buckets_s.select("doc_id", "band", "bh"))
+            publish_batch(arrived_s, batch_id, sh_s)
 
         _drain(arrivals, probe_batch, ckpt, "append")
-        stream_minhash_index_probe.last_nonempty_batches = n_batches["nonempty"]
-        out = (
-            spark.read.schema(pair_schema).parquet(out_dir).localCheckpoint(eager=True)
-        )
-        return out
+        stream_minhash_index_probe.last_nonempty_batches = len(batch_ids(out_dir))
+        return read_batches(spark, out_dir, pair_schema).localCheckpoint(eager=True)
 
 
 # SCD2 band thresholds on the exact ten-thousandths grid (value is a
@@ -472,9 +453,12 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     CLOSES (valid_to = the new island's start) and a new current row
     opens; consecutive equal bands extend the open row. This is what
     MERGE-based SCD2 maintenance does on a lakehouse table, expressed
-    as read-island-merge-publish over two parquet state dirs (closed
-    rows append-only; open rows overwritten per batch — the open set
-    is one row per active user, the bounded working state).
+    as read-island-merge-publish over two per-batch parquet sinks: each
+    batch publishes the rows it closed, and the open set after it (one
+    row per active user, the bounded working state). The open state a
+    batch starts from is the last open set published below its
+    ``batch_id``, read from disk, so a replayed batch reproduces its
+    output exactly.
 
     The per-batch apply re-runs the island kernel (`_scd2_islands`)
     over (each user's open row as a pseudo-event at its valid_from) ∪
@@ -492,8 +476,8 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale posture: per trigger, work ∝ |slice| + |touched open rows|
     (the pseudo-event union joins only users present in state; the
-    island window partitions by user); closed history is append-only
-    parquet (never rewritten); the open set is ≤ |active users| rows.
+    island window partitions by user); closed history is published once
+    per batch (never rewritten); the open set is ≤ |active users| rows.
     No reference analog (nearest: the reduce-side key grouping of
     mr/worker.go:136-157)."""
     from minimapreduce_spark.catalog import load_table
@@ -531,24 +515,17 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         closed_dir = os.path.join(work, "closed")
         open_dir = os.path.join(work, "open")
         ckpt = os.path.join(work, "ckpt")
-        os.makedirs(closed_dir, exist_ok=True)
         closed_schema = (
             "user_id bigint, band string, valid_from timestamp_ntz,"
             " valid_to timestamp_ntz"
         )
         open_schema = "user_id bigint, band string, valid_from timestamp_ntz"
-        n_batches = {"nonempty": 0}
-        open_ver = {"cur": None}
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             if not batch_df.head(1):
                 return
-            n_batches["nonempty"] += 1
             s = batch_df.sparkSession
-            if open_ver["cur"] is None:
-                open_rows = s.createDataFrame([], open_schema)
-            else:
-                open_rows = s.read.schema(open_schema).parquet(open_ver["cur"])
+            open_rows = read_batches(s, open_dir, open_schema, below=batch_id, last=True)
             pseudo = open_rows.select(
                 "user_id",
                 F.col("valid_from").alias("ts"),
@@ -559,24 +536,16 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch_df.select("user_id", "ts", "event_id", "band")
             )
             isl = _scd2_islands(merged).localCheckpoint(eager=True)
-            isl.where(~F.col("is_current")).select(
-                "user_id", "band", "valid_from", "valid_to"
-            ).write.mode("append").parquet(closed_dir)
-            nxt = os.path.join(work, f"open_v{batch_id}")
-            isl.where(F.col("is_current")).select(
-                "user_id", "band", "valid_from"
-            ).write.mode("overwrite").parquet(nxt)
-            open_ver["cur"] = nxt
+            cur = F.col("is_current")
+            publish_batch(closed_dir, batch_id, isl.where(~cur).drop("is_current"))
+            publish_batch(open_dir, batch_id, isl.where(cur).drop("is_current", "valid_to"))
 
         _drain(sdf, apply_batch, ckpt, "append")
-        stream_scd2_band_history.last_nonempty_batches = n_batches["nonempty"]
-        closed = spark.read.schema(closed_schema).parquet(closed_dir)
-        if open_ver["cur"] is None:
-            open_rows = spark.createDataFrame([], open_schema)
-        else:
-            open_rows = spark.read.schema(open_schema).parquet(open_ver["cur"])
-        out = (
-            closed.withColumn("is_current", F.lit(False))
+        stream_scd2_band_history.last_nonempty_batches = len(batch_ids(open_dir))
+        open_rows = read_batches(spark, open_dir, open_schema, last=True)
+        return (
+            read_batches(spark, closed_dir, closed_schema)
+            .withColumn("is_current", F.lit(False))
             .unionByName(
                 open_rows.select(
                     "user_id",
@@ -588,7 +557,6 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        return out
 
 
 @register("stream_incremental_join_view", oracle=IVM_UPSERTS_ORACLE)
@@ -604,18 +572,18 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     base ∖ tombstones ∪ maintained-deltas at any moment.
 
     Per micro-batch (inside ``foreachBatch``, frames built on the
-    micro-batch session — the round-9 session-mixing discipline):
-      - the batch's DELETE + UPDATE keys append to the tombstone log;
+    micro-batch session, so no frame of another session's plan is
+    mixed into the batch's):
+      - the batch's DELETE + UPDATE keys go to the tombstone log;
       - the batch's insert-set (updated rows' new versions ∪ onboards)
         probes the base facts ONCE with the ≤|batch| dim rows
-        broadcast, and the produced view rows append to the delta log
+        broadcast, and the produced view rows go to the delta log
         — the A⋈Δ⁺B term paid incrementally, ∝ batch dim churn.
-    Both logs are append-only AT THE LOG LEVEL — each micro-batch
-    overwrites only its own batch_id-keyed subdirectory, never another
-    batch's files — which is what makes the at-least-once foreachBatch
-    contract safe: a batch replayed after a failed drain rewrites the
-    same subdirectory instead of double-appending view rows (round-10
-    ADVICE; the run_to_parquet sink discipline). The per-key-once
+    Each log is one directory per micro-batch, published once
+    (``publish_batch``) and never touched by another batch — which is
+    what makes the at-least-once foreachBatch contract safe: a batch
+    replayed after a failed drain gets its published directories back
+    instead of double-appending view rows. The per-key-once
     property of a dim CDC feed (each customer key changes at most once
     per day; hash shards preserve it) is what makes the accumulated
     logs batch-order-independent: joins distribute over the union of
@@ -630,7 +598,7 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-pinned frame-by-frame with a real multi-batch replay.
 
     Scale posture: per trigger, work ∝ |batch dim churn| (tombstone
-    append is a key-list write; the fact probe broadcasts the batch
+    publish is a key-list write; the fact probe broadcasts the batch
     rows and at 100 TB prunes by bucketed join key —
     `join_bucketed_smb`'s layout); the logs grow ∝ total churn, reset
     by the nightly `join_view_rebuild` fold-in. State never lives in
@@ -665,15 +633,6 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta_dir = os.path.join(work, "delta")
         ckpt = os.path.join(work, "ckpt")
         tombs_schema = "c_custkey bigint"
-        # seed both logs so the explicit-schema reads below never hit a
-        # footerless dir (the MINHASH_BUCKET_SCHEMA lesson)
-        spark.createDataFrame([], tombs_schema).write.mode("overwrite").parquet(
-            tombs_dir
-        )
-        spark.createDataFrame([], IVM_VIEW_SCHEMA).write.mode("overwrite").parquet(
-            delta_dir
-        )
-        n_batches = {"nonempty": 0}
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             deltas = batch_df.where(is_ins | is_del | is_upd).localCheckpoint(
@@ -681,17 +640,10 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if not deltas.head(1):
                 return
-            n_batches["nonempty"] += 1
             s = deltas.sparkSession
-            # IDEMPOTENT per-batch log writes (round-10 ADVICE): foreachBatch
-            # side effects are at-least-once — a micro-batch re-run after a
-            # failed drain must not double-append. Each batch OVERWRITES its
-            # own batch_id-keyed subdirectory, so a WAL replay rewrites the
-            # same files instead of appending duplicates (the run_to_parquet
-            # sink discipline); the log readers below glob recursively.
-            deltas.where(is_del | is_upd).select("c_custkey").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(tombs_dir, f"b{batch_id:05d}"))
+            publish_batch(
+                tombs_dir, batch_id, deltas.where(is_del | is_upd).select("c_custkey")
+            )
             plus_c = (
                 deltas.where(is_upd)
                 .withColumn("c_mktsegment", F.lit(IVM_UPD_SEGMENT))
@@ -700,35 +652,26 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             b_o = load_table(s, sf_dir, "orders").where(
                 F.col("o_orderkey") % IVM_FACT_MOD != 0
             )
-            (
-                b_o.join(F.broadcast(plus_c), b_o.o_custkey == plus_c.c_custkey)
-                .select(
+            publish_batch(
+                delta_dir,
+                batch_id,
+                b_o.join(F.broadcast(plus_c), b_o.o_custkey == plus_c.c_custkey).select(
                     "o_orderkey",
                     "o_custkey",
                     "c_mktsegment",
                     F.round(F.col("o_totalprice") * 100)
                     .cast("bigint")
                     .alias("price_c"),
-                )
-                .write.mode("overwrite")
-                .parquet(os.path.join(delta_dir, f"b{batch_id:05d}"))
+                ),
             )
 
         _drain(
             table_stream_sharded(spark, sf_dir, "customer"), apply_batch, ckpt, "append"
         )
-        stream_incremental_join_view.last_nonempty_batches = n_batches["nonempty"]
+        stream_incremental_join_view.last_nonempty_batches = len(batch_ids(tombs_dir))
 
-        tombs = (
-            spark.read.schema(tombs_schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(tombs_dir)
-        )
-        delta_rows = (
-            spark.read.schema(IVM_VIEW_SCHEMA)
-            .option("recursiveFileLookup", "true")
-            .parquet(delta_dir)
-        )
+        tombs = read_batches(spark, tombs_dir, tombs_schema)
+        delta_rows = read_batches(spark, delta_dir, IVM_VIEW_SCHEMA)
         cust = load_table(spark, sf_dir, "customer")
         b_c_final = (
             cust.where(~is_ins & ~is_del)
@@ -811,7 +754,7 @@ def stream_incremental_join_view_rebuild(
     materialized-view refresh a 100 TB lakehouse schedules. The stream
     checkpoint and the artifact publish are independent atomic
     mechanisms, so a crash between them replays the drain idempotently
-    (append-only logs + WAL) and the rename either happened or the
+    (per-batch published logs + WAL) and the rename either happened or the
     stage directory is garbage — never a half-published base."""
     from minimapreduce_spark.catalog import load_table
 

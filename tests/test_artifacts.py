@@ -414,3 +414,32 @@ def test_one_drain_path_in_the_engine():
             memory_sinks.append(f"{rel}:{node.lineno} in {name}")
     assert write_streams == [("streaming/source.py", "_drain")], write_streams
     assert memory_sinks == [], memory_sinks
+
+
+def test_one_per_batch_sink_in_the_engine():
+    """Every drain that writes its micro-batches out goes through
+    ``streaming.source.publish_batch``: ``partitionOverwriteMode``
+    appears nowhere in the engine, no ``.mode("append")`` write is left
+    in ``streaming/upsert.py``, and only ``streaming/source.py`` names
+    the ``batch_id=`` directory layout."""
+    import ast
+
+    overwrite_modes, appends, layouts = [], [], []
+    for rel, name, node in _engine_nodes():
+        where = f"{rel}:{getattr(node, 'lineno', '?')} in {name}"
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if "partitionOverwriteMode" in node.value:
+                overwrite_modes.append(where)
+            if "batch_id=" in node.value and rel != "streaming/source.py":
+                layouts.append(where)
+        if (
+            rel == "streaming/upsert.py"
+            and isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "mode"
+            and any(isinstance(a, ast.Constant) and a.value == "append" for a in node.args)
+        ):
+            appends.append(where)
+    assert overwrite_modes == [], overwrite_modes
+    assert appends == [], appends
+    assert layouts == [], layouts

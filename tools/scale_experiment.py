@@ -91,7 +91,8 @@ QUERIES = [
     # round-9: the position-marked WordPiece pair (vocab-scale rounds;
     # the marked alphabet is a ≤2× constant on bounded frames) and the
     # dedup band-index family's served probe (probe cost ∝ batch —
-    # tools/incremental_scale_probe.py carries the dedicated octave)
+    # SCALING.md "Round 9: persisted band index for incremental dedup"
+    # carries the dedicated octave)
     "wordpiece_train_marked",
     "wordpiece_apply_marked_stats",
     "dedup_minhash_index_probe",
@@ -140,13 +141,14 @@ ORACLE_SKIP_PAST_10X = {
     # same full exact-Jaccard SQL (DuckDB computes ALL pairs, then
     # filters to batch-touching), so the oracle is intractable exactly
     # where dedup_minhash's is; the Spark side stays measured, and the
-    # batch-cost-independence claim has its own probe
-    # (tools/incremental_scale_probe.py)
+    # batch-cost-independence claim has its own octave (SCALING.md
+    # "Round 6: incremental dedup — batch-driven cost, measured")
     "dedup_minhash_incremental",
     # same restricted exact-Jaccard oracle as the inline incremental —
     # intractable oracle-side exactly where its twin's is; the SERVED
-    # probe's scale claim carries its own octave (served phase of
-    # tools/incremental_scale_probe.py: candidates constant under 16×)
+    # probe's scale claim carries its own octave (SCALING.md "Round 9:
+    # persisted band index for incremental dedup": candidates constant
+    # under 16×)
     "dedup_minhash_index_probe",
     "dedup_ngram_jaccard",
     # same full doc-level shingle self-join oracle shape as
