@@ -42,7 +42,7 @@ def content_fingerprint(path: str) -> str:
     write-once index/view caches): for a bare parquet file,
     ``mtime_ns|size``; for a DIRECTORY table (Spark writes tables as
     directories whose top-level stat's st_size reflects the dirent,
-    not the data — round-9 ADVICE), the file count, total byte size
+    not the data), the file count, total byte size
     and max mtime_ns over the contained data files, so rewriting any
     data file in place rotates every derived artifact root."""
     st = os.stat(path)
@@ -59,6 +59,13 @@ def content_fingerprint(path: str) -> str:
             mt = max(mt, fst.st_mtime_ns)
     return f"d{n}|{total}|{mt}"
 
+
+# Rows a driver-local twin of a distributed loop may collect: BPE's
+# (word, freq, seg) vocabulary (~100k rows is a few MB, the bound real
+# tokenizer trainers collect word counts under) or Lloyd's grid points
+# (100k points × 64 ints ≈ 50 MB). Gates read it at call time; above it
+# the distributed loops run unchanged (the 100 TB path).
+DRIVER_LOCAL_ROWS_MAX = 100_000
 
 _ROWCOUNT_CACHE: dict[tuple[str, str], int] = {}
 

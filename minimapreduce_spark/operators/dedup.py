@@ -27,10 +27,11 @@ shingle/band hashes, all aggregates partial+final.
 Banding bounds RANDOM collisions, not SIMILAR-pair collisions: a band
 of r minhashes collides for an unrelated pair with p ≈ jaccard^r, so
 corpora with heavy ambient cross-document similarity still grow a
-quadratic-in-distinct-contents candidate tail (SCALING.md round-5
-640× probe: the ~100-word-type synthetic generator gives unrelated
-docs enough shared shingles that the tail dominated past 160× and the
-verify join developed hot-bucket stragglers). Production bounds for
+quadratic-in-distinct-contents candidate tail (SCALING.md "a 640×
+probe — where this fixture's geometry ends": the ~100-word-type
+synthetic generator gives unrelated docs enough shared shingles that
+the tail dominated past 160× and the verify join developed hot-bucket
+stragglers). Production bounds for
 that regime, in order: widen bands (raise r — the strict 16-bit
 embedding regime is the worked example), cap per-bucket candidate
 contribution (df-cap the band buckets exactly like the shingle
@@ -54,7 +55,12 @@ from minimapreduce_spark.artifacts import (
     link_parent_files,
     publish,
 )
-from minimapreduce_spark.catalog import fan_out, load_table, table_path
+from minimapreduce_spark.catalog import (
+    content_fingerprint,
+    fan_out,
+    load_table,
+    table_path,
+)
 from minimapreduce_spark.registry import register
 
 SHINGLE_K = 5
@@ -204,77 +210,59 @@ def doc_content_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUP_PROBE_CACHE: dict[tuple[str, int, int], bool] = {}
 DUP_GATE_RATIO = 0.01  # ≤1% duplicated rows → the collapse can't pay
 
 
-def corpus_effectively_dup_free(spark: SparkSession, sf_dir: str) -> bool:
-    """One-aggregate duplication probe gating the content-group front
-    end (round-4 verdict item 6): ``count(*) vs count(distinct
-    sha2(text))`` in a single hash-agg pass. When at most
-    ``DUP_GATE_RATIO`` (1%) of rows are byte-duplicates, the text-dedup
-    family skips the collapse/expand entirely — the ungrouped pipeline
-    is bit-identical at ANY duplication level (identical docs share
-    every shingle/fingerprint, so they meet in the same buckets and
-    verify at jaccard 1.0 / hamming 0 exactly as the oracle computes),
-    the content-group form is purely the optimization that deletes the
-    quadratic within-group candidate volume. On a dup-free corpus the
-    front end's fixed cost (one full-text groupBy + two expansion
-    joins) bought nothing — the measured +0.4-0.8 s per headliner at
-    sf0.1 in BENCH_r04 — while on the 40x dup-heavy fixture the probe
-    measures ~90% duplication and the collapse stays on (813 → 120 s
-    family-wide there).
+def effectively_dup_free(df: DataFrame, content: Column) -> bool:
+    """One-aggregate duplication probe gating every content-group front
+    end: ``count(*) vs count(distinct content)`` in a single hash-agg
+    pass, where ``content`` is a hash of the row's content (sha2 of a
+    document's text, xxhash64 of a vector). When at most
+    ``DUP_GATE_RATIO`` (1%) of rows are byte-duplicates the caller skips
+    the collapse/expand entirely — the ungrouped pipeline is
+    bit-identical at ANY duplication level (identical docs or vectors
+    share every shingle/fingerprint/signature, so they meet in the same
+    buckets and verify at jaccard 1.0 / hamming 0 / cosine 1.0 exactly
+    as the oracle computes), the content-group form is purely the
+    optimization that deletes the quadratic within-group candidate
+    volume. On a dup-free corpus the front end's fixed cost (one
+    full-content groupBy + two expansion joins) bought nothing — a
+    measured +0.4-0.8 s per headliner at sf0.1 (BENCH_r04.json) —
+    while on the 40x dup-heavy fixture the probe measures ~90%
+    duplication and the collapse stays on (813 → 120 s family-wide
+    there).
 
-    The probe shuffles 64-char hashes, not document text (sha2 computes
-    map-side inside the partial agg), and the verdict is memoized per
-    (path, mtime, size) so repeated plan builds in one session pay it
-    once. Nulls hash to null, which count(distinct) skips — a null-text
-    corpus therefore reads as duplicated and conservatively keeps the
-    grouped path (groupBy treats all nulls as one group, matching)."""
-    from minimapreduce_spark.catalog import content_fingerprint
+    The probe shuffles hashes, not content (the hash computes map-side
+    inside the partial agg). Nulls hash to null, which count(distinct)
+    skips, and a hash collision only UNDERcounts distinct: both read as
+    more duplication and conservatively keep the grouped path (groupBy
+    treats all nulls as one group, matching)."""
+    n, nd = df.agg(
+        F.count("*").alias("n"), F.count_distinct(content).alias("nd")
+    ).first()
+    return (n - nd) <= int(n * DUP_GATE_RATIO)
 
-    path = os.path.abspath(table_path(sf_dir, "documents"))
+
+_DUP_FREE_MEMO: dict[tuple[str, str], bool] = {}
+
+
+def table_effectively_dup_free(spark: SparkSession, sf_dir: str, table: str) -> bool:
+    """``effectively_dup_free`` over a whole ``documents`` (by
+    sha2(text)) or ``embeddings`` (by xxhash64(embedding)) table,
+    memoized per (table path, content fingerprint) so repeated plan
+    builds in one session pay the probe once (it was ~0.3 s of every
+    dedup_embedding_lsh call) and a rewritten table is probed again."""
+    path = os.path.abspath(table_path(sf_dir, table))
     key = (path, content_fingerprint(path))
-    if key not in _DUP_PROBE_CACHE:
-        n, nd = (
-            load_table(spark, sf_dir, "documents")
-            .agg(
-                F.count("*").alias("n"),
-                F.count_distinct(F.sha2("text", 256)).alias("nd"),
-            )
-            .first()
+    if key not in _DUP_FREE_MEMO:
+        content = {
+            "documents": F.sha2("text", 256),
+            "embeddings": F.xxhash64("embedding"),
+        }[table]
+        _DUP_FREE_MEMO[key] = effectively_dup_free(
+            load_table(spark, sf_dir, table), content
         )
-        _DUP_PROBE_CACHE[key] = (n - nd) <= int(n * DUP_GATE_RATIO)
-    return _DUP_PROBE_CACHE[key]
-
-
-_EMB_DUP_PROBE_CACHE: dict[tuple[str, str], bool] = {}
-
-
-def embeddings_effectively_dup_free(spark: SparkSession, sf_dir: str) -> bool:
-    """One-aggregate duplication probe over the embeddings table —
-    ``corpus_effectively_dup_free``'s discipline applied to the vector
-    lane: count(*) vs count(distinct xxhash64(embedding)) in one pass,
-    memoized per (path, content fingerprint) so repeated plan builds in
-    one session pay the probe once (round-11: the per-invocation probe
-    was ~0.3 s of every dedup_embedding_lsh call). A 64-bit collision
-    only UNDERcounts distinct, which reads as more duplication and
-    conservatively keeps the grouped path."""
-    from minimapreduce_spark.catalog import content_fingerprint
-
-    path = os.path.abspath(table_path(sf_dir, "embeddings"))
-    key = (path, content_fingerprint(path))
-    if key not in _EMB_DUP_PROBE_CACHE:
-        n, nd = (
-            load_table(spark, sf_dir, "embeddings")
-            .agg(
-                F.count("*").alias("n"),
-                F.count_distinct(F.xxhash64("embedding")).alias("nd"),
-            )
-            .first()
-        )
-        _EMB_DUP_PROBE_CACHE[key] = (n - nd) <= int(n * DUP_GATE_RATIO)
-    return _EMB_DUP_PROBE_CACHE[key]
+    return _DUP_FREE_MEMO[key]
 
 
 def content_group_frontend(
@@ -285,10 +273,10 @@ def content_group_frontend(
     expand verified content pairs back to members; an effectively
     dup-free one gets (all docs, None) and callers skip the collapse,
     expansion, and self-pair lanes — same output either way (see
-    ``corpus_effectively_dup_free``). The returned doc frame is NOT yet
+    ``effectively_dup_free``). The returned doc frame is NOT yet
     fanned out; callers apply ``fan_out`` where the expensive stage
     needs it."""
-    if corpus_effectively_dup_free(spark, sf_dir):
+    if table_effectively_dup_free(spark, sf_dir, "documents"):
         return load_table(spark, sf_dir, "documents").select("doc_id", "text"), None
     groups = doc_content_groups(spark, sf_dir)
     return groups.select(F.col("rep").alias("doc_id"), "text"), groups
@@ -447,10 +435,10 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     path — no step is pairwise over the corpus.
 
     CONTENT-GROUP front end (the embedding-LSH fix, applied to text),
-    DUPLICATION-GATED (round 5): a one-aggregate probe measures the
+    DUPLICATION-GATED: a one-aggregate probe measures the
     corpus's byte-duplication rate and skips the collapse/expand
     entirely when it is effectively dup-free — see
-    ``corpus_effectively_dup_free`` for why both plans are
+    ``effectively_dup_free`` for why both plans are
     bit-identical. When the corpus IS dup-heavy: byte-identical
     documents — the dominant duplicate shape in a web
     corpus — collapse via one groupBy on the text itself before any
@@ -558,11 +546,7 @@ def minhash_incremental_pairs(
     ``is_batch`` is a boolean Column over ``docs``'s columns; the
     registered query uses doc_id % INCR_BATCH_MOD == 0."""
     batch = docs.where(is_batch).select("doc_id", "text")
-    n, nd = batch.agg(
-        F.count("*").alias("n"),
-        F.count_distinct(F.sha2("text", 256)).alias("nd"),
-    ).first()
-    if (n - nd) <= int(n * DUP_GATE_RATIO):
+    if effectively_dup_free(batch, F.sha2("text", 256)):
         candidates, distinct_sh = minhash_incremental_candidates(
             spark, sf_dir, docs, is_batch
         )
@@ -685,7 +669,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch-driven join shape (no corpus self-join anywhere). The
     content-group front end is orthogonal and stacks identically when
     the batch is dup-heavy; it is skipped here because the gate probe
-    (``corpus_effectively_dup_free``) reads the union corpus, which is
+    (``table_effectively_dup_free``) reads the union corpus, which is
     exactly the full-dedup posture, not the incremental one."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return minhash_incremental_pairs(
@@ -696,7 +680,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # explicit artifact-read schemas: a zero-row corpus side (every doc in
 # the batch) publishes a buckets dir with no data files, and a
 # schema-less read would crash with 'Unable to infer schema' instead of
-# returning the correct empty frame (round-9 review finding)
+# returning the correct empty frame
 MINHASH_BUCKET_SCHEMA = "doc_id bigint, bh bigint, band int"
 MINHASH_SHINGLE_SCHEMA = "doc_id bigint, h bigint"
 
@@ -707,16 +691,13 @@ def minhash_index_root(sf_dir: str, batch_mod: int | None = None) -> str:
     to the dedup family: keyed by the ABSOLUTE fixture path plus the
     documents table's CONTENT FINGERPRINT (`content_fingerprint`:
     mtime+size for a bare file, data-file census for a directory
-    table — round-9 ADVICE) plus
-    the corpus-split parameter ``batch_mod`` (two different splits must
-    never share one artifact — round-9 review finding), so a
+    table) plus the corpus-split parameter ``batch_mod`` (two
+    different splits must never share one artifact), so a
     regenerated fixture gets a fresh root instead of silently probing a
     stale index; NOT session-keyed (write-once/probe-many across
     sessions is the point). Concurrency is handled by
     `artifacts.publish`."""
     import hashlib
-
-    from minimapreduce_spark.catalog import content_fingerprint, table_path
 
     if batch_mod is None:
         batch_mod = INCR_BATCH_MOD
@@ -746,7 +727,7 @@ def minhash_index_build(
         candidate pair.
 
     This is the `ivfpq_index_build` artifact discipline applied to
-    dedup (round-8 verdict item 3): a daily 100 TB dedup job does NOT
+    dedup: a daily 100 TB dedup job does NOT
     re-shingle and re-band yesterday's corpus per run — the index is
     written once when the corpus is deduped and every day's arrival
     batch probes it. The corpus side here is the fixture's non-batch
@@ -804,8 +785,8 @@ def probe_band_index(
     """The band-index PROBE join + exact-Jaccard verify, shared by the
     batch probe (`dedup_minhash_index_probe`), the streaming probe's
     per-slice body (`stream_minhash_index_probe`), and the served-probe
-    measurement in SCALING.md ("Round 9: persisted band index for
-    incremental dedup") — one implementation so the candidate-dedup
+    measurement in SCALING.md ("persisted band index for incremental
+    dedup") — one implementation so the candidate-dedup
     and shingle-union semantics cannot drift between the call sites. Candidates =
     batch-buckets ⋈ (index ∪ prior ∪ batch) on (band, bh) — the
     corpus/prior sides never self-join; ``prior_*`` carry earlier
@@ -869,8 +850,8 @@ def dedup_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume is Σ_batch-bucket |bucket| (the corpus never self-joins) and
     the per-band partition layout prunes each band join to its own
     files on disk; the index build is amortized across every probe that
-    reads it (SCALING.md "Round 9: persisted band index for incremental
-    dedup" measures candidates exactly constant under 16× corpus
+    reads it (SCALING.md "persisted band index for incremental dedup"
+    measures candidates exactly constant under 16× corpus
     growth for this join shape).
     Batch-side content-group collapse stacks orthogonally when a
     recrawl-heavy batch needs it (see `minhash_incremental_pairs`)."""
@@ -933,8 +914,9 @@ def minhash_index_append(
     tag: str = "a",
 ) -> str:
     """APPEND a batch's buckets + shingles INTO the persisted band
-    index — the missing rung of the dedup index lifecycle (round-9
-    verdict item 3), the `ann_ivfpq_append_serve` discipline with a
+    index — the missing rung of the dedup index lifecycle (without it
+    an arrival is only absorbed by a rebuild), the
+    `ann_ivfpq_append_serve` discipline with a
     physical twist: where the ANN append encodes under frozen
     quantizers, the band index needs no training at all, so append =
     (1) shingle/sign/band ONLY the batch (one narrow pass, cost ∝
@@ -1071,8 +1053,8 @@ def minhash_index_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`minhash_index_append`: batch-only compute + hardlink fold-in +
     atomic re-publish), then probe day 2's arrivals against the
     appended artifact — so day N+1 genuinely probes day N's corpus ∪
-    batch, closing the gap the round-9 verdict named (without the
-    append, "incremental" still rebuilt to absorb arrivals).
+    batch (without the append, "incremental" still rebuilt to absorb
+    arrivals).
 
     Output: near-dup pairs (jaccard ≥ 0.9) touching the day-2 batch
     (doc_id % 2M == M, M = INCR_BATCH_MOD) — against the original
@@ -1088,8 +1070,8 @@ def minhash_index_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     band join still prunes to its own files); the append itself costs
     one narrow pass over day 1 plus O(#files) metadata ops —
     the batch-cost independence SCALING.md measures for both index
-    families ("Round 8: append-cost independence for the IVF-PQ
-    index", "Round 10: append-cost independence for the band index")."""
+    families ("append-cost independence for the IVF-PQ index",
+    "append-cost independence for the band index")."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     if docs.head(1) == []:
         # Degenerate-input policy: empty corpus → no index, no batches
@@ -1403,25 +1385,18 @@ def embedding_lsh_verified_pairs(
     ``dedup_exact``'s groupBy carries; a content duplicated billions
     of times would need the explode-side join variant instead.
     """
-    # Duplication gate (round-4 verdict item 6, embedding lane): probe
-    # count vs count(distinct hash(emb)) in one agg — on an effectively
-    # dup-free corpus skip the collapse + expansion entirely (the
-    # ungrouped plan is bit-identical at any dup level: identical
-    # vectors share signatures, meet in the bands, verify at cosine
-    # 1.0). A 64-bit hash collision only UNDERcounts distinct, which
-    # reads as more duplication and conservatively keeps the grouped
-    # path. Content-level consumers (return_content_level=True) always
-    # need real groups, so the gate applies to the pair lane only.
+    # Duplication gate (``effectively_dup_free``, embedding lane): on an
+    # effectively dup-free corpus skip the collapse + expansion entirely
+    # (identical vectors share signatures, meet in the bands, verify at
+    # cosine 1.0). Content-level consumers (return_content_level=True)
+    # always need real groups, so the gate applies to the pair lane
+    # only.
     grouped = True
     if not return_content_level:
         if dup_free_hint is not None:
             grouped = not dup_free_hint
         else:
-            n, nd = emb.agg(
-                F.count("*").alias("n"),
-                F.count_distinct(F.xxhash64("emb")).alias("nd"),
-            ).first()
-            grouped = (n - nd) > int(n * DUP_GATE_RATIO)
+            grouped = not effectively_dup_free(emb, F.xxhash64("emb"))
     if grouped:
         groups = (
             fan_out(spark, emb)
@@ -1588,9 +1563,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").alias("emb")
     )
-    return embedding_lsh_verified_pairs(
-        spark, emb, dup_free_hint=embeddings_effectively_dup_free(spark, sf_dir)
-    )
+    dup_free = table_effectively_dup_free(spark, sf_dir, "embeddings")
+    return embedding_lsh_verified_pairs(spark, emb, dup_free_hint=dup_free)
 
 
 _EMB_CLUSTER_ORACLE = (
@@ -1639,7 +1613,7 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle = recursive-CTE closure over the identical (SQL-reproduced)
     LSH pair set.
 
-    Round 4: propagation runs on the DISTINCT-CONTENT graph (the
+    Propagation runs on the DISTINCT-CONTENT graph (the
     ``dedup_clusters`` argument verbatim): a byte-identical copy group
     is a cosine-1.0 clique, so it collapses to its representative
     vertex and members inherit the rep's component label — which IS the
@@ -1675,8 +1649,8 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side list_cosine_similarity(zero, zero) returns -1.0, not NaN,
     # which fails the threshold numerically. Same outcome, different
     # mechanisms — pinned by tests/test_llm_ops.py::
-    # test_zero_vector_copy_group_drops (round-4 ADVICE follow-up: the
-    # advisor's both-engines-keep reading assumed a surviving NaN).
+    # test_zero_vector_copy_group_drops (a "both engines keep it"
+    # reading would assume a surviving NaN).
     iso = (
         hits.where(F.col("rep_a") == F.col("rep_b"))
         .select(F.col("rep_a").alias("rep"))
@@ -1747,7 +1721,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints bit-for-bit in SQL. At scale every stage is a hash
     shuffle on (doc_id|band) keys; nothing is pairwise over the corpus.
 
-    Content-group front end (round 4, the dedup_minhash pattern):
+    Content-group front end (the dedup_minhash pattern):
     fingerprints, banding, and Hamming verification run over DISTINCT
     CONTENTS; verified content pairs expand back to doc pairs, and
     multi-member groups emit their within-group pairs directly with
@@ -1767,7 +1741,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Bit votes as 61 PLAIN AGGREGATE columns — one masked sum per bit
     # plus the token total — instead of collect_list + a nested
-    # higher-order fold (round-11): HOF lambdas evaluate interpreted
+    # higher-order fold: HOF lambdas evaluate interpreted
     # per element (60 × |tokens| interpreted steps), while 61 sums are
     # whole-stage-codegen'd AND partial-aggregate map-side, so the
     # exchange carries 61 longs per (doc, map-partition) rather than
@@ -1885,7 +1859,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard bounds pathological chains. The oracle is a recursive-CTE
     transitive closure over the same pair set.
 
-    Content-group formulation (round 4): label propagation runs over
+    Content-group formulation: label propagation runs over
     the DISTINCT-CONTENT pair graph only — byte-identical copies are a
     clique by construction (jaccard 1.0 edges), so a whole copy group
     collapses to its representative vertex and every member inherits
@@ -2077,12 +2051,14 @@ ADAPTIVE_PROBE_ROUNDS = 4  # fixture Jaccard graphs converge in <= 3 + 1 confirm
 
 @register("dedup_clusters_adaptive", oracle=_CLUSTER_ORACLE)
 def dedup_clusters_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components with ADAPTIVE KERNEL SELECTION — the
-    round-9 verdict's stretch: `dedup_clusters` (min-label, O(diameter)
+    """Connected components with ADAPTIVE KERNEL SELECTION:
+    `dedup_clusters` (min-label, O(diameter)
     rounds, measured 2× faster on near-clique Jaccard graphs) and
     `graph_components_star` (large-star/small-star, O(log² n) rounds,
     the only kernel that terminates on unbounded-diameter graphs) are
-    a measured trade by graph SHAPE (SCALING.md round-9) — so the
+    a measured trade by graph SHAPE (SCALING.md "adaptive component
+    dispatch": min-label 9.8 s vs star 19.2 s on the 40× near-clique)
+    — so the
     right plan probes the shape and dispatches (`adaptive_components`):
 
       - run ADAPTIVE_PROBE_ROUNDS cheap min-label rounds; a
@@ -2248,9 +2224,9 @@ def min_label_components(
             break
     if changed != 0:
         # Exhausting the guard means labels did NOT converge — the
-        # output would be silently wrong (round-3 ADVICE: the helper
-        # now also serves chainier embedding-LSH component graphs, not
-        # just near-clique Jaccard ones). Fail loudly; a caller with a
+        # output would be silently wrong (the helper also serves
+        # chainier embedding-LSH component graphs, not just near-clique
+        # Jaccard ones). Fail loudly; a caller with a
         # legitimately >50-diameter graph should raise the guard, not
         # ship corrupt clusters.
         raise RuntimeError(

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from minimapreduce_spark import catalog
 from minimapreduce_spark.artifacts import (
     FAMILIES,
     family_root,
@@ -790,29 +791,12 @@ def _km_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bounded-collect ceiling for the driver-local Lloyd twins (round-11
-# adaptive dispatch, the bpe_train_merges / dedup_clusters_adaptive
-# pattern): up to 100k points × 64 grid ints ≈ 50 MB — the
-# driver-bounded contract. Above it the distributed loops run
-# unchanged (the 100 TB path).
-KM_LOCAL_POINTS_MAX = 100_000
-
-_EMB_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
-def _emb_rowcount(spark: SparkSession, sf_dir: str) -> int:
-    """Embeddings row count, memoized per (path, content fingerprint)
-    — the dispatch predicate for the local Lloyd twins (a plan-shape
-    decision memo, the corpus_effectively_dup_free discipline)."""
-    import os
-
-    from minimapreduce_spark.catalog import content_fingerprint, table_path
-
-    path = os.path.abspath(table_path(sf_dir, "embeddings"))
-    key = (path, content_fingerprint(path))
-    if key not in _EMB_COUNT_CACHE:
-        _EMB_COUNT_CACHE[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _EMB_COUNT_CACHE[key]
+def _lloyd_points_fit_driver(sf_dir: str) -> bool:
+    """Whether the embeddings table fits the driver-local Lloyd twins:
+    a footer-only row count (no Spark job) against
+    catalog.DRIVER_LOCAL_ROWS_MAX."""
+    rows = catalog.parquet_rowcount(catalog.table_path(sf_dir, "embeddings"))
+    return rows <= catalog.DRIVER_LOCAL_ROWS_MAX
 
 
 def _lloyd_local(X, ids, cids, C, iters: int):
@@ -923,7 +907,7 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame ops with an oracle.
     """
     pts = _km_quantized(spark, sf_dir)
-    # ADAPTIVE KERNEL DISPATCH (round-11, the bpe_train_merges pattern):
+    # ADAPTIVE KERNEL DISPATCH (the bpe_train_merges pattern):
     # the Lloyd rounds are driver-synchronous anyway (each assignment
     # broadcasts the previous round's K×64-int codebook), so when the
     # point set fits the bounded-collect ceiling the whole
@@ -933,7 +917,7 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pytest) and only the K-row result frame is created. Above the
     # ceiling the distributed loop below runs unchanged — the 100 TB
     # path. Measured at sf0.1 (2000 points): 1.03 → ~0.45 s.
-    if _emb_rowcount(spark, sf_dir) <= KM_LOCAL_POINTS_MAX:
+    if _lloyd_points_fit_driver(sf_dir):
         import numpy as np
 
         rows = pts.collect()
@@ -1685,8 +1669,8 @@ _HIER_ORACLE = (
 
 @register("ann_graph_hierarchical_search", oracle=_HIER_ORACLE)
 def ann_graph_hierarchical_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TWO-LAYER graph search — the actual HNSW entry shape (round-4
-    verdict stretch item 9), completing ``ann_graph_greedy_search``:
+    """TWO-LAYER graph search — the actual HNSW entry shape,
+    completing ``ann_graph_greedy_search``:
     that flat walk routes each query by its STORED IVF label (known
     because fixture queries are corpus members); a real serving query
     arrives with no label, so the hierarchy DISCOVERS the cell. Layer 1
@@ -1945,11 +1929,11 @@ def _pq_assign(
     numpy matmul per subspace — the `ann_cosine_topk_numpy` /
     kNN-builder pattern. A first cut did this as a broadcast join with
     a zip_with d2 fold; at 40× (80k vectors) the 164M interpreted fold
-    evaluations per pass cost ~40 s each — the round-3 higher-order-
-    fold cliff, one module over. Exactness is unchanged: the expansion
-    ‖x−c‖² = x·x − 2x·c + c·c is exact in int64 (terms ≤ ~8e10), and
-    numpy's first-occurrence argmin over cid-ordered columns IS the
-    (d2, cid) tie-break."""
+    evaluations per pass cost ~40 s each — the interpreted
+    higher-order-fold cliff, one module over. Exactness is unchanged:
+    the expansion ‖x−c‖² = x·x − 2x·c + c·c is exact in int64 (terms
+    ≤ ~8e10), and numpy's first-occurrence argmin over cid-ordered
+    columns IS the (d2, cid) tie-break."""
     import numpy as np
     import pandas as pd
 
@@ -2024,7 +2008,7 @@ def _pq_train(spark: SparkSession, sf_dir: str, sub: DataFrame) -> DataFrame:
     seed_cids = with_bounded_rank(seeds, "seed_id", out="_rn").select(
         F.col("seed_id").alias("vec_id"), F.col("_rn").cast("bigint").alias("cid")
     )
-    # ADAPTIVE KERNEL DISPATCH (round-11, the embedding_kmeans_lloyd /
+    # ADAPTIVE KERNEL DISPATCH (the embedding_kmeans_lloyd /
     # bpe_train_merges pattern): the per-subspace Lloyd rounds are
     # driver-synchronous anyway (_pq_assign collects + broadcasts the
     # previous round's M×K codebook every round), so under the bounded-
@@ -2035,7 +2019,7 @@ def _pq_train(spark: SparkSession, sf_dir: str, sub: DataFrame) -> DataFrame:
     # Seed numbering stays oracle-identical under any train predicate
     # (seed cids come from the full-table rank; absent ids drop out).
     # Above the ceiling the distributed loop runs unchanged.
-    if _emb_rowcount(spark, sf_dir) <= KM_LOCAL_POINTS_MAX:
+    if _lloyd_points_fit_driver(sf_dir):
         import numpy as np
 
         seed_map = {int(r["vec_id"]): int(r["cid"]) for r in seed_cids.collect()}
@@ -2789,7 +2773,7 @@ def ivfpq_index_root(sf_dir: str) -> str:
     embeddings table's CONTENT FINGERPRINT (`content_fingerprint` — the
     `table_stream_sharded` staging-key discipline), so a regenerated
     fixture at the same path gets a fresh root instead of silently
-    serving the stale index (round-8 ADVICE). NOT session-keyed — the
+    serving the stale index. NOT session-keyed — the
     whole point is write-once/serve-many across sessions. Concurrency
     is handled by `artifacts.publish`, not by per-session paths
     (contrast `bucketed_join`'s staging, which is rewritten per run and
@@ -2856,8 +2840,8 @@ def ivfpq_index_build(spark: SparkSession, sf_dir: str, root: str | None = None)
 
 @register("ann_ivfpq_served_topk", oracle=_ivfpq_oracle(), bench=True)
 def ann_ivfpq_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ SERVED FROM THE PERSISTED INDEX — the round-7 verdict's
-    missing deployment rung: `ivfpq_index_build` trains once and
+    """IVF-PQ SERVED FROM THE PERSISTED INDEX — the deployment rung
+    after training: `ivfpq_index_build` trains once and
     publishes the parquet artifact (atomic rename, write-once), and
     this query answers top-k from ``centroids``/``codebook``/``codes``
     alone — `_ivfpq_serve`, the identical routing/LUT/ADC half the
@@ -2938,8 +2922,8 @@ def ann_ivfpq_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: identical to the served twin, plus the append cost
     is ONE narrow encode pass over the batch (broadcast codebooks,
     Arrow matmul assign) — independent of base-corpus size, the
-    property SCALING.md "Round 8: append-cost independence for the
-    IVF-PQ index" measures (a fixed 500-vector append stays flat under
+    property SCALING.md "append-cost independence for the IVF-PQ
+    index" measures (a fixed 500-vector append stays flat under
     16× corpus growth)."""
     if load_table(spark, sf_dir, "embeddings").head(1) == []:
         # Degenerate-input policy: no corpus → no index → empty result
@@ -3180,8 +3164,8 @@ def kcenter_select(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     The per-round min-distance update runs as a `mapInArrow` int64
     numpy step over the raw Arrow buffers (the `_arrow_norm_batches`
     pattern) — a zip_with fold here would evaluate k·n·64 interpreted
-    lambdas (the round-3 fold cliff), and even a pandas-batched update
-    pays an object-materialization tax on the array column every
+    lambdas (the interpreted-fold cliff), and even a pandas-batched
+    update pays an object-materialization tax on the array column every
     round. Exactness is unchanged: ‖x−c‖² in int64 is exact at grid
     magnitudes, and the argmax stays a Spark TakeOrdered on exact
     integers. The driver loop carries one 64-int center per round (the
@@ -4054,7 +4038,7 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     # Arrow/numpy matmul scoring — the `_brute_sims_numpy` shape, NOT
     # the zip_with fold: at 1M+ pairs the codegen'd fold pays per-pair
-    # boxed-array costs (the round-6 hybrid fold-cliff: 115→13 s at
+    # boxed-array costs (the hybrid-retrieval fold cliff: 115→13 s at
     # 40×), while one BLAS matmul per Arrow batch amortizes the whole
     # batch. Side A collects and broadcasts once per executor;
     # quantization to millionths stays JVM-side (HALF_UP, matching the
@@ -4214,10 +4198,10 @@ def _ivf_assign(emb: DataFrame, nprobe: int = 1) -> DataFrame:
 
 @register("bitext_margin_mining_ivf", oracle=_bitext_ivf_oracle(), bench=True)
 def bitext_margin_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB shape of `bitext_margin_mining`, registered (round-7
-    verdict item 1 — the registry's last brute baseline without a
-    routed twin): BOTH sides route through the IVF machinery before any
-    scoring, the standard CCMatrix sharding. `_ivf_assign` routes every
+    """The 100 TB shape of `bitext_margin_mining`, registered (it was
+    the registry's last brute baseline without a routed twin): BOTH
+    sides route through the IVF machinery before any scoring, the
+    standard CCMatrix sharding. `_ivf_assign` routes every
     vector (both parities) to its nearest per-label mean centroid — the
     same broadcast-centroid + rounded-cosine assignment text as
     `_ivf_cell_sims`' query routing — and the A×B score matrix is

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from minimapreduce_spark import catalog
 from minimapreduce_spark.catalog import fan_out, load_table
 from minimapreduce_spark.registry import register
 
@@ -1253,11 +1254,6 @@ def token_histogram_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # matching a symbol suffix.
 BPE_SEP = "\x1f"
 BPE_MERGE_ROUNDS = 8
-# Vocabulary-size bound under which the greedy merge rounds run in the
-# driver (adaptive dispatch in _bpe_train): ~100k (word, freq, seg)
-# rows is a few MB — the driver-bounded contract real tokenizer
-# trainers use. Above it the distributed per-round loop runs.
-BPE_LOCAL_VOCAB_MAX = 100_000
 
 
 def _bpe_chain_sql(k: int, upto_seg: int) -> str:
@@ -1392,12 +1388,12 @@ def _bpe_train(spark: SparkSession, sf_dir: str, k: int):
     ).localCheckpoint(eager=False)
 
     rows = []
-    # ADAPTIVE KERNEL DISPATCH (round-11; the dedup_clusters_adaptive
-    # pattern): the k merge rounds run over the VOCABULARY, and when
-    # that frame is small enough to collect (bounded by
-    # BPE_LOCAL_VOCAB_MAX — the driver-bounded-by-contract rule every
-    # tokenizer trainer in practice uses: HF/SentencePiece collect word
-    # counts before merging), the greedy loop runs in the driver with
+    # ADAPTIVE KERNEL DISPATCH (the dedup_clusters_adaptive pattern):
+    # the k merge rounds run over the VOCABULARY, and when that frame is
+    # small enough to collect (bounded by catalog.DRIVER_LOCAL_ROWS_MAX
+    # — the driver-bounded-by-contract rule every tokenizer trainer in
+    # practice uses: HF/SentencePiece collect word counts before
+    # merging), the greedy loop runs in the driver with
     # the identical integer weights, (weight DESC, c1, c2) argmax and
     # left-to-right fold — bit-identical merges, zero per-round Spark
     # jobs. The fixture's 31-word vocab spent 8 rounds of pure job
@@ -1406,7 +1402,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, k: int):
     # loop below runs unchanged — the 100 TB path, where the vocab is
     # millions of rows and per-round jobs are the right shape.
     n_vocab = seg.count()  # one bounded job; materializes the checkpoint
-    if n_vocab <= BPE_LOCAL_VOCAB_MAX:
+    if n_vocab <= catalog.DRIVER_LOCAL_ROWS_MAX:
         vocab = [
             (row.word, int(row.freq), row.seg.split(BPE_SEP)[1:])
             for row in seg.collect()
@@ -2360,9 +2356,9 @@ def wordpiece_apply_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # The unmarked pair above ("wordpiece_train_merges"/"..._apply_token_stats")
 # trains on one flat alphabet, conflating word-initial and continuation
-# occurrences of the same character — a documented fidelity gap (round-8
-# verdict item 2). The published algorithm (Schuster & Nakajima 2012; the
-# BERT tokenizer) position-marks continuation symbols with "##": "abc"
+# occurrences of the same character — a documented fidelity gap. The
+# published algorithm (Schuster & Nakajima 2012; the BERT tokenizer)
+# position-marks continuation symbols with "##": "abc"
 # segments as [a, ##b, ##c], so "a" word-initial and "##a" mid-word are
 # DISTINCT vocabulary units with independent frequencies, merges preserve
 # the left symbol's marking (c1 + strip_##(c2)), and serving's greedy

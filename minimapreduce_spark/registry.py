@@ -7,6 +7,10 @@ Every operator from SURVEY §2 is registered here as a named query:
     rows-only check)
   - ``bench=True`` marks headline queries timed by bench.py
 
+``queries()`` and ``oracles()`` list the queries in registration order,
+which is module import order in ``minimapreduce_spark.queries``; that is
+the only query order.
+
 This mirrors the reference's test protocol: distributed output must
 match a sequential oracle order-insensitively (main/test-mr.sh:59-67),
 generalized from `sort | cmp` to row-count + schema + value-hash.
@@ -45,154 +49,12 @@ def register(name: str, oracle: str | None = None, bench: bool = False) -> Calla
     return deco
 
 
-# Driver-priority tier: the correctness driver verifies the first N
-# registrations it sees, so the window is rotated each round to extend
-# cumulative hard-verified coverage (round-1 verdict: the first 50 were
-# all text/relational/TPC-H, leaving dedup/ANN/streaming/events/multimodal
-# driver-unchecked). Order here = dict order of queries()/oracles(); the
-# rest follows in module registration order. tests/test_driver_contract.py
-# pins the rotation discipline.
-#
-# ROUND-10 ROTATION — FRESHNESS UNDER CLOSURE, NOW PIN-ROUNDED (the
-# round-8/9 discipline plus the structural fix the round-9 verdict
-# mandates; all rules encoded in tests/test_driver_contract.py):
-#   (a) every round-10 registration is SWAPPED in at the head as it
-#       registers (a new capability driver-verified beats any
-#       re-verification), displacing the LAST r03 canary below;
-#   (b) the remaining slots re-verify the queries whose last
-#       driver-hash verification is OLDEST — the staleness rule: no
-#       canary may be fresher than any non-window verified query
-#       (ties allowed). After round 9 the oldest cohorts are the 12
-#       r02-verified queries (eight rounds stale) and the 40
-#       r03-verified; 12 + 38 of the r03 cohort fill the canary
-#       slots (the r03 tie keeps the rule green either side of the
-#       cut).
-#   (c) WINDOW_PIN_ROUND below records WHEN this window was pinned:
-#       the staleness rule is evaluated against the artifact set that
-#       existed at pin time (rounds < pin), so the driver dropping
-#       CORRECTNESS_r10.json AFTER the final commit — the exact
-#       mechanism that turned rounds 8 and 9 red post-commit — can no
-#       longer fire the tripwire, while max(artifact round) <= pin
-#       still goes red if a LATER round forgets to rotate.
-
-# The round whose registrations lead the window == 1 + the newest
-# CORRECTNESS artifact at pin time. Bump this in the same commit that
-# rotates DRIVER_PRIORITY for the next round.
-WINDOW_PIN_ROUND: int = 12
-
-# Queries whose implementation changed in an optimization round AFTER
-# their most recent driver verification (round-11 verdict item 1: the
-# r11 window missed every query round 11 touched, so the driver has no
-# post-change oracle evidence on exactly the paths that changed). They
-# lead the window like closure — a changed query is effectively
-# unverified — and are exempt from the staleness comparison. Entries
-# touched again in round 12 stay here; the ledger empties once the
-# pinned round's CORRECTNESS artifact verifies them post-change.
-TOUCHED_SINCE_VERIFIED: list[str] = [
-    # -- round-11 optimization touches (commits f9593a3/89d1dbf/3c7a61e/783fb74) --
-    "bpe_train_merges",
-    "embedding_kmeans_lloyd",
-    "ann_pq_adc_topk",
-    "ann_ivfpq_topk",
-    "ann_ivfpq_served_topk",
-    "ann_ivfpq_append_served_topk",
-    "ann_ivfpq_compact_served_topk",
-    "catalog_stats_lineitem",
-    "catalog_stats_lineitem_prod",
-    "dedup_simhash",
-    "dedup_embedding_lsh",
-    "graph_triangle_degree_oriented",
-    "basket_part_pairs",
-    "multimodal_jpeg_decode",
-    "stream_session_window",
-    "stream_upsert_latest_state",
-    "stream_exactly_once_watermarked",
-]
-
-# ROUND-12 ROTATION (optimization round 2). Verdict-mandated: the 17
-# r11-touched queries lead (TOUCHED_SINCE_VERIFIED above — changed
-# after their last driver verification, so re-verification beats any
-# canary); the remaining 33 slots are staleness canaries from the
-# r01-r11 artifact union at pin time — the 12 r04-verified queries not
-# already in the touched tier, then 21 of the 44 non-touched
-# r06-verified (all r06 entries tie, so the round-12 optimization
-# targets unigram_train_pieces / dedup_minhash_incremental /
-# ann_ivf_mmr_rerank + the unigram apply twin are picked first and the
-# alphabetically-first fill the rest; the staleness rule holds either
-# side of the cut).
-DRIVER_PRIORITY: list[str] = [
-    # -- r11-touched tier: re-verify every query round 11 changed --
-    *TOUCHED_SINCE_VERIFIED,
-    # -- r04 staleness canaries: the 12 queries last driver-verified in
-    #    round 4 still outside the touched tier (oldest cohort) --
-    "stream_psi_drift",
-    "stream_sliding_1h_30m",
-    "stream_static_enrich",
-    "stream_tumbling_append_finalized",
-    "stream_user_stats_stateful",
-    "stream_view_purchase_join",
-    "text_bigram_logprob",
-    "token_histogram_zipf",
-    "user_longest_daily_streak",
-    "window_cumulative_distinct_users",
-    "window_max_drawdown",
-    "wordcount",
-    # -- r06 staleness canaries: next-oldest cohort (44 non-touched
-    #    total, all tied at round 6; round-12 optimization targets
-    #    first, then alphabetical) --
-    "unigram_train_pieces",
-    "dedup_minhash_incremental",
-    "ann_ivf_mmr_rerank",
-    "unigram_apply_token_stats",
-    "agg_arg_extremes",
-    "agg_mad_user_value",
-    "ann_graph_greedy_search",
-    "ann_graph_hierarchical_search",
-    "ann_mmr_rerank",
-    "boilerplate_ngram_sources",
-    "bpe_apply_token_stats",
-    "category_share_drift",
-    "customer_reorder_intervals",
-    "dedup_keep_latest",
-    "embedding_kcenter_coreset",
-    "events_attribution_first_touch",
-    "events_autocorrelation_lag1",
-    "events_resample_gapfill",
-    "events_rolling_zscore",
-    "events_sliding_1h_30m",
-    "events_time_weighted_avg",
-]
-
-
-# Queries registered AFTER the current (round-10) window was pinned.
-# Any new registration must be appended here in the same commit, so the
-# rotation test can distinguish "late, ledgered, pytest-oracle-verified"
-# from "missed". New round-10 flagships should instead be SWAPPED into
-# the window, displacing a canary (a flagship driver-verified beats a
-# canary re-verified) — use this ledger only when the driver may
-# already have run.
-LATE_REGISTERED: list[str] = []
-
-
-
-
-def _ordered_names() -> list[str]:
-    """Priority tier first, then the rest in registration order."""
-    prio = [n for n in DRIVER_PRIORITY if n in REGISTRY]
-    rest = [n for n in REGISTRY if n not in set(prio)]
-    return prio + rest
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
+    return {name: q.fn for name, q in REGISTRY.items()}
 
 
 def oracles() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
-    }
+    return {name: q.oracle for name, q in REGISTRY.items() if q.oracle is not None}
 
 
 def bench_queries() -> dict[str, QueryFn]:

@@ -1,4 +1,4 @@
-"""Round-3 curation operators: algorithmic invariants beyond the
+"""Curation operators: algorithmic invariants beyond the
 oracle hash (which tests/test_oracle_sweep.py covers automatically)."""
 
 from __future__ import annotations
@@ -282,12 +282,13 @@ def _frames_equal(a, b) -> bool:
 
 
 def test_duplication_gate_paths_bit_identical(spark, tmp_path):
-    """The duplication gate (round-4 verdict item 6) may only ever pick
-    between two BIT-IDENTICAL plans: the content-grouped front end and
-    the ungrouped bypass must produce the same rows on a dup-free corpus
-    (where the gate bypasses) AND on a dup-heavy one (where it groups).
-    Forces each path by swinging DUP_GATE_RATIO, clearing the probe
-    memo between runs."""
+    """The duplication gate may only ever pick between two BIT-IDENTICAL
+    plans: the content-grouped front end and the ungrouped bypass must
+    produce the same rows on a dup-free corpus (where the gate bypasses)
+    AND on a dup-heavy one (where it groups). Forces each path by
+    swinging DUP_GATE_RATIO and clearing the probe memo between runs,
+    then checks that both table probes (documents and embeddings)
+    followed the swing, so a memo that outlives it fails here."""
     import duckdb
 
     from minimapreduce_spark.operators import dedup as dd
@@ -321,18 +322,21 @@ def test_duplication_gate_paths_bit_identical(spark, tmp_path):
                 frames = []
                 for ratio in (1.0, -1.0):  # force bypass, force grouped
                     dd.DUP_GATE_RATIO = ratio
-                    dd._DUP_PROBE_CACHE.clear()
+                    dd._DUP_FREE_MEMO.clear()
                     frames.append(q.REGISTRY[name].fn(spark, sf).toPandas())
+                    for table in ("documents", "embeddings"):
+                        dup_free = dd.table_effectively_dup_free(spark, sf, table)
+                        assert dup_free == (ratio > 0), (name, sf, table, ratio)
                 assert _frames_equal(*frames), (name, sf)
                 assert len(frames[0]) > 0, (name, sf, "vacuous")
             # and the dup-heavy corpus must actually trip the gate
             dd.DUP_GATE_RATIO = 0.01
-            dd._DUP_PROBE_CACHE.clear()
-            assert not dd.corpus_effectively_dup_free(spark, dup_dir)
-            assert dd.corpus_effectively_dup_free(spark, SF_DIR)
+            dd._DUP_FREE_MEMO.clear()
+            assert not dd.table_effectively_dup_free(spark, dup_dir, "documents")
+            assert dd.table_effectively_dup_free(spark, SF_DIR, "documents")
     finally:
         dd.DUP_GATE_RATIO = 0.01
-        dd._DUP_PROBE_CACHE.clear()
+        dd._DUP_FREE_MEMO.clear()
 
 
 def _bpe_corpus(spark, word_freqs):
@@ -391,16 +395,17 @@ def test_bpe_merge_is_greedy_left_to_right_on_repeats(spark, tmp_path):
 
 
 def test_bpe_local_and_distributed_kernels_agree(spark, monkeypatch):
-    """The round-11 adaptive dispatch (driver-local merge rounds when
-    the vocabulary fits BPE_LOCAL_VOCAB_MAX) must be bit-identical to
-    the distributed per-round loop — same merge table (pairs AND
+    """The adaptive dispatch (driver-local merge rounds when the
+    vocabulary fits catalog.DRIVER_LOCAL_ROWS_MAX) must be bit-identical
+    to the distributed per-round loop — same merge table (pairs AND
     weights, in training order) and same final segmentations — the
     dedup_clusters_adaptive twin-equality discipline."""
     import minimapreduce_spark.operators.text_analysis as ta
+    from minimapreduce_spark import catalog
 
     rows_local, seg_local = ta._bpe_train(spark, SF_DIR, ta.BPE_MERGE_ROUNDS)
     local_seg_rows = sorted(map(tuple, seg_local.collect()))
-    monkeypatch.setattr(ta, "BPE_LOCAL_VOCAB_MAX", -1)  # force distributed
+    monkeypatch.setattr(catalog, "DRIVER_LOCAL_ROWS_MAX", -1)  # force distributed
     rows_dist, seg_dist = ta._bpe_train(spark, SF_DIR, ta.BPE_MERGE_ROUNDS)
     assert rows_local == rows_dist
     assert local_seg_rows == sorted(map(tuple, seg_dist.collect()))

@@ -171,8 +171,8 @@ def test_minhash_index_probe_artifact_equals_recompute_and_plan_has_no_build(
 
 
 def test_minhash_index_append_equals_rebuild_and_links_not_copies(spark, tmp_path):
-    """The APPEND rung (`minhash_index_append` — round-9 verdict item
-    3): day-1 arrivals merge INTO the persisted band index so day 2
+    """The APPEND rung (`minhash_index_append`): day-1 arrivals merge
+    INTO the persisted band index so day 2
     probes corpus ∪ day 1. Pins:
 
       - the appended artifact's tables are ROW-IDENTICAL to a from-
@@ -567,8 +567,7 @@ def test_embedding_lsh_scores_clear_rounding_boundaries():
 
 def test_zero_vector_copy_group_drops(spark):
     """Pin the degenerate-zero-vector semantics the iso-component
-    comment in dedup_embedding_clusters documents (round-4 ADVICE
-    follow-up). Both engines drop a zero-vector copy group, but by
+    comment in dedup_embedding_clusters documents. Both engines drop a zero-vector copy group, but by
     DIFFERENT mechanisms, neither of them "NaN fails the >=" (both
     engines order NaN above every number, so a surviving NaN would be
     KEPT): Spark's numpy 0/0 NaN becomes NULL across the pandas→Arrow
@@ -736,12 +735,13 @@ def test_int8_ivf_recall_vs_float_ivf(spark):
 
 
 def test_lloyd_local_and_distributed_kernels_agree(spark, monkeypatch):
-    """The round-11 adaptive Lloyd dispatch (driver-local rounds under
-    KM_LOCAL_POINTS_MAX) must be bit-identical to the distributed
-    loops — the bpe_train_merges twin-equality discipline applied to
-    k-means (full output frame) and the PQ codebook (every (m, cid)
-    entry)."""
+    """The adaptive Lloyd dispatch (driver-local rounds under
+    catalog.DRIVER_LOCAL_ROWS_MAX) must be bit-identical to the
+    distributed loops — the bpe_train_merges twin-equality discipline
+    applied to k-means (full output frame) and the PQ codebook (every
+    (m, cid) entry)."""
     import minimapreduce_spark.operators.similarity as sim
+    from minimapreduce_spark import catalog
 
     km_local = sorted(
         map(tuple, sim.embedding_kmeans_lloyd(spark, SF_DIR).collect())
@@ -751,7 +751,7 @@ def test_lloyd_local_and_distributed_kernels_agree(spark, monkeypatch):
         (int(r["m"]), int(r["cid"]), tuple(r["ce"]))
         for r in sim._pq_train(spark, SF_DIR, sub).collect()
     )
-    monkeypatch.setattr(sim, "KM_LOCAL_POINTS_MAX", -1)  # force distributed
+    monkeypatch.setattr(catalog, "DRIVER_LOCAL_ROWS_MAX", -1)  # force distributed
     km_dist = sorted(
         map(tuple, sim.embedding_kmeans_lloyd(spark, SF_DIR).collect())
     )
@@ -1079,7 +1079,7 @@ def test_graph_greedy_search_semantics(spark):
 
 def test_knn_edge_scores_clear_rounding_boundaries():
     """kNN-edge twin of test_embedding_lsh_scores_clear_rounding_
-    boundaries (round-4 ADVICE): ann_graph_greedy_search's walk
+    boundaries: ann_graph_greedy_search's walk
     arithmetic is bit-reproducible cross-engine, but the EDGE SET it
     consumes comes from ann_knn_graph_edges, whose within-cell cosine
     is a numpy normalize-then-matmul rounded to 6 dp versus the
@@ -2143,7 +2143,7 @@ def test_hybrid_ivf_composition_invariants(spark):
 
 
 def test_log_quantization_margins(spark):
-    """The round-5 LSH lesson applied to every round-6 ln-quantization
+    """The LSH rounding-midpoint lesson applied to every ln-quantization
     site: a quantized log (round(ln(x)·SCALE)) is cross-engine exact
     only while no operand sits ON a rounding midpoint, where a 1-ulp
     JVM-vs-DuckDB ln() disagreement could flip the integer. Pin the
@@ -2222,7 +2222,7 @@ def test_log_quantization_margins(spark):
 
 
 def test_hybrid_cosine_margins(spark):
-    """ADVICE r06: the hybrid channels' 6-dp rounded cosines get the
+    """The hybrid channels' 6-dp rounded cosines get the
     same midpoint pin as every ln-quantization site — a raw cosine
     within an ulp of a .5e-6 midpoint would flip a channel rank
     cross-engine (numpy normalize-then-matmul vs DuckDB
@@ -2291,8 +2291,7 @@ def test_hybrid_cosine_margins(spark):
 
 
 def test_ivfpq_nprobe_recall_monotone(spark):
-    """The nprobe dial composed into the residual-PQ chain (round-6
-    verdict item 5): at nprobe=2 each query's candidate set is a strict
+    """The nprobe dial composed into the residual-PQ chain: at nprobe=2 each query's candidate set is a strict
     SUPERSET of nprobe=1's (same routing order, more cells), so
 
       - per query and per rank r, the r-th best ADC similarity at
@@ -2995,8 +2994,7 @@ def test_star_components_path_and_twin_equality(spark):
 
 
 def test_adaptive_components_dispatches_by_graph_shape(spark):
-    """The adaptive kernel's dispatch contract (the round-9 verdict
-    stretch): (a) on the planted 256-vertex PATH the probe does NOT
+    """The adaptive kernel's dispatch contract: (a) on the planted 256-vertex PATH the probe does NOT
     converge, the graph contracts by the probe labels, and the STAR
     kernel finishes — one component rooted at 0, kernel == "star";
     (b) on a near-CLIQUE the probe converges and min-label's own
@@ -3055,7 +3053,7 @@ def test_adaptive_components_dispatches_by_graph_shape(spark):
 
 
 def test_minhash_index_probe_all_batch_corpus_and_root_keying(spark, tmp_path):
-    """Round-9 review findings, pinned: (a) a corpus whose EVERY doc is
+    """Two band-index edge cases, pinned: (a) a corpus whose EVERY doc is
     in the arrival batch (all doc_id % INCR_BATCH_MOD == 0) publishes a
     zero-row corpus index — the probe must return the batch-internal
     near-dup pairs (explicit artifact-read schemas; previously an

@@ -17,7 +17,7 @@ ALL = sorted(q.REGISTRY)
 def test_registry_size_matches_coverage_ledger():
     """COVERAGE.md's totals line AND SURVEY.md §8's current-total line
     must both equal the registry — one source of truth, test-pinned
-    (round-2 verdict: the two files disagreed for a full round)."""
+    (two hand-kept ledgers drift apart unless one check reads both)."""
     import re
 
     root = os.path.join(os.path.dirname(__file__), "..")
@@ -35,29 +35,28 @@ def test_registry_size_matches_coverage_ledger():
         f"SURVEY.md claims {m.group(1)} queries, registry has {len(ALL)} — "
         "update §8"
     )
-    # round-3 verdict item 6: prose counts rot the same way the ledgers
-    # did (README said 223 for a round) — sweep every file that makes
-    # CURRENT-count claims. VERDICT.md (the judge's words) and SURVEY's
-    # historical round-delta sections legitimately carry old counts and
-    # are excluded.
+    # Prose counts rot the same way the ledgers do (README once said 223
+    # while the registry had moved on) — sweep every file that makes
+    # CURRENT-count claims. VERDICT.md and SURVEY's historical delta
+    # sections legitimately carry old counts and are excluded.
     for fname in ("README.md", "QUERIES.md"):
         with open(os.path.join(root, fname)) as f:
             text = f.read()
         for m in re.finditer(r"(\d+) (?:registered )?queries", text):
             n = int(m.group(1))
             # only registry-sized numbers are registry count-claims
-            # (skip e.g. "50 queries" driver-window prose)
+            # (skip e.g. "50 queries" subset prose)
             if n >= 100:
                 assert n == len(ALL), (
                     f"{fname} says '{m.group(0)}' but registry has "
                     f"{len(ALL)} — stale prose count"
                 )
-    # round-4 verdict item 8: "Current total above (N)"-style currency
-    # claims are forbidden EVERYWHERE in our prose, including historical
-    # delta sections the per-number sweep legitimately skips — a sentence
-    # that claims to be current must not live where it can't be kept
-    # current. (SURVEY.md:359 said "Current total above (226)" for a
-    # round while the registry sat at 228.)
+    # "Current total above (N)"-style currency claims are forbidden
+    # EVERYWHERE in our prose, including historical delta sections the
+    # per-number sweep legitimately skips — a sentence that claims to be
+    # current must not live where it can't be kept current. (SURVEY.md
+    # once said "Current total above (226)" while the registry sat at
+    # 228.)
     for fname in ("SURVEY.md", "COVERAGE.md", "README.md", "QUERIES.md"):
         with open(os.path.join(root, fname)) as f:
             text = f.read()
@@ -68,6 +67,16 @@ def test_registry_size_matches_coverage_ledger():
                 f"{fname}: currency-claiming phrase {m.group(0)!r} with a "
                 f"stale count (registry has {len(ALL)})"
             )
+
+
+def test_queries_and_oracles_follow_registration_order():
+    """Registration order is the only query order: ``queries()`` lists
+    every registered name in REGISTRY's insertion order, and
+    ``oracles()`` is that order restricted to oracle-bearing queries."""
+    assert list(q.queries()) == list(q.REGISTRY)
+    assert list(q.oracles()) == [
+        name for name, query in q.REGISTRY.items() if query.oracle is not None
+    ]
 
 
 # Legitimately empty at the sf0.001 smoke scale (the oracle agrees —
