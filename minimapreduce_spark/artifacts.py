@@ -53,9 +53,9 @@ At 100 TB this is the table-format VACUUM/`expire_snapshots` job: the
 append chain is the snapshot log, compaction is rewrite, and retention
 bounds storage at O(live artifacts) instead of O(all history). It is
 a scheduled maintenance job, not a query — evidence lives in pytest
-(liveness, hardlink survival, grace window) and SCALING.md "Round 10:
-retention (VACUUM) for the artifact families" (measured reclaim at
-sf0.1).
+(liveness, hardlink survival, grace window) and SCALING.md's
+"retention (VACUUM) for the artifact families" section (measured
+reclaim at sf0.1).
 """
 
 from __future__ import annotations
@@ -201,12 +201,12 @@ def vacuum_superseded_roots(
         ``_PARENT`` marker names this root) — derivation is recorded
         at publish time, never inferred from names, so a sibling like
         the IVF-PQ ``_base13`` build can never mark the live full
-        index dead (round-10 ADVICE);
+        index dead;
       - old enough: ``now - max(claiming child mtime) >= min_age_s`` —
         the grace window runs from the SUPERSESSION, not from the
         candidate's own (possibly ancient) publish time, so readers
         still draining the old root get the full window however old
-        the root is (round-10 ADVICE).
+        the root is.
 
     The NEWEST view of every chain — each leaf — is always kept (a
     leaf claims, but is never claimed), so a vacuum between an append
@@ -290,10 +290,10 @@ def _fragmented(root: str, marker: str) -> bool:
 
       - any ``base-*.parquet`` file in ANY data subdir: the hardlink
         fold-in prefix both appenders stamp on every parent file
-        (round-10 ADVICE: appends fragment the OTHER artifact tables
-        too — minhash ``shingles``, IVF-PQ ``centroids``/``codebook``
-        — so the probe must walk the whole root, not just the
-        published-marker subdir);
+        (appends fragment the OTHER artifact tables too — minhash
+        ``shingles``, IVF-PQ ``centroids``/``codebook`` — so the probe
+        must walk the whole root, not just the published-marker
+        subdir);
       - more than one parquet file in a leaf dir under the MARKER
         subdir (the partitioned table compaction rewrites to one task
         → one file per partition).

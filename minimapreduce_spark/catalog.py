@@ -9,6 +9,7 @@ filter-pushed scans for free.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -102,12 +103,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
-        return _load_events(spark, sf_dir)
+        # ts as TIMESTAMP_NTZ, the type of the other tables and the oracle
+        return read_events(spark, sf_dir, spark.read.parquet, "timestamp_ntz")
     return spark.read.parquet(table_path(sf_dir, name))
 
 
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load events with ``ts`` normalized to TIMESTAMP_NTZ.
+def read_events(
+    spark: SparkSession, sf_dir: str, read: Callable[[str], DataFrame], ts_type: str
+) -> DataFrame:
+    """The events table as ``read(path)`` opens it — a batch scan or a
+    stream over a staged replay — with ``ts`` decoded to ``ts_type``.
 
     Driver-generated data has carried ``ts`` as either parquet
     TIMESTAMP(NANOS) — which Spark's reader rejects outright
@@ -115,18 +120,17 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     to raw int64 — or as plain TIMESTAMP(MICROS). Handle both: when the
     column arrives as a long it is nanos and we convert ns → µs with
     integer DIV (a double division would lose precision above 2^53 ns);
-    when it is already a timestamp we only align the type to
-    TIMESTAMP_NTZ to match the other tables and the DuckDB oracle."""
+    when it is already a timestamp it is only cast."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
+    df = read(table_path(sf_dir, "events"))
     if isinstance(df.schema["ts"].dataType, LongType):
         ts = F.timestamp_micros(F.expr("ts DIV 1000"))
     else:
         ts = F.col("ts")
-    return df.withColumn("ts", ts.cast("timestamp_ntz"))
+    return df.withColumn("ts", ts.cast(ts_type))
 
 
 def fan_out(

@@ -59,6 +59,7 @@ from minimapreduce_spark.catalog import (
     content_fingerprint,
     fan_out,
     load_table,
+    parquet_rowcount,
     table_path,
 )
 from minimapreduce_spark.registry import register
@@ -856,7 +857,7 @@ def dedup_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch-side content-group collapse stacks orthogonally when a
     recrawl-heavy batch needs it (see `minhash_incremental_pairs`)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    if docs.head(1) == []:
+    if parquet_rowcount(table_path(sf_dir, "documents")) == 0:
         # Degenerate-input policy: empty corpus → no index, no batch
         return spark.createDataFrame(
             [], "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"
@@ -1005,7 +1006,7 @@ def minhash_index_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     of one-per-append-day; the compaction itself paid one corpus-sized
     rewrite offline (`minhash_index_compact`)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    if docs.head(1) == []:
+    if parquet_rowcount(table_path(sf_dir, "documents")) == 0:
         # Degenerate-input policy: empty corpus → no index, no batches
         return spark.createDataFrame(
             [], "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"
@@ -1073,7 +1074,7 @@ def minhash_index_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     families ("append-cost independence for the IVF-PQ index",
     "append-cost independence for the band index")."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    if docs.head(1) == []:
+    if parquet_rowcount(table_path(sf_dir, "documents")) == 0:
         # Degenerate-input policy: empty corpus → no index, no batches
         return spark.createDataFrame(
             [], "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"

@@ -21,16 +21,17 @@ Scale posture:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import hashlib
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-import os
-
 from minimapreduce_spark.artifacts import FAMILIES, family_root, publish
-from minimapreduce_spark.catalog import load_table
+from minimapreduce_spark.catalog import content_fingerprint, load_table, table_path
 from minimapreduce_spark.operators.money import exact_revenue_sum, exact_sum, grid_c
-from minimapreduce_spark.registry import register
+from minimapreduce_spark.registry import QueryFn, register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -68,7 +69,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans partial+final hash agg; only 6 groups survive the map
     side, so shuffle traffic is O(partitions), not O(rows).
 
-    EXACT fixed-point arithmetic (round-5 160×-caught boundary): the
+    EXACT fixed-point arithmetic (a boundary caught at 160× scale): the
     original round-in-both-engines float sums held at sf0.01 and 40×,
     but at 160× (96M rows) one group's sum_charge accumulated a 2e-14
     relative summation-order difference that landed ACROSS the 2-dp
@@ -755,9 +756,21 @@ def join_shuffle_hash_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Incremental view maintenance for JOINS — the delta-join identity
 # ---------------------------------------------------------------------------
+#
+# The view, the day's changes and the maintenance algebra are defined
+# here once, for the batch lane below and the streaming lane in
+# `streaming/upsert.py`: `_view` is the view's row shape, `_split` the
+# day's arrivals, `dim_changed` / `dim_changes` / `dim_end_of_day` the
+# day's dimension change set (over the whole customer table or one CDC
+# micro-batch of it), `untombstoned`, `dim_insert_rows` and
+# `maintained_view` the merge-on-read terms, and `join_view_fold_in`
+# the nightly publish.
 
 IVM_FACT_MOD = 10  # o_orderkey % 10 == 0 → "orders that arrived today"
 IVM_DIM_MOD = 13  # c_custkey % 13 == 0 → "customers onboarded today"
+IVM_UPD_MOD = 7  # base customers with c_custkey % 7 == 0 → segment updated today
+IVM_DEL_MOD = 11  # base customers with c_custkey % 11 == 0 → deleted today
+IVM_UPD_SEGMENT = "REPRICED"  # the updated rows' new c_mktsegment value
 
 _IVM_VIEW_SQL = """
     SELECT o_orderkey, o_custkey, c_mktsegment,
@@ -765,15 +778,131 @@ _IVM_VIEW_SQL = """
     FROM orders JOIN customer ON o_custkey = c_custkey
 """
 
+# Maintenance ≡ recompute against the dim's end-of-day state — shared
+# by the merge-on-read query, the copy-on-write rebuild, and the
+# streaming CDC twin (identical end state by contract).
+IVM_UPSERTS_ORACLE = f"""
+    WITH cust_final AS (
+      SELECT c_custkey,
+             CASE WHEN c_custkey % {IVM_DIM_MOD} <> 0
+                   AND c_custkey % {IVM_DEL_MOD} <> 0
+                   AND c_custkey % {IVM_UPD_MOD} = 0
+                  THEN '{IVM_UPD_SEGMENT}' ELSE c_mktsegment END AS c_mktsegment
+      FROM customer
+      WHERE NOT (c_custkey % {IVM_DIM_MOD} <> 0
+                 AND c_custkey % {IVM_DEL_MOD} = 0)
+    )
+    SELECT o_orderkey, o_custkey, c_mktsegment,
+           CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
+    FROM orders JOIN cust_final ON o_custkey = c_custkey
+    """
+
+# explicit artifact-read schema (the MINHASH_BUCKET_SCHEMA lesson: a
+# zero-row write leaves no inferable footer)
+IVM_VIEW_SCHEMA = (
+    "o_orderkey bigint, o_custkey bigint, c_mktsegment string, price_c bigint"
+)
+
+
+def _view(o: DataFrame, c: DataFrame) -> DataFrame:
+    """``o`` ⋈ ``c`` in the view's row shape (``IVM_VIEW_SCHEMA``)."""
+    return o.join(c, o.o_custkey == c.c_custkey).select(
+        "o_orderkey",
+        "o_custkey",
+        "c_mktsegment",
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
+    )
+
+
+def _split(df: DataFrame, key: str, mod: int) -> tuple[DataFrame, DataFrame]:
+    """(yesterday's rows, today's arrivals) of ``df``: a row arrived
+    today iff ``key % mod == 0`` — (o_orderkey, IVM_FACT_MOD) for
+    orders, (c_custkey, IVM_DIM_MOD) for customers."""
+    today = F.col(key) % mod == 0
+    return df.where(~today), df.where(today)
+
+
+def _dim_kinds() -> tuple[Column, Column, Column]:
+    """(insert, delete, update): the disjoint kinds of today's change
+    to a customer row. Onboards are the `incremental_join_view`
+    arrivals; deletes and updates are modular stand-ins on the base
+    customers the artifact was built on."""
+    ck = F.col("c_custkey")
+    is_ins = ck % IVM_DIM_MOD == 0
+    is_del = (~is_ins) & (ck % IVM_DEL_MOD == 0)
+    is_upd = (~is_ins) & (~is_del) & (ck % IVM_UPD_MOD == 0)
+    return is_ins, is_del, is_upd
+
+
+def dim_changed() -> Column:
+    """True on a customer row that changes today."""
+    is_ins, is_del, is_upd = _dim_kinds()
+    return is_ins | is_del | is_upd
+
+
+def dim_changes(cust: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The day's changes among the rows of ``cust`` — the whole customer
+    table or one CDC micro-batch of it — as (tombstone keys, Δ⁺ rows).
+    Deletes and updates tombstone their key; Δ⁺ holds the updated rows'
+    new versions and the onboards, so an update is a tombstone plus an
+    insert."""
+    is_ins, is_del, is_upd = _dim_kinds()
+    tombs = cust.where(is_del | is_upd).select("c_custkey")
+    plus = (
+        cust.where(is_upd)
+        .withColumn("c_mktsegment", F.lit(IVM_UPD_SEGMENT))
+        .unionByName(cust.where(is_ins))
+    )
+    return tombs, plus
+
+
+def dim_end_of_day(cust: DataFrame) -> DataFrame:
+    """The customer table's end-of-day state: base minus deletes,
+    updates rewritten, plus onboards. Corpus-sized, so never
+    force-broadcast."""
+    is_ins, is_del, is_upd = _dim_kinds()
+    return (
+        cust.where(~is_ins & ~is_del)
+        .withColumn(
+            "c_mktsegment",
+            F.when(is_upd, F.lit(IVM_UPD_SEGMENT)).otherwise(F.col("c_mktsegment")),
+        )
+        .unionByName(cust.where(is_ins))
+    )
+
+
+def dim_insert_rows(orders: DataFrame, plus: DataFrame) -> DataFrame:
+    """A ⋈ Δ⁺B: the base orders of the customers in ``plus`` (a
+    `dim_changes` Δ⁺ set), which is bounded by the day's dim churn and
+    broadcast."""
+    base_orders, _ = _split(orders, "o_orderkey", IVM_FACT_MOD)
+    return _view(base_orders, F.broadcast(plus))
+
+
+def untombstoned(base_view: DataFrame, tombs: DataFrame) -> DataFrame:
+    """V ⟕̸ tombstones: the base view minus the rows of tombstoned
+    customers, a broadcast LEFT ANTI join on o_custkey. Built before
+    the delta terms, as `maintained_view`'s first input."""
+    return base_view.join(
+        F.broadcast(tombs), base_view["o_custkey"] == tombs["c_custkey"], "left_anti"
+    )
+
+
+def maintained_view(
+    live: DataFrame, insert_rows: DataFrame, orders: DataFrame, cust_final: DataFrame
+) -> DataFrame:
+    """The merge-on-read composition (V ⟕̸ tombstones) ∪ A⋈Δ⁺B ∪ ΔA⋈B_final:
+    the `untombstoned` base view, plus ``insert_rows``
+    (`dim_insert_rows`), plus today's arrival orders joined to the
+    end-of-day dimension (`dim_end_of_day`)."""
+    _, arrivals = _split(orders, "o_orderkey", IVM_FACT_MOD)
+    return live.unionByName(insert_rows).unionByName(_view(arrivals, cust_final))
+
 
 def join_view_root(sf_dir: str) -> str:
     """Deterministic root for the persisted base join view — the
     artifact-root discipline (path + content fingerprint of BOTH input
     tables, so a regenerated fixture gets a fresh root)."""
-    import hashlib
-
-    from minimapreduce_spark.catalog import content_fingerprint, table_path
-
     parts = [os.path.abspath(sf_dir)]
     for t in ("orders", "customer"):
         parts.append(content_fingerprint(table_path(sf_dir, t)))
@@ -791,20 +920,38 @@ def join_view_build(spark: SparkSession, sf_dir: str, root: str | None = None) -
     to a materialized join view."""
 
     def write(stage: str) -> None:
-        o = load_table(spark, sf_dir, "orders").where(
-            F.col("o_orderkey") % IVM_FACT_MOD != 0
+        o, _ = _split(load_table(spark, sf_dir, "orders"), "o_orderkey", IVM_FACT_MOD)
+        c, _ = _split(load_table(spark, sf_dir, "customer"), "c_custkey", IVM_DIM_MOD)
+        _view(o, c).write.mode("overwrite").parquet(
+            os.path.join(stage, JOIN_VIEW_MARKER)
         )
-        c = load_table(spark, sf_dir, "customer").where(
-            F.col("c_custkey") % IVM_DIM_MOD != 0
-        )
-        o.join(c, o.o_custkey == c.c_custkey).select(
-            "o_orderkey",
-            "o_custkey",
-            "c_mktsegment",
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
-        ).write.mode("overwrite").parquet(os.path.join(stage, JOIN_VIEW_MARKER))
 
     return publish(root or join_view_root(sf_dir), JOIN_VIEW_MARKER, write)
+
+
+def join_view_fold_in(
+    spark: SparkSession, sf_dir: str, maintained: QueryFn, suffix: str, root: str | None
+) -> str:
+    """PERIODIC BASE REBUILD — the copy-on-write half of the IVM
+    lifecycle that merge-on-read defers: materialize the view that the
+    registered query ``maintained`` composes into a FRESH base-view
+    artifact at ``<base root>_<suffix>`` (or ``root``), published by
+    `artifacts.publish` with a ``_PARENT`` claim on the base. After the
+    fold-in, reads are one artifact scan — no anti-join, no delta
+    joins — and the next day's deltas maintain against the new base.
+    The rebuild pays one maintained-view scan + write (I/O ∝ view
+    size), which is why it is the scheduled job and merge-on-read is
+    the daily path — the compaction discipline (`minhash_index_compact`)
+    applied to a materialized view. An existing published root is
+    returned untouched."""
+    base = join_view_root(sf_dir)
+
+    def write(stage: str) -> None:
+        maintained(spark, sf_dir).write.mode("overwrite").parquet(
+            os.path.join(stage, JOIN_VIEW_MARKER)
+        )
+
+    return publish(root or f"{base}_{suffix}", JOIN_VIEW_MARKER, write, parent=base)
 
 
 @register("incremental_join_view", oracle=_IVM_VIEW_SQL)
@@ -833,75 +980,40 @@ def incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     forces one fact-side probe scan with the ≤|ΔB| keys broadcast
     (semi-join shape), which a production deployment avoids by
     bucketing the fact on the join key (`join_bucketed_smb`'s layout)
-    or by folding dim-inserts into the next base rebuild. UPDATE/
-    DELETE deltas need the tombstone/SCD2 discipline
-    (`stream_scd2_band_history`) on top of the same identity —
-    documented, out of the insert-only contract here. At 100 TB the
-    base view never recomputes: today's maintenance appends
-    delta-term rows, exactly what this plan does."""
+    or by folding dim-inserts into the next base rebuild. Updates and
+    deletes are `incremental_join_view_upserts`. At 100 TB the base
+    view never recomputes: today's maintenance appends delta-term rows,
+    exactly what this plan does."""
     root = join_view_build(spark, sf_dir)
     base_view = spark.read.parquet(os.path.join(root, "view"))
 
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    proj = lambda o, c: o.join(c, o.o_custkey == c.c_custkey).select(  # noqa: E731
-        "o_orderkey",
-        "o_custkey",
-        "c_mktsegment",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
-    )
-    d_o = orders.where(F.col("o_orderkey") % IVM_FACT_MOD == 0)
-    b_o = orders.where(F.col("o_orderkey") % IVM_FACT_MOD != 0)
-    d_c = cust.where(F.col("c_custkey") % IVM_DIM_MOD == 0)
-    b_c = cust.where(F.col("c_custkey") % IVM_DIM_MOD != 0)
+    b_o, d_o = _split(orders, "o_orderkey", IVM_FACT_MOD)
+    b_c, d_c = _split(cust, "c_custkey", IVM_DIM_MOD)
     # broadcast ONLY the Δ-side frames (bounded by the day's arrivals);
     # the base dim b_c is corpus-sized by contract — forcing it into a
     # broadcast would OOM at a real dim size where an unhinted plan
-    # falls back to a shuffle join (round-9 review finding; at fixture
-    # scale AQE still picks broadcast for it on its own)
+    # falls back to a shuffle join (at fixture scale AQE still picks
+    # broadcast for it on its own)
     return (
-        base_view.unionByName(proj(d_o, b_c))
-        .unionByName(proj(b_o, F.broadcast(d_c)))
-        .unionByName(proj(d_o, F.broadcast(d_c)))
+        base_view.unionByName(_view(d_o, b_c))
+        .unionByName(_view(b_o, F.broadcast(d_c)))
+        .unionByName(_view(d_o, F.broadcast(d_c)))
     )
-
-
-IVM_UPD_MOD = 7  # base customers with c_custkey % 7 == 0 → segment updated today
-IVM_DEL_MOD = 11  # base customers with c_custkey % 11 == 0 → deleted today
-IVM_UPD_SEGMENT = "REPRICED"  # the updated rows' new c_mktsegment value
-
-# Maintenance ≡ recompute against the dim's end-of-day state — shared
-# by the merge-on-read query, the copy-on-write rebuild, and the
-# streaming CDC twin (identical end state by contract).
-IVM_UPSERTS_ORACLE = f"""
-    WITH cust_final AS (
-      SELECT c_custkey,
-             CASE WHEN c_custkey % {IVM_DIM_MOD} <> 0
-                   AND c_custkey % {IVM_DEL_MOD} <> 0
-                   AND c_custkey % {IVM_UPD_MOD} = 0
-                  THEN '{IVM_UPD_SEGMENT}' ELSE c_mktsegment END AS c_mktsegment
-      FROM customer
-      WHERE NOT (c_custkey % {IVM_DIM_MOD} <> 0
-                 AND c_custkey % {IVM_DEL_MOD} = 0)
-    )
-    SELECT o_orderkey, o_custkey, c_mktsegment,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
-    FROM orders JOIN cust_final ON o_custkey = c_custkey
-    """
 
 
 @register("incremental_join_view_upserts", oracle=IVM_UPSERTS_ORACLE)
 def incremental_join_view_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVM WITH UPDATE/DELETE DELTAS — the tombstone discipline
-    `incremental_join_view`'s docstring names, now composed into the
-    same delta-join identity (round-9 verdict item 5): real dimension
+    """IVM WITH UPDATE/DELETE DELTAS — the tombstone discipline composed
+    into `incremental_join_view`'s delta-join identity: real dimension
     tables don't only gain rows, they update and delete, and an update
     delta IS a delete tombstone plus an insert — exactly how
     `stream_scd2_band_history` closes a version and opens the next.
 
-    The day's dimension changes, all modular stand-ins on the BASE
-    customers (c_custkey % DIM_MOD != 0, the rows the artifact was
-    built on):
+    The day's dimension changes (`dim_changes`), all modular stand-ins
+    on the BASE customers (c_custkey % DIM_MOD != 0, the rows the
+    artifact was built on):
       - DELETE:  c_custkey % {IVM_DEL_MOD} == 0 → tombstone only;
       - UPDATE:  c_custkey % {IVM_UPD_MOD} == 0 (and not deleted) →
                  tombstone(old row) + insert(row with c_mktsegment =
@@ -911,7 +1023,8 @@ def incremental_join_view_upserts(spark: SparkSession, sf_dir: str) -> DataFrame
     Fact-side arrivals (ΔA: o_orderkey % FACT_MOD == 0) compose
     unchanged.
 
-    Maintenance, term by term (V = A⋈B is the persisted artifact):
+    Maintenance, term by term (`untombstoned`, `maintained_view`;
+    V = A⋈B is the persisted artifact):
       1. V ⟕̸ tombstone-keys (LEFT ANTI on o_custkey) — subtracts
          A⋈Δ⁻B without recomputing anything: each fact row joins
          exactly one dim row, so the tombstoned view rows are exactly
@@ -941,74 +1054,19 @@ def incremental_join_view_upserts(spark: SparkSession, sf_dir: str) -> DataFrame
 
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    ck = F.col("c_custkey")
-    is_ins = ck % IVM_DIM_MOD == 0
-    is_del = (~is_ins) & (ck % IVM_DEL_MOD == 0)
-    is_upd = (~is_ins) & (~is_del) & (ck % IVM_UPD_MOD == 0)
-
-    tomb_keys = cust.where(is_del | is_upd).select("c_custkey")
-    plus_c = (
-        cust.where(is_upd)
-        .withColumn("c_mktsegment", F.lit(IVM_UPD_SEGMENT))
-        .unionByName(cust.where(is_ins))
-    )
-    # the dim's end-of-day state: base minus deletes, updates rewritten,
-    # plus onboards — corpus-sized, so never force-broadcast
-    b_c_final = (
-        cust.where(~is_ins & ~is_del)
-        .withColumn(
-            "c_mktsegment",
-            F.when(is_upd, F.lit(IVM_UPD_SEGMENT)).otherwise(F.col("c_mktsegment")),
-        )
-        .unionByName(cust.where(is_ins))
-    )
-
-    proj = lambda o, c: o.join(c, o.o_custkey == c.c_custkey).select(  # noqa: E731
-        "o_orderkey",
-        "o_custkey",
-        "c_mktsegment",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_c"),
-    )
-    b_o = orders.where(F.col("o_orderkey") % IVM_FACT_MOD != 0)
-    d_o = orders.where(F.col("o_orderkey") % IVM_FACT_MOD == 0)
-    return (
-        base_view.join(
-            F.broadcast(tomb_keys),
-            base_view["o_custkey"] == tomb_keys["c_custkey"],
-            "left_anti",
-        )
-        .unionByName(proj(b_o, F.broadcast(plus_c)))
-        .unionByName(proj(d_o, b_c_final))
-    )
-
-
-# explicit artifact-read schema (the MINHASH_BUCKET_SCHEMA lesson: a
-# zero-row write leaves no inferable footer)
-IVM_VIEW_SCHEMA = (
-    "o_orderkey bigint, o_custkey bigint, c_mktsegment string, price_c bigint"
-)
+    tombs, plus = dim_changes(cust)
+    cust_final = dim_end_of_day(cust)
+    live = untombstoned(base_view, tombs)
+    return maintained_view(live, dim_insert_rows(orders, plus), orders, cust_final)
 
 
 def join_view_rebuild(spark: SparkSession, sf_dir: str, root: str | None = None) -> str:
-    """PERIODIC BASE REBUILD — the copy-on-write half of the IVM
-    lifecycle that `incremental_join_view_upserts` (merge-on-read)
-    defers: fold the day's tombstones, updates, inserts and fact
-    arrivals into a FRESH base-view artifact (the maintained view
-    materialized), published next to the original by `artifacts.publish`.
-    After the fold-in, reads are one artifact scan — no anti-join, no
-    delta joins — and the next day's deltas maintain against the new
-    base. The rebuild pays one maintained-view scan + write (I/O ∝
-    view size), which is why it is the scheduled job and merge-on-read
-    is the daily path — the compaction discipline
-    (`minhash_index_compact`) applied to a materialized view."""
-    base = join_view_root(sf_dir)
-
-    def write(stage: str) -> None:
-        incremental_join_view_upserts(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(stage, JOIN_VIEW_MARKER)
-        )
-
-    return publish(root or f"{base}_rebuilt", JOIN_VIEW_MARKER, write, parent=base)
+    """Fold the day's tombstones, updates, inserts and fact arrivals
+    (`incremental_join_view_upserts`) into a fresh base-view artifact
+    at ``<base root>_rebuilt`` (`join_view_fold_in`)."""
+    return join_view_fold_in(
+        spark, sf_dir, incremental_join_view_upserts, "rebuilt", root
+    )
 
 
 @register("incremental_join_view_rebuild", oracle=IVM_UPSERTS_ORACLE, bench=True)

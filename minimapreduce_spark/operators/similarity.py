@@ -2868,7 +2868,7 @@ def ann_ivfpq_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Degenerate-input policy: an empty embeddings table yields an
     # empty result frame (a partitioned parquet write of zero rows
     # produces no readable files, so the artifact path cannot exist)
-    if load_table(spark, sf_dir, "embeddings").head(1) == []:
+    if catalog.parquet_rowcount(catalog.table_path(sf_dir, "embeddings")) == 0:
         return spark.createDataFrame(
             [], "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
         )
@@ -2925,7 +2925,7 @@ def ann_ivfpq_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     property SCALING.md "append-cost independence for the IVF-PQ
     index" measures (a fixed 500-vector append stays flat under
     16× corpus growth)."""
-    if load_table(spark, sf_dir, "embeddings").head(1) == []:
+    if catalog.parquet_rowcount(catalog.table_path(sf_dir, "embeddings")) == 0:
         # Degenerate-input policy: no corpus → no index → empty result
         return spark.createDataFrame(
             [], "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
@@ -3050,7 +3050,7 @@ def ann_ivfpq_append_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifests), today's batch pays one narrow encode ∝ batch, and the
     routed serve prunes cell partitions on disk exactly as the base
     served twin does."""
-    if load_table(spark, sf_dir, "embeddings").head(1) == []:
+    if catalog.parquet_rowcount(catalog.table_path(sf_dir, "embeddings")) == 0:
         # Degenerate-input policy: no corpus → no index → empty result
         return spark.createDataFrame(
             [], "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
@@ -3090,7 +3090,7 @@ def ann_ivfpq_compact_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     better constants — one code file per routed cell partition instead
     of one per append day; the compaction itself paid one
     codes-table-sized rewrite offline (`ivfpq_index_compact`)."""
-    if load_table(spark, sf_dir, "embeddings").head(1) == []:
+    if catalog.parquet_rowcount(catalog.table_path(sf_dir, "embeddings")) == 0:
         # Degenerate-input policy: no corpus → no index → empty result
         return spark.createDataFrame(
             [], "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"

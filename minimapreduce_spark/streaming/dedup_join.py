@@ -108,9 +108,9 @@ def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_exactly_once_ingest",
     # NOT bench=True: the watermarked sibling below is the benched
-    # exactly-once headliner (round-6 verdict item 6) — its bounded
-    # ledger is the only 100 TB-deployable plan; this unbounded-ledger
-    # variant stays registered as the teaching twin
+    # exactly-once query — its bounded ledger is the only 100
+    # TB-deployable plan; this unbounded-ledger variant stays
+    # registered as the teaching twin
     oracle="""
     SELECT event_type,
            count(*) AS n_events,
@@ -153,10 +153,10 @@ def stream_exactly_once_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the state bound. dropDuplicatesWithinWatermark keeps a key until the
 # watermark passes event_time + delay, and the watermark itself lags
 # one micro-batch, so the live ledger window is ~(2·delay + batch
-# span). Round 12 trims 96 h → 84 h (horizon + 12 h margin; the staged
-# replay's horizon is exact, so correctness needs only delay > 72 h —
-# verified output-exact at all three SFs) to keep the window bounded
-# when batch coalescing below widened the span: the two knobs together
+# span). 84 h is the horizon + 12 h margin (the staged replay's
+# horizon is exact, so correctness needs only delay > 72 h — verified
+# output-exact at all three SFs; the earlier 96 h no longer fit once
+# batch coalescing below widened the span): the two knobs together
 # give ~(2·3.5 + 6) = 13 of 30 days, peaking at 47.2% of keys
 # (sf0.001) / 43.5% (sf0.01, sf0.1) vs the eviction pytest's pinned
 # <50% contract — the completeness/state/latency dial the docstring
@@ -186,8 +186,8 @@ EXACTLY_ONCE_N_SLICES = 10
 
 
 def _exactly_once_state_width(spark: SparkSession, sf_dir: str) -> int:
-    """State shards derived from per-batch volume (round-11 verdict
-    item 4 — the constant 8 was a fixture tune): rows per micro-batch
+    """State shards derived from per-batch volume (a constant 8 would
+    be a tune to one fixture): rows per micro-batch
     = staged events (footer metadata, no job) / batch count, through
     the shared ``stream_state_width`` sizing.
 
@@ -237,8 +237,9 @@ def exactly_once_watermarked_plan(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def stream_exactly_once_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-once ingestion with a BOUNDED dedup ledger (round-4
-    verdict item 7): the source replays time-sliced micro-batches whose
+    """Exactly-once ingestion with a BOUNDED dedup ledger, so state
+    stays finite on an endless stream: the source replays time-sliced
+    micro-batches whose
     redelivery horizon is at most one slice width
     (``events_stream_time_sliced_redelivered``), so
     ``dropDuplicatesWithinWatermark`` holds state only for event_ids
@@ -255,13 +256,12 @@ def stream_exactly_once_watermarked(spark: SparkSession, sf_dir: str) -> DataFra
     the eviction (max stateOperators rows stays well under the stream's
     distinct-key count).
 
-    State-store SIZING (round-7 verdict item 5, measured; round-12:
-    DERIVED from batch volume): the wall of this drain is per-batch
-    FIXED cost — trigger planning, WAL, and one state-store commit per
-    partition per batch — not dedup work. Profiled at sf0.1: 32 state
-    partitions → 10.3-15.5 s; 8 → 4.7 s (round 7); and with the width
-    question settled, batching is the remaining fixed-cost knob —
-    2 files/trigger → 2.7 s (round 12, see
+    State-store SIZING (measured, then DERIVED from batch volume): the
+    wall of this drain is per-batch FIXED cost — trigger planning, WAL,
+    and one state-store commit per partition per batch — not dedup
+    work. Profiled at sf0.1: 32 state partitions → 10.3-15.5 s; 8 →
+    4.7 s; and with the width settled, batching is the remaining
+    fixed-cost knob — 2 files/trigger → 2.7 s (see
     EXACTLY_ONCE_FILES_PER_TRIGGER). The state width is now DERIVED
     from per-batch volume via the shared ``stream_state_width`` sizing
     (``_exactly_once_state_width``) instead of a fixture constant —
@@ -272,14 +272,13 @@ def stream_exactly_once_watermarked(spark: SparkSession, sf_dir: str) -> DataFra
     # Scope the state-partition override to the CACHED per-(context,
     # width) session clone (shares the SparkContext; isolated SQLConf),
     # so nothing else running on the caller's session concurrently can
-    # inherit the 8-partition setting mid-drain (round-8 ADVICE), and
-    # repeated invocations reuse one clone instead of leaking sessions
-    # (round-9 ADVICE; session.narrow_clone).
+    # inherit the narrowed setting mid-drain, and repeated invocations
+    # reuse one clone instead of leaking sessions (session.narrow_clone).
     from minimapreduce_spark.session import narrow_clone
 
     s2 = narrow_clone(spark, _exactly_once_state_width(spark, sf_dir))
-    # Skip the trailing no-data micro-batch for THIS drain (round-11,
-    # measured ~0.3-0.5 s of the wall): dropDuplicatesWithinWatermark
+    # Skip the trailing no-data micro-batch for THIS drain (measured
+    # ~0.3-0.5 s of the wall): dropDuplicatesWithinWatermark
     # emits each first-seen row in the batch it arrives, so the
     # no-data batch only advances the watermark for one extra round of
     # state EVICTION after the last data batch — output-invariant for

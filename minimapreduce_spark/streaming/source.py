@@ -32,10 +32,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from minimapreduce_spark.artifacts import engine_root, publish
-from minimapreduce_spark.catalog import content_fingerprint, table_path
+from minimapreduce_spark.catalog import content_fingerprint, read_events, table_path
 
 
 def _stream_source(
@@ -74,19 +73,10 @@ def _events(
     spark: SparkSession, sf_dir: str, stage: Callable[[str], DataFrame]
 ) -> DataFrame:
     """The events table as a stream, ``stage(path)`` opening the staged
-    replay of its parquet file.
-
-    The file carries ``ts`` as either TIMESTAMP(NANOS) — which Spark's
-    parquet reader only accepts as raw int64 (legacy nanosAsLong flag —
-    same handling as the batch path in catalog._load_events; ns → µs
-    uses integer DIV to keep full precision) — or plain
-    TIMESTAMP(MICROS). ``ts`` lands as TIMESTAMP (UTC session) because
-    watermarks operate on event-time timestamps."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sdf = stage(table_path(sf_dir, "events"))
-    if isinstance(sdf.schema["ts"].dataType, LongType):
-        return sdf.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return sdf.withColumn("ts", F.col("ts").cast("timestamp"))
+    replay of its parquet file. ``ts`` is decoded as on the batch path
+    (``catalog.read_events``) but lands as TIMESTAMP (UTC session),
+    because watermarks operate on event-time timestamps."""
+    return read_events(spark, sf_dir, stage, "timestamp")
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

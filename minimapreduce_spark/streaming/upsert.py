@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minimapreduce_spark.artifacts import publish
+from minimapreduce_spark.catalog import fan_out, load_table, parquet_rowcount, table_path
 from minimapreduce_spark.operators.dedup import (
     _JACCARD_ORACLE,
     INCR_BATCH_MOD,
@@ -45,16 +46,16 @@ from minimapreduce_spark.operators.dedup import (
     shingle_hashes,
 )
 from minimapreduce_spark.operators.relational import (
-    IVM_DEL_MOD,
-    IVM_DIM_MOD,
-    IVM_FACT_MOD,
-    IVM_UPD_MOD,
-    IVM_UPD_SEGMENT,
     IVM_UPSERTS_ORACLE,
     IVM_VIEW_SCHEMA,
-    JOIN_VIEW_MARKER,
+    dim_changed,
+    dim_changes,
+    dim_end_of_day,
+    dim_insert_rows,
     join_view_build,
-    join_view_root,
+    join_view_fold_in,
+    maintained_view,
+    untombstoned,
 )
 from minimapreduce_spark.operators.similarity import (
     KMEANS_SCALE,
@@ -64,6 +65,7 @@ from minimapreduce_spark.operators.similarity import (
     ivfpq_index_build,
 )
 from minimapreduce_spark.registry import register
+from minimapreduce_spark.session import narrow_clone, stream_state_width
 from minimapreduce_spark.streaming.source import (
     _drain,
     batch_ids,
@@ -87,9 +89,6 @@ def _upsert_state_width(spark, sf_dir: str) -> int:
     constant tuned to one fixture. The interleaved width curve at sf0.1
     is flat across 1-16 (best 2.0-2.1 s each), so the derived width
     (~4) sits safely inside that band."""
-    from minimapreduce_spark.catalog import parquet_rowcount, table_path
-    from minimapreduce_spark.session import stream_state_width
-
     rows = parquet_rowcount(table_path(sf_dir, "events"))
     return stream_state_width(spark, rows // UPSERT_N_SHARDS)
 
@@ -138,8 +137,6 @@ def stream_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     compactions; with Delta/Iceberg the body becomes MERGE INTO and the
     streaming plan is unchanged.
     """
-    from minimapreduce_spark.session import narrow_clone
-
     with tempfile.TemporaryDirectory(
         prefix="minimapreduce_upsert_", ignore_cleanup_errors=True
     ) as work:
@@ -201,10 +198,8 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's results are published once. Latency is the micro-batch
     trigger, capacity is executors × cells-per-second — both
     independent of index build."""
-    from minimapreduce_spark.catalog import load_table
-
     result_schema = "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
-    if load_table(spark, sf_dir, "embeddings").head(1) == []:
+    if parquet_rowcount(table_path(sf_dir, "embeddings")) == 0:
         # Degenerate-input policy: no corpus → no index, no queries
         return spark.createDataFrame([], result_schema)
     root = ivfpq_index_build(spark, sf_dir)
@@ -291,10 +286,7 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches below its own ``batch_id``, so a replayed slice reproduces
     its output exactly: how a restartable ingest tier keeps it
     (re-deriving from the checkpoint offsets on recovery)."""
-    from minimapreduce_spark.catalog import fan_out, load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    if docs.head(1) == []:
+    if parquet_rowcount(table_path(sf_dir, "documents")) == 0:
         # Degenerate-input policy: empty corpus → no index, no arrivals
         return spark.createDataFrame(
             [], "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"
@@ -307,8 +299,6 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cache stops repeated invocations leaking a session each;
     # the cross-session frame-mixing contract is documented at
     # session.narrow_clone)
-    from minimapreduce_spark.session import narrow_clone
-
     spark = narrow_clone(spark, 8)
     idx_buckets = (
         spark.read.schema(MINHASH_BUCKET_SCHEMA)
@@ -480,9 +470,7 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     per batch (never rewritten); the open set is ≤ |active users| rows.
     No reference analog (nearest: the reduce-side key grouping of
     mr/worker.go:136-157)."""
-    from minimapreduce_spark.catalog import load_table
-
-    if load_table(spark, sf_dir, "events").head(1) == []:
+    if parquet_rowcount(table_path(sf_dir, "events")) == 0:
         return spark.createDataFrame(
             [],
             "user_id bigint, band string, valid_from timestamp_ntz,"
@@ -491,8 +479,6 @@ def stream_scd2_band_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-slice island windows under a slice-sized shuffle width,
     # scoped to the cached per-(context, width) clone (the
     # exactly-once state-sizing lesson; session.narrow_clone)
-    from minimapreduce_spark.session import narrow_clone
-
     spark = narrow_clone(spark, 8)
 
     band = (
@@ -569,16 +555,20 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``maxFilesPerTrigger=1``), the shape a lakehouse reporting view
     actually lives in: dim churn streams in all day, fact arrivals
     land on the append-only fact pipeline, readers see
-    base ∖ tombstones ∪ maintained-deltas at any moment.
+    base ∖ tombstones ∪ maintained-deltas at any moment. The change
+    set, the delta terms and the composition are the batch twin's own
+    (`operators/relational.py`), applied per micro-batch.
 
     Per micro-batch (inside ``foreachBatch``, frames built on the
     micro-batch session, so no frame of another session's plan is
-    mixed into the batch's):
-      - the batch's DELETE + UPDATE keys go to the tombstone log;
-      - the batch's insert-set (updated rows' new versions ∪ onboards)
+    mixed into the batch's), `dim_changes` over the batch's changed
+    rows gives:
+      - the DELETE + UPDATE keys, published to the tombstone log;
+      - the insert-set (updated rows' new versions ∪ onboards), which
         probes the base facts ONCE with the ≤|batch| dim rows
-        broadcast, and the produced view rows go to the delta log
-        — the A⋈Δ⁺B term paid incrementally, ∝ batch dim churn.
+        broadcast (`dim_insert_rows`); the produced view rows go to
+        the delta log — the A⋈Δ⁺B term paid incrementally, ∝ batch
+        dim churn.
     Each log is one directory per micro-batch, published once
     (``publish_batch``) and never touched by another batch — which is
     what makes the at-least-once foreachBatch contract safe: a batch
@@ -590,30 +580,24 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjoint broadcast sides, so drained-log state ≡ the single-batch
     twin's terms exactly.
 
-    The final read composes base-view-anti-tombstones ∪ delta log ∪
-    (fact arrivals ⋈ dim end-of-day state) — the same three-term
-    partition as the batch twin, same oracle (full recompute against
-    the dim's final state): streaming-maintain ≡ batch-maintain ≡
-    recompute, each link under the driver hash, the first additionally
-    pytest-pinned frame-by-frame with a real multi-batch replay.
+    The final read composes the drained logs (`untombstoned`,
+    `maintained_view`): base-view-anti-tombstones ∪ delta log ∪ (fact arrivals ⋈ dim
+    end-of-day state) — the same three-term partition as the batch
+    twin, same oracle (full recompute against the dim's final state):
+    streaming-maintain ≡ batch-maintain ≡ recompute, each link under
+    the driver hash, the first additionally pytest-pinned
+    frame-by-frame with a real multi-batch replay.
 
     Scale posture: per trigger, work ∝ |batch dim churn| (tombstone
     publish is a key-list write; the fact probe broadcasts the batch
     rows and at 100 TB prunes by bucketed join key —
     `join_bucketed_smb`'s layout); the logs grow ∝ total churn, reset
-    by the nightly `join_view_rebuild` fold-in. State never lives in
-    the stream engine — the logs ARE the state, so a crash-restart
-    replays idempotently from the checkpoint WAL."""
-    from minimapreduce_spark.catalog import load_table
-    from minimapreduce_spark.session import narrow_clone
-
-    empty_schema = IVM_VIEW_SCHEMA
-    if (
-        load_table(spark, sf_dir, "orders").head(1) == []
-        or load_table(spark, sf_dir, "customer").head(1) == []
-    ):
+    by the nightly `stream_join_view_rebuild` fold-in. State never
+    lives in the stream engine — the logs ARE the state, so a
+    crash-restart replays idempotently from the checkpoint WAL."""
+    if any(parquet_rowcount(table_path(sf_dir, t)) == 0 for t in ("orders", "customer")):
         # Degenerate-input policy: no facts or no dims → empty view
-        return spark.createDataFrame([], empty_schema)
+        return spark.createDataFrame([], IVM_VIEW_SCHEMA)
 
     spark = narrow_clone(spark, 8)
     root = join_view_build(spark, sf_dir)
@@ -621,89 +605,35 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(root, "view")
     )
 
-    ck = F.col("c_custkey")
-    is_ins = ck % IVM_DIM_MOD == 0
-    is_del = (~is_ins) & (ck % IVM_DEL_MOD == 0)
-    is_upd = (~is_ins) & (~is_del) & (ck % IVM_UPD_MOD == 0)
-
     with tempfile.TemporaryDirectory(
         prefix="minimapreduce_stream_ivm_", ignore_cleanup_errors=True
     ) as work:
         tombs_dir = os.path.join(work, "tombs")
         delta_dir = os.path.join(work, "delta")
         ckpt = os.path.join(work, "ckpt")
-        tombs_schema = "c_custkey bigint"
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            deltas = batch_df.where(is_ins | is_del | is_upd).localCheckpoint(
-                eager=True
-            )
-            if not deltas.head(1):
+            changed = batch_df.where(dim_changed()).localCheckpoint(eager=True)
+            if not changed.head(1):
                 return
-            s = deltas.sparkSession
-            publish_batch(
-                tombs_dir, batch_id, deltas.where(is_del | is_upd).select("c_custkey")
-            )
-            plus_c = (
-                deltas.where(is_upd)
-                .withColumn("c_mktsegment", F.lit(IVM_UPD_SEGMENT))
-                .unionByName(deltas.where(is_ins))
-            )
-            b_o = load_table(s, sf_dir, "orders").where(
-                F.col("o_orderkey") % IVM_FACT_MOD != 0
-            )
-            publish_batch(
-                delta_dir,
-                batch_id,
-                b_o.join(F.broadcast(plus_c), b_o.o_custkey == plus_c.c_custkey).select(
-                    "o_orderkey",
-                    "o_custkey",
-                    "c_mktsegment",
-                    F.round(F.col("o_totalprice") * 100)
-                    .cast("bigint")
-                    .alias("price_c"),
-                ),
-            )
+            tombs, plus = dim_changes(changed)
+            publish_batch(tombs_dir, batch_id, tombs)
+            orders = load_table(changed.sparkSession, sf_dir, "orders")
+            publish_batch(delta_dir, batch_id, dim_insert_rows(orders, plus))
 
         _drain(
             table_stream_sharded(spark, sf_dir, "customer"), apply_batch, ckpt, "append"
         )
         stream_incremental_join_view.last_nonempty_batches = len(batch_ids(tombs_dir))
 
-        tombs = read_batches(spark, tombs_dir, tombs_schema)
-        delta_rows = read_batches(spark, delta_dir, IVM_VIEW_SCHEMA)
-        cust = load_table(spark, sf_dir, "customer")
-        b_c_final = (
-            cust.where(~is_ins & ~is_del)
-            .withColumn(
-                "c_mktsegment",
-                F.when(is_upd, F.lit(IVM_UPD_SEGMENT)).otherwise(F.col("c_mktsegment")),
-            )
-            .unionByName(cust.where(is_ins))
+        tombs = read_batches(spark, tombs_dir, "c_custkey bigint")
+        insert_rows = read_batches(spark, delta_dir, IVM_VIEW_SCHEMA)
+        cust_final = dim_end_of_day(load_table(spark, sf_dir, "customer"))
+        orders = load_table(spark, sf_dir, "orders")
+        live = untombstoned(base_view, tombs)
+        return maintained_view(live, insert_rows, orders, cust_final).localCheckpoint(
+            eager=True
         )
-        d_o = load_table(spark, sf_dir, "orders").where(
-            F.col("o_orderkey") % IVM_FACT_MOD == 0
-        )
-        out = (
-            base_view.join(
-                F.broadcast(tombs),
-                base_view["o_custkey"] == tombs["c_custkey"],
-                "left_anti",
-            )
-            .unionByName(delta_rows)
-            .unionByName(
-                d_o.join(b_c_final, d_o.o_custkey == b_c_final.c_custkey).select(
-                    "o_orderkey",
-                    "o_custkey",
-                    "c_mktsegment",
-                    F.round(F.col("o_totalprice") * 100)
-                    .cast("bigint")
-                    .alias("price_c"),
-                )
-            )
-            .localCheckpoint(eager=True)
-        )
-        return out
 
 
 def stream_join_view_rebuild(
@@ -712,21 +642,14 @@ def stream_join_view_rebuild(
     """NIGHTLY FOLD OF THE STREAM-DRAINED LOGS — the copy-on-write half
     of the streaming IVM cycle: `stream_incremental_join_view` drains
     the day's dim CDC into tombstone + delta logs and composes the
-    maintained view; this job materializes that composition into a
-    FRESH base-view artifact (`artifacts.publish`, the
-    `join_view_rebuild` discipline), after which the logs are obsolete
-    — the next day's CDC maintains against the new base with an empty
-    tombstone set. Idempotent: an existing published root is returned
-    untouched."""
-    base = join_view_root(sf_dir)
-
-    def write(stage: str) -> None:
-        stream_incremental_join_view(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(stage, JOIN_VIEW_MARKER)
-        )
-
-    root = root or f"{base}_stream_rebuilt"
-    return publish(root, JOIN_VIEW_MARKER, write, parent=base)
+    maintained view; `join_view_fold_in` materializes that composition
+    into a FRESH base-view artifact at ``<base root>_stream_rebuilt``,
+    after which the logs are obsolete — the next day's CDC maintains
+    against the new base with an empty tombstone set. Idempotent: an
+    existing published root is returned untouched."""
+    return join_view_fold_in(
+        spark, sf_dir, stream_incremental_join_view, "stream_rebuilt", root
+    )
 
 
 @register("stream_incremental_join_view_rebuild", oracle=IVM_UPSERTS_ORACLE)
@@ -745,7 +668,10 @@ def stream_incremental_join_view_rebuild(
     IVM lane (`IVM_UPSERTS_ORACLE`, the full recompute against the
     dim's end-of-day state), closing the chain
     stream-maintain ≡ batch-maintain ≡ rebuild-read ≡ recompute with
-    each link under the driver hash.
+    each link under the driver hash. Once the root is published, a
+    call costs a stat and the scan: `artifacts.publish` returns the
+    root untouched, and the day path (empty-input guard included)
+    does not run.
 
     Scale posture: the day path's read cost grows with the drained
     logs (tombstone anti-join + delta union at every read); the fold-in
@@ -756,17 +682,5 @@ def stream_incremental_join_view_rebuild(
     mechanisms, so a crash between them replays the drain idempotently
     (per-batch published logs + WAL) and the rename either happened or the
     stage directory is garbage — never a half-published base."""
-    from minimapreduce_spark.catalog import load_table
-
-    # serve-path fast exit: a published artifact already encodes its
-    # inputs' state, so the degenerate-input guards (two head(1) driver
-    # round-trips, ~0.2 s) are only paid on the build path
-    root = f"{join_view_root(sf_dir)}_stream_rebuilt"
-    if not os.path.isdir(os.path.join(root, "view")):
-        if (
-            load_table(spark, sf_dir, "orders").head(1) == []
-            or load_table(spark, sf_dir, "customer").head(1) == []
-        ):
-            return spark.createDataFrame([], IVM_VIEW_SCHEMA)
-        root = stream_join_view_rebuild(spark, sf_dir, root=root)
+    root = stream_join_view_rebuild(spark, sf_dir)
     return spark.read.schema(IVM_VIEW_SCHEMA).parquet(os.path.join(root, "view"))

@@ -443,3 +443,43 @@ def test_one_per_batch_sink_in_the_engine():
     assert overwrite_modes == [], overwrite_modes
     assert appends == [], appends
     assert layouts == [], layouts
+
+
+def test_join_view_ivm_defined_once_and_no_head_probe_guards():
+    """The join-view IVM lanes share one definition: the day's change
+    constants ``IVM_DEL_MOD``/``IVM_UPD_MOD``/``IVM_UPD_SEGMENT`` are
+    named only in ``operators/relational.py``, the view projection
+    (``c_mktsegment`` and ``o_totalprice`` rounded to ``price_c``) is
+    built once outside oracle SQL strings, and no empty-table guard
+    runs a Spark ``.head(1) == []`` job."""
+    import ast
+
+    changes = {"IVM_DEL_MOD", "IVM_UPD_MOD", "IVM_UPD_SEGMENT"}
+    named, projections, head_guards = [], [], []
+    for rel, name, node in _engine_nodes():
+        where = f"{rel}:{getattr(node, 'lineno', '?')} in {name}"
+        if rel != "operators/relational.py" and (
+            (isinstance(node, ast.Name) and node.id in changes)
+            or (isinstance(node, ast.alias) and node.name in changes)
+            or (isinstance(node, ast.Attribute) and node.attr in changes)
+        ):
+            named.append(where)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "select"
+            and {"c_mktsegment", "o_totalprice", "price_c"}
+            <= {n.value for n in ast.walk(node) if isinstance(n, ast.Constant)}
+        ):
+            projections.append(where)
+        if (
+            isinstance(node, ast.Compare)
+            and isinstance(node.left, ast.Call)
+            and isinstance(node.left.func, ast.Attribute)
+            and node.left.func.attr == "head"
+            and any(isinstance(c, ast.List) and not c.elts for c in node.comparators)
+        ):
+            head_guards.append(where)
+    assert named == [], named
+    assert len(projections) == 1, projections
+    assert head_guards == [], head_guards

@@ -1399,3 +1399,46 @@ def test_sink_is_idempotent_under_at_least_once_delivery(spark, tmp_path, monkey
     n_once, n_twice = sum(once.values()), sum(twice.values())
     assert n_once > 0 and n_twice == n_once, f"{n_once} rows once, {n_twice} twice"
     assert twice == once
+
+
+def test_events_nanos_ts_decodes_alike_in_batch_and_stream(spark, tmp_path, monkeypatch):
+    """An events file carrying ``ts`` as parquet TIMESTAMP(NANOS) reads
+    as microsecond timestamps through the one decoder
+    (``catalog.read_events``): TIMESTAMP_NTZ on the batch scan,
+    TIMESTAMP on the stream replay, the same instants on both."""
+    import datetime
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    from minimapreduce_spark.catalog import load_table, table_path
+    from minimapreduce_spark.streaming.source import events_stream, run_to_memory
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    ns = [1_700_000_000_123_456_789, 1_700_000_100_000_001_000]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+                "user_id": pa.array([7, 8], pa.int64()),
+            }
+        ),
+        table_path(str(sf), "events"),
+    )
+    epoch = datetime.datetime(1970, 1, 1)
+    want = [epoch + datetime.timedelta(microseconds=n // 1000) for n in ns]
+
+    batch = load_table(spark, str(sf), "events")
+    assert isinstance(batch.schema["ts"].dataType, TimestampNTZType)
+    assert sorted(r.ts for r in batch.collect()) == want
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stream = events_stream(spark, str(sf))
+    assert isinstance(stream.schema["ts"].dataType, TimestampType)
+    got = run_to_memory(stream.select(F.col("ts").cast("timestamp_ntz").alias("ts")), "append")
+    assert sorted(r.ts for r in got.collect()) == want
