@@ -15,11 +15,17 @@ swap: a streaming drain's per-batch outputs, mutable upsert state
 included, are published once per micro-batch through this same path
 (``streaming.source.publish_batch``) and merged on read.
 
-The families share a naming scheme (``FAMILIES``): a deterministic
-base root ``<prefix><tag>`` under ``engine_root()``, then derived roots
-whose names STRICTLY EXTEND the parent's — ``<root>_<sha8(tag)>`` for
-appends (chainable), ``<root>_compact`` for compactions,
-``<root>_rebuilt`` / ``<root>_stream_rebuilt`` for the IVM fold-ins.
+The families share a naming scheme (``FAMILIES``), implemented here
+and nowhere else: ``fixture_root`` names a family's deterministic base
+root ``<prefix><sha16(key)>`` under ``engine_root()``, keyed by the
+absolute fixture path, the content fingerprint of each input table and
+the build parameters, so a regenerated input gets a fresh root; then
+``publish_derived`` names and publishes each derived root, whose name
+STRICTLY EXTENDS the parent's — ``<root>_<append_suffix(tag)>``
+(``sha8(tag)``) for appends (chainable), ``<root>_compact`` for
+compactions, ``<root>_rebuilt`` / ``<root>_stream_rebuilt`` for the
+IVM fold-ins. How each family's tables are read back stays with the
+family (``read_band_index``, ``read_ivfpq_index``, ``read_join_view``).
 Appends fold the parent's data files in as HARDLINKS
 (``link_parent_files``), so a derived root is self-contained:
 unlinking the parent's directory entries decrements link counts but
@@ -60,11 +66,14 @@ reclaim at sf0.1).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import tempfile
 import time
 from typing import Callable
+
+from minimapreduce_spark.catalog import content_fingerprint, table_path
 
 
 PARENT_MARKER = "_PARENT"
@@ -87,6 +96,37 @@ def engine_root() -> str:
 def family_root(family: str, tag: str) -> str:
     """The deterministic base root of ``family`` for ``tag``."""
     return os.path.join(engine_root(), FAMILIES[family][0] + tag)
+
+
+def fixture_root(
+    family: str, sf_dir: str, tables: tuple[str, ...], params: tuple[str, ...] = ()
+) -> str:
+    """The base root of ``family`` built from ``tables`` of ``sf_dir``
+    with ``params``: keyed by the absolute fixture path, each table's
+    `content_fingerprint` and the params, so a regenerated input table
+    or a different parameter gets a fresh root. Not session-keyed —
+    write-once/read-many across sessions is the point; concurrency is
+    `publish`'s."""
+    fps = [content_fingerprint(table_path(sf_dir, t)) for t in tables]
+    key = "|".join([os.path.abspath(sf_dir), *fps, *params])
+    return family_root(family, hashlib.sha256(key.encode()).hexdigest()[:16])
+
+
+def append_suffix(tag: str) -> str:
+    """The derived-root suffix of an append tagged ``tag``."""
+    return hashlib.sha256(tag.encode()).hexdigest()[:8]
+
+
+def publish_derived(
+    parent: str,
+    suffix: str,
+    marker: str,
+    write: Callable[[str], None],
+    root: str | None = None,
+) -> str:
+    """`publish` the child of ``parent`` at ``<parent>_<suffix>`` (or
+    ``root``), claiming ``parent`` in its ``_PARENT`` marker."""
+    return publish(root or f"{parent}_{suffix}", marker, write, parent=parent)
 
 
 def publish(
@@ -181,6 +221,38 @@ def _tree_sizes(root: str) -> tuple[int, int]:
     return unlinked, freed
 
 
+def _listing(
+    parent: str, prefix: str, marker: str
+) -> tuple[list[str], list[str], dict[str, list[float]]]:
+    """(unpublished, published, claims) over the directories under
+    ``parent`` whose names start with ``prefix``, both lists sorted by
+    name: a root is published iff it holds ``marker``, and ``claims``
+    maps a root's name to the mtimes of the published roots whose
+    ``_PARENT`` claims it. A missing ``parent`` lists nothing."""
+    try:
+        names = sorted(os.listdir(parent))
+    except FileNotFoundError:
+        names = []
+    roots = [
+        n
+        for n in names
+        if n.startswith(prefix) and os.path.isdir(os.path.join(parent, n))
+    ]
+    published = [n for n in roots if _published(os.path.join(parent, n), marker)]
+    claims: dict[str, list[float]] = {}
+    for n in published:
+        p = _claimed_parent(os.path.join(parent, n))
+        if p and p != n:
+            try:
+                claims.setdefault(p, []).append(
+                    os.stat(os.path.join(parent, n)).st_mtime
+                )
+            except OSError:
+                continue  # claimant vanished: its claim dies with it
+    unpublished = sorted(set(roots) - set(published))
+    return unpublished, published, claims
+
+
 def vacuum_superseded_roots(
     parent: str,
     prefix: str,
@@ -214,45 +286,17 @@ def vacuum_superseded_roots(
     Returns a report dict; with ``dry_run`` nothing is removed but the
     report shows what would be."""
     now = time.time()
-    try:
-        names = sorted(os.listdir(parent))
-    except FileNotFoundError:
-        return {
-            "deleted": [],
-            "kept_live": [],
-            "kept_young": [],
-            "kept_unpublished": [],
-            "unlinked_bytes": 0,
-            "freed_bytes": 0,
-            "dry_run": dry_run,
-        }
-    roots = [
-        n
-        for n in names
-        if n.startswith(prefix) and os.path.isdir(os.path.join(parent, n))
-    ]
-    published = {n for n in roots if _published(os.path.join(parent, n), marker)}
-    # parent name -> mtimes of the published roots claiming it
-    claims: dict[str, list[float]] = {}
-    for n in published:
-        p = _claimed_parent(os.path.join(parent, n))
-        if p and p != n:
-            try:
-                claims.setdefault(p, []).append(
-                    os.stat(os.path.join(parent, n)).st_mtime
-                )
-            except OSError:
-                continue  # claimant vanished: its claim dies with it
+    unpublished, published, claims = _listing(parent, prefix, marker)
     report: dict = {
         "deleted": [],
         "kept_live": [],
         "kept_young": [],
-        "kept_unpublished": sorted(set(roots) - published),
+        "kept_unpublished": unpublished,
         "unlinked_bytes": 0,
         "freed_bytes": 0,
         "dry_run": dry_run,
     }
-    for n in sorted(published):
+    for n in published:
         if n not in claims:
             report["kept_live"].append(n)
             continue
@@ -347,26 +391,13 @@ def nightly_maintenance(
     compacted: dict[str, list[str]] = {}
     for fam, compactor in compactors.items():
         prefix, marker = FAMILIES[fam]
-        try:
-            names = sorted(os.listdir(parent))
-        except FileNotFoundError:
-            names = []
-        published = [
-            n
-            for n in names
-            if n.startswith(prefix)
-            and _published(os.path.join(parent, n), marker)
-        ]
+        _, published, claims = _listing(parent, prefix, marker)
+        compacted[fam] = []
         # leaf = published root no other published root claims as
         # parent (the vacuum rule's derivation-aware liveness)
-        claimed = {
-            _claimed_parent(os.path.join(parent, n)) for n in published
-        } - {None}
-        leaves = [n for n in published if n not in claimed]
-        compacted[fam] = []
-        for n in leaves:
+        for n in published:
             full = os.path.join(parent, n)
-            if _fragmented(full, marker):
+            if n not in claims and _fragmented(full, marker):
                 if not dry_run:
                     compactor(spark, full)
                 compacted[fam].append(n)

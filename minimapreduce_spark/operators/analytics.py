@@ -260,8 +260,8 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk — cap basket size upstream if the domain allows it.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    # Per-basket pair generation WITHOUT the items self-join (round-11,
-    # the graph_triangle_degree_oriented restructure): one
+    # Per-basket pair generation WITHOUT the items self-join (the
+    # graph_triangle_degree_oriented restructure): one
     # groupBy(l_orderkey) collects each basket's distinct part set
     # (collect_set partial-aggregates map-side), and the p1 < p2 pairs
     # come from positions i < j of the sorted array — the same pair
@@ -2119,7 +2119,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     descending, so one total order (axis, enc, custkey) ranks all
     three axes at once in contiguous N-row blocks; per-axis rank =
     global_rn − axis·N. That is one range shuffle + one checkpoint +
-    one offsets broadcast where the round-2/3 chained form paid three
+    one offsets broadcast where a chained per-axis form pays three
     of each over an ever-wider frame. Scores reassemble via one
     custkey hash agg; the row count arrives as a broadcast scalar.
     """
@@ -2673,7 +2673,7 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from minimapreduce_spark.operators.ordered import exact_floor_div
 
     # exact integer floor matching the oracle's `//` even when the
-    # numerator nears 2^53 (round-3 ADVICE): propose-and-correct, not a
+    # numerator nears 2^53: propose-and-correct, not a
     # truncated double quotient. Valid to 2^62 — far past any 1e-4
     # fixed-point value span times 10 bins.
     bin_col = exact_floor_div(

@@ -43,6 +43,8 @@ boilerplate-heavy pages can reproduce it — which is what
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -51,9 +53,11 @@ import os
 
 from minimapreduce_spark.artifacts import (
     FAMILIES,
-    family_root,
+    append_suffix,
+    fixture_root,
     link_parent_files,
     publish,
+    publish_derived,
 )
 from minimapreduce_spark.catalog import (
     content_fingerprint,
@@ -696,16 +700,12 @@ def minhash_index_root(sf_dir: str, batch_mod: int | None = None) -> str:
     different splits must never share one artifact), so a
     regenerated fixture gets a fresh root instead of silently probing a
     stale index; NOT session-keyed (write-once/probe-many across
-    sessions is the point). Concurrency is handled by
-    `artifacts.publish`."""
-    import hashlib
-
+    sessions is the point). Named by `artifacts.fixture_root`."""
     if batch_mod is None:
         batch_mod = INCR_BATCH_MOD
-    fp = content_fingerprint(table_path(sf_dir, "documents"))
-    key = f"{os.path.abspath(sf_dir)}|{fp}|m{batch_mod}"
-    tag = hashlib.sha256(key.encode()).hexdigest()[:16]
-    return family_root("minhash_band_index", tag)
+    return fixture_root(
+        "minhash_band_index", sf_dir, ("documents",), (f"m{batch_mod}",)
+    )
 
 
 MINHASH_INDEX_MARKER = FAMILIES["minhash_band_index"][1]
@@ -770,6 +770,20 @@ def _write_band_index(stage: str, buckets: DataFrame, shingles: DataFrame) -> No
         .parquet(os.path.join(stage, "buckets"))
     )
     shingles.write.mode("overwrite").parquet(os.path.join(stage, "shingles"))
+
+
+def read_band_index(spark: SparkSession, root: str) -> tuple[DataFrame, DataFrame]:
+    """The band index under ``root`` read back through the explicit
+    artifact schemas: (buckets as (doc_id, band, bh), shingles)."""
+    buckets = (
+        spark.read.schema(MINHASH_BUCKET_SCHEMA)
+        .parquet(os.path.join(root, "buckets"))
+        .select("doc_id", F.col("band").cast("int").alias("band"), "bh")
+    )
+    shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
+        os.path.join(root, "shingles")
+    )
+    return buckets, shingles
 
 
 def probe_band_index(
@@ -856,24 +870,31 @@ def dedup_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth for this join shape).
     Batch-side content-group collapse stacks orthogonally when a
     recrawl-heavy batch needs it (see `minhash_incremental_pairs`)."""
+    return _served_probe(
+        spark,
+        sf_dir,
+        lambda _docs: minhash_index_build(spark, sf_dir),
+        F.col("doc_id") % INCR_BATCH_MOD == 0,
+    )
+
+
+def _served_probe(
+    spark: SparkSession,
+    sf_dir: str,
+    publish_index: Callable[[DataFrame], str],
+    batch_pred: Column,
+) -> DataFrame:
+    """The lifecycle queries' shared tail: ``publish_index(docs)``
+    returns the root of the published band index to serve, and the
+    arrival batch ``docs.where(batch_pred)`` probes it."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     if parquet_rowcount(table_path(sf_dir, "documents")) == 0:
         # Degenerate-input policy: empty corpus → no index, no batch
         return spark.createDataFrame(
             [], "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"
         )
-    root = minhash_index_build(spark, sf_dir)
-    idx_buckets = (
-        spark.read.schema(MINHASH_BUCKET_SCHEMA)
-        .parquet(os.path.join(root, "buckets"))
-        .select("doc_id", F.col("band").cast("int").alias("band"), "bh")
-    )
-    idx_shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
-
-    batch = docs.where(F.col("doc_id") % INCR_BATCH_MOD == 0)
-    buckets_b, shingles_b = _batch_band_frames(spark, sf_dir, batch)
+    idx_buckets, idx_shingles = read_band_index(spark, publish_index(docs))
+    buckets_b, shingles_b = _batch_band_frames(spark, sf_dir, docs.where(batch_pred))
     return probe_band_index(
         spark,
         sf_dir,
@@ -890,6 +911,21 @@ def dedup_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — together exactly the probe queries' batch (doc_id % INCR_BATCH_MOD
 # == 0), disjoint by construction.
 APPEND_DAY_MOD = 2 * INCR_BATCH_MOD
+
+
+def _day2() -> Column:
+    return F.col("doc_id") % APPEND_DAY_MOD == INCR_BATCH_MOD
+
+
+def _day1_appended(spark: SparkSession, sf_dir: str, docs: DataFrame) -> str:
+    """The built index with day 1's arrivals appended."""
+    return minhash_index_append(
+        spark,
+        sf_dir,
+        docs.where(F.col("doc_id") % APPEND_DAY_MOD == 0),
+        minhash_index_build(spark, sf_dir),
+        tag=f"day1m{APPEND_DAY_MOD}",
+    )
 
 
 def _batch_band_frames(
@@ -935,16 +971,14 @@ def minhash_index_append(
     Per-band partition pruning survives the append: batch bucket files
     land inside the same band=N partition dirs the base files link
     into. Returns the appended artifact's root."""
-    import hashlib
-
-    if root is None:
-        root = f"{base_root}_{hashlib.sha256(tag.encode()).hexdigest()[:8]}"
 
     def write(stage: str) -> None:
         _write_band_index(stage, *_batch_band_frames(spark, sf_dir, batch))
         link_parent_files(stage, base_root, ("buckets", "shingles"))
 
-    return publish(root, MINHASH_INDEX_MARKER, write, parent=base_root)
+    return publish_derived(
+        base_root, append_suffix(tag), MINHASH_INDEX_MARKER, write, root
+    )
 
 
 def minhash_index_compact(
@@ -971,16 +1005,10 @@ def minhash_index_compact(
     row-set equality and the one-file-per-band layout."""
 
     def write(stage: str) -> None:
-        buckets = spark.read.schema(MINHASH_BUCKET_SCHEMA).parquet(
-            os.path.join(root, "buckets")
-        )
-        shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-            os.path.join(root, "shingles")
-        )
+        buckets, shingles = read_band_index(spark, root)
         _write_band_index(stage, buckets, shingles.repartition(4))
 
-    out_root = out_root or f"{root}_compact"
-    return publish(out_root, MINHASH_INDEX_MARKER, write, parent=root)
+    return publish_derived(root, "compact", MINHASH_INDEX_MARKER, write, out_root)
 
 
 @register(
@@ -1005,35 +1033,13 @@ def minhash_index_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     with BETTER constants — each band join now opens one file instead
     of one-per-append-day; the compaction itself paid one corpus-sized
     rewrite offline (`minhash_index_compact`)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    if parquet_rowcount(table_path(sf_dir, "documents")) == 0:
-        # Degenerate-input policy: empty corpus → no index, no batches
-        return spark.createDataFrame(
-            [], "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"
-        )
-    base_root = minhash_index_build(spark, sf_dir)
-    day1 = docs.where(F.col("doc_id") % APPEND_DAY_MOD == 0)
-    appended = minhash_index_append(
-        spark, sf_dir, day1, base_root, tag=f"day1m{APPEND_DAY_MOD}"
-    )
-    root = minhash_index_compact(spark, appended)
-    idx_buckets = (
-        spark.read.schema(MINHASH_BUCKET_SCHEMA)
-        .parquet(os.path.join(root, "buckets"))
-        .select("doc_id", F.col("band").cast("int").alias("band"), "bh")
-    )
-    idx_shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
-    day2 = docs.where(F.col("doc_id") % APPEND_DAY_MOD == INCR_BATCH_MOD)
-    buckets_b, shingles_b = _batch_band_frames(spark, sf_dir, day2)
-    return probe_band_index(
+    return _served_probe(
         spark,
         sf_dir,
-        batch_buckets=buckets_b,
-        batch_shingles=shingles_b,
-        index_buckets=idx_buckets,
-        index_shingles=idx_shingles,
+        lambda docs: minhash_index_compact(
+            spark, _day1_appended(spark, sf_dir, docs)
+        ),
+        _day2(),
     )
 
 
@@ -1073,32 +1079,8 @@ def minhash_index_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch-cost independence SCALING.md measures for both index
     families ("append-cost independence for the IVF-PQ index",
     "append-cost independence for the band index")."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    if parquet_rowcount(table_path(sf_dir, "documents")) == 0:
-        # Degenerate-input policy: empty corpus → no index, no batches
-        return spark.createDataFrame(
-            [], "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"
-        )
-    base_root = minhash_index_build(spark, sf_dir)
-    day1 = docs.where(F.col("doc_id") % APPEND_DAY_MOD == 0)
-    root = minhash_index_append(spark, sf_dir, day1, base_root, tag=f"day1m{APPEND_DAY_MOD}")
-    idx_buckets = (
-        spark.read.schema(MINHASH_BUCKET_SCHEMA)
-        .parquet(os.path.join(root, "buckets"))
-        .select("doc_id", F.col("band").cast("int").alias("band"), "bh")
-    )
-    idx_shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
-    day2 = docs.where(F.col("doc_id") % APPEND_DAY_MOD == INCR_BATCH_MOD)
-    buckets_b, shingles_b = _batch_band_frames(spark, sf_dir, day2)
-    return probe_band_index(
-        spark,
-        sf_dir,
-        batch_buckets=buckets_b,
-        batch_shingles=shingles_b,
-        index_buckets=idx_buckets,
-        index_shingles=idx_shingles,
+    return _served_probe(
+        spark, sf_dir, lambda docs: _day1_appended(spark, sf_dir, docs), _day2()
     )
 
 

@@ -1181,7 +1181,7 @@ def events_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_pattern_match_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROW-PATTERN MATCHING, WINDOWED PER (user, day) — the deployment
     shape `events_pattern_match`'s scale note names, now the verified
-    one (round-9 verdict item 6): the per-user history string there is
+    one: the per-user history string there is
     bounded only by per-user activity, so a 100 TB run windows the
     history FIRST — the same groupBy with a calendar-day key added —
     and every state string is bounded by one user-day of events. The

@@ -1,6 +1,6 @@
 """Exact money arithmetic on the data's native grids.
 
-The 160× octave (SCALING.md round 5) demonstrated that
+The 160× octave (SCALING.md, "the 160× octave") demonstrated that
 ``round(sum(<money double>), 2)`` over O(fact-table) rows is a latent
 cross-engine bug for EVERY such aggregate, not a one-off: float
 summation-order noise grows with the sum's magnitude while the 2-dp

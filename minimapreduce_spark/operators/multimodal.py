@@ -57,8 +57,8 @@ def decode_image(payload: bytes) -> dict:
     JPEG → ``decode_jpeg`` (baseline JFIF: marker parse, canonical
     Huffman entropy decode with byte-unstuffing, dequantize, 2-D IDCT),
     PNG → ``decode_png`` (stdlib zlib inflate + scanline unfilter,
-    CRC-verified), PPM → ``decode_ppm``. Every lane decodes for real;
-    the JPEG stub this function used to be died in round 4."""
+    CRC-verified), PPM → ``decode_ppm``. Every lane decodes for real:
+    no magic-byte lane falls back to a stub."""
     if payload[:2] == b"\xff\xd8":
         return decode_jpeg(payload)
     if payload[: len(_PNG_SIG)] == _PNG_SIG:
@@ -1179,8 +1179,8 @@ def _spectral_oracle() -> str:
 @register("multimodal_audio_spectral", oracle=_spectral_oracle())
 def multimodal_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FREQUENCY-DOMAIN audio analysis over the decoded WAV lane — the
-    spectral rung the audio family stopped short of (round-7 verdict
-    item 6: `multimodal_audio_windows` ends at energy/peak, the
+    spectral rung the audio family stopped short of
+    (`multimodal_audio_windows` ends at energy/peak, the
     time-domain half of every real audio pipeline): per {DFT_N}-sample
     PCM window, a fixed-point DFT yields the per-bin power spectrum,
     and the query reports each window's DOMINANT BIN (the discrete

@@ -167,7 +167,7 @@ def exact_floor_div(num: Column, den: Column) -> Column:
     0 < den < 2^50 (keeps |r1| inside long); matches DuckDB's integer
     ``//`` bit-for-bit where a bare ``(num / den).cast('bigint')``
     truncates a rounded double quotient the wrong way past 2^53
-    (round-3 ADVICE on psi_value_drift). The single-stage version
+    (which is how psi_value_drift's bins went wrong). The single-stage version
     shipped first and was wrong from quotients ≈ 2^53 up — caught by
     the hypothesis property test sweeping the full contracted range."""
     q1 = F.floor(num.cast("double") / den.cast("double")).cast("bigint")

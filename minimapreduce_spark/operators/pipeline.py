@@ -1002,7 +1002,7 @@ def pack_token_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact floor even when the corpus-wide cumulative token count
     # passes 2^53 (oracle uses integer //; a truncated double quotient
-    # diverges there — same class as the round-3 PSI ADVICE)
+    # diverges there — the same class as the PSI bin floor)
     from minimapreduce_spark.operators.ordered import exact_floor_div
 
     batch = exact_floor_div(
@@ -2039,8 +2039,8 @@ def sample_dsir_importance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _influence_sql_parts() -> tuple[str, str, list[str], str]:
     """(pairs, tgts, sub_terms, a_cols): the per-source moment
     aggregates, the LOO subtraction terms (total − source) as a LIST so
-    Spark callers consume them structurally (round-7 ADVICE: the old
-    single-string form was re-split on ", ", silently fragile), and the
+    Spark callers consume them structurally (a single string would be
+    re-split on ", ", silently fragile), and the
     moment column list — shared text between Spark plans and oracles."""
     pairs = ", ".join(
         f"sum(CAST(round(x{i} * x{j} * {PROBE_GRID}.0) AS BIGINT)) AS s{i}{j}"

@@ -21,15 +21,14 @@ Scale posture:
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from minimapreduce_spark.artifacts import FAMILIES, family_root, publish
-from minimapreduce_spark.catalog import content_fingerprint, load_table, table_path
+from minimapreduce_spark.artifacts import FAMILIES, fixture_root, publish, publish_derived
+from minimapreduce_spark.catalog import load_table
 from minimapreduce_spark.operators.money import exact_revenue_sum, exact_sum, grid_c
 from minimapreduce_spark.registry import QueryFn, register
 
@@ -901,16 +900,19 @@ def maintained_view(
 
 def join_view_root(sf_dir: str) -> str:
     """Deterministic root for the persisted base join view — the
-    artifact-root discipline (path + content fingerprint of BOTH input
+    artifact-root discipline (`artifacts.fixture_root` over BOTH input
     tables, so a regenerated fixture gets a fresh root)."""
-    parts = [os.path.abspath(sf_dir)]
-    for t in ("orders", "customer"):
-        parts.append(content_fingerprint(table_path(sf_dir, t)))
-    tag = hashlib.sha256("|".join(parts).encode()).hexdigest()[:16]
-    return family_root("join_view", tag)
+    return fixture_root("join_view", sf_dir, ("orders", "customer"))
 
 
 JOIN_VIEW_MARKER = FAMILIES["join_view"][1]
+
+
+def read_join_view(spark: SparkSession, root: str) -> DataFrame:
+    """The view under ``root`` read back through ``IVM_VIEW_SCHEMA``."""
+    return spark.read.schema(IVM_VIEW_SCHEMA).parquet(
+        os.path.join(root, JOIN_VIEW_MARKER)
+    )
 
 
 def join_view_build(spark: SparkSession, sf_dir: str, root: str | None = None) -> str:
@@ -936,7 +938,7 @@ def join_view_fold_in(
     lifecycle that merge-on-read defers: materialize the view that the
     registered query ``maintained`` composes into a FRESH base-view
     artifact at ``<base root>_<suffix>`` (or ``root``), published by
-    `artifacts.publish` with a ``_PARENT`` claim on the base. After the
+    `artifacts.publish_derived` with a ``_PARENT`` claim on the base. After the
     fold-in, reads are one artifact scan — no anti-join, no delta
     joins — and the next day's deltas maintain against the new base.
     The rebuild pays one maintained-view scan + write (I/O ∝ view
@@ -944,14 +946,13 @@ def join_view_fold_in(
     the daily path — the compaction discipline (`minhash_index_compact`)
     applied to a materialized view. An existing published root is
     returned untouched."""
-    base = join_view_root(sf_dir)
 
     def write(stage: str) -> None:
         maintained(spark, sf_dir).write.mode("overwrite").parquet(
             os.path.join(stage, JOIN_VIEW_MARKER)
         )
 
-    return publish(root or f"{base}_{suffix}", JOIN_VIEW_MARKER, write, parent=base)
+    return publish_derived(join_view_root(sf_dir), suffix, JOIN_VIEW_MARKER, write, root)
 
 
 @register("incremental_join_view", oracle=_IVM_VIEW_SQL)
@@ -984,8 +985,7 @@ def incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes are `incremental_join_view_upserts`. At 100 TB the base
     view never recomputes: today's maintenance appends delta-term rows,
     exactly what this plan does."""
-    root = join_view_build(spark, sf_dir)
-    base_view = spark.read.parquet(os.path.join(root, "view"))
+    base_view = read_join_view(spark, join_view_build(spark, sf_dir))
 
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -1049,8 +1049,7 @@ def incremental_join_view_upserts(spark: SparkSession, sf_dir: str) -> DataFrame
     view artifact itself stays immutable — tombstones compose at read
     time until the next base rebuild folds them in, the classic
     merge-on-read discipline."""
-    root = join_view_build(spark, sf_dir)
-    base_view = spark.read.parquet(os.path.join(root, "view"))
+    base_view = read_join_view(spark, join_view_build(spark, sf_dir))
 
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -1087,5 +1086,4 @@ def incremental_join_view_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame
     was paid once offline. At 100 TB this is exactly the nightly
     materialized-view refresh discipline: deltas maintain during the
     day, the rebuild resets the tombstone set at night."""
-    root = join_view_rebuild(spark, sf_dir)
-    return spark.read.schema(IVM_VIEW_SCHEMA).parquet(os.path.join(root, "view"))
+    return read_join_view(spark, join_view_rebuild(spark, sf_dir))

@@ -94,8 +94,8 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: sums run over fixed-point BIGINTs (cents / 1e-4 for the
     discount) so partial order — which salting deliberately scrambles —
-    cannot move a rounded result; the round-4 40× run caught the raw
-    double version crossing a 6-dp boundary against DuckDB (the same
+    cannot move a rounded result; at 40× the raw double version
+    crossed a 6-dp boundary against DuckDB (the same
     class as events_resample_gapfill's fix). Both engines then divide
     the same two exact integers — bit-deterministic.
 
@@ -503,7 +503,7 @@ def bucketed_join(
 
     # per-session staging root (keyed by spark.app.id) — a fixed shared
     # path would let two concurrent sessions rmtree each other's tables
-    # mid-query (round-7 ADVICE)
+    # mid-query
     base = os.path.join(
         engine_root(),
         f"minimapreduce_spark_bucketed_{spark.sparkContext.applicationId}",
@@ -655,7 +655,7 @@ def normalized_dim_lit(col: Column, lo: int, hi: int, bits: int = ZORDER_BITS) -
     [lo, hi] onto [0, 2^bits) by exact floor division, the arithmetic
     path chosen at PLAN TIME from the known span.
 
-    Why this exists (round-2 bench regression, zorder_tile_stats +14%):
+    Why this exists (a bench regression, zorder_tile_stats +14%):
     the column-bounds version must carry BOTH the double fast path and
     the decimal exact path under a per-row ``When`` — and whole-stage
     codegen's subexpression elimination hoists the shared subtrees out
@@ -771,7 +771,7 @@ def zorder_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds aggregate is collected driver-side (the OPTIMIZE-ZORDER
     analysis phase) so the normalization arithmetic is chosen from the
     known span at plan time — see ``normalized_dim_lit`` for the
-    round-2 regression this removes; the data path is one scan + one
+    +14% regression this removes; the data path is one scan + one
     hash-agg shuffle on tile id.
     """
     orders = load_table(spark, sf_dir, "orders")
@@ -1052,7 +1052,7 @@ def sketch_quantile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     c = li.select(grid_c("l_extendedprice").alias("cents"))
-    # (round-11 note: fanning the 3-split scan out by the agg key made
+    # (Measured: fanning the 3-split scan out by the agg key made
     # the vals agg alone faster, 0.84 → 0.48 s, but the whole query
     # SLOWER, 1.9 → 2.7 s — a user repartition is exempt from AQE
     # coalescing, so every downstream stage on the checkpointed vals
@@ -1326,8 +1326,8 @@ def planted_hotkey(col: Column) -> Column:
     """,
 )
 def agg_salted_hotkey_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted aggregation under a PLANTED 90%-hot key (round-6 verdict
-    stretch 9): `agg_salted_skew` demonstrates the two-stage shape on a
+    """Salted aggregation under a PLANTED 90%-hot key:
+    `agg_salted_skew` demonstrates the two-stage shape on a
     natural 3-value key; THIS query plants the adversarial case — one
     synthetic key owning 90% of the fact table (l_orderkey % 10 < 9),
     the load profile where an unsalted shuffle funnels 90% of the scan
@@ -2190,7 +2190,7 @@ def _cstat_melt(li: DataFrame) -> DataFrame:
 def _cstat_melt_prod(li: DataFrame) -> DataFrame:
     """(col, v, h) melt for the production-hash ANALYZE lane: numeric
     columns hash their canonical BIGINT directly with the JVM xxhash64
-    (fixed-width input, no stringification — the round-11 swap that
+    (fixed-width input, no stringification — the swap that
     removes ~9/11 of the melt's 73M-per-6.6M-row string casts), string
     columns hash raw. Shares _CSTAT_NUMERIC's canon expressions with
     the md5 lane so canonicalization can never drift; NULL values get
@@ -2229,8 +2229,8 @@ def _cstat_melt_prod(li: DataFrame) -> DataFrame:
 def _cstat_onepass(melt_h: DataFrame, k: int) -> DataFrame:
     """Single-pass ANALYZE core over a (col, v, h) frame: per-column
     row/null counts, canonical min/max, exact NDV and the bottom-K KMV
-    sketch — all from ONE scan of the melt (round-11 optimization;
-    guide §2.3/§2.4). The previous shape scanned the melt twice (base
+    sketch — all from ONE scan of the melt (guide §2.3/§2.4). The
+    previous shape scanned the melt twice (base
     agg + hash distinct), paying the 11× explode and the per-value
     hashing twice.
 
@@ -2330,7 +2330,7 @@ def catalog_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 # K=32: K=256 → rsd ≈ 1/sqrt(K-2) ≈ 6.3%, so the 25% band is ~4σ. The
 # xxhash estimates are DETERMINISTIC per fixture (no RNG), so the band
 # is a fixed property, not a flake — measured worst column across the
-# three fixture SFs with the round-11 BIGINT-canon hash: 17.0%
+# three fixture SFs with the BIGINT-canon hash: 17.0%
 # (sf0.001 l_orderkey; 14.3% / 11.7% at sf0.01 / sf0.1 — vs 68% worst
 # at K=32, which is why the teaching K is too small to band tightly).
 # State is still trivially bounded: 256 longs per column.
@@ -2363,7 +2363,7 @@ def _cstat_prod_oracle() -> str:
 @register("catalog_stats_lineitem_prod", oracle=_cstat_prod_oracle(), bench=True)
 def catalog_stats_lineitem_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CATALOG STATISTICS, PRODUCTION HASH LANE — the plan a deployment
-    actually ships (round-9 verdict item 4): identical melt, identical
+    actually ships: identical melt, identical
     exact half (row/null counts, canonical min/max, exact NDV), but the
     KMV sketch draws from JVM-side ``xxhash64`` (whole-stage-codegen,
     zero string md5) instead of the portable-md5 `kmv_hash60` — the
@@ -2494,7 +2494,7 @@ def join_skew_diagnosis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             # wide intermediates in DECIMAL(38,0)/HUGEINT: max_cnt ×
             # n_keys × 100 overflows BIGINT exactly in the extreme-skew
-            # regime this query diagnoses (round-9 review finding); the
+            # regime this query diagnoses; the
             # QUOTIENTS fit BIGINT by construction (ratio ≤ 100·n_keys,
             # salt ≤ n_keys)
             "CAST(rnk AS BIGINT) AS rnk",

@@ -17,6 +17,7 @@ summation-order noise can't flip a rank; ties break on vec_id.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,9 +26,11 @@ from pyspark.sql.window import Window as W
 from minimapreduce_spark import catalog
 from minimapreduce_spark.artifacts import (
     FAMILIES,
-    family_root,
+    append_suffix,
+    fixture_root,
     link_parent_files,
     publish,
+    publish_derived,
 )
 from minimapreduce_spark.catalog import load_table
 from minimapreduce_spark.registry import register
@@ -2777,15 +2780,8 @@ def ivfpq_index_root(sf_dir: str) -> str:
     whole point is write-once/serve-many across sessions. Concurrency
     is handled by `artifacts.publish`, not by per-session paths
     (contrast `bucketed_join`'s staging, which is rewritten per run and
-    therefore session-keyed)."""
-    import hashlib
-
-    from minimapreduce_spark.catalog import content_fingerprint, table_path
-
-    fp = content_fingerprint(table_path(sf_dir, "embeddings"))
-    key = f"{os.path.abspath(sf_dir)}|{fp}"
-    tag = hashlib.sha256(key.encode()).hexdigest()[:16]
-    return family_root("ivfpq_index", tag)
+    therefore session-keyed). Named by `artifacts.fixture_root`."""
+    return fixture_root("ivfpq_index", sf_dir, ("embeddings",))
 
 
 IVFPQ_INDEX_MARKER = FAMILIES["ivfpq_index"][1]
@@ -2808,6 +2804,33 @@ def _write_ivfpq_codes(stage: str, codes: DataFrame) -> None:
         .partitionBy("label")
         .parquet(os.path.join(stage, "codes"))
     )
+
+
+# explicit artifact-read schemas: a schema-less read runs one Spark
+# job per table to infer its schema from the parquet footers
+IVFPQ_CENTROID_SCHEMA = "label int, cg array<bigint>"
+IVFPQ_CODEBOOK_SCHEMA = "m bigint, cid bigint, ce array<bigint>"
+IVFPQ_CODE_SCHEMA = "vec_id bigint, code array<bigint>, n2hat bigint, label int"
+
+
+def read_ivfpq_index(
+    spark: SparkSession, root: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The index under ``root`` read back through the explicit artifact
+    schemas: (centroids, codebook, codes as (vec_id, label, code,
+    n2hat)) — `_ivfpq_serve`'s inputs."""
+    cg = spark.read.schema(IVFPQ_CENTROID_SCHEMA).parquet(
+        os.path.join(root, "centroids")
+    )
+    cb = spark.read.schema(IVFPQ_CODEBOOK_SCHEMA).parquet(
+        os.path.join(root, "codebook")
+    )
+    codes = (
+        spark.read.schema(IVFPQ_CODE_SCHEMA)
+        .parquet(os.path.join(root, "codes"))
+        .select("vec_id", "label", "code", "n2hat")
+    )
+    return cg, cb, codes
 
 
 def ivfpq_index_build(spark: SparkSession, sf_dir: str, root: str | None = None) -> str:
@@ -2865,6 +2888,14 @@ def ann_ivfpq_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — the min-of-runs bench protocol therefore reports the
     steady-state serving cost, which is the number a 100 TB deployment
     sees per query batch."""
+    return _served_topk(spark, sf_dir, lambda: ivfpq_index_build(spark, sf_dir))
+
+
+def _served_topk(
+    spark: SparkSession, sf_dir: str, publish_index: Callable[[], str]
+) -> DataFrame:
+    """The lifecycle queries' shared tail: serve top-k from the index
+    ``publish_index()`` publishes."""
     # Degenerate-input policy: an empty embeddings table yields an
     # empty result frame (a partitioned parquet write of zero rows
     # produces no readable files, so the artifact path cannot exist)
@@ -2872,24 +2903,26 @@ def ann_ivfpq_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
         )
-    root = ivfpq_index_build(spark, sf_dir)
-    cg = spark.read.parquet(os.path.join(root, "centroids"))
-    cb = spark.read.parquet(os.path.join(root, "codebook"))
-    code_arr = spark.read.parquet(os.path.join(root, "codes")).select(
-        "vec_id", F.col("label").cast("int").alias("label"), "code", "n2hat"
-    )
-    return _ivfpq_serve(spark, sf_dir, cg, cb, code_arr, nprobe=1)
+    frames = read_ivfpq_index(spark, publish_index())
+    return _ivfpq_serve(spark, sf_dir, *frames, nprobe=1)
 
 
 APPEND_MOD = 13  # every 13th corpus vector is the "appended" batch
 
 
-@register(
-    "ann_ivfpq_append_serve",
-    oracle=_ivfpq_oracle(
-        1, train_pred=f"NOT (vec_id % {APPEND_MOD} = 0 AND vec_id >= {N_QUERIES})"
-    ),
+def _append_batch() -> Column:
+    """The appended batch: every ``APPEND_MOD``-th vector that is not a
+    query vector."""
+    return (F.col("vec_id") % APPEND_MOD == 0) & (F.col("vec_id") >= N_QUERIES)
+
+
+# `_append_batch` in SQL: training ranges over everything but the batch
+_APPEND_ORACLE = _ivfpq_oracle(
+    1, train_pred=f"NOT (vec_id % {APPEND_MOD} = 0 AND vec_id >= {N_QUERIES})"
 )
+
+
+@register("ann_ivfpq_append_serve", oracle=_APPEND_ORACLE)
 def ann_ivfpq_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL INDEX APPEND — the third rung of the index
     lifecycle after build (`ivfpq_index_build`) and serve
@@ -2930,10 +2963,7 @@ def ann_ivfpq_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
         )
-    pred = ~(
-        (F.col("vec_id") % APPEND_MOD == 0) & (F.col("vec_id") >= N_QUERIES)
-    )
-    cg, cb, code_arr = _ivfpq_index_frames(spark, sf_dir, train_pred=pred)
+    cg, cb, code_arr = _ivfpq_index_frames(spark, sf_dir, train_pred=~_append_batch())
     return _ivfpq_serve(spark, sf_dir, cg, cb, code_arr, nprobe=1)
 
 
@@ -2950,9 +2980,7 @@ def ivfpq_base_index_build(
     fold-in rather than a rebuild in disguise."""
 
     def write(stage: str) -> None:
-        pred = ~(
-            (F.col("vec_id") % APPEND_MOD == 0) & (F.col("vec_id") >= N_QUERIES)
-        )
+        pred = ~_append_batch()
         frames = _ivfpq_index_frames(spark, sf_dir, train_pred=pred, encode_pred=pred)
         _write_ivfpq_index(stage, *frames)
 
@@ -2983,19 +3011,16 @@ def ivfpq_index_append(
     broadcasts) + #base-files metadata — independent of base-corpus
     size. Cell-partition pruning survives: batch code files land
     inside the same label=N dirs the base files link into."""
-    import hashlib
-
-    if root is None:
-        root = f"{base_root}_{hashlib.sha256(tag.encode()).hexdigest()[:8]}"
 
     def write(stage: str) -> None:
-        cg = spark.read.parquet(os.path.join(base_root, "centroids"))
-        cb = spark.read.parquet(os.path.join(base_root, "codebook"))
+        cg, cb, _ = read_ivfpq_index(spark, base_root)
         rsub_b = _ivfpq_rsub(spark, sf_dir, cg, pred=batch_pred)
         _write_ivfpq_codes(stage, _ivfpq_encode(spark, rsub_b, cg, cb))
         link_parent_files(stage, base_root, ("codes", "centroids", "codebook"))
 
-    return publish(root, IVFPQ_INDEX_MARKER, write, parent=base_root)
+    return publish_derived(
+        base_root, append_suffix(tag), IVFPQ_INDEX_MARKER, write, root
+    )
 
 
 def ivfpq_index_compact(
@@ -3015,23 +3040,24 @@ def ivfpq_index_compact(
     routed cell instead of one per append day."""
 
     def write(stage: str) -> None:
-        _write_ivfpq_codes(stage, spark.read.parquet(os.path.join(root, "codes")))
-        for sub in ("centroids", "codebook"):
-            spark.read.parquet(os.path.join(root, sub)).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(stage, sub))
+        cg, cb, codes = read_ivfpq_index(spark, root)
+        _write_ivfpq_index(stage, cg.repartition(1), cb.repartition(1), codes)
 
-    out_root = out_root or f"{root}_compact"
-    return publish(out_root, IVFPQ_INDEX_MARKER, write, parent=root)
+    return publish_derived(root, "compact", IVFPQ_INDEX_MARKER, write, out_root)
 
 
-@register(
-    "ann_ivfpq_append_served_topk",
-    bench=True,
-    oracle=_ivfpq_oracle(
-        1, train_pred=f"NOT (vec_id % {APPEND_MOD} = 0 AND vec_id >= {N_QUERIES})"
-    ),
-)
+def _appended_index(spark: SparkSession, sf_dir: str) -> str:
+    """The base-only index with the append batch folded in."""
+    return ivfpq_index_append(
+        spark,
+        sf_dir,
+        _append_batch(),
+        ivfpq_base_index_build(spark, sf_dir),
+        tag=f"m{APPEND_MOD}",
+    )
+
+
+@register("ann_ivfpq_append_served_topk", bench=True, oracle=_APPEND_ORACLE)
 def ann_ivfpq_append_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k SERVED FROM THE PHYSICALLY-APPENDED ARTIFACT — the rung
     that joins the two halves of the append story: the inline twin
@@ -3050,32 +3076,10 @@ def ann_ivfpq_append_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifests), today's batch pays one narrow encode ∝ batch, and the
     routed serve prunes cell partitions on disk exactly as the base
     served twin does."""
-    if catalog.parquet_rowcount(catalog.table_path(sf_dir, "embeddings")) == 0:
-        # Degenerate-input policy: no corpus → no index → empty result
-        return spark.createDataFrame(
-            [], "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
-        )
-    base_root = ivfpq_base_index_build(spark, sf_dir)
-    batch_pred = (F.col("vec_id") % APPEND_MOD == 0) & (
-        F.col("vec_id") >= N_QUERIES
-    )
-    root = ivfpq_index_append(
-        spark, sf_dir, batch_pred, base_root, tag=f"m{APPEND_MOD}"
-    )
-    cg = spark.read.parquet(os.path.join(root, "centroids"))
-    cb = spark.read.parquet(os.path.join(root, "codebook"))
-    code_arr = spark.read.parquet(os.path.join(root, "codes")).select(
-        "vec_id", F.col("label").cast("int").alias("label"), "code", "n2hat"
-    )
-    return _ivfpq_serve(spark, sf_dir, cg, cb, code_arr, nprobe=1)
+    return _served_topk(spark, sf_dir, lambda: _appended_index(spark, sf_dir))
 
 
-@register(
-    "ann_ivfpq_compact_served_topk",
-    oracle=_ivfpq_oracle(
-        1, train_pred=f"NOT (vec_id % {APPEND_MOD} = 0 AND vec_id >= {N_QUERIES})"
-    ),
-)
+@register("ann_ivfpq_compact_served_topk", oracle=_APPEND_ORACLE)
 def ann_ivfpq_compact_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k SERVED FROM THE COMPACTED ARTIFACT — build base → append
     the batch → COMPACT → serve, the final link of the ANN index
@@ -3090,25 +3094,11 @@ def ann_ivfpq_compact_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     better constants — one code file per routed cell partition instead
     of one per append day; the compaction itself paid one
     codes-table-sized rewrite offline (`ivfpq_index_compact`)."""
-    if catalog.parquet_rowcount(catalog.table_path(sf_dir, "embeddings")) == 0:
-        # Degenerate-input policy: no corpus → no index → empty result
-        return spark.createDataFrame(
-            [], "q_vec_id bigint, neighbor_id bigint, ivfpq_sim double, rn int"
-        )
-    base_root = ivfpq_base_index_build(spark, sf_dir)
-    batch_pred = (F.col("vec_id") % APPEND_MOD == 0) & (
-        F.col("vec_id") >= N_QUERIES
+    return _served_topk(
+        spark,
+        sf_dir,
+        lambda: ivfpq_index_compact(spark, _appended_index(spark, sf_dir)),
     )
-    appended = ivfpq_index_append(
-        spark, sf_dir, batch_pred, base_root, tag=f"m{APPEND_MOD}"
-    )
-    root = ivfpq_index_compact(spark, appended)
-    cg = spark.read.parquet(os.path.join(root, "centroids"))
-    cb = spark.read.parquet(os.path.join(root, "codebook"))
-    code_arr = spark.read.parquet(os.path.join(root, "codes")).select(
-        "vec_id", F.col("label").cast("int").alias("label"), "code", "n2hat"
-    )
-    return _ivfpq_serve(spark, sf_dir, cg, cb, code_arr, nprobe=1)
 
 
 KC_K = 6  # coreset size for the registered query

@@ -1,4 +1,4 @@
-"""Deeper TPC-H-shaped relational coverage (SURVEY §2c, round-1 widening).
+"""Deeper TPC-H-shaped relational coverage (SURVEY §2c).
 
 The reference expresses any of these only through its Map/Reduce UDF
 surface (SURVEY §2 intro); here each is a declarative Catalyst plan.

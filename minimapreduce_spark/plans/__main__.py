@@ -46,14 +46,12 @@ SHOWCASE = [
     ("probe_auc_roc", "corpus collapses to the distinct-score frame; BIGINT rank algebra"),
     ("probe_kfold_cv", "per-fold moments + K-row broadcast weights; one held-out scoring scan"),
     ("sketch_ams_f2_join_size", "D sign counters as aggregate columns of ONE scan; no key shuffle"),
-    # round 8
     ("bitext_margin_mining_ivf", "cell-routed cogroup matmul scoring; margin stages on the bounded frame"),
     ("ann_ivfpq_served_topk", "artifact-only parquet scans, zero Python stages, zero training"),
     ("ann_ivfpq_append_serve", "frozen-quantizer encode: train reads base only, encode covers all"),
     ("retrieval_eval_ivf", "truth + routed system + Q x K metric agg in one plan"),
     ("multimodal_audio_spectral", "two narrow mapInPandas stages; (doc,window)-partitioned rank"),
     ("wordpiece_apply_token_stats", "vocab-only tokenize pass; corpus contributes one (source,word) count"),
-    # round 9
     ("dedup_minhash_index_probe", "corpus side = artifact parquet scans only; batch pipeline checkpointed"),
     ("wordpiece_apply_marked_stats", "position-aware longest match; two broadcast piece sets, vocab-only pass"),
     ("events_pattern_match", "one user_id shuffle; regex pattern scans inside the aggregate projection"),
@@ -61,7 +59,6 @@ SHOWCASE = [
     ("ann_bq_hamming_topk", "16-byte signature scan; integer hamming candidates; bounded exact rescore"),
     ("incremental_join_view", "base view from artifact; three delta terms, all broadcast dim sides"),
     ("join_skew_diagnosis", "one count agg; TakeOrdered top-N; 3-number census broadcast"),
-    # round 10
     ("incremental_join_view_rebuild", "one rebuilt-artifact scan, zero joins — the nightly fold's entire payoff"),
     ("stream_incremental_join_view_rebuild", "day-night cycle read: one stream-rebuilt artifact scan, no logs, no base tables"),
     ("minhash_index_compact_probe", "probe served from the compacted one-file-per-band artifact; corpus side never rescans documents"),

@@ -50,7 +50,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Streaming state store: RocksDB + changelog checkpointing.
         # It beat the HDFS-backed default on both stateful headliners at
-        # sf0.1 (SCALING.md, "Round 9: RocksDB state store": exactly-once
+        # sf0.1 (SCALING.md, "RocksDB state store": exactly-once
         # 6.3 -> 4.7 s, timer sessions 22.4 -> 19.4 s), and each commit
         # uploads the batch's changelog rather than a full snapshot, so
         # commit cost follows per-batch updates, not total state.

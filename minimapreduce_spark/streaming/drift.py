@@ -91,8 +91,9 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("tus").alias("_tmin"), F.max("tus").alias("_tmax"),
         F.min("vc").alias("_vmin"), F.max("vc").alias("_vmax"),
     ).localCheckpoint(eager=True)
-    # exact integer floor matching the oracle's `//` (round-3 ADVICE):
-    # propose-and-correct, never a truncated double quotient.
+    # exact integer floor matching the oracle's `//`: propose-and-
+    # correct, never a truncated double quotient, which rounds the
+    # wrong way once the numerator nears 2^53.
     bin_of = lambda vc: exact_floor_div(
         (vc - F.col("_vmin")) * PSI_STREAM_BINS,
         F.col("_vmax") - F.col("_vmin") + 1,

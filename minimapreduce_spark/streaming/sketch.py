@@ -534,8 +534,8 @@ def stream_quantile_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # n from the DRAINED histogram, not a batch re-read of events —
     # the readout must be self-consistent with the streamed state it
-    # indexes into even if the replay dropped/duplicated rows
-    # (round-7 ADVICE); bounded: ≤ SQ_B rows aggregated.
+    # indexes into even if the replay dropped/duplicated rows;
+    # bounded: ≤ SQ_B rows aggregated.
     n_row = sk.agg(F.sum("cnt").alias("n")).head()
     n = 0 if n_row.n is None else int(n_row.n)
     if n == 0:

@@ -30,12 +30,10 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from minimapreduce_spark.artifacts import publish
 from minimapreduce_spark.catalog import fan_out, load_table, parquet_rowcount, table_path
 from minimapreduce_spark.operators.dedup import (
     _JACCARD_ORACLE,
     INCR_BATCH_MOD,
-    MINHASH_BUCKET_SCHEMA,
     MINHASH_SHINGLE_SCHEMA,
     MINHASH_THRESHOLD,
     SHINGLE_K,
@@ -43,6 +41,7 @@ from minimapreduce_spark.operators.dedup import (
     minhash_index_build,
     minhash_signatures,
     probe_band_index,
+    read_band_index,
     shingle_hashes,
 )
 from minimapreduce_spark.operators.relational import (
@@ -55,6 +54,7 @@ from minimapreduce_spark.operators.relational import (
     join_view_build,
     join_view_fold_in,
     maintained_view,
+    read_join_view,
     untombstoned,
 )
 from minimapreduce_spark.operators.similarity import (
@@ -63,6 +63,7 @@ from minimapreduce_spark.operators.similarity import (
     _ivfpq_oracle,
     _ivfpq_serve,
     ivfpq_index_build,
+    read_ivfpq_index,
 )
 from minimapreduce_spark.registry import register
 from minimapreduce_spark.session import narrow_clone, stream_state_width
@@ -202,12 +203,7 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     if parquet_rowcount(table_path(sf_dir, "embeddings")) == 0:
         # Degenerate-input policy: no corpus → no index, no queries
         return spark.createDataFrame([], result_schema)
-    root = ivfpq_index_build(spark, sf_dir)
-    cg = spark.read.parquet(os.path.join(root, "centroids"))
-    cb = spark.read.parquet(os.path.join(root, "codebook"))
-    code_arr = spark.read.parquet(os.path.join(root, "codes")).select(
-        "vec_id", F.col("label").cast("int").alias("label"), "code", "n2hat"
-    )
+    cg, cb, code_arr = read_ivfpq_index(spark, ivfpq_index_build(spark, sf_dir))
 
     with tempfile.TemporaryDirectory(
         prefix="minimapreduce_ann_serve_", ignore_cleanup_errors=True
@@ -300,14 +296,7 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cross-session frame-mixing contract is documented at
     # session.narrow_clone)
     spark = narrow_clone(spark, 8)
-    idx_buckets = (
-        spark.read.schema(MINHASH_BUCKET_SCHEMA)
-        .parquet(os.path.join(root, "buckets"))
-        .select("doc_id", F.col("band").cast("int").alias("band"), "bh")
-    )
-    idx_shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
+    idx_buckets, idx_shingles = read_band_index(spark, root)
 
     with tempfile.TemporaryDirectory(
         prefix="minimapreduce_dedup_probe_", ignore_cleanup_errors=True
@@ -600,10 +589,7 @@ def stream_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], IVM_VIEW_SCHEMA)
 
     spark = narrow_clone(spark, 8)
-    root = join_view_build(spark, sf_dir)
-    base_view = spark.read.schema(IVM_VIEW_SCHEMA).parquet(
-        os.path.join(root, "view")
-    )
+    base_view = read_join_view(spark, join_view_build(spark, sf_dir))
 
     with tempfile.TemporaryDirectory(
         prefix="minimapreduce_stream_ivm_", ignore_cleanup_errors=True
@@ -682,5 +668,4 @@ def stream_incremental_join_view_rebuild(
     mechanisms, so a crash between them replays the drain idempotently
     (per-batch published logs + WAL) and the rename either happened or the
     stage directory is garbage — never a half-published base."""
-    root = stream_join_view_rebuild(spark, sf_dir)
-    return spark.read.schema(IVM_VIEW_SCHEMA).parquet(os.path.join(root, "view"))
+    return read_join_view(spark, stream_join_view_rebuild(spark, sf_dir))

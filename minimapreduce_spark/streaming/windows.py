@@ -24,8 +24,8 @@ SESSION_GAP_SECONDS = 1800
 # State-shuffle width for the benched session-window drain: DERIVED
 # from the per-batch volume (the whole events table arrives as one
 # availableNow batch here) through the shared ``stream_state_width``
-# sizing — round-12 replaces the fixture constant 8 (round-11 verdict
-# item 4); the interleaved width curve at sf0.1 is flat across 4-16
+# sizing, not a constant tuned to one fixture; the interleaved width
+# curve at sf0.1 is flat across 4-16
 # (1.1-1.3 s) and regresses at 32 (1.5-3.6 s) and 2 (1.6-2.8 s), and
 # the derivation (~13 at 100k rows) lands inside the flat band.
 

@@ -483,3 +483,86 @@ def test_join_view_ivm_defined_once_and_no_head_probe_guards():
     assert named == [], named
     assert len(projections) == 1, projections
     assert head_guards == [], head_guards
+
+
+def test_root_keys_and_family_reads_defined_once():
+    """Artifact roots are keyed and derived names hashed only in
+    ``artifacts.py`` (the one ``hashlib.sha256`` of the engine), and
+    ``streaming/upsert.py`` reads every family back through the
+    family's own reader: it names none of the families' table
+    subdirectories."""
+    import ast
+
+    subdirs = {"buckets", "shingles", "codes", "centroids", "codebook", "view"}
+    hashes, paths = [], []
+    for rel, name, node in _engine_nodes():
+        where = f"{rel}:{getattr(node, 'lineno', '?')} in {name}"
+        if rel != "artifacts.py" and (
+            (
+                isinstance(node, ast.Attribute)
+                and node.attr == "sha256"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "hashlib"
+            )
+            or (isinstance(node, ast.alias) and node.name == "sha256")
+        ):
+            hashes.append(where)
+        if (
+            rel == "streaming/upsert.py"
+            and isinstance(node, ast.Constant)
+            and node.value in subdirs
+        ):
+            paths.append(where)
+    assert hashes == [], hashes
+    assert paths == [], paths
+
+
+_ROOT_INPUTS = {
+    "minhash": ("documents",),
+    "ivfpq": ("embeddings",),
+    "joinview": ("orders", "customer"),
+}
+
+
+@pytest.mark.parametrize(
+    "family, table",
+    [("minhash", "documents"), ("ivfpq", "embeddings"), ("joinview", "orders"),
+     ("joinview", "customer")],
+)
+def test_regenerated_input_table_gets_a_fresh_root(tmp_path, family, table):
+    """A family's base root is keyed by the content of its input
+    tables: rewriting any other table of the fixture leaves the root
+    as it was, and rewriting ``table`` gives a fresh one — so a
+    regenerated input is never served from a stale artifact."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from minimapreduce_spark.operators.dedup import minhash_index_root
+    from minimapreduce_spark.operators.relational import join_view_root
+    from minimapreduce_spark.operators.similarity import ivfpq_index_root
+
+    root_of = {
+        "minhash": minhash_index_root,
+        "ivfpq": ivfpq_index_root,
+        "joinview": join_view_root,
+    }[family]
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    tables = ("documents", "embeddings", "orders", "customer", "region")
+    for t in tables:
+        shutil.copyfile(
+            os.path.join(SF_DIR, f"{t}.parquet"), os.path.join(d, f"{t}.parquet")
+        )
+
+    def rewrite(t):
+        path = os.path.join(d, f"{t}.parquet")
+        pq.write_table(pq.read_table(path).slice(1), path)
+
+    before = root_of(d)
+    for t in tables:
+        if t not in _ROOT_INPUTS[family]:
+            rewrite(t)
+            assert root_of(d) == before, t
+    rewrite(table)
+    assert root_of(d) != before

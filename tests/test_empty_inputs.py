@@ -40,9 +40,9 @@ REPRESENTATIVE = [
     "chi2_lang_source",
     "embedding_quantize_int8",
     "arrow_embedding_norms",
-    # round-7 additions (ADVICE r06): the sketch triad + hybrid
-    # retrieval had driver-side head()/collect() peeks that crashed on
-    # empty inputs before their None/empty guards landed
+    # the sketch triad + hybrid retrieval make driver-side
+    # head()/collect() peeks, which crash on empty inputs unless their
+    # None/empty guards hold
     "sketch_quantile_prices",
     "sketch_cms_heavy_hitters",
     "sketch_kmv_distinct_users",
@@ -51,7 +51,6 @@ REPRESENTATIVE = [
     "sample_dsir_importance_topk",
     "bpe_train_merges",
     "unigram_train_pieces",
-    # round-7 registrations
     "ann_ivfpq_nprobe_topk",
     "agg_salted_hotkey_planted",
     "sketch_kmv_set_ops",
@@ -72,7 +71,6 @@ REPRESENTATIVE = [
     "sketch_ams_f2_join_size",
     "feature_woe_iv",
     "sketch_bloom_membership",
-    # round-8 registrations
     "bitext_margin_mining_ivf",
     "ann_ivfpq_served_topk",
     "ann_ivfpq_append_serve",
@@ -81,7 +79,7 @@ REPRESENTATIVE = [
     "wordpiece_apply_token_stats",
     "retrieval_eval_ivf",
     "retrieval_eval_ivfpq",
-    # round-9 registrations: marked WordPiece (empty corpus → empty
+    # marked WordPiece (empty corpus → empty
     # merge table / empty accounting, via the degenerate-vocab guard);
     # band-index probe (empty corpus → no index, early empty frame)
     "wordpiece_train_marked",

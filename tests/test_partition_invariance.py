@@ -40,7 +40,7 @@ CANDIDATES = [
     # iterative clustering + streaming merge
     "embedding_kmeans_lloyd",
     "stream_upsert_latest_state",
-    # round-3 additions: Arrow-batched signature stage (values must not
+    # Arrow-batched signature stage (values must not
     # depend on mapInPandas batch boundaries), salted grouped top-k,
     # integer power iteration, quantized-log regression, CC over LSH
     "dedup_embedding_lsh",
@@ -49,7 +49,7 @@ CANDIDATES = [
     "token_histogram_zipf",
     "dedup_embedding_clusters",
     "psi_value_drift",
-    # round-4 additions: content-group expansion (values must not
+    # content-group expansion (values must not
     # depend on which partition discovered a copy group), the chained
     # mapInPandas JPEG codec lanes, degree-ordered triangle counting,
     # streaming drift over the exact-floor binning
@@ -58,7 +58,7 @@ CANDIDATES = [
     "graph_triangle_degree_oriented",
     "multimodal_jpeg_decode",
     "stream_psi_drift",
-    # round-5 additions: the duplication-gated dedup front end (the
+    # the duplication-gated dedup front end (the
     # probe's verdict and both plan paths must be width-independent),
     # the watermark-bounded exactly-once drain, the 2-layer graph walk
     # (argmax/advance at both layers must not depend on task layout),
@@ -68,7 +68,7 @@ CANDIDATES = [
     "stream_exactly_once_watermarked",
     "ann_graph_hierarchical_search",
     "q1_pricing_summary",
-    # round-6 additions: the incremental batch-vs-index probe (the
+    # the incremental batch-vs-index probe (the
     # batch semi-join and candidate dedup must be width-independent),
     # the hash-threshold mixture sample (broadcast rate table + pure
     # predicate), and the two-phase KMV bottom-K (partial collect_set
@@ -125,7 +125,7 @@ CANDIDATES = [
     # Hilbert layout: integer state machine on the distinct grid +
     # broadcast join — tiles must not depend on task layout
     "hilbert_tile_stats",
-    # round-7 additions: multi-cell IVF-PQ routing (per-cell ADC
+    # multi-cell IVF-PQ routing (per-cell ADC
     # terms), salted two-stage agg under the planted hot key, theta
     # set-ops on bottom-K arrays, margin mining (matmul batch
     # boundaries + mutual ranks), LOO moment subtraction + shared-text
@@ -167,7 +167,7 @@ CANDIDATES = [
     "feature_woe_iv",
     # Bloom: bit_or is order-free; probes against the broadcast words
     "sketch_bloom_membership",
-    # round-8 additions: cell-routed bitext (cogroup matmul batch
+    # cell-routed bitext (cogroup matmul batch
     # boundaries + cell join layout), artifact-served IVFPQ (the
     # build-then-serve chain must be layout-free end to end), the
     # fixed-point DFT lane (mapInPandas batch boundaries), WordPiece
@@ -181,7 +181,7 @@ CANDIDATES = [
     "wordpiece_train_merges",
     "wordpiece_apply_token_stats",
     "stream_sessions_timer_finalized",
-    # round-8 second wave: frozen-quantizer append chain, both IR-metric
+    # frozen-quantizer append chain, both IR-metric
     # evals (truth + system + metric tail), the online per-micro-batch
     # serve (batch arrival layout must not change the drained union)
     "ann_ivfpq_append_serve",
@@ -191,7 +191,7 @@ CANDIDATES = [
     # multi-probe bitext: replicated cell membership + per-cell cuts +
     # distinct — the dial must not depend on task layout
     "bitext_margin_mining_ivf_nprobe",
-    # round-9: marked WordPiece — position-split alphabet doubles the
+    # marked WordPiece — position-split alphabet doubles the
     # symbol table; the likelihood argmax and position-aware serving
     # walk must be layout-free like the unmarked twins
     "wordpiece_train_marked",
@@ -233,7 +233,7 @@ CANDIDATES = [
     # adaptive kernel: the probe's changed-count and the dispatch
     # decision must not depend on layout
     "dedup_clusters_adaptive",
-    # round-10 lifecycle rungs: compacted/rebuilt/appended artifacts
+    # index/view lifecycle rungs: compacted/rebuilt/appended artifacts
     # and the streaming CDC maintainer must all be layout-free
     "minhash_index_compact_probe",
     "incremental_join_view_rebuild",
