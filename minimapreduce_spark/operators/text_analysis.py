@@ -1,14 +1,23 @@
 """Text-analysis operators for LLM data pipelines (north-star surface).
 
 Absent from the reference (SURVEY §2c) but required by the project's
-north star: language ID, quality scoring, token counting, and document
-fingerprinting over the ``documents`` table. All pure built-in-function
-plans — zero Python in the data path, fully codegen'd, and partitionable
-by doc (embarrassingly parallel at 100 TB: no shuffle except the final
-rollups).
+north star: language ID, quality scoring, token counting, document
+fingerprinting and tokenizer training over the ``documents`` table.
+The plans are built-in functions, codegen'd and partitionable by doc
+(embarrassingly parallel at 100 TB: no shuffle except the final
+rollups), with two exceptions that run Python in the data path, each a
+``mapInPandas`` pass over the vocabulary (distinct words), never the
+corpus: the unigram tokenizer's Viterbi segmentation
+(``unigram_train_pieces``, ``unigram_apply_token_stats``) and the
+WordPiece greedy longest-match server (``wordpiece_apply_token_stats``,
+``wordpiece_apply_marked_stats``). The pair-merge trainers (BPE and
+both WordPiece forms) run their merge rounds in the driver when the
+vocabulary fits ``catalog.DRIVER_LOCAL_ROWS_MAX``.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1242,9 +1251,23 @@ def token_histogram_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE tokenizer TRAINING — the full iterative merge loop
+# Pair-merge tokenizer TRAINING — BPE, WordPiece and marked WordPiece
 # ---------------------------------------------------------------------------
-
+#
+# One greedy loop serves three tokenizer families: count adjacent symbol
+# pairs over the vocabulary, take the argmax under the (score DESC, c1,
+# c2) total order, fold the merge left to right, repeat. Two things vary:
+#
+# - the score rule: BPE ranks a pair by its weight w; WordPiece
+#   (``likelihood``) by round(w·WP_SCORE_SCALE/(f1·f2)), the unigram-model
+#   likelihood gain of the merge (Schuster & Nakajima 2012), f1/f2 the
+#   symbols' current weighted corpus frequencies;
+# - the marking: plain pieces, or (``marked``, the published WordPiece
+#   alphabet) every non-initial character prefixed with '##', so "a"
+#   word-initial and "##a" mid-word are distinct units with independent
+#   frequencies, and a merge keeps c1's marking and drops c2's (always
+#   present: a right neighbour is mid-word), writing c1 + c2[2:].
+#
 # Symbol separator for segmentation strings: words are split on ' ' so
 # symbols can never contain a space-split artifact, and chr(31) (ASCII
 # unit separator) never occurs in the corpus (filtered defensively
@@ -1254,46 +1277,144 @@ def token_histogram_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # matching a symbol suffix.
 BPE_SEP = "\x1f"
 BPE_MERGE_ROUNDS = 8
+WP_MERGE_ROUNDS = 8
+WP_SCORE_SCALE = 10**12  # quantized likelihood-score grid (BIGINT)
+WP_WALK_STEPS = 24  # static unroll bound for the serving oracle's greedy walk
+WP_MARK = "##"
 
 
-def _bpe_chain_sql(k: int, upto_seg: int) -> str:
-    """WITH-clause chain for the BPE training oracle: word-frequency
+def _words(docs: DataFrame, *cols: str, marked: bool = False) -> DataFrame:
+    """Corpus words the tokenizers train and account on, one row per
+    occurrence, with ``cols``: non-empty and free of BPE_SEP; when
+    ``marked``, also free of '#', the marking character (a word
+    starting with '#' could mint an unmarked piece string-identical to
+    a marked one and corrupt the position classes)."""
+    word = F.col("word")
+    ok = (word != "") & ~F.contains(word, F.lit(BPE_SEP))
+    if marked:
+        ok &= ~F.contains(word, F.lit("#"))
+    return docs.select(*cols, F.explode(F.split("text", " ")).alias("word")).where(ok)
+
+
+def _words_sql(marked: bool = False, cols: str = "") -> str:
+    """The FROM/WHERE clause of ``_words`` over ``documents``."""
+    mark = " AND NOT contains(word, '#')" if marked else ""
+    return f"""FROM (SELECT {cols}unnest(string_split(text, ' ')) AS word
+            FROM documents)
+      WHERE word <> '' AND NOT contains(word, chr(31)){mark}"""
+
+
+def _word_freqs(docs: DataFrame, marked: bool = False) -> DataFrame:
+    """(word, freq): the training vocabulary — the one corpus-scale
+    aggregation a tokenizer trainer runs."""
+    return _words(docs, marked=marked).groupBy("word").agg(F.count("*").alias("freq"))
+
+
+def _token_stats(
+    spark: SparkSession, sf_dir: str, vt: DataFrame, n_tokens: str, marked: bool = False
+) -> DataFrame:
+    """Per-source token budget under a trained tokenizer, given ``vt``
+    (word, n_tok) over the vocabulary: the corpus contributes only a
+    per-(source, word) count broadcast-joined to it (vocab smaller than
+    corpus by the Zipf factor; at 100 TB the join key set still fits
+    the broadcast budget or falls back to a shuffle join on the same
+    plan). Ratios are 6-dp rounds of exact-BIGINT quotients."""
+    sw = (
+        _words(_docs(spark, sf_dir), "source", marked=marked)
+        .groupBy("source", "word")
+        .agg(F.count("*").alias("cnt"))
+    )
+    chars = F.sum(F.col("cnt") * F.length("word"))
+    toks = F.sum(F.col("cnt") * F.col("n_tok"))
+    return sw.join(F.broadcast(vt), "word").groupBy("source").agg(
+        F.sum("cnt").cast("bigint").alias("n_words"),
+        chars.cast("bigint").alias("n_chars"),
+        toks.cast("bigint").alias(n_tokens),
+        F.round(chars * 1.0 / toks, 6).alias("chars_per_token"),
+        F.round(toks * 1.0 / F.sum("cnt"), 6).alias("tokens_per_word"),
+    )
+
+
+def _token_stats_sql(n_tokens: str, marked: bool = False) -> str:
+    """The oracle of ``_token_stats``: the tail of a WITH chain that
+    defines ``vt(word, n_tok)``."""
+    return f""",
+    sw AS MATERIALIZED (
+      SELECT source, word, count(*) AS cnt
+      {_words_sql(marked, "source, ")}
+      GROUP BY 1, 2
+    )
+    SELECT sw.source AS source,
+           CAST(sum(sw.cnt) AS BIGINT)                   AS n_words,
+           CAST(sum(sw.cnt * length(sw.word)) AS BIGINT) AS n_chars,
+           CAST(sum(sw.cnt * vt.n_tok) AS BIGINT)        AS {n_tokens},
+           round(sum(sw.cnt * length(sw.word)) * 1.0
+                 / sum(sw.cnt * vt.n_tok), 6)            AS chars_per_token,
+           round(sum(sw.cnt * vt.n_tok) * 1.0
+                 / sum(sw.cnt), 6)                       AS tokens_per_word
+    FROM sw JOIN vt USING (word)
+    GROUP BY 1
+    """
+
+
+def _chain_sql(k: int, upto_seg: int, likelihood: bool, marked: bool) -> str:
+    """WITH-clause chain for a pair-merge training oracle: word-frequency
     table, initial char segmentation, then per round r: adjacent-pair
-    counts -> argmax merge m{r} -> re-segmented seg{r}. ``upto_seg``
-    controls how many re-segmentations are emitted (k-1 suffices for
-    the merge table; k for the apply stage). Every multiply-referenced
-    CTE is AS MATERIALIZED — the MMR octave's DuckDB CTE-inlining
-    lesson (SCALING.md): a greedy chain where hop r references hop r-1
+    weights (and, for ``likelihood``, the symbol frequencies syms{r})
+    -> argmax merge m{r} -> re-segmented seg{r}. ``upto_seg`` controls
+    how many re-segmentations are emitted (k-1 suffices for the merge
+    table; k for BPE's apply stage). Every multiply-referenced CTE is
+    AS MATERIALIZED — the MMR octave's DuckDB CTE-inlining lesson
+    (SCALING.md): a greedy chain where hop r references hop r-1
     re-expands exponentially without the hint."""
+    mark = WP_MARK if marked else ""
+    tail = "substr(m.c2, 3)" if marked else "m.c2"
     parts = [
-        """
+        f"""
     WITH wf AS MATERIALIZED (
       SELECT word, count(*) AS freq
-      FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-      WHERE word <> '' AND NOT contains(word, chr(31))
+      {_words_sql(marked)}
       GROUP BY word
     ),
     seg0 AS MATERIALIZED (
       SELECT word, freq,
-             list_reduce(list_transform(string_split(word, ''),
-                                        c -> chr(31) || c),
-                         (a, b) -> a || b) AS seg
+             chr(31) || list_reduce(string_split(word, ''),
+                                    (a, b) -> a || chr(31) || '{mark}' || b) AS seg
       FROM wf
     )"""
     ]
     for r in range(1, k + 1):
+        if likelihood:
+            syms = f""",
+    syms{r} AS MATERIALIZED (
+      SELECT s.sym, CAST(sum(freq) AS BIGINT) AS f
+      FROM csr{r}, LATERAL (SELECT unnest(cs) AS sym) s
+      GROUP BY 1
+    )"""
+            best = f"""w AS pair_weight,
+             CAST(round(CAST(w AS DOUBLE) * {WP_SCORE_SCALE}
+                        / (CAST(s1.f AS DOUBLE) * CAST(s2.f AS DOUBLE)))
+                  AS BIGINT) AS score_u
+      FROM pairs{r}
+      JOIN syms{r} s1 ON s1.sym = c1
+      JOIN syms{r} s2 ON s2.sym = c2
+      ORDER BY score_u DESC"""
+        else:
+            syms, best = "", f"w AS weight FROM pairs{r} ORDER BY w DESC"
         parts.append(
             f""",
+    csr{r} AS MATERIALIZED (
+      SELECT string_split(substr(seg, 2), chr(31)) AS cs, freq
+      FROM seg{r - 1}
+    ){syms},
     pairs{r} AS (
-      SELECT cs[i.i] AS c1, cs[i.i + 1] AS c2, sum(freq) AS w
-      FROM (SELECT string_split(substr(seg, 2), chr(31)) AS cs, freq
-            FROM seg{r - 1}),
+      SELECT cs[i.i] AS c1, cs[i.i + 1] AS c2, CAST(sum(freq) AS BIGINT) AS w
+      FROM csr{r},
            LATERAL (SELECT unnest(generate_series(1, len(cs) - 1)) AS i) i
       GROUP BY 1, 2
     ),
     m{r} AS MATERIALIZED (
-      SELECT {r} AS rnd, c1, c2, CAST(w AS BIGINT) AS weight
-      FROM pairs{r} ORDER BY w DESC, c1, c2 LIMIT 1
+      SELECT {r} AS rnd, c1, c2, {best}, c1, c2 LIMIT 1
     )"""
         )
         if r <= upto_seg:
@@ -1307,7 +1428,7 @@ def _bpe_chain_sql(k: int, upto_seg: int) -> str:
                (acc, x) -> CASE
                              WHEN ends_with(acc, chr(31) || m.c1)
                               AND x = chr(31) || m.c2
-                             THEN acc || m.c2
+                             THEN acc || {tail}
                              ELSE acc || x
                            END) AS seg
       FROM seg{r - 1} s, m{r} m
@@ -1316,76 +1437,169 @@ def _bpe_chain_sql(k: int, upto_seg: int) -> str:
     return "".join(parts)
 
 
-def _bpe_train_oracle(k: int) -> str:
+def _train_oracle(k: int, likelihood: bool, marked: bool) -> str:
     union = " UNION ALL ".join(f"SELECT * FROM m{r}" for r in range(1, k + 1))
+    cols = "pair_weight, score_u" if likelihood else "weight"
     return (
-        _bpe_chain_sql(k, upto_seg=k - 1)
+        _chain_sql(k, k - 1, likelihood, marked)
         + f"""
-    SELECT CAST(rnd AS INT) AS rnd, c1, c2, weight
+    SELECT CAST(rnd AS INT) AS rnd, c1, c2, {cols}
     FROM ({union}) ORDER BY rnd
     """
     )
 
 
-def _bpe_apply_oracle(k: int) -> str:
-    return (
-        _bpe_chain_sql(k, upto_seg=k)
-        + f""",
-    sw AS MATERIALIZED (
-      SELECT source, word, count(*) AS cnt
-      FROM (SELECT source, unnest(string_split(text, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' AND NOT contains(word, chr(31))
-      GROUP BY 1, 2
-    ),
+def _apply_oracle(k: int, likelihood: bool, marked: bool) -> str:
+    """Serving oracle. BPE serves its trained segmentation: vt counts
+    the symbols of seg{k}. WordPiece serves GREEDY LONGEST MATCH over
+    the trained vocabulary (the alphabet + the k merged pieces) —
+    the maximal-munch algorithm BERT's tokenizer runs. Each vocab row
+    is a position class (``cont``: matches at pos > 0) and the surface
+    it consumes: a marked piece serves only in its class ('##' pieces
+    after pos 0, by their unmarked surface; the '#'-word exclusion
+    makes LIKE '##%' an unambiguous continuation test), a flat piece
+    in both. ``ml`` is the per-(word, pos) greedy matched length, a
+    pure join — position-independent, so it is computed set-wise even
+    though the walk itself is sequential.
+
+    The walk is UNROLLED to WP_WALK_STEPS static join steps instead of
+    a recursive CTE: each greedy step consumes at least one character,
+    so max-word-length steps always terminate (the fixture max is 8;
+    the unroll carries 3× margin), and — the reason for the shape —
+    DuckDB silently evaluates chain-derived CTEs as EMPTY inside a
+    recursive CTE's recursive term (measured: a hardcoded vocab
+    recursed fine, any vocab referencing the merge chain yielded zero
+    matches), so a recursive walk over the trained vocab cannot be
+    expressed. A word needing more steps would miss pos = len(word) and
+    drop from the join — a visible row-count/hash break, never a
+    silent wrong answer."""
+    if not likelihood:
+        return (
+            _chain_sql(k, k, likelihood, marked)
+            + f""",
     vt AS MATERIALIZED (
       SELECT word, len(string_split(substr(seg, 2), chr(31))) AS n_tok
       FROM seg{k}
+    )"""
+            + _token_stats_sql("n_tokens_bpe", marked)
+        )
+    tail = "substr(c2, 3)" if marked else "c2"
+    merged = " UNION ALL ".join(f"SELECT c1, c2 FROM m{r}" for r in range(1, k + 1))
+    if marked:
+        classes = """SELECT piece LIKE '##%' AS cont,
+             CASE WHEN piece LIKE '##%' THEN substr(piece, 3) ELSE piece END AS surf
+      FROM pieces"""
+    else:
+        classes = "SELECT c.cont, piece AS surf FROM pieces, (VALUES (false), (true)) c(cont)"
+    steps = "".join(
+        f""",
+    s{i} AS MATERIALIZED (
+      SELECT s.word, s.pos + ml.l AS pos, s.n + 1 AS n
+      FROM s{i - 1} s JOIN ml ON ml.word = s.word AND ml.pos = s.pos
+      WHERE s.pos < len(s.word)
+    )"""
+        for i in range(1, WP_WALK_STEPS + 1)
     )
-    SELECT sw.source AS source,
-           CAST(sum(sw.cnt) AS BIGINT)                   AS n_words,
-           CAST(sum(sw.cnt * length(sw.word)) AS BIGINT) AS n_chars,
-           CAST(sum(sw.cnt * vt.n_tok) AS BIGINT)        AS n_tokens_bpe,
-           round(sum(sw.cnt * length(sw.word)) * 1.0
-                 / sum(sw.cnt * vt.n_tok), 6)            AS chars_per_token,
-           round(sum(sw.cnt * vt.n_tok) * 1.0
-                 / sum(sw.cnt), 6)                       AS tokens_per_word
-    FROM sw JOIN vt USING (word)
-    GROUP BY 1
-    """
+    allsteps = " UNION ALL ".join(
+        f"SELECT word, pos, n FROM s{i}" for i in range(0, WP_WALK_STEPS + 1)
+    )
+    return (
+        _chain_sql(k, k - 1, likelihood, marked)
+        + f""",
+    pieces AS MATERIALIZED (
+      SELECT DISTINCT sym AS piece FROM syms1
+      UNION
+      SELECT c1 || {tail} FROM ({merged})
+    ),
+    vocab AS MATERIALIZED (
+      {classes}
+    ),
+    ml AS MATERIALIZED (
+      SELECT wf.word, p.pos, max(len(v.surf)) AS l
+      FROM wf,
+           LATERAL (SELECT unnest(generate_series(0, len(word) - 1)) AS pos) p,
+           vocab v
+      WHERE v.cont = (p.pos > 0)
+        AND v.surf = substr(wf.word, p.pos + 1, len(v.surf))
+      GROUP BY 1, 2
+    ),
+    s0 AS (SELECT word, 0 AS pos, 0 AS n FROM wf){steps},
+    vt AS MATERIALIZED (
+      SELECT word, n AS n_tok FROM ({allsteps}) WHERE pos = len(word)
+    )"""
+        + _token_stats_sql("n_tokens_wp", marked)
     )
 
 
-def _bpe_symbols():
+def _symbols():
     """Column: the symbol list of the current segmentation string."""
     return F.split(
         F.col("seg").substr(F.lit(2), F.length("seg")), BPE_SEP
     )
 
 
-def _bpe_train(spark: SparkSession, sf_dir: str, k: int):
-    """Run k greedy BPE merge rounds; returns (merge_rows, final_seg_df).
+def _likelihood(w, f1, f2):
+    """WordPiece's merge score before rounding, on the WP_SCORE_SCALE
+    grid. One expression for the Spark Column (BIGINTs cast to double)
+    and the driver-local rounds (Python floats), so both evaluate the
+    same doubles in the same order."""
+    return w * WP_SCORE_SCALE / (f1 * f2)
+
+
+def _merge_local(syms: list[str], c1: str, c2: str, tail: str) -> list[str]:
+    """Driver-side twin of ``_merge_fold``: apply ONE (c1, c2) merge
+    left-to-right over a symbol list, writing c1 + ``tail``. Comparing
+    whole symbols (not string suffixes) is exactly what the
+    separator-prefixed fold's endswith test computes, so the two
+    produce identical segmentations — including the shared-boundary
+    repeat case ("a a a a" merges positions 1-2 and 3-4, never the
+    overlapping 2-3)."""
+    out: list[str] = []
+    for s in syms:
+        if out and out[-1] == c1 and s == c2:
+            out[-1] = c1 + tail
+        else:
+            out.append(s)
+    return out
+
+
+def _merge_fold(cs, c1: str, c2: str, tail: str):
+    """Column: apply ONE (c1, c2) merge left-to-right over the symbol
+    list, writing c1 + ``tail`` (string replace is WRONG on
+    shared-boundary repeats; see bpe_train_merges)."""
+    return F.aggregate(
+        F.transform(cs, lambda s: F.concat(F.lit(BPE_SEP), s)),
+        F.lit(""),
+        lambda acc, x: F.when(
+            F.endswith(acc, F.lit(BPE_SEP + c1)) & (x == F.lit(BPE_SEP + c2)),
+            F.concat(acc, F.lit(tail)),
+        ).otherwise(F.concat(acc, x)),
+    )
+
+
+def _pair_train(
+    spark: SparkSession, sf_dir: str, k: int, likelihood: bool, marked: bool
+):
+    """Run k greedy merge rounds; returns (merge_rows, final_seg_df,
+    pieces). A merge row is (rnd, c1, c2, w) for BPE and (rnd, c1, c2,
+    w, score_u) for WordPiece; pieces is the trained vocabulary (the
+    initial alphabet plus the k merged tokens).
 
     Driver loop carries ONE merge pair per round (the k-means/k-center
     pattern — bounded by contract); all per-round work is vocabulary-
     scale: the corpus is touched exactly once, by the word-frequency
     aggregation."""
-    docs = _docs(spark, sf_dir)
-    wf = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .where((F.col("word") != "") & ~F.contains("word", F.lit(BPE_SEP)))
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
+    mark = WP_MARK if marked else ""
+    chars = F.filter(F.split("word", ""), lambda c: c != "")
+    seg = (
+        _word_freqs(_docs(spark, sf_dir), marked)
+        .select(
+            "word",
+            "freq",
+            F.concat(F.lit(BPE_SEP), F.array_join(chars, BPE_SEP + mark)).alias("seg"),
+        )
+        .localCheckpoint(eager=False)
     )
-    seg = wf.select(
-        "word",
-        "freq",
-        F.aggregate(
-            F.filter(F.split("word", ""), lambda c: c != ""),
-            F.lit(""),
-            lambda acc, c: F.concat(acc, F.lit(BPE_SEP), c),
-        ).alias("seg"),
-    ).localCheckpoint(eager=False)
 
     rows = []
     # ADAPTIVE KERNEL DISPATCH (the dedup_clusters_adaptive pattern):
@@ -1393,44 +1607,61 @@ def _bpe_train(spark: SparkSession, sf_dir: str, k: int):
     # small enough to collect (bounded by catalog.DRIVER_LOCAL_ROWS_MAX
     # — the driver-bounded-by-contract rule every tokenizer trainer in
     # practice uses: HF/SentencePiece collect word counts before
-    # merging), the greedy loop runs in the driver with
-    # the identical integer weights, (weight DESC, c1, c2) argmax and
-    # left-to-right fold — bit-identical merges, zero per-round Spark
-    # jobs. The fixture's 31-word vocab spent 8 rounds of pure job
-    # scheduling on 31 rows (measured: 2.9 s warm → ~0.7 s, one corpus
-    # scan + driver arithmetic). Above the threshold the distributed
-    # loop below runs unchanged — the 100 TB path, where the vocab is
-    # millions of rows and per-round jobs are the right shape.
+    # merging), the greedy loop runs in the driver with the identical
+    # integer weights and frequencies, the same score expression, the
+    # same total-order argmax and left-to-right fold — bit-identical
+    # merges, zero per-round Spark jobs. The fixture's 31-word vocab
+    # spent 8 BPE rounds of pure job scheduling on 31 rows (measured:
+    # 2.9 s warm → ~0.7 s, one corpus scan + driver arithmetic). Above
+    # the threshold the distributed loop below runs — the 100 TB path,
+    # where the vocab is millions of rows and per-round jobs are the
+    # right shape.
     n_vocab = seg.count()  # one bounded job; materializes the checkpoint
     if n_vocab <= catalog.DRIVER_LOCAL_ROWS_MAX:
         vocab = [
             (row.word, int(row.freq), row.seg.split(BPE_SEP)[1:])
             for row in seg.collect()
         ]
+        pieces = {s for _w, _f, syms in vocab for s in syms}
         for r in range(1, k + 1):
             weights: dict[tuple[str, str], int] = {}
+            freqs: dict[str, int] = {}
             for _w, freq, syms in vocab:
-                for i in range(len(syms) - 1):
-                    key = (syms[i], syms[i + 1])
-                    weights[key] = weights.get(key, 0) + freq
+                for s in syms:
+                    freqs[s] = freqs.get(s, 0) + freq
+                for pair in zip(syms, syms[1:]):
+                    weights[pair] = weights.get(pair, 0) + freq
             if not weights:  # vocab fully merged
                 break
-            (c1, c2), w = min(
-                weights.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-            )
-            rows.append((r, c1, c2, int(w)))
+            score = weights
+            if likelihood:  # the engines round half away from zero
+                score = {
+                    (c1, c2): math.floor(
+                        _likelihood(float(w), float(freqs[c1]), float(freqs[c2])) + 0.5
+                    )
+                    for (c1, c2), w in weights.items()
+                }
+            c1, c2 = min(score, key=lambda p: (-score[p], p))
+            w = weights[c1, c2]
+            rows.append((r, c1, c2, w, score[c1, c2]) if likelihood else (r, c1, c2, w))
+            tail = c2[len(mark):]
+            pieces.add(c1 + tail)
             vocab = [
-                (word, freq, _bpe_merge_local(syms, c1, c2))
+                (word, freq, _merge_local(syms, c1, c2, tail))
                 for word, freq, syms in vocab
             ]
         seg = spark.createDataFrame(
             [(w, f, "".join(BPE_SEP + s for s in syms)) for w, f, syms in vocab],
             "word string, freq bigint, seg string",
         )
-        return rows, seg
+        return rows, seg, sorted(pieces)
 
+    pieces = {
+        r.sym
+        for r in seg.select(F.explode(_symbols()).alias("sym")).distinct().collect()
+    }  # bounded: the (marked) character alphabet
     for r in range(1, k + 1):
-        cs = _bpe_symbols()
+        cs = _symbols()
         pairs = (
             seg.where(F.size(cs) >= 2)  # guard descending sequence(0,-1)
             .select(
@@ -1446,55 +1677,119 @@ def _bpe_train(spark: SparkSession, sf_dir: str, k: int):
                 ).alias("p"),
             )
             .groupBy("p.c1", "p.c2")
-            .agg(F.sum("freq").cast("bigint").alias("weight"))
+            .agg(F.sum("freq").cast("bigint").alias("w"))
         )
+        if likelihood:
+            # the bounded symbol-frequency table broadcast onto the pairs
+            syms = (
+                seg.select("freq", F.explode(cs).alias("sym"))
+                .groupBy("sym")
+                .agg(F.sum("freq").cast("bigint").alias("f"))
+            )
+            score = F.round(
+                _likelihood(*(F.col(c).cast("double") for c in ("w", "f1", "f2")))
+            ).cast("bigint")
+            pairs = (
+                pairs.join(F.broadcast(syms.withColumnRenamed("sym", "c1")), "c1")
+                .withColumnRenamed("f", "f1")
+                .join(F.broadcast(syms.withColumnRenamed("sym", "c2")), "c2")
+                .withColumnRenamed("f", "f2")
+            )
+        else:
+            score = F.col("w")
         top = (
-            pairs.orderBy(F.desc("weight"), F.asc("c1"), F.asc("c2"))
+            pairs.select("c1", "c2", "w", score.alias("score"))
+            .orderBy(F.desc("score"), F.asc("c1"), F.asc("c2"))
             .limit(1)
             .collect()  # bounded: 1 row per round
         )
         if not top:  # vocab fully merged — cannot happen at fixture scale
             break
-        c1, c2, w = top[0]["c1"], top[0]["c2"], int(top[0]["weight"])
-        rows.append((r, c1, c2, w))
+        c1, c2, w, s = top[0]
+        rows.append((r, c1, c2, int(w), int(s)) if likelihood else (r, c1, c2, int(w)))
+        tail = c2[len(mark):]
+        pieces.add(c1 + tail)
         seg = seg.select(
-            "word", "freq", _merge_fold(cs, c1, c2).alias("seg")
+            "word", "freq", _merge_fold(cs, c1, c2, tail).alias("seg")
         ).localCheckpoint(eager=False)  # round r never recomputes 1..r-1
-    return rows, seg
+    return rows, seg, sorted(pieces)
 
 
-def _bpe_merge_local(syms: list[str], c1: str, c2: str) -> list[str]:
-    """Driver-side twin of ``_merge_fold``: apply ONE (c1, c2) merge
-    left-to-right over a symbol list. Comparing whole symbols (not
-    string suffixes) is exactly what the separator-prefixed fold's
-    endswith test computes, so the two produce identical
-    segmentations — including the shared-boundary repeat case ("a a a
-    a" merges positions 1-2 and 3-4, never the overlapping 2-3)."""
-    out: list[str] = []
-    for s in syms:
-        if out and out[-1] == c1 and s == c2:
-            out[-1] = c1 + c2
-        else:
-            out.append(s)
-    return out
+def _greedy_token_counts(spark: SparkSession, words: DataFrame, pieces, marked: bool):
+    """(word, n_tok) by GREEDY LONGEST MATCH (maximal munch, BERT's
+    inference tokenizer): per word, repeatedly take the longest piece
+    that prefixes the remaining suffix. A marked vocabulary is
+    position-aware — at position 0 only unmarked pieces match, later
+    only '##' pieces, by their unmarked surface; a flat vocabulary is
+    the same walk with the one piece set at every position. Runs as a
+    mapInPandas pass over ``words`` against the broadcast piece sets.
+    The walk never strands: serving re-tokenizes the training corpus's
+    own vocabulary, so every character occurs in its position class in
+    the alphabet (a real deployment adds [UNK] for unseen bytes)."""
+    from minimapreduce_spark._pickle import register_self_by_value
 
-
-def _merge_fold(cs, c1: str, c2: str):
-    """Column: apply ONE (c1, c2) merge left-to-right over the symbol
-    list — the separator-prefixed fold shared by BPE and WordPiece
-    training (string replace is WRONG on shared-boundary repeats; see
-    bpe_train_merges)."""
-    return F.aggregate(
-        F.transform(cs, lambda s: F.concat(F.lit(BPE_SEP), s)),
-        F.lit(""),
-        lambda acc, x: F.when(
-            F.endswith(acc, F.lit(BPE_SEP + c1)) & (x == F.lit(BPE_SEP + c2)),
-            F.concat(acc, F.lit(c2)),
-        ).otherwise(F.concat(acc, x)),
+    register_self_by_value()
+    mark = WP_MARK if marked else ""
+    init = frozenset(p for p in pieces if not (mark and p.startswith(mark)))
+    cont = frozenset(p[len(mark):] for p in pieces if p.startswith(mark))
+    bc = spark.sparkContext.broadcast(
+        (init, cont, max(map(len, init), default=0), max(map(len, cont), default=0))
     )
 
+    def tokenize(batches):
+        import pandas as pd
 
-@register("bpe_train_merges", oracle=_bpe_train_oracle(BPE_MERGE_ROUNDS), bench=True)
+        init_v, cont_v, mi, mc = bc.value
+        for pdf in batches:
+            n_toks = []
+            for word in pdf["word"]:
+                pos, n = 0, 0
+                while pos < len(word):
+                    vs, cap = (init_v, mi) if pos == 0 else (cont_v, mc)
+                    pos += next(
+                        (
+                            L
+                            for L in range(min(cap, len(word) - pos), 0, -1)
+                            if word[pos : pos + L] in vs
+                        ),
+                        1,  # unreachable on the training corpus's vocab
+                    )
+                    n += 1
+                n_toks.append(n)
+            yield pd.DataFrame({"word": pdf["word"], "n_tok": n_toks})
+
+    return words.mapInPandas(tokenize, "word string, n_tok long")
+
+
+def _train_merges(
+    spark: SparkSession, sf_dir: str, k: int, likelihood: bool, marked: bool
+) -> DataFrame:
+    rows, _, _ = _pair_train(spark, sf_dir, k, likelihood, marked)
+    weights = "pair_weight bigint, score_u bigint" if likelihood else "weight bigint"
+    return spark.createDataFrame(rows, f"rnd int, c1 string, c2 string, {weights}")
+
+
+def _apply_token_stats(
+    spark: SparkSession, sf_dir: str, k: int, likelihood: bool, marked: bool
+) -> DataFrame:
+    """Per-source token budget under the trained tokenizer. BPE serves
+    its trained segmentation; WordPiece serves greedy longest match
+    over its trained pieces. Either way tokenization runs on the
+    VOCABULARY (the trainer's distinct words), never the corpus."""
+    _, seg, pieces = _pair_train(spark, sf_dir, k, likelihood, marked)
+    if likelihood:
+        vt = _greedy_token_counts(spark, seg.select("word"), pieces, marked)
+    else:
+        vt = seg.select("word", F.size(_symbols()).alias("n_tok"))
+    n_tokens = "n_tokens_wp" if likelihood else "n_tokens_bpe"
+    return _token_stats(spark, sf_dir, vt, n_tokens, marked)
+
+
+@register(
+    "bpe_train_merges",
+    oracle=_train_oracle(BPE_MERGE_ROUNDS, likelihood=False, marked=False),
+    bench=True,
+)
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL BPE tokenizer training — the iterative greedy merge loop,
     not just one statistic: k rounds of (count adjacent symbol pairs
@@ -1520,11 +1815,13 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     round after runs on the VOCABULARY (millions of rows vs trillions),
     per-round driver traffic is one merge pair, and each round's frame
     is lineage-checkpointed so round r never replays rounds 1..r-1."""
-    rows, _ = _bpe_train(spark, sf_dir, BPE_MERGE_ROUNDS)
-    return spark.createDataFrame(rows, "rnd int, c1 string, c2 string, weight bigint")
+    return _train_merges(spark, sf_dir, BPE_MERGE_ROUNDS, likelihood=False, marked=False)
 
 
-@register("bpe_apply_token_stats", oracle=_bpe_apply_oracle(BPE_MERGE_ROUNDS))
+@register(
+    "bpe_apply_token_stats",
+    oracle=_apply_oracle(BPE_MERGE_ROUNDS, likelihood=False, marked=False),
+)
 def bpe_apply_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving path of the trained BPE tokenizer: apply the k learned
     merges and report per-source corpus token accounting — token count
@@ -1536,34 +1833,9 @@ def bpe_apply_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The trick that makes serving cheap: tokenization is applied to the
     VOCABULARY (distinct words), never the corpus — the corpus touches
     only a per-(source, word) count and a broadcast join against the
-    segmented vocab (vocab smaller than corpus by the Zipf factor; at
-    100 TB the join key set still fits the broadcast budget or falls
-    back to a shuffle join on the same plan). Ratios are 6-dp rounds of
-    exact-BIGINT quotients, the module's established cross-engine
-    discipline."""
-    _, seg = _bpe_train(spark, sf_dir, BPE_MERGE_ROUNDS)
-    docs = _docs(spark, sf_dir)
-    sw = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("word"))
-        .where((F.col("word") != "") & ~F.contains("word", F.lit(BPE_SEP)))
-        .groupBy("source", "word")
-        .agg(F.count("*").alias("cnt"))
-    )
-    vt = seg.select("word", F.size(_bpe_symbols()).alias("n_tok"))
-    j = sw.join(F.broadcast(vt), "word")
-    return j.groupBy("source").agg(
-        F.sum("cnt").cast("bigint").alias("n_words"),
-        F.sum(F.col("cnt") * F.length("word")).cast("bigint").alias("n_chars"),
-        F.sum(F.col("cnt") * F.col("n_tok")).cast("bigint").alias("n_tokens_bpe"),
-        F.round(
-            F.sum(F.col("cnt") * F.length("word"))
-            * 1.0
-            / F.sum(F.col("cnt") * F.col("n_tok")),
-            6,
-        ).alias("chars_per_token"),
-        F.round(
-            F.sum(F.col("cnt") * F.col("n_tok")) * 1.0 / F.sum("cnt"), 6
-        ).alias("tokens_per_word"),
+    segmented vocab (`_token_stats`)."""
+    return _apply_token_stats(
+        spark, sf_dir, BPE_MERGE_ROUNDS, likelihood=False, marked=False
     )
 
 
@@ -1579,8 +1851,7 @@ UNI_LP_SCALE = 10**6  # quantized log-prob grid (BIGINT millionths)
 _UNI_WF_SQL = f"""
     wf AS MATERIALIZED (
       SELECT word, count(*) AS freq
-      FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-      WHERE word <> '' AND NOT contains(word, chr(31))
+      {_words_sql()}
       GROUP BY 1
     ),
     pw AS MATERIALIZED (
@@ -1728,14 +1999,8 @@ def _uni_train(spark: SparkSession, sf_dir: str):
 
     register_self_by_value()
 
-    docs = _docs(spark, sf_dir)
-    wf = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .where((F.col("word") != "") & ~F.contains("word", F.lit(BPE_SEP)))
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-        .localCheckpoint(eager=False)  # corpus touched once; reused per round
-    )
+    # corpus touched once; reused per round
+    wf = _word_freqs(_docs(spark, sf_dir)).localCheckpoint(eager=False)
     pw = (
         wf.select("word", F.explode(F.sequence(F.lit(1), F.length("word"))).alias("i"))
         .select("word", "i", F.explode(F.sequence(F.lit(1), F.lit(UNI_MAX_PIECE))).alias("l"))
@@ -1900,25 +2165,8 @@ def _uni_apply_oracle() -> str:
     vt AS MATERIALIZED (
       SELECT word, len(string_split(substr(seg, 2), chr(31))) AS n_tok
       FROM best{final}
-    ),
-    sw AS MATERIALIZED (
-      SELECT source, word, count(*) AS cnt
-      FROM (SELECT source, unnest(string_split(text, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' AND NOT contains(word, chr(31))
-      GROUP BY 1, 2
-    )
-    SELECT sw.source AS source,
-           CAST(sum(sw.cnt) AS BIGINT)                   AS n_words,
-           CAST(sum(sw.cnt * length(sw.word)) AS BIGINT) AS n_chars,
-           CAST(sum(sw.cnt * vt.n_tok) AS BIGINT)        AS n_tokens_uni,
-           round(sum(sw.cnt * length(sw.word)) * 1.0
-                 / sum(sw.cnt * vt.n_tok), 6)            AS chars_per_token,
-           round(sum(sw.cnt * vt.n_tok) * 1.0
-                 / sum(sw.cnt), 6)                       AS tokens_per_word
-    FROM sw JOIN vt USING (word)
-    GROUP BY 1
-    """
+    )"""
+        + _token_stats_sql("n_tokens_uni")
     )
 
 
@@ -1939,290 +2187,19 @@ def unigram_apply_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-scale, and the trained piece table broadcasts."""
     wf, v0, counts, lp = _uni_train(spark, sf_dir)
     seg = _uni_segment(spark, wf, lp)
-    vt = seg.select(
-        "word",
-        F.size(
-            F.split(F.col("seg").substr(F.lit(2), F.length("seg")), BPE_SEP)
-        ).alias("n_tok"),
-    )
-    docs = _docs(spark, sf_dir)
-    sw = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("word"))
-        .where((F.col("word") != "") & ~F.contains("word", F.lit(BPE_SEP)))
-        .groupBy("source", "word")
-        .agg(F.count("*").alias("cnt"))
-    )
-    j = sw.join(F.broadcast(vt), "word")
-    return j.groupBy("source").agg(
-        F.sum("cnt").cast("bigint").alias("n_words"),
-        F.sum(F.col("cnt") * F.length("word")).cast("bigint").alias("n_chars"),
-        F.sum(F.col("cnt") * F.col("n_tok")).cast("bigint").alias("n_tokens_uni"),
-        F.round(
-            F.sum(F.col("cnt") * F.length("word"))
-            / F.sum(F.col("cnt") * F.col("n_tok")),
-            6,
-        ).alias("chars_per_token"),
-        F.round(F.sum(F.col("cnt") * F.col("n_tok")) / F.sum("cnt"), 6).alias(
-            "tokens_per_word"
-        ),
-    )
+    vt = seg.select("word", F.size(_symbols()).alias("n_tok"))
+    return _token_stats(spark, sf_dir, vt, "n_tokens_uni")
 
 
 # ---------------------------------------------------------------------------
 # WordPiece tokenizer training (Schuster & Nakajima 2012; BERT's tokenizer)
 # ---------------------------------------------------------------------------
 
-WP_MERGE_ROUNDS = 8
-WP_SCORE_SCALE = 10**12  # quantized likelihood-score grid (BIGINT)
-WP_WALK_STEPS = 24  # static unroll bound for the serving oracle's greedy walk
 
-
-def _wp_chain_sql(k: int, upto_seg: int) -> str:
-    """WITH-clause chain for the WordPiece training oracle — the
-    `_bpe_chain_sql` structure with the ONE algorithmic difference:
-    each round's argmax is the LIKELIHOOD score
-    round(w·10¹² / (f1·f2)), where f1/f2 are the candidate symbols'
-    current weighted corpus frequencies, instead of BPE's raw pair
-    weight. Every multiply-referenced CTE is AS MATERIALIZED (the MMR
-    octave's DuckDB CTE-inlining lesson)."""
-    parts = [
-        """
-    WITH wf AS MATERIALIZED (
-      SELECT word, count(*) AS freq
-      FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-      WHERE word <> '' AND NOT contains(word, chr(31))
-      GROUP BY word
-    ),
-    seg0 AS MATERIALIZED (
-      SELECT word, freq,
-             list_reduce(list_transform(string_split(word, ''),
-                                        c -> chr(31) || c),
-                         (a, b) -> a || b) AS seg
-      FROM wf
-    )"""
-    ]
-    for r in range(1, k + 1):
-        parts.append(
-            f""",
-    csr{r} AS MATERIALIZED (
-      SELECT string_split(substr(seg, 2), chr(31)) AS cs, freq
-      FROM seg{r - 1}
-    ),
-    syms{r} AS MATERIALIZED (
-      SELECT s.sym, CAST(sum(freq) AS BIGINT) AS f
-      FROM csr{r}, LATERAL (SELECT unnest(cs) AS sym) s
-      GROUP BY 1
-    ),
-    pairs{r} AS (
-      SELECT cs[i.i] AS c1, cs[i.i + 1] AS c2, CAST(sum(freq) AS BIGINT) AS w
-      FROM csr{r},
-           LATERAL (SELECT unnest(generate_series(1, len(cs) - 1)) AS i) i
-      GROUP BY 1, 2
-    ),
-    m{r} AS MATERIALIZED (
-      SELECT {r} AS rnd, c1, c2, w AS pair_weight,
-             CAST(round(CAST(w AS DOUBLE) * {WP_SCORE_SCALE}
-                        / (CAST(s1.f AS DOUBLE) * CAST(s2.f AS DOUBLE)))
-                  AS BIGINT) AS score_u
-      FROM pairs{r}
-      JOIN syms{r} s1 ON s1.sym = c1
-      JOIN syms{r} s2 ON s2.sym = c2
-      ORDER BY score_u DESC, c1, c2 LIMIT 1
-    )"""
-        )
-        if r <= upto_seg:
-            parts.append(
-                f""",
-    seg{r} AS MATERIALIZED (
-      SELECT s.word, s.freq,
-             list_reduce(
-               list_transform(string_split(substr(s.seg, 2), chr(31)),
-                              t -> chr(31) || t),
-               (acc, x) -> CASE
-                             WHEN ends_with(acc, chr(31) || m.c1)
-                              AND x = chr(31) || m.c2
-                             THEN acc || m.c2
-                             ELSE acc || x
-                           END) AS seg
-      FROM seg{r - 1} s, m{r} m
-    )"""
-            )
-    return "".join(parts)
-
-
-def _wp_train_oracle(k: int) -> str:
-    union = " UNION ALL ".join(f"SELECT * FROM m{r}" for r in range(1, k + 1))
-    return (
-        _wp_chain_sql(k, upto_seg=k - 1)
-        + f"""
-    SELECT CAST(rnd AS INT) AS rnd, c1, c2, pair_weight, score_u
-    FROM ({union}) ORDER BY rnd
-    """
-    )
-
-
-def _wp_apply_oracle(k: int) -> str:
-    """Serving oracle: GREEDY LONGEST-MATCH segmentation of every vocab
-    word over the trained WordPiece vocabulary (initial chars + the k
-    merged tokens) — precisely the maximal-munch serving algorithm
-    BERT's tokenizer runs. The walk is UNROLLED to WP_WALK_STEPS static
-    join steps instead of a recursive CTE: each greedy step consumes at
-    least one character, so max-word-length steps always terminate (the
-    fixture max is 8; the unroll carries 3× margin), and — the reason
-    for the shape — DuckDB silently evaluates chain-derived CTEs as
-    EMPTY inside a recursive CTE's recursive term (measured: a
-    hardcoded vocab recursed fine, any vocab referencing the merge
-    chain yielded zero matches), so a recursive walk over the trained
-    vocab cannot be expressed. A word needing more steps would miss
-    pos = len(word) and drop from the join — a visible row-count/hash
-    break, never a silent wrong answer. ``ml`` is the per-(word, pos)
-    greedy matched length, a pure join — position-independent, so it
-    can be computed set-wise even though the walk itself is
-    sequential."""
-    steps = []
-    for i in range(1, WP_WALK_STEPS + 1):
-        steps.append(
-            f""",
-    s{i} AS MATERIALIZED (
-      SELECT s.word, s.pos + ml.l AS pos, s.n + 1 AS n
-      FROM s{i - 1} s JOIN ml ON ml.word = s.word AND ml.pos = s.pos
-      WHERE s.pos < len(s.word)
-    )"""
-        )
-    allsteps = " UNION ALL ".join(
-        f"SELECT word, pos, n FROM s{i}" for i in range(0, WP_WALK_STEPS + 1)
-    )
-    return (
-        _wp_chain_sql(k, upto_seg=k - 1)
-        + f""",
-    vocab AS MATERIALIZED (
-      SELECT DISTINCT sym AS piece FROM syms1
-      UNION
-      SELECT c1 || c2 FROM ({" UNION ALL ".join(f"SELECT c1, c2 FROM m{r}" for r in range(1, k + 1))})
-    ),
-    ml AS MATERIALIZED (
-      SELECT wf.word, p.pos, max(len(v.piece)) AS l
-      FROM wf,
-           LATERAL (SELECT unnest(generate_series(0, len(word) - 1)) AS pos) p,
-           vocab v
-      WHERE v.piece = substr(wf.word, p.pos + 1, len(v.piece))
-      GROUP BY 1, 2
-    ),
-    s0 AS (SELECT word, 0 AS pos, 0 AS n FROM wf){"".join(steps)},
-    vt AS MATERIALIZED (
-      SELECT word, n AS n_tok FROM ({allsteps}) WHERE pos = len(word)
-    ),
-    sw AS MATERIALIZED (
-      SELECT source, word, count(*) AS cnt
-      FROM (SELECT source, unnest(string_split(text, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' AND NOT contains(word, chr(31))
-      GROUP BY 1, 2
-    )
-    SELECT sw.source AS source,
-           CAST(sum(sw.cnt) AS BIGINT)                   AS n_words,
-           CAST(sum(sw.cnt * length(sw.word)) AS BIGINT) AS n_chars,
-           CAST(sum(sw.cnt * vt.n_tok) AS BIGINT)        AS n_tokens_wp,
-           round(sum(sw.cnt * length(sw.word)) * 1.0
-                 / sum(sw.cnt * vt.n_tok), 6)            AS chars_per_token,
-           round(sum(sw.cnt * vt.n_tok) * 1.0
-                 / sum(sw.cnt), 6)                       AS tokens_per_word
-    FROM sw JOIN vt USING (word)
-    GROUP BY 1
-    """
-    )
-
-
-def _wp_train(spark: SparkSession, sf_dir: str, k: int):
-    """Run k WordPiece likelihood-greedy merge rounds; returns
-    (merge_rows, vocab_pieces). Structure identical to `_bpe_train`
-    (corpus touched ONCE by the word-frequency agg; every round is
-    vocabulary-scale; driver carries one merge pair per round) — the
-    only change is the argmax: score = pair weight / (f1 · f2), the
-    likelihood gain of the merge under a unigram corpus model, which
-    is WordPiece's published selection rule (Schuster & Nakajima 2012
-    §III: "choose the unit pair that increases the likelihood the
-    most"). Quantized to BIGINT trillionths with the (score, c1, c2)
-    total-order tie-break; ONE double expression from three BIGINTs on
-    both engines."""
-    docs = _docs(spark, sf_dir)
-    wf = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .where((F.col("word") != "") & ~F.contains("word", F.lit(BPE_SEP)))
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-    )
-    seg = wf.select(
-        "word",
-        "freq",
-        F.aggregate(
-            F.filter(F.split("word", ""), lambda c: c != ""),
-            F.lit(""),
-            lambda acc, c: F.concat(acc, F.lit(BPE_SEP), c),
-        ).alias("seg"),
-    ).localCheckpoint(eager=False)
-
-    init_chars = [
-        r.sym
-        for r in seg.select(F.explode(_bpe_symbols()).alias("sym")).distinct().collect()
-    ]  # bounded: the character alphabet
-    rows = []
-    for r in range(1, k + 1):
-        cs = _bpe_symbols()
-        syms = (
-            seg.select("freq", F.explode(cs).alias("sym"))
-            .groupBy("sym")
-            .agg(F.sum("freq").cast("bigint").alias("f"))
-        )
-        pairs = (
-            seg.where(F.size(cs) >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(cs) - 2),
-                        lambda i: F.struct(
-                            F.get(cs, i).alias("c1"),
-                            F.get(cs, i + 1).alias("c2"),
-                        ),
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.c1", "p.c2")
-            .agg(F.sum("freq").cast("bigint").alias("w"))
-        )
-        scored = (
-            pairs.join(F.broadcast(syms.withColumnRenamed("sym", "c1")), "c1")
-            .withColumnRenamed("f", "f1")
-            .join(F.broadcast(syms.withColumnRenamed("sym", "c2")), "c2")
-            .withColumnRenamed("f", "f2")
-            .select(
-                "c1", "c2", "w",
-                F.round(
-                    F.col("w").cast("double") * WP_SCORE_SCALE
-                    / (F.col("f1").cast("double") * F.col("f2").cast("double"))
-                )
-                .cast("bigint")
-                .alias("score_u"),
-            )
-        )
-        top = (
-            scored.orderBy(F.desc("score_u"), F.asc("c1"), F.asc("c2"))
-            .limit(1)
-            .collect()  # bounded: 1 row per round
-        )
-        if not top:
-            break
-        c1, c2 = top[0]["c1"], top[0]["c2"]
-        rows.append((r, c1, c2, int(top[0]["w"]), int(top[0]["score_u"])))
-        seg = seg.select(
-            "word", "freq", _merge_fold(cs, c1, c2).alias("seg")
-        ).localCheckpoint(eager=False)
-    vocab = sorted(set(init_chars) | {c1 + c2 for _, c1, c2, _, _ in rows})
-    return rows, vocab
-
-
-@register("wordpiece_train_merges", oracle=_wp_train_oracle(WP_MERGE_ROUNDS))
+@register(
+    "wordpiece_train_merges",
+    oracle=_train_oracle(WP_MERGE_ROUNDS, likelihood=True, marked=False),
+)
 def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WORDPIECE tokenizer training — the third published tokenizer
     family trained in-engine, completing the set next to greedy
@@ -2231,7 +2208,8 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND current symbol frequencies over the vocabulary) → merge the
     pair maximizing the LIKELIHOOD score w/(f1·f2) — not BPE's raw w —
     → re-segment. The score is the unigram-model likelihood gain of
-    the merge (Schuster & Nakajima 2012), which is why WordPiece
+    the merge (Schuster & Nakajima 2012 §III: "choose the unit pair
+    that increases the likelihood the most"), which is why WordPiece
     prefers a moderately-frequent pair of RARE symbols over a frequent
     pair of ubiquitous ones — the trajectory-divergence pytest plants
     exactly that corpus and checks both trainers' choices. This variant
@@ -2242,406 +2220,56 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: pair weights and symbol frequencies are BIGINT sums;
     the score quantizes once per candidate as
     round(w·10¹²/(f1·f2)) — ONE double expression from three BIGINTs,
-    identically parenthesized cross-engine — and the argmax tie-breaks
-    (score_u DESC, c1, c2), a total order, so the whole k-round
-    trajectory hash-matches DuckDB replaying the same chain.
+    identically parenthesized cross-engine (`_likelihood`) — and the
+    argmax tie-breaks (score_u DESC, c1, c2), a total order, so the
+    whole k-round trajectory hash-matches DuckDB replaying the same
+    chain.
 
-    Scale posture: identical to BPE's — the corpus is read ONCE (the
-    word-frequency shuffle); every round is vocabulary-scale with the
-    bounded symbol-frequency table broadcast onto the pair frame;
-    driver traffic is one merge pair per round; per-round frames are
-    lineage-checkpointed. No reference analog (the closest reference
-    surface is wc's tokenize loop, mrapps/wc.go:21-44)."""
-    rows, _ = _wp_train(spark, sf_dir, WP_MERGE_ROUNDS)
-    return spark.createDataFrame(
-        rows, "rnd int, c1 string, c2 string, pair_weight bigint, score_u bigint"
-    )
+    Scale posture: BPE's loop and dispatch (`_pair_train`) — the corpus
+    is read ONCE (the word-frequency shuffle); the rounds run in the
+    driver when the vocabulary fits catalog.DRIVER_LOCAL_ROWS_MAX, and
+    otherwise as vocabulary-scale Spark rounds with the bounded
+    symbol-frequency table broadcast onto the pair frame, one merge
+    pair of driver traffic and one lineage checkpoint per round. No
+    reference analog (the closest reference surface is wc's tokenize
+    loop, mrapps/wc.go:21-44)."""
+    return _train_merges(spark, sf_dir, WP_MERGE_ROUNDS, likelihood=True, marked=False)
 
 
-@register("wordpiece_apply_token_stats", oracle=_wp_apply_oracle(WP_MERGE_ROUNDS))
+@register(
+    "wordpiece_apply_token_stats",
+    oracle=_apply_oracle(WP_MERGE_ROUNDS, likelihood=True, marked=False),
+)
 def wordpiece_apply_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving path of the trained WordPiece tokenizer — GREEDY
     LONGEST-MATCH (maximal munch), the algorithm BERT's tokenizer runs
     at inference and the published WordPiece serving rule: per word,
     repeatedly emit the longest vocabulary piece that prefixes the
     remaining suffix (vocab = the character alphabet + the k trained
-    merges, so the walk never strands; a real deployment adds [UNK]
-    for out-of-alphabet bytes). Position-BLIND over the flat vocab —
-    the position-aware published form (unmarked pieces at position 0,
-    '##' pieces after) is `wordpiece_apply_marked_stats`. Reports per-source corpus token
-    accounting under that segmentation — the same budget readout as
-    the BPE/unigram apply twins, so the three tokenizer families are
-    directly comparable on chars-per-token over the same corpus.
+    merges, so the walk never strands). Position-BLIND over the flat
+    vocab — the position-aware published form (unmarked pieces at
+    position 0, '##' pieces after) is `wordpiece_apply_marked_stats`.
+    Reports per-source corpus token accounting under that segmentation
+    — the same budget readout as the BPE/unigram apply twins, so the
+    three tokenizer families are directly comparable on
+    chars-per-token over the same corpus.
 
-    The serving trick is shared with `bpe_apply_token_stats`:
-    tokenization runs on the VOCABULARY (distinct words) via a
-    mapInPandas greedy matcher against the broadcast trained vocab,
-    and the corpus contributes only a per-(source, word) count joined
-    against the segmented vocab. The oracle replays maximal munch as a
-    linear recursive walk — one successor per (word, pos) — so the
-    greedy semantics, not just the counts, are cross-checked.
-
-    Scale posture: one corpus scan (the per-source word count), one
-    vocabulary mapInPandas pass with a ≤(alphabet+k)-entry broadcast
-    dict, one broadcast join. Ratios are 6-dp rounds of exact-BIGINT
-    quotients."""
-    import pandas as pd  # noqa: F401  (imported for the closure)
-
-    from minimapreduce_spark._pickle import register_self_by_value
-
-    register_self_by_value()
-    _, vocab = _wp_train(spark, sf_dir, WP_MERGE_ROUNDS)
-    if not vocab:
-        # Degenerate-input policy: empty corpus → empty accounting
-        return spark.createDataFrame(
-            [],
-            "source string, n_words bigint, n_chars bigint, n_tokens_wp bigint, "
-            "chars_per_token double, tokens_per_word double",
-        )
-    max_len = max(len(p) for p in vocab)
-    vocab_bc = spark.sparkContext.broadcast(frozenset(vocab))
-
-    def tokenize(batches):
-        import pandas as pd
-
-        vs = vocab_bc.value
-        for pdf in batches:
-            n_toks = []
-            for word in pdf["word"]:
-                pos, n = 0, 0
-                while pos < len(word):
-                    for L in range(min(max_len, len(word) - pos), 0, -1):
-                        if word[pos : pos + L] in vs:
-                            pos += L
-                            n += 1
-                            break
-                    else:  # unreachable: all single chars are in vocab
-                        pos += 1
-                        n += 1
-                n_toks.append(n)
-            yield pd.DataFrame({"word": pdf["word"], "n_tok": n_toks})
-
-    docs = _docs(spark, sf_dir)
-    wf = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .where((F.col("word") != "") & ~F.contains("word", F.lit(BPE_SEP)))
-        .distinct()
-    )
-    vt = wf.mapInPandas(tokenize, "word string, n_tok long")
-    sw = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("word"))
-        .where((F.col("word") != "") & ~F.contains("word", F.lit(BPE_SEP)))
-        .groupBy("source", "word")
-        .agg(F.count("*").alias("cnt"))
-    )
-    j = sw.join(F.broadcast(vt), "word")
-    return j.groupBy("source").agg(
-        F.sum("cnt").cast("bigint").alias("n_words"),
-        F.sum(F.col("cnt") * F.length("word")).cast("bigint").alias("n_chars"),
-        F.sum(F.col("cnt") * F.col("n_tok")).cast("bigint").alias("n_tokens_wp"),
-        F.round(
-            F.sum(F.col("cnt") * F.length("word"))
-            * 1.0
-            / F.sum(F.col("cnt") * F.col("n_tok")),
-            6,
-        ).alias("chars_per_token"),
-        F.round(
-            F.sum(F.col("cnt") * F.col("n_tok")) * 1.0 / F.sum("cnt"), 6
-        ).alias("tokens_per_word"),
+    Tokenization runs on the VOCABULARY (distinct words) via one
+    mapInPandas greedy matcher against the broadcast trained pieces
+    (`_greedy_token_counts`); the corpus contributes only a
+    per-(source, word) count joined against it. The oracle replays
+    maximal munch as a statically unrolled walk — one successor per
+    (word, pos) — so the greedy semantics, not just the counts, are
+    cross-checked."""
+    return _apply_token_stats(
+        spark, sf_dir, WP_MERGE_ROUNDS, likelihood=True, marked=False
     )
 
 
-# ---------------------------------------------------------------------------
-# WordPiece with POSITION-MARKED continuation symbols — the published form.
-#
-# The unmarked pair above ("wordpiece_train_merges"/"..._apply_token_stats")
-# trains on one flat alphabet, conflating word-initial and continuation
-# occurrences of the same character — a documented fidelity gap. The
-# published algorithm (Schuster & Nakajima 2012; the BERT tokenizer)
-# position-marks continuation symbols with "##": "abc"
-# segments as [a, ##b, ##c], so "a" word-initial and "##a" mid-word are
-# DISTINCT vocabulary units with independent frequencies, merges preserve
-# the left symbol's marking (c1 + strip_##(c2)), and serving's greedy
-# longest match is position-aware (unmarked pieces match only at pos 0,
-# ##-pieces only at pos > 0).
-#
-# Scoping: words containing a literal '#' are excluded from training and
-# accounting (both engines), exactly like the BPE_SEP exclusion — otherwise
-# a corpus word starting with '#' could mint an UNMARKED piece that is
-# string-identical to a marked one and corrupt the position classes.
-
-WP_MARK = "##"
-
-
-def _wpm_chain_sql(k: int, upto_seg: int) -> str:
-    """WITH-clause chain for the MARKED WordPiece training oracle —
-    `_wp_chain_sql` with the published position discipline: seg0 marks
-    every non-initial character with '##' (via list_reduce from the raw
-    first char, so no positional lambda is needed), and each round's
-    re-segmentation concatenates c1 with substr(c2, 3) — the merge
-    output keeps c1's marking and drops c2's, which is always present
-    because a right-neighbour symbol is by construction mid-word."""
-    parts = [
-        """
-    WITH wf AS MATERIALIZED (
-      SELECT word, count(*) AS freq
-      FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-      WHERE word <> '' AND NOT contains(word, chr(31))
-        AND NOT contains(word, '#')
-      GROUP BY word
-    ),
-    seg0 AS MATERIALIZED (
-      SELECT word, freq,
-             chr(31) || list_reduce(string_split(word, ''),
-                                    (a, b) -> a || chr(31) || '##' || b) AS seg
-      FROM wf
-    )"""
-    ]
-    for r in range(1, k + 1):
-        parts.append(
-            f""",
-    csr{r} AS MATERIALIZED (
-      SELECT string_split(substr(seg, 2), chr(31)) AS cs, freq
-      FROM seg{r - 1}
-    ),
-    syms{r} AS MATERIALIZED (
-      SELECT s.sym, CAST(sum(freq) AS BIGINT) AS f
-      FROM csr{r}, LATERAL (SELECT unnest(cs) AS sym) s
-      GROUP BY 1
-    ),
-    pairs{r} AS (
-      SELECT cs[i.i] AS c1, cs[i.i + 1] AS c2, CAST(sum(freq) AS BIGINT) AS w
-      FROM csr{r},
-           LATERAL (SELECT unnest(generate_series(1, len(cs) - 1)) AS i) i
-      GROUP BY 1, 2
-    ),
-    m{r} AS MATERIALIZED (
-      SELECT {r} AS rnd, c1, c2, w AS pair_weight,
-             CAST(round(CAST(w AS DOUBLE) * {WP_SCORE_SCALE}
-                        / (CAST(s1.f AS DOUBLE) * CAST(s2.f AS DOUBLE)))
-                  AS BIGINT) AS score_u
-      FROM pairs{r}
-      JOIN syms{r} s1 ON s1.sym = c1
-      JOIN syms{r} s2 ON s2.sym = c2
-      ORDER BY score_u DESC, c1, c2 LIMIT 1
-    )"""
-        )
-        if r <= upto_seg:
-            parts.append(
-                f""",
-    seg{r} AS MATERIALIZED (
-      SELECT s.word, s.freq,
-             list_reduce(
-               list_transform(string_split(substr(s.seg, 2), chr(31)),
-                              t -> chr(31) || t),
-               (acc, x) -> CASE
-                             WHEN ends_with(acc, chr(31) || m.c1)
-                              AND x = chr(31) || m.c2
-                             THEN acc || substr(m.c2, 3)
-                             ELSE acc || x
-                           END) AS seg
-      FROM seg{r - 1} s, m{r} m
-    )"""
-            )
-    return "".join(parts)
-
-
-def _wpm_train_oracle(k: int) -> str:
-    union = " UNION ALL ".join(f"SELECT * FROM m{r}" for r in range(1, k + 1))
-    return (
-        _wpm_chain_sql(k, upto_seg=k - 1)
-        + f"""
-    SELECT CAST(rnd AS INT) AS rnd, c1, c2, pair_weight, score_u
-    FROM ({union}) ORDER BY rnd
-    """
-    )
-
-
-def _wpm_apply_oracle(k: int) -> str:
-    """Serving oracle for the MARKED vocabulary: greedy longest match
-    where position classes are enforced in the `ml` join — an unmarked
-    piece may match only at pos 0, a ##-piece only at pos > 0 (its raw
-    surface is substr(piece, 3), its consumed length len(piece) − 2).
-    The '#'-word exclusion guarantees `LIKE '##%'` is an unambiguous
-    continuation test. Walk unrolled to WP_WALK_STEPS static steps as
-    in `_wp_apply_oracle` (chain-derived CTEs evaluate empty inside
-    DuckDB recursive terms — measured, documented there)."""
-    steps = []
-    for i in range(1, WP_WALK_STEPS + 1):
-        steps.append(
-            f""",
-    s{i} AS MATERIALIZED (
-      SELECT s.word, s.pos + ml.l AS pos, s.n + 1 AS n
-      FROM s{i - 1} s JOIN ml ON ml.word = s.word AND ml.pos = s.pos
-      WHERE s.pos < len(s.word)
-    )"""
-        )
-    allsteps = " UNION ALL ".join(
-        f"SELECT word, pos, n FROM s{i}" for i in range(0, WP_WALK_STEPS + 1)
-    )
-    merged = " UNION ALL ".join(
-        f"SELECT c1, c2 FROM m{r}" for r in range(1, k + 1)
-    )
-    return (
-        _wpm_chain_sql(k, upto_seg=k - 1)
-        + f""",
-    vocab AS MATERIALIZED (
-      SELECT DISTINCT sym AS piece FROM syms1
-      UNION
-      SELECT c1 || substr(c2, 3) FROM ({merged})
-    ),
-    ml AS MATERIALIZED (
-      SELECT wf.word, p.pos,
-             max(CASE WHEN v.piece LIKE '##%'
-                      THEN len(v.piece) - 2 ELSE len(v.piece) END) AS l
-      FROM wf,
-           LATERAL (SELECT unnest(generate_series(0, len(word) - 1)) AS pos) p,
-           vocab v
-      WHERE (p.pos = 0 AND v.piece NOT LIKE '##%'
-             AND v.piece = substr(wf.word, 1, len(v.piece)))
-         OR (p.pos > 0 AND v.piece LIKE '##%'
-             AND substr(v.piece, 3)
-                 = substr(wf.word, p.pos + 1, len(v.piece) - 2))
-      GROUP BY 1, 2
-    ),
-    s0 AS (SELECT word, 0 AS pos, 0 AS n FROM wf){"".join(steps)},
-    vt AS MATERIALIZED (
-      SELECT word, n AS n_tok FROM ({allsteps}) WHERE pos = len(word)
-    ),
-    sw AS MATERIALIZED (
-      SELECT source, word, count(*) AS cnt
-      FROM (SELECT source, unnest(string_split(text, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' AND NOT contains(word, chr(31))
-        AND NOT contains(word, '#')
-      GROUP BY 1, 2
-    )
-    SELECT sw.source AS source,
-           CAST(sum(sw.cnt) AS BIGINT)                   AS n_words,
-           CAST(sum(sw.cnt * length(sw.word)) AS BIGINT) AS n_chars,
-           CAST(sum(sw.cnt * vt.n_tok) AS BIGINT)        AS n_tokens_wp,
-           round(sum(sw.cnt * length(sw.word)) * 1.0
-                 / sum(sw.cnt * vt.n_tok), 6)            AS chars_per_token,
-           round(sum(sw.cnt * vt.n_tok) * 1.0
-                 / sum(sw.cnt), 6)                       AS tokens_per_word
-    FROM sw JOIN vt USING (word)
-    GROUP BY 1
-    """
-    )
-
-
-def _wpm_words(docs: DataFrame, with_source: bool = False) -> DataFrame:
-    """Corpus words admissible for marked-WordPiece training: non-empty,
-    no BPE_SEP, no literal '#' (the marking character)."""
-    cols = (["source"] if with_source else []) + [
-        F.explode(F.split("text", " ")).alias("word")
-    ]
-    return docs.select(*cols).where(
-        (F.col("word") != "")
-        & ~F.contains("word", F.lit(BPE_SEP))
-        & ~F.contains("word", F.lit("#"))
-    )
-
-
-def _wpm_train(spark: SparkSession, sf_dir: str, k: int):
-    """k marked-WordPiece merge rounds; returns (merge_rows, vocab).
-    Identical shape to `_wp_train` (corpus read ONCE; vocabulary-scale
-    rounds; one merge pair of driver traffic per round) with the
-    position discipline: seg0 prefixes every non-initial character with
-    '##' and each merge emits c1 + c2[2:] so markings propagate the way
-    the published algorithm defines. vocab = the marked alphabet plus
-    the k merged tokens — each entry either word-initial (unmarked) or
-    a '##' continuation piece."""
-    docs = _docs(spark, sf_dir)
-    wf = _wpm_words(docs).groupBy("word").agg(F.count("*").alias("freq"))
-    chars = F.filter(F.split("word", ""), lambda c: c != "")
-    seg = wf.select(
-        "word",
-        "freq",
-        F.concat(
-            F.lit(BPE_SEP),
-            F.aggregate(
-                F.slice(chars, 2, F.greatest(F.size(chars) - 1, F.lit(0))),
-                F.element_at(chars, 1),
-                lambda acc, c: F.concat(acc, F.lit(BPE_SEP + WP_MARK), c),
-            ),
-        ).alias("seg"),
-    ).localCheckpoint(eager=False)
-
-    init_syms = [
-        r.sym
-        for r in seg.select(F.explode(_bpe_symbols()).alias("sym")).distinct().collect()
-    ]  # bounded: ≤ 2× the character alphabet (initial + marked forms)
-    rows = []
-    merged_tokens = []
-    for r in range(1, k + 1):
-        cs = _bpe_symbols()
-        syms = (
-            seg.select("freq", F.explode(cs).alias("sym"))
-            .groupBy("sym")
-            .agg(F.sum("freq").cast("bigint").alias("f"))
-        )
-        pairs = (
-            seg.where(F.size(cs) >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(cs) - 2),
-                        lambda i: F.struct(
-                            F.get(cs, i).alias("c1"),
-                            F.get(cs, i + 1).alias("c2"),
-                        ),
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.c1", "p.c2")
-            .agg(F.sum("freq").cast("bigint").alias("w"))
-        )
-        scored = (
-            pairs.join(F.broadcast(syms.withColumnRenamed("sym", "c1")), "c1")
-            .withColumnRenamed("f", "f1")
-            .join(F.broadcast(syms.withColumnRenamed("sym", "c2")), "c2")
-            .withColumnRenamed("f", "f2")
-            .select(
-                "c1", "c2", "w",
-                F.round(
-                    F.col("w").cast("double") * WP_SCORE_SCALE
-                    / (F.col("f1").cast("double") * F.col("f2").cast("double"))
-                )
-                .cast("bigint")
-                .alias("score_u"),
-            )
-        )
-        top = (
-            scored.orderBy(F.desc("score_u"), F.asc("c1"), F.asc("c2"))
-            .limit(1)
-            .collect()  # bounded: 1 row per round
-        )
-        if not top:
-            break
-        c1, c2 = top[0]["c1"], top[0]["c2"]
-        rows.append((r, c1, c2, int(top[0]["w"]), int(top[0]["score_u"])))
-        tail = c2[len(WP_MARK):]  # c2 is mid-word by construction
-        merged_tokens.append(c1 + tail)
-        seg = seg.select(
-            "word",
-            "freq",
-            F.aggregate(
-                F.transform(cs, lambda s: F.concat(F.lit(BPE_SEP), s)),
-                F.lit(""),
-                lambda acc, x: F.when(
-                    F.endswith(acc, F.lit(BPE_SEP + c1))
-                    & (x == F.lit(BPE_SEP + c2)),
-                    F.concat(acc, F.lit(tail)),
-                ).otherwise(F.concat(acc, x)),
-            ).alias("seg"),
-        ).localCheckpoint(eager=False)
-    vocab = sorted(set(init_syms) | set(merged_tokens))
-    return rows, vocab
-
-
-@register("wordpiece_train_marked", oracle=_wpm_train_oracle(WP_MERGE_ROUNDS))
+@register(
+    "wordpiece_train_marked",
+    oracle=_train_oracle(WP_MERGE_ROUNDS, likelihood=True, marked=True),
+)
 def wordpiece_train_marked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordPiece training with POSITION-MARKED continuation symbols —
     the published algorithm's full fidelity (Schuster & Nakajima 2012;
@@ -2659,24 +2287,19 @@ def wordpiece_train_marked(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights and symbol frequencies, ONE double expression
     round(w·10¹²/(f1·f2)) per candidate, (score_u DESC, c1, c2) total
     order — so the k-round trajectory hash-matches DuckDB replaying the
-    same chain (`_wpm_chain_sql`). Words containing '#' are excluded on
-    both engines: '#' is the marking character, and an unmarked piece
-    starting with '#' would be indistinguishable from a marked one.
+    same chain. Words containing '#' are excluded on both engines: '#'
+    is the marking character, and an unmarked piece starting with '#'
+    would be indistinguishable from a marked one.
 
-    Scale posture: unchanged from the twin — corpus read ONCE by the
-    word-frequency agg; every round vocabulary-scale with the bounded
-    symbol table broadcast onto the pair frame; one merge pair of
-    driver traffic per round; per-round lineage checkpoints. The marked
-    alphabet is ≤2× the raw one — a constant factor on bounded frames.
-    No reference analog (closest surface: wc's tokenize loop,
-    mrapps/wc.go:21-44)."""
-    rows, _ = _wpm_train(spark, sf_dir, WP_MERGE_ROUNDS)
-    return spark.createDataFrame(
-        rows, "rnd int, c1 string, c2 string, pair_weight bigint, score_u bigint"
-    )
+    Scale posture: unchanged from the twin; the marked alphabet is ≤2×
+    the raw one — a constant factor on bounded frames."""
+    return _train_merges(spark, sf_dir, WP_MERGE_ROUNDS, likelihood=True, marked=True)
 
 
-@register("wordpiece_apply_marked_stats", oracle=_wpm_apply_oracle(WP_MERGE_ROUNDS))
+@register(
+    "wordpiece_apply_marked_stats",
+    oracle=_apply_oracle(WP_MERGE_ROUNDS, likelihood=True, marked=True),
+)
 def wordpiece_apply_marked_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving path of the MARKED WordPiece vocabulary — position-aware
     greedy longest match, exactly BERT's inference tokenizer: at word
@@ -2690,84 +2313,6 @@ def wordpiece_apply_marked_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     other tokenizer-family apply queries, so marked WordPiece is
     directly comparable on chars-per-token over the same corpus.
 
-    Serving trick shared with the family: tokenization runs on the
-    VOCABULARY (distinct words) via mapInPandas against two broadcast
-    frozensets (word-initial pieces raw; continuation pieces by their
-    unmarked surface), and the corpus contributes only a per-(source,
-    word) count broadcast-joined against the segmented vocab. The walk
-    never strands: serving re-tokenizes the training corpus's own
-    vocabulary, so every character occurs in its position class in the
-    marked alphabet. The oracle replays the walk as WP_WALK_STEPS
-    static unrolled join steps with the position classes enforced in
-    the match join (`_wpm_apply_oracle`).
-
-    Scale posture: one corpus scan, one vocabulary mapInPandas pass
-    with a ≤(2·alphabet+k)-entry broadcast, one broadcast join; ratios
-    are 6-dp rounds of exact-BIGINT quotients."""
-    import pandas as pd  # noqa: F401  (imported for the closure)
-
-    from minimapreduce_spark._pickle import register_self_by_value
-
-    register_self_by_value()
-    _, vocab = _wpm_train(spark, sf_dir, WP_MERGE_ROUNDS)
-    if not vocab:
-        # Degenerate-input policy: empty corpus → empty accounting
-        return spark.createDataFrame(
-            [],
-            "source string, n_words bigint, n_chars bigint, n_tokens_wp bigint, "
-            "chars_per_token double, tokens_per_word double",
-        )
-    init_pieces = frozenset(p for p in vocab if not p.startswith(WP_MARK))
-    cont_pieces = frozenset(
-        p[len(WP_MARK):] for p in vocab if p.startswith(WP_MARK)
-    )
-    max_init = max((len(p) for p in init_pieces), default=0)
-    max_cont = max((len(p) for p in cont_pieces), default=0)
-    vocab_bc = spark.sparkContext.broadcast(
-        (init_pieces, cont_pieces, max_init, max_cont)
-    )
-
-    def tokenize(batches):
-        import pandas as pd
-
-        init_v, cont_v, mi, mc = vocab_bc.value
-        for pdf in batches:
-            n_toks = []
-            for word in pdf["word"]:
-                pos, n = 0, 0
-                while pos < len(word):
-                    vs, cap = (init_v, mi) if pos == 0 else (cont_v, mc)
-                    for L in range(min(cap, len(word) - pos), 0, -1):
-                        if word[pos : pos + L] in vs:
-                            pos += L
-                            n += 1
-                            break
-                    else:  # unreachable on the training corpus's vocab
-                        pos += 1
-                        n += 1
-                n_toks.append(n)
-            yield pd.DataFrame({"word": pdf["word"], "n_tok": n_toks})
-
-    docs = _docs(spark, sf_dir)
-    wf = _wpm_words(docs).distinct()
-    vt = wf.mapInPandas(tokenize, "word string, n_tok long")
-    sw = (
-        _wpm_words(docs, with_source=True)
-        .groupBy("source", "word")
-        .agg(F.count("*").alias("cnt"))
-    )
-    j = sw.join(F.broadcast(vt), "word")
-    return j.groupBy("source").agg(
-        F.sum("cnt").cast("bigint").alias("n_words"),
-        F.sum(F.col("cnt") * F.length("word")).cast("bigint").alias("n_chars"),
-        F.sum(F.col("cnt") * F.col("n_tok")).cast("bigint").alias("n_tokens_wp"),
-        F.round(
-            F.sum(F.col("cnt") * F.length("word"))
-            * 1.0
-            / F.sum(F.col("cnt") * F.col("n_tok")),
-            6,
-        ).alias("chars_per_token"),
-        F.round(
-            F.sum(F.col("cnt") * F.col("n_tok")) * 1.0 / F.sum("cnt"), 6
-        ).alias("tokens_per_word"),
-    )
+    Same server and oracle walk as the unmarked twin, with the position
+    classes enforced (`_greedy_token_counts`, `_apply_oracle`)."""
+    return _apply_token_stats(spark, sf_dir, WP_MERGE_ROUNDS, likelihood=True, marked=True)

@@ -65,6 +65,16 @@ def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the same user in the preceding hour. Watermarks on both sides +
     the time-range join condition let Spark evict buffered rows once
     they can no longer match — bounded state on an unbounded stream."""
+    return _view_purchase_join(spark, sf_dir, "inner")
+
+
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The view/purchase stream-stream join under ``how`` ("inner",
+    "leftOuter" or "fullOuter"), drained: views and purchases are two
+    filtered replays of the events stream, each watermarked 2 h, and a
+    purchase matches the same user's views of the preceding hour. The
+    range condition tells Spark how long a buffered row can still match,
+    so both buffers are evicted once the watermark passes it."""
     views = (
         events_stream(spark, sf_dir)
         .where(F.col("event_type") == "view")
@@ -94,10 +104,12 @@ def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             AND purchase_ts <= view_ts + INTERVAL 1 HOUR
             """
         ),
+        how,
     )
     out = run_to_memory(joined, "append")
     return out.select(
-        "user_id",
+        # an unmatched purchase of the full outer join has no view user_id
+        F.coalesce("user_id", "p_user_id").alias("user_id"),
         "view_id",
         "purchase_id",
         F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
@@ -299,9 +311,10 @@ def stream_exactly_once_watermarked(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@register(
-    "stream_left_outer_views",
-    oracle="""
+# The left-outer emission contract over a drained finite replay:
+# matched pairs plus the unmatched views the global watermark has
+# finalized. The full-outer oracle appends the unmatched purchases.
+_LEFT_OUTER_ORACLE = """
     WITH v AS (
       SELECT user_id, event_id AS view_id, ts AS view_ts
       FROM events WHERE event_type = 'view'
@@ -339,8 +352,10 @@ def stream_exactly_once_watermarked(spark: SparkSession, sf_dir: str) -> DataFra
         AND p.purchase_ts <= v.view_ts + INTERVAL 1 HOUR
     )
     AND v.view_ts + INTERVAL 1 HOUR < m.wm
-    """,
-)
+"""
+
+
+@register("stream_left_outer_views", oracle=_LEFT_OUTER_ORACLE)
 def stream_left_outer_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER join — the missing join semantic after
     the inner twin (`stream_view_purchase_join`): every view emits,
@@ -368,88 +383,13 @@ def stream_left_outer_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-emission adds no state, only an eviction-time emission. At
     100 TB the watermark delay is the single knob trading completeness
     against state size and result latency."""
-    views = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id
-            AND purchase_ts >= view_ts
-            AND purchase_ts <= view_ts + INTERVAL 1 HOUR
-            """
-        ),
-        "leftOuter",
-    )
-    out = run_to_memory(joined, "append")
-    return out.select(
-        "user_id",
-        "view_id",
-        "purchase_id",
-        F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
-        F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
-    )
+    return _view_purchase_join(spark, sf_dir, "leftOuter")
 
 
 @register(
     "stream_full_outer_view_purchase",
-    oracle="""
-    WITH v AS (
-      SELECT user_id, event_id AS view_id, ts AS view_ts
-      FROM events WHERE event_type = 'view'
-    ),
-    p AS (
-      SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-      FROM events WHERE event_type = 'purchase'
-    ),
-    m AS (
-      -- the GLOBAL watermark: Spark's multi-watermark policy is the
-      -- MIN across inputs, each computed on its own filtered stream —
-      -- with each side's max FLOORED TO MILLISECONDS first (Spark
-      -- tracks watermarks in ms; on a µs-grained fixture an unfloored
-      -- max would finalize rows Spark still withholds — the
-      -- stream_sessions_timer_finalized oracle's discipline)
-      SELECT least(
-               make_timestamp((epoch_us((SELECT max(view_ts) FROM v))
-                               // 1000) * 1000),
-               make_timestamp((epoch_us((SELECT max(purchase_ts) FROM p))
-                               // 1000) * 1000)
-             ) - INTERVAL 2 HOUR AS wm
-    )
-    SELECT v.user_id, v.view_id, p.purchase_id, v.view_ts, p.purchase_ts
-    FROM v JOIN p
-      ON v.user_id = p.user_id
-     AND p.purchase_ts >= v.view_ts
-     AND p.purchase_ts <= v.view_ts + INTERVAL 1 HOUR
-    UNION ALL
-    SELECT v.user_id, v.view_id, NULL, v.view_ts, NULL
-    FROM v, m
-    WHERE NOT EXISTS (
-      SELECT 1 FROM p
-      WHERE p.user_id = v.user_id
-        AND p.purchase_ts >= v.view_ts
-        AND p.purchase_ts <= v.view_ts + INTERVAL 1 HOUR
-    )
-    AND v.view_ts + INTERVAL 1 HOUR < m.wm
-    UNION ALL
+    oracle=_LEFT_OUTER_ORACLE
+    + """    UNION ALL
     SELECT p.user_id, NULL, p.purchase_id, NULL, p.purchase_ts
     FROM p, m
     WHERE NOT EXISTS (
@@ -496,42 +436,4 @@ def stream_full_outer_view_purchase(spark: SparkSession, sf_dir: str) -> DataFra
     finalized-unmatched sets, each row emitted exactly once. At 100 TB
     the watermark delay remains the single completeness/state/latency
     knob."""
-    views = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id
-            AND purchase_ts >= view_ts
-            AND purchase_ts <= view_ts + INTERVAL 1 HOUR
-            """
-        ),
-        "fullOuter",
-    )
-    out = run_to_memory(joined, "append")
-    return out.select(
-        F.coalesce("user_id", "p_user_id").alias("user_id"),
-        "view_id",
-        "purchase_id",
-        F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
-        F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
-    )
+    return _view_purchase_join(spark, sf_dir, "fullOuter")

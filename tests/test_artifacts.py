@@ -517,6 +517,56 @@ def test_root_keys_and_family_reads_defined_once():
     assert paths == [], paths
 
 
+def test_pair_merge_tokenizer_defined_once():
+    """The three pair-merge tokenizers (BPE, WordPiece, marked
+    WordPiece) share one trainer, one oracle chain, one greedy server
+    and one token budget in ``operators/text_analysis.py``:
+    ``WP_SCORE_SCALE`` is read by one Column expression and one SQL
+    template, the ``tokens_per_word`` alias is built once as a Column
+    and once in SQL, and ``mapInPandas`` is called by the greedy server
+    and the unigram Viterbi only."""
+    import ast
+
+    nodes = [
+        (name, node)
+        for rel, name, node in _engine_nodes()
+        if rel == "operators/text_analysis.py"
+    ]
+    in_sql = {
+        inner
+        for _name, node in nodes
+        if isinstance(node, ast.JoinedStr)
+        for inner in ast.walk(node)
+    }
+    scale_col, scale_sql, alias_col, alias_sql, map_in_pandas = [], [], [], [], []
+    for name, node in nodes:
+        if (
+            isinstance(node, ast.Name)
+            and node.id == "WP_SCORE_SCALE"
+            and isinstance(node.ctx, ast.Load)
+        ):
+            (scale_sql if node in in_sql else scale_col).append(name)
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "AS tokens_per_word" in node.value
+        ):
+            alias_sql.append(name)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if node.func.attr == "alias" and any(
+                isinstance(a, ast.Constant) and a.value == "tokens_per_word"
+                for a in node.args
+            ):
+                alias_col.append(name)
+            if node.func.attr == "mapInPandas":
+                map_in_pandas.append(name)
+    assert len(scale_col) == 1 and len(scale_sql) == 1, (scale_col, scale_sql)
+    assert len(alias_col) == 1 and len(alias_sql) == 1, (alias_col, alias_sql)
+    assert sorted(map_in_pandas) == ["_greedy_token_counts", "_uni_segment"], (
+        map_in_pandas
+    )
+
+
 _ROOT_INPUTS = {
     "minhash": ("documents",),
     "ivfpq": ("embeddings",),

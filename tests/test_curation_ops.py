@@ -4,6 +4,7 @@ oracle hash (which tests/test_oracle_sweep.py covers automatically)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from tests.conftest import SF_DIR
 
@@ -394,21 +395,31 @@ def test_bpe_merge_is_greedy_left_to_right_on_repeats(spark, tmp_path):
     assert (rows[1].c1, rows[1].c2, rows[1].weight) == ("aa", "aa", 7)
 
 
-def test_bpe_local_and_distributed_kernels_agree(spark, monkeypatch):
+@pytest.mark.parametrize(
+    "likelihood, marked",
+    [(False, False), (True, False), (True, True)],
+    ids=["bpe", "wordpiece", "wordpiece_marked"],
+)
+def test_bpe_local_and_distributed_kernels_agree(spark, monkeypatch, likelihood, marked):
     """The adaptive dispatch (driver-local merge rounds when the
     vocabulary fits catalog.DRIVER_LOCAL_ROWS_MAX) must be bit-identical
-    to the distributed per-round loop — same merge table (pairs AND
-    weights, in training order) and same final segmentations — the
-    dedup_clusters_adaptive twin-equality discipline."""
+    to the distributed per-round loop under every score rule and
+    marking — same merge table (pairs, weights and WordPiece scores, in
+    training order), same final segmentations and same trained pieces —
+    the dedup_clusters_adaptive twin-equality discipline."""
     import minimapreduce_spark.operators.text_analysis as ta
     from minimapreduce_spark import catalog
 
-    rows_local, seg_local = ta._bpe_train(spark, SF_DIR, ta.BPE_MERGE_ROUNDS)
-    local_seg_rows = sorted(map(tuple, seg_local.collect()))
+    def train():
+        rows, seg, pieces = ta._pair_train(
+            spark, SF_DIR, ta.BPE_MERGE_ROUNDS, likelihood, marked
+        )
+        return rows, sorted(map(tuple, seg.collect())), pieces
+
+    local = train()
     monkeypatch.setattr(catalog, "DRIVER_LOCAL_ROWS_MAX", -1)  # force distributed
-    rows_dist, seg_dist = ta._bpe_train(spark, SF_DIR, ta.BPE_MERGE_ROUNDS)
-    assert rows_local == rows_dist
-    assert local_seg_rows == sorted(map(tuple, seg_dist.collect()))
+    assert local == train()
+    assert len(local[0]) == ta.BPE_MERGE_ROUNDS
 
 
 def test_bpe_train_weights_nonincreasing_and_apply_reconciles(spark):

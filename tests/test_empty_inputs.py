@@ -51,6 +51,10 @@ REPRESENTATIVE = [
     "sample_dsir_importance_topk",
     "bpe_train_merges",
     "unigram_train_pieces",
+    # the BPE and unigram apply queries: an empty corpus trains an
+    # empty vocabulary and serves an empty accounting
+    "bpe_apply_token_stats",
+    "unigram_apply_token_stats",
     "ann_ivfpq_nprobe_topk",
     "agg_salted_hotkey_planted",
     "sketch_kmv_set_ops",
@@ -80,7 +84,7 @@ REPRESENTATIVE = [
     "retrieval_eval_ivf",
     "retrieval_eval_ivfpq",
     # marked WordPiece (empty corpus → empty
-    # merge table / empty accounting, via the degenerate-vocab guard);
+    # merge table / empty accounting, with no guard of its own);
     # band-index probe (empty corpus → no index, early empty frame)
     "wordpiece_train_marked",
     "wordpiece_apply_marked_stats",
