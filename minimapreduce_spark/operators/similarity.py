@@ -1,17 +1,32 @@
 """Similarity search over the ``embeddings`` table (north-star surface).
 
-Two paths:
-- ``ann_cosine_topk``  — brute-force cosine top-k (the correctness
-  baseline: every query scores every vector)
-- ``ann_ivf_topk``     — IVF-style partition-pruned search: coarse
-  centroids (here: per-``label`` means), route each query to its
-  nearest centroid, scan only that partition — the 100 TB shape, where
-  the scan cost drops by the number of partitions.
+Every query is composed from a few vector-search steps, each written
+once as a Spark plan and once as its DuckDB oracle SQL:
 
-All vector math is built-in expression trees (``zip_with`` +
-``aggregate``) on ``array<double>`` — JVM-side, codegen'd, no Python.
-Similarities are rounded to 6 dp before ranking in BOTH engines so FP
-summation-order noise can't flip a rank; ties break on vec_id.
+- query side: ``_queries`` (vec_id < N_QUERIES as ``q_vec_id``);
+- route to a partition: the float coarse quantizer ``_ivf_centroids``
+  (per-``label`` mean centroids) and one router, ``_ivf_route`` /
+  ``_ivf_route_sql``, that sends each point to its ``nprobe`` nearest
+  cells — queries (``_ivf_cell_sims`` / ``_ivf_sims_sql``, which also
+  score inside the routed cells) and corpus vectors (``_ivf_assign``)
+  alike;
+- cut the per-query top-k: ``_top_k`` / ``_top_k_sql``, row_number over
+  (partition, score desc, id asc) <= k — every rank window of the
+  module; ``_brute_topk`` / ``_brute_sims_sql`` are the exact float
+  baseline;
+- the integer grid: ``_grid`` / ``_EQ_SQL`` put vectors on the 1e-4
+  grid, ``_dim_mean`` / ``_floor_mean_sql`` take exact-floor means
+  (Lloyd updates, IVF-PQ cell centroids) and ``_lloyd_sql`` unrolls
+  the Lloyd rounds;
+- PQ/ADC: ``_split`` / ``_split_sql`` (PQ_M subvectors), the BIGINT
+  folds (``_fold_sum``, ``_dot_i``, ``_n2_i``, ``_code_fold``), the
+  per-query LUT (``_lut``) and the exact-integer cosine ``_int_cos``.
+
+The rounding rule holds for every query: float similarities are
+rounded to 6 dp before any ranking, ties break on ``vec_id`` (the
+row's id), and integer math runs on the 1e-4 grid, where it is exact
+in both engines. FP summation-order noise therefore cannot flip a
+rank, and the oracles hash-match rather than approximate.
 """
 
 from __future__ import annotations
@@ -38,6 +53,7 @@ from minimapreduce_spark.registry import register
 N_QUERIES = 20  # vec_id < 20 are the query vectors
 TOP_K = 10
 IVF_TOP_K = 5
+KMEANS_SCALE = 10000  # fixed-point 1e-4 grid for exact cross-engine math
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -52,6 +68,9 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
+    """Σaᵢbᵢ / (√Σaᵢaᵢ · √Σbᵢbᵢ) as left-to-right folds — the summation
+    order of DuckDB's list_cosine_similarity, so the double is
+    bit-identical across engines."""
     return dot(a, b) / (norm(a) * norm(b))
 
 
@@ -63,78 +82,139 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BRUTE_FORCE_ORACLE = f"""
-    WITH q AS (
-      SELECT vec_id AS q_vec_id, embedding::DOUBLE[] AS qe
-      FROM embeddings WHERE vec_id < {N_QUERIES}
-    ),
-    c AS (SELECT vec_id, embedding::DOUBLE[] AS ce FROM embeddings),
-    sims AS (
-      SELECT q_vec_id, vec_id,
-             round(list_cosine_similarity(qe, ce), 6) AS cosine_sim
-      FROM q, c
-      WHERE vec_id <> q_vec_id
-    ),
-    ranked AS (
-      SELECT q_vec_id, vec_id, cosine_sim,
-             row_number() OVER (
-               PARTITION BY q_vec_id ORDER BY cosine_sim DESC, vec_id
-             ) AS rn
-      FROM sims
+# the oracles' twin of `_emb`; MATERIALIZED because most read it twice
+_E_SQL = (
+    "e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS emb, label"
+    " FROM embeddings)"
+)
+
+
+def _queries(frame: DataFrame, n: int = N_QUERIES, **cols: str | Column) -> DataFrame:
+    """The query side of ``frame``: rows with vec_id < ``n`` as
+    ``q_vec_id``, plus each ``cols`` entry (output name = source column
+    or Column)."""
+    return frame.where(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("q_vec_id"),
+        *[(F.col(c) if isinstance(c, str) else c).alias(a) for a, c in cols.items()],
     )
-    SELECT q_vec_id, vec_id AS neighbor_id, cosine_sim, rn
-    FROM ranked WHERE rn <= {TOP_K}
-    """
+
+
+def _top_k(
+    df: DataFrame,
+    k: int,
+    score: str | Column | list,
+    tie: str = "vec_id",
+    by: str | tuple = "q_vec_id",
+    rn: str = "rn",
+) -> DataFrame:
+    """``df``'s rows ranked 1..k within each ``by`` group on (``score``
+    desc, ``tie`` asc), the rank kept as ``rn`` — every rank cut of the
+    module. ``score`` is a column name or Column, or a list of them
+    ranked in turn, each descending (an ascending rank negates)."""
+    scores = score if isinstance(score, list) else [score]
+    w = W.partitionBy(*((by,) if isinstance(by, str) else by)).orderBy(
+        *[F.desc(s) if isinstance(s, str) else s.desc() for s in scores], F.asc(tie)
+    )
+    return df.withColumn(rn, F.row_number().over(w)).where(F.col(rn) <= k)
+
+
+def _top_k_sql(
+    src: str,
+    k: int,
+    score: str,
+    tie: str = "vec_id",
+    by: str = "q_vec_id",
+    rn: str = "rn",
+    cols: str = "*",
+) -> str:
+    """The SQL twin of `_top_k`, as a relation: ``cols`` of ``src``
+    ranked 1..k within ``by`` on (``score`` DESC, ``tie``), rank ``rn``.
+    A multi-key ``score`` carries its own directions except the last's
+    ("margin DESC, cos_u" ranks both descending)."""
+    return f"""(
+      SELECT * FROM (
+        SELECT {cols},
+               row_number() OVER (PARTITION BY {by} ORDER BY {score} DESC, {tie}) AS {rn}
+        FROM {src}
+      ) WHERE {rn} <= {k}
+    )"""
+
+
+def _neighbors(sims: DataFrame, k: int, score: str, *extra: str) -> DataFrame:
+    """The top-k result rows (q_vec_id, neighbor_id, extra…, score, rn)
+    of a (q_vec_id, vec_id, score, …) frame."""
+    return _top_k(sims, k, score).select(
+        "q_vec_id", F.col("vec_id").alias("neighbor_id"), *extra, score, "rn"
+    )
+
+
+def _neighbors_sql(src: str, k: int, score: str, extra: str = "") -> str:
+    """The SQL twin of `_neighbors` (``extra`` ends with a comma)."""
+    return (
+        f"SELECT q_vec_id, vec_id AS neighbor_id, {extra}{score}, rn"
+        f" FROM {_top_k_sql(src, k, score)}"
+    )
+
+
+def _brute_topk(emb: DataFrame, k: int) -> DataFrame:
+    """(q_vec_id, vec_id, cosine_sim, rn): the exact float cosine top-k
+    of every query. The small query side broadcasts, every corpus
+    partition scores its own vectors, and only the (n_queries × corpus)
+    score rows reach the per-query window — the corpus never shuffles."""
+    sims = emb.join(
+        F.broadcast(_queries(emb, q_emb="emb")), F.col("vec_id") != F.col("q_vec_id")
+    ).select(
+        "q_vec_id",
+        "vec_id",
+        F.round(cosine(F.col("q_emb"), F.col("emb")), 6).alias("cosine_sim"),
+    )
+    return _top_k(sims, k, "cosine_sim")
+
+
+def _brute_sims_sql(n: int = N_QUERIES) -> str:
+    """(q_vec_id, vec_id, cosine_sim) of every query (vec_id < ``n``)
+    against every other vector, as a relation."""
+    return f"""(
+      SELECT q.vec_id AS q_vec_id, c.vec_id,
+             round(list_cosine_similarity(q.embedding::DOUBLE[],
+                                          c.embedding::DOUBLE[]), 6) AS cosine_sim
+      FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
+      WHERE q.vec_id < {n}
+    )"""
+
+
+_BRUTE_FORCE_ORACLE = _neighbors_sql(_brute_sims_sql(), TOP_K, "cosine_sim")
 
 
 @register("ann_cosine_topk", oracle=_BRUTE_FORCE_ORACLE, bench=True)
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 for the first 20 query vectors: the
-    small query side broadcasts, every corpus partition scores its own
-    vectors, and the per-query window takes the top-k — so the corpus
-    never shuffles, only (n_queries × k) result rows do."""
-    emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb")
-    )
-    sims = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("q_vec_id"))
-        .select(
-            "q_vec_id",
-            "vec_id",
-            F.round(cosine(F.col("q_emb"), F.col("emb")), 6).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-    return (
-        sims.select("q_vec_id", F.col("vec_id").alias("neighbor_id"), "cosine_sim",
-                    F.row_number().over(w).alias("rn"))
-        .where(F.col("rn") <= TOP_K)
+    """Brute-force cosine top-10 for the first 20 query vectors
+    (`_brute_topk`): the corpus never shuffles, only (n_queries × k)
+    result rows do."""
+    return _brute_topk(_emb(spark, sf_dir), TOP_K).select(
+        "q_vec_id", F.col("vec_id").alias("neighbor_id"), "cosine_sim", "rn"
     )
 
 
 BQ_CAND = 32  # hamming candidates per query before the exact rescore
-
-_BQ_SIG_SQL = """
-    sig AS (
-      SELECT vec_id,
-             CAST(sum(CASE WHEN s.i <= 32 AND e[s.i] > 0
-                           THEN (CAST(1 AS BIGINT) << (s.i - 1))
-                           ELSE 0 END) AS BIGINT) AS w0,
-             CAST(sum(CASE WHEN s.i > 32 AND e[s.i] > 0
-                           THEN (CAST(1 AS BIGINT) << (s.i - 33))
-                           ELSE 0 END) AS BIGINT) AS w1
-      FROM (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-           LATERAL (SELECT unnest(generate_series(1, len(e))) AS i) s
-      GROUP BY vec_id
-    )"""
 
 
 @register(
     "ann_bq_hamming_topk",
     bench=True,
     oracle=f"""
-    WITH {_BQ_SIG_SQL.strip()},
+    WITH {_E_SQL},
+    sig AS (
+      SELECT vec_id,
+             CAST(sum(CASE WHEN s.i <= 32 AND emb[s.i] > 0
+                           THEN (CAST(1 AS BIGINT) << (s.i - 1))
+                           ELSE 0 END) AS BIGINT) AS w0,
+             CAST(sum(CASE WHEN s.i > 32 AND emb[s.i] > 0
+                           THEN (CAST(1 AS BIGINT) << (s.i - 33))
+                           ELSE 0 END) AS BIGINT) AS w1
+      FROM e, LATERAL (SELECT unnest(generate_series(1, len(emb))) AS i) s
+      GROUP BY vec_id
+    ),
     ham AS (
       SELECT q.vec_id AS q_vec_id, c.vec_id,
              CAST(bit_count(xor(q.w0, c.w0))
@@ -142,32 +222,14 @@ _BQ_SIG_SQL = """
       FROM sig q JOIN sig c ON c.vec_id <> q.vec_id
       WHERE q.vec_id < {N_QUERIES}
     ),
-    cand AS (
-      SELECT q_vec_id, vec_id, hamming,
-             row_number() OVER (
-               PARTITION BY q_vec_id ORDER BY hamming, vec_id
-             ) AS crn
-      FROM ham
-    ),
     rescored AS (
       SELECT cand.q_vec_id, cand.vec_id, cand.hamming,
-             round(list_cosine_similarity(qe.e, ce.e), 6) AS cosine_sim
-      FROM cand
-      JOIN (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings) qe
-        ON qe.vec_id = cand.q_vec_id
-      JOIN (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings) ce
-        ON ce.vec_id = cand.vec_id
-      WHERE cand.crn <= {BQ_CAND}
+             round(list_cosine_similarity(qe.emb, ce.emb), 6) AS cosine_sim
+      FROM {_top_k_sql("ham", BQ_CAND, "-hamming", rn="crn")} cand
+      JOIN e qe ON qe.vec_id = cand.q_vec_id
+      JOIN e ce ON ce.vec_id = cand.vec_id
     )
-    SELECT q_vec_id, vec_id AS neighbor_id, hamming, cosine_sim,
-           rn
-    FROM (
-      SELECT q_vec_id, vec_id, hamming, cosine_sim,
-             row_number() OVER (
-               PARTITION BY q_vec_id ORDER BY cosine_sim DESC, vec_id
-             ) AS rn
-      FROM rescored
-    ) WHERE rn <= {TOP_K}
+    {_neighbors_sql("rescored", TOP_K, "cosine_sim", "hamming, ")}
     """,
 )
 def ann_bq_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,33 +284,21 @@ def ann_bq_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
 
     sig = emb.select("vec_id", word(0).alias("w0"), word(32).alias("w1"))
-    qs = sig.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"),
-        F.col("w0").alias("qw0"),
-        F.col("w1").alias("qw1"),
+    ham = sig.join(
+        F.broadcast(_queries(sig, qw0="w0", qw1="w1")),
+        F.col("vec_id") != F.col("q_vec_id"),
+    ).select(
+        "q_vec_id",
+        "vec_id",
+        (
+            F.bit_count(F.col("qw0").bitwiseXOR(F.col("w0")))
+            + F.bit_count(F.col("qw1").bitwiseXOR(F.col("w1")))
+        ).cast("long").alias("hamming"),
     )
-    ham = (
-        sig.join(F.broadcast(qs), F.col("vec_id") != F.col("q_vec_id"))
-        .select(
-            "q_vec_id",
-            "vec_id",
-            (
-                F.bit_count(F.col("qw0").bitwiseXOR(F.col("w0")))
-                + F.bit_count(F.col("qw1").bitwiseXOR(F.col("w1")))
-            ).cast("long").alias("hamming"),
-        )
-    )
-    wc = W.partitionBy("q_vec_id").orderBy(F.asc("hamming"), F.asc("vec_id"))
-    cand = (
-        ham.withColumn("crn", F.row_number().over(wc))
-        .where(F.col("crn") <= BQ_CAND)
-        .drop("crn")
-    )
-    qe = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb")
-    )
+    # nearest first: the (hamming asc, vec_id) rank as −hamming desc
+    cand = _top_k(ham, BQ_CAND, -F.col("hamming"), rn="crn").drop("crn")
     rescored = (
-        cand.join(F.broadcast(qe), "q_vec_id")
+        cand.join(F.broadcast(_queries(emb, q_emb="emb")), "q_vec_id")
         .join(emb.select("vec_id", "emb"), "vec_id")
         .select(
             "q_vec_id",
@@ -257,22 +307,11 @@ def ann_bq_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine(F.col("q_emb"), F.col("emb")), 6).alias("cosine_sim"),
         )
     )
-    wr = W.partitionBy("q_vec_id").orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-    return (
-        rescored.withColumn("rn", F.row_number().over(wr))
-        .where(F.col("rn") <= TOP_K)
-        .select(
-            "q_vec_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "hamming",
-            "cosine_sim",
-            "rn",
-        )
-    )
+    return _neighbors(rescored, TOP_K, "cosine_sim", "hamming")
 
 
 def _brute_sims_numpy(spark: SparkSession, emb: DataFrame, n_queries: int) -> DataFrame:
-    """(q_vec_id, vec_id, cosine_sim_raw) for every query (vec_id <
+    """(q_vec_id, vec_id, cosine_sim) for every query (vec_id <
     n_queries) × corpus row, Arrow/numpy path: the query matrix is
     collected (bounded — the query set is small by contract at any
     corpus scale) and shipped as an EXPLICIT SparkContext broadcast:
@@ -281,20 +320,18 @@ def _brute_sims_numpy(spark: SparkSession, emb: DataFrame, n_queries: int) -> Da
     BLAS matmul (batch × queries) — the shape to prefer when the vector
     math outgrows codegen'd folds (high dims, many queries); per-batch
     matmul amortizes the Python boundary to one call per ~10k rows.
-    Self-pairs are dropped; callers round JVM-side before ranking."""
+    Self-pairs are dropped. The cosine is rounded to 6 dp JVM-side
+    (HALF_UP, matching the oracle's round) — numpy's half-even np.round
+    would disagree with SQL round at exact .5 ulps."""
     import numpy as np
 
-    q_rows = (
-        emb.where(F.col("vec_id") < n_queries).select("vec_id", "emb").collect()
-    )
+    q_rows = _queries(emb, n_queries, emb="emb").collect()
     if not q_rows:
         # Degenerate-input policy: an empty embeddings table (or one
         # with no query rows) must yield an empty result frame, not a
         # np.stack ValueError at plan-build time.
-        return spark.createDataFrame(
-            [], "q_vec_id long, vec_id long, cosine_sim_raw double"
-        )
-    q_ids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
+        return spark.createDataFrame([], "q_vec_id long, vec_id long, cosine_sim double")
+    q_ids = np.array([r.q_vec_id for r in q_rows], dtype=np.int64)
     Q = np.stack([np.asarray(r.emb, dtype=np.float64) for r in q_rows])
     bc = spark.sparkContext.broadcast(
         (q_ids, Q / np.linalg.norm(Q, axis=1, keepdims=True))
@@ -324,126 +361,135 @@ def _brute_sims_numpy(spark: SparkSession, emb: DataFrame, n_queries: int) -> Da
     register_self_by_value()
     return emb.select("vec_id", "emb").mapInPandas(
         score, "q_vec_id long, vec_id long, cosine_sim_raw double"
-    )
+    ).select("q_vec_id", "vec_id", F.round("cosine_sim_raw", 6).alias("cosine_sim"))
 
 
 @register("ann_cosine_topk_numpy", oracle=_BRUTE_FORCE_ORACLE)
 def ann_cosine_topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k over the Arrow/numpy batch scorer
     (``_brute_sims_numpy``). Same answer as ann_cosine_topk."""
-    emb = _emb(spark, sf_dir)
-    sims = _brute_sims_numpy(spark, emb, N_QUERIES)
-    # Round JVM-side (HALF_UP, matching the oracle) — numpy's half-even
-    # np.round would disagree with SQL round at exact .5 ulps.
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    sims = _brute_sims_numpy(spark, _emb(spark, sf_dir), N_QUERIES)
+    return _neighbors(sims, TOP_K, "cosine_sim")
+
+
+def _by_pos(pos: str, val: str) -> Column:
+    """Aggregate: the group's ``val`` values as an array ordered by
+    ``pos``."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct(pos, val))), lambda s: s[val]
+    )
+
+
+def _dim_mean(
+    points: DataFrame, keys: list[str], arr: str, out: str, exact: bool = True
+) -> DataFrame:
+    """(keys…, out): the position-wise mean of the ``arr`` arrays within
+    each ``keys`` group — posexplode → per-(keys, position) aggregate →
+    rebuild the ordered array. ``exact``: floor(Σv / n) as BIGINT, the
+    exact-floor mean on the 1e-4 grid (Lloyd updates, IVF-PQ cell
+    centroids; |Σv| ≤ corpus × grid magnitude ≈ 1e8 is double-exact,
+    so the plain floor is identical in both engines). Otherwise the
+    float average (the IVF coarse quantizer)."""
+    v = F.col("v")
+    mu = F.floor(F.sum(v).cast("double") / F.count(F.lit(1))).cast("bigint")
     return (
-        sims.select(
-            "q_vec_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("cosine_sim_raw", 6).alias("cosine_sim"),
-        )
-        .select("q_vec_id", "neighbor_id", "cosine_sim", F.row_number().over(w).alias("rn"))
-        .where(F.col("rn") <= TOP_K)
+        points.select(*keys, F.posexplode(arr).alias("pos", "v"))
+        .groupBy(*keys, "pos")
+        .agg((mu if exact else F.avg(v)).alias("mu"))
+        .groupBy(*keys)
+        .agg(_by_pos("pos", "mu").alias(out))
     )
 
 
 def _ivf_centroids(emb: DataFrame) -> DataFrame:
-    """(label, centroid): per-label mean centroids — posexplode →
-    per-(label, dim) mean → rebuild ordered array. The coarse-quantizer
-    training stage shared by every IVF-routed query in the module."""
-    return (
-        emb.select("label", F.posexplode("emb").alias("dim", "v"))
-        .groupBy("label", "dim")
-        .agg(F.avg("v").alias("av"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "av"))), lambda s: s["av"]
-            ).alias("centroid")
-        )
+    """(label, centroid): the coarse quantizer — per-label mean
+    centroids, trained once per query by every IVF-routed query."""
+    return _dim_mean(emb, ["label"], "emb", "centroid", exact=False)
+
+
+def _ivf_route(
+    emb: DataFrame,
+    points: DataFrame,
+    nprobe: int = 1,
+    by: str = "q_vec_id",
+    vec: str = "q_emb",
+    cell: str = "q_label",
+) -> DataFrame:
+    """The router: each ``points`` row (id ``by``, vector ``vec``) sent
+    to its ``nprobe`` nearest cells of the coarse quantizer trained on
+    ``emb`` — round(cosine, 6) desc, label asc — one row per routed
+    cell, the cell's label as ``cell``. The centroid table broadcasts;
+    the points never shuffle to meet it."""
+    scored = points.crossJoin(F.broadcast(_ivf_centroids(emb))).select(
+        *points.columns,
+        F.col("label").alias(cell),
+        F.round(cosine(F.col(vec), F.col("centroid")), 6).alias("c_sim"),
+    )
+    return _top_k(scored, nprobe, "c_sim", tie=cell, by=by, rn="crn").drop(
+        "c_sim", "crn"
     )
 
 
-def _ivf_cell_sims(emb: DataFrame, n_queries: int = N_QUERIES) -> DataFrame:
+def _ivf_cell_sims(
+    emb: DataFrame, n_queries: int = N_QUERIES, nprobe: int = 1
+) -> DataFrame:
     """(q_vec_id, vec_id, cosine_sim) restricted to each query's routed
-    IVF cell: per-label mean centroids, route each query to its single
-    nearest centroid, exact cosines within that cell only. The shared
-    candidate stage of ann_ivf_topk (top-K cut), ann_ivf_mmr_rerank
-    (top-MMR_CANDS pool), and hybrid_ivf_rrf_retrieval (semantic
-    channel)."""
-    cent = _ivf_centroids(emb)
-    q = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb")
+    IVF cells: `_ivf_route` the queries, then exact cosines within the
+    routed cells only. The candidate stage of every float IVF query
+    (top-K, nprobe, MMR pool, hybrid semantic channel, retrieval eval)."""
+    routed = _ivf_route(emb, _queries(emb, n_queries, q_emb="emb"), nprobe)
+    return emb.join(
+        F.broadcast(routed),
+        (F.col("label") == F.col("q_label")) & (F.col("vec_id") != F.col("q_vec_id")),
+    ).select(
+        "q_vec_id",
+        "vec_id",
+        F.round(cosine(F.col("q_emb"), F.col("emb")), 6).alias("cosine_sim"),
     )
-    assign_w = W.partitionBy("q_vec_id").orderBy(F.desc("c_sim"), F.asc("label"))
-    routed = (
-        q.join(F.broadcast(cent))
-        .select(
-            "q_vec_id",
-            "q_emb",
-            "label",
-            F.round(cosine(F.col("q_emb"), F.col("centroid")), 6).alias("c_sim"),
-        )
-        .select(
-            "q_vec_id",
-            "q_emb",
-            # rename: routed's label shares lineage with emb's → qualify
-            F.col("label").alias("q_label"),
-            F.row_number().over(assign_w).alias("crn"),
-        )
-        .where(F.col("crn") == 1)
-        .drop("crn")
+
+
+def _ivf_route_sql(
+    points: str, nprobe: int = 1, by: str = "q_vec_id", vec: str = "qe"
+) -> str:
+    """The SQL twin of `_ivf_route`: CTE ``cent`` (the coarse quantizer
+    over ``e``) and CTE ``routed`` — ``points``' rows, each once per
+    routed cell, with the cell's label as ``cell``."""
+    route = _top_k_sql(
+        f"{points} p, cent c",
+        nprobe,
+        f"round(list_cosine_similarity(p.{vec}, c.centroid), 6)",
+        tie="c.label",
+        by=f"p.{by}",
+        rn="crn",
+        cols="p.*, c.label AS cell",
     )
-    return (
-        emb.join(
-            F.broadcast(routed),
-            (F.col("label") == F.col("q_label")) & (F.col("vec_id") != F.col("q_vec_id")),
-        )
-        .select(
-            "q_vec_id",
-            "vec_id",
-            F.round(cosine(F.col("q_emb"), F.col("emb")), 6).alias("cosine_sim"),
-        )
-    )
+    return f"""
+    cent AS MATERIALIZED (
+      SELECT label, list(av ORDER BY dim) AS centroid FROM (
+        SELECT label, dim, avg(v) AS av FROM (
+          SELECT label, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v FROM e
+        ) GROUP BY label, dim
+      ) GROUP BY label
+    ),
+    routed AS MATERIALIZED (SELECT * EXCLUDE (crn) FROM {route})"""
+
+
+def _ivf_sims_sql(n: int = N_QUERIES, nprobe: int = 1) -> str:
+    """The SQL twin of `_ivf_cell_sims`: CTEs e, q, cent, routed and
+    ``sims``(q_vec_id, vec_id, cosine_sim)."""
+    return f"""{_E_SQL},
+    q AS (SELECT vec_id AS q_vec_id, emb AS qe FROM e WHERE vec_id < {n}),
+    {_ivf_route_sql("q", nprobe).strip()},
+    sims AS (
+      SELECT r.q_vec_id, e.vec_id,
+             round(list_cosine_similarity(r.qe, e.emb), 6) AS cosine_sim
+      FROM routed r JOIN e ON e.label = r.cell AND e.vec_id <> r.q_vec_id
+    )"""
 
 
 @register(
     "ann_ivf_topk",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings),
-    dims AS (
-      SELECT label, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v FROM e
-    ),
-    cent AS (
-      SELECT label, list(av ORDER BY dim) AS centroid
-      FROM (SELECT label, dim, avg(v) AS av FROM dims GROUP BY label, dim)
-      GROUP BY label
-    ),
-    q AS (SELECT vec_id AS q_vec_id, emb AS qe FROM e WHERE vec_id < {N_QUERIES}),
-    assign AS (
-      SELECT q_vec_id, qe, label,
-             row_number() OVER (
-               PARTITION BY q_vec_id
-               ORDER BY round(list_cosine_similarity(qe, centroid), 6) DESC, label
-             ) AS crn
-      FROM q, cent
-    ),
-    routed AS (SELECT q_vec_id, qe, label FROM assign WHERE crn = 1),
-    sims AS (
-      SELECT r.q_vec_id, e.vec_id,
-             round(list_cosine_similarity(r.qe, e.emb), 6) AS cosine_sim
-      FROM routed r JOIN e ON e.label = r.label AND e.vec_id <> r.q_vec_id
-    ),
-    ranked AS (
-      SELECT q_vec_id, vec_id, cosine_sim,
-             row_number() OVER (
-               PARTITION BY q_vec_id ORDER BY cosine_sim DESC, vec_id
-             ) AS rn
-      FROM sims
-    )
-    SELECT q_vec_id, vec_id AS neighbor_id, cosine_sim, rn
-    FROM ranked WHERE rn <= {IVF_TOP_K}
-    """,
+    oracle=f"WITH {_ivf_sims_sql()} {_neighbors_sql('sims', IVF_TOP_K, 'cosine_sim')}",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) ANN: per-label mean centroids, route each
@@ -451,13 +497,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition only. At scale the corpus is bucketed (or bucketBy-
     written) on the partition id, so a query touches 1/n_partitions of
     the data; recall vs brute force is checked in pytest."""
-    sims = _ivf_cell_sims(_emb(spark, sf_dir))
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-    return (
-        sims.select("q_vec_id", F.col("vec_id").alias("neighbor_id"), "cosine_sim",
-                    F.row_number().over(w).alias("rn"))
-        .where(F.col("rn") <= IVF_TOP_K)
-    )
+    return _neighbors(_ivf_cell_sims(_emb(spark, sf_dir)), IVF_TOP_K, "cosine_sim")
 
 
 @register(
@@ -491,29 +531,49 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "embedding_quantize_int8",
-    oracle="""
-    WITH e AS (
-      SELECT vec_id, generate_subscripts(embedding, 1) AS pos, embedding AS arr
-      FROM embeddings
-    ),
-    x AS (SELECT vec_id, pos, CAST(arr[pos] AS DOUBLE) AS v FROM e),
+def _int8_codes(emb: DataFrame, *keep: str) -> DataFrame:
+    """(pos, keep…, v, lo, hi, c): every embedding value ``v`` with its
+    int8 code c = floor((v − lo)·255/(hi − lo)) under the per-position
+    min/max calibration (lo, hi) over the corpus; positions with no
+    range (hi = lo) drop. The calibration is one posexplode + a
+    |dims|-group min/max whose table broadcasts back."""
+    x = emb.select(*keep, F.posexplode("emb").alias("pos", "v"))
+    dims = x.groupBy("pos").agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+    v, lo, hi = F.col("v"), F.col("lo"), F.col("hi")
+    return (
+        x.join(F.broadcast(dims), "pos")
+        .where(hi > lo)
+        .withColumn("c", F.floor((v - lo) * 255 / (hi - lo)).cast("bigint"))
+    )
+
+
+# the SQL twin of `_int8_codes` over a CTE x(…, pos, v): CTE codes
+_INT8_SQL = """
     dims AS (SELECT pos, min(v) AS lo, max(v) AS hi FROM x GROUP BY pos),
-    q AS (
-      SELECT vec_id,
-             CAST(floor((v - lo) * 255 / (hi - lo)) AS BIGINT) AS code,
-             abs(v - (lo + floor((v - lo) * 255 / (hi - lo)) * (hi - lo) / 255))
-               AS err
+    codes AS (
+      SELECT *, CAST(floor((v - lo) * 255 / (hi - lo)) AS BIGINT) AS c
       FROM x JOIN dims USING (pos)
       WHERE hi > lo
-    )
+    )"""
+
+# CTE x: every embedding value with its position
+_X_SQL = f"""{_E_SQL},
+    x AS (
+      SELECT vec_id, label, generate_subscripts(emb, 1) AS pos, unnest(emb) AS v
+      FROM e
+    ),{_INT8_SQL}"""
+
+
+@register(
+    "embedding_quantize_int8",
+    oracle=f"""
+    WITH {_X_SQL}
     SELECT vec_id,
            count(*) AS n_dims,
-           CAST(sum(code) AS BIGINT) AS code_checksum,
-           min(code) AS min_code, max(code) AS max_code,
-           round(max(err), 6) AS max_abs_err
-    FROM q GROUP BY vec_id
+           CAST(sum(c) AS BIGINT) AS code_checksum,
+           min(c) AS min_code, max(c) AS max_code,
+           round(max(abs(v - (lo + c * (hi - lo) / 255))), 6) AS max_abs_err
+    FROM codes GROUP BY vec_id
     """,
 )
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -534,89 +594,61 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts back. At 100 TB the posexplode never materializes — the
     quantize step fuses into the scan projection.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    x = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "vf")
-    ).select("vec_id", "pos", F.col("vf").cast("double").alias("v"))
-    dims = x.groupBy("pos").agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-    code = F.floor((F.col("v") - F.col("lo")) * 255 / (F.col("hi") - F.col("lo")))
-    recon = F.col("lo") + code * (F.col("hi") - F.col("lo")) / 255
-    q = (
-        x.join(F.broadcast(dims), "pos")
-        .where(F.col("hi") > F.col("lo"))
-        .select(
-            "vec_id",
-            code.cast("bigint").alias("code"),
-            F.abs(F.col("v") - recon).alias("err"),
+    recon = F.col("lo") + F.col("c") * (F.col("hi") - F.col("lo")) / 255
+    return (
+        _int8_codes(_emb(spark, sf_dir), "vec_id")
+        .groupBy("vec_id")
+        .agg(
+            F.count("*").alias("n_dims"),
+            F.sum("c").alias("code_checksum"),
+            F.min("c").alias("min_code"),
+            F.max("c").alias("max_code"),
+            F.round(F.max(F.abs(F.col("v") - recon)), 6).alias("max_abs_err"),
         )
     )
-    return q.groupBy("vec_id").agg(
-        F.count("*").alias("n_dims"),
-        F.sum("code").alias("code_checksum"),
-        F.min("code").alias("min_code"),
-        F.max("code").alias("max_code"),
-        F.round(F.max("err"), 6).alias("max_abs_err"),
+
+
+def _int_cos(dot_: str | Column, n2a: str, n2b: str) -> Column:
+    """round(dot / (√n2a · √n2b), 6) from exact integer parts — one
+    sqrt/divide, identical in both engines."""
+    d = F.col(dot_) if isinstance(dot_, str) else dot_
+    return F.round(
+        d.cast("double")
+        / (F.sqrt(F.col(n2a).cast("double")) * F.sqrt(F.col(n2b).cast("double"))),
+        6,
+    )
+
+
+def _int_cos_sql(dot_: str, n2a: str, n2b: str) -> str:
+    """The SQL twin of `_int_cos`."""
+    return (
+        f"round(CAST({dot_} AS DOUBLE)"
+        f" / (sqrt(CAST({n2a} AS DOUBLE)) * sqrt(CAST({n2b} AS DOUBLE))), 6)"
     )
 
 
 @register(
     "ann_ivf_int8_topk",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings),
-    x AS (
-      SELECT vec_id, label, generate_subscripts(emb, 1) AS pos, unnest(emb) AS v
-      FROM e
-    ),
-    dims AS (SELECT pos, min(v) AS lo, max(v) AS hi FROM x GROUP BY pos),
-    codes AS (
-      SELECT vec_id, label, x.pos,
-             CAST(floor((v - lo) * 255 / (hi - lo)) AS BIGINT) AS c
-      FROM x JOIN dims ON x.pos = dims.pos
-      WHERE hi > lo
-    ),
+    WITH {_X_SQL},
     nsq AS (SELECT vec_id, sum(c * c) AS n2 FROM codes GROUP BY vec_id),
-    cent AS (
-      SELECT label, list(av ORDER BY pos) AS centroid
-      FROM (SELECT label, pos, avg(v) AS av FROM x GROUP BY label, pos)
-      GROUP BY label
-    ),
     q AS (SELECT vec_id AS q_vec_id, emb AS qe FROM e WHERE vec_id < {N_QUERIES}),
-    assign AS (
-      SELECT q_vec_id, label,
-             row_number() OVER (
-               PARTITION BY q_vec_id
-               ORDER BY round(list_cosine_similarity(qe, centroid), 6) DESC, label
-             ) AS crn
-      FROM q, cent
-    ),
-    routed AS (SELECT q_vec_id, label AS q_label FROM assign WHERE crn = 1),
-    qcodes AS (
-      SELECT r.q_vec_id, r.q_label, c.pos, c.c AS qc
-      FROM routed r JOIN codes c ON c.vec_id = r.q_vec_id
-    ),
+    {_ivf_route_sql("q").strip()},
     dots AS (
-      SELECT q.q_vec_id, c.vec_id, sum(q.qc * c.c) AS dot
-      FROM qcodes q JOIN codes c
-        ON c.pos = q.pos AND c.label = q.q_label AND c.vec_id <> q.q_vec_id
+      SELECT r.q_vec_id, c.vec_id, sum(qc.c * c.c) AS dot
+      FROM routed r
+      JOIN codes qc ON qc.vec_id = r.q_vec_id
+      JOIN codes c
+        ON c.pos = qc.pos AND c.label = r.cell AND c.vec_id <> r.q_vec_id
       GROUP BY 1, 2
     ),
     sims AS (
-      SELECT d.q_vec_id, d.vec_id,
-             round(CAST(d.dot AS DOUBLE)
-                   / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nc.n2 AS DOUBLE))),
-                   6) AS q_sim
+      SELECT d.q_vec_id, d.vec_id, {_int_cos_sql("d.dot", "nq.n2", "nc.n2")} AS q_sim
       FROM dots d
       JOIN nsq nq ON nq.vec_id = d.q_vec_id
       JOIN nsq nc ON nc.vec_id = d.vec_id
-    ),
-    ranked AS (
-      SELECT q_vec_id, vec_id, q_sim,
-             row_number() OVER (PARTITION BY q_vec_id
-                                ORDER BY q_sim DESC, vec_id) AS rn
-      FROM sims
     )
-    SELECT q_vec_id, vec_id AS neighbor_id, q_sim, rn
-    FROM ranked WHERE rn <= {IVF_TOP_K}
+    {_neighbors_sql("sims", IVF_TOP_K, "q_sim")}
     """,
 )
 def ann_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -639,50 +671,9 @@ def ann_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     code-array column and the dot a codegen'd fold, same semantics.
     """
     emb = _emb(spark, sf_dir)
-    x = emb.select(
-        "vec_id", "label", F.posexplode("emb").alias("pos", "v")
-    )
-    dims = x.groupBy("pos").agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-    codes = (
-        x.join(F.broadcast(dims), "pos")
-        .where(F.col("hi") > F.col("lo"))
-        .select(
-            "vec_id",
-            "label",
-            "pos",
-            F.floor(
-                (F.col("v") - F.col("lo")) * 255 / (F.col("hi") - F.col("lo"))
-            ).cast("bigint").alias("c"),
-        )
-    )
+    codes = _int8_codes(emb, "vec_id", "label").select("vec_id", "label", "pos", "c")
     nsq = codes.groupBy("vec_id").agg(F.sum(F.col("c") * F.col("c")).alias("n2"))
-    cent = (
-        x.groupBy("label", "pos")
-        .agg(F.avg("v").alias("av"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "av"))), lambda s: s["av"]
-            ).alias("centroid")
-        )
-    )
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb")
-    )
-    assign_w = W.partitionBy("q_vec_id").orderBy(F.desc("c_sim"), F.asc("label"))
-    routed = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "q_vec_id",
-            "label",
-            F.round(cosine(F.col("q_emb"), F.col("centroid")), 6).alias("c_sim"),
-        )
-        .select(
-            "q_vec_id", "label", F.row_number().over(assign_w).alias("crn")
-        )
-        .where(F.col("crn") == 1)
-        .select("q_vec_id", F.col("label").alias("q_label"))
-    )
+    routed = _ivf_route(emb, _queries(emb, q_emb="emb")).select("q_vec_id", "q_label")
     qcodes = routed.join(
         codes.select(
             F.col("vec_id").alias("q_vec_id"),
@@ -706,92 +697,124 @@ def ann_ivf_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims = (
         dots.join(nq, "q_vec_id")
         .join(nc, "vec_id")
-        .select(
-            "q_vec_id",
-            "vec_id",
-            F.round(
-                F.col("dot").cast("double")
-                / (F.sqrt(F.col("nq2").cast("double")) * F.sqrt(F.col("nc2").cast("double"))),
-                6,
-            ).alias("q_sim"),
-        )
+        .select("q_vec_id", "vec_id", _int_cos("dot", "nq2", "nc2").alias("q_sim"))
     )
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("q_sim"), F.asc("vec_id"))
-    return (
-        sims.select(
-            "q_vec_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "q_sim",
-            F.row_number().over(w).alias("rn"),
-        )
-        .where(F.col("rn") <= IVF_TOP_K)
-    )
+    return _neighbors(sims, IVF_TOP_K, "q_sim")
 
 
 KMEANS_K = 4
 KMEANS_ITERS = 2
-KMEANS_SCALE = 10000  # fixed-point 1e-4 grid for exact cross-engine math
 
 
-def _kmeans_oracle() -> str:
-    """Unrolled Lloyd iterations as plain SQL (DuckDB oracle twin)."""
-    d2 = (
-        "list_sum(list_transform(generate_series(1, 64),"
-        " i -> (eq[i] - ce[i]) * (eq[i] - ce[i])))"
+def _grid(arr: str | Column) -> Column:
+    """A float vector on the 1e-4 integer grid: round(x·KMEANS_SCALE)
+    per element, as BIGINT (Spark's HALF_UP round, DuckDB's round)."""
+    return F.transform(
+        arr, lambda x: F.round(x.cast("double") * KMEANS_SCALE).cast("bigint")
     )
-    assign = """
-    a{n} AS (
-      SELECT vec_id, eq, cid, d2 FROM (
-        SELECT e.vec_id, e.eq, c.cid, {d2} AS d2,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {d2}, c.cid) AS rn
-        FROM eq e CROSS JOIN c{m} c
-      ) WHERE rn = 1
+
+
+# the SQL twin of `_grid`, as CTE eq(vec_id, label, eq)
+_EQ_SQL = f"""eq AS (
+      SELECT vec_id, label,
+             list_transform(embedding,
+               x -> CAST(round(CAST(x AS DOUBLE) * {KMEANS_SCALE}) AS BIGINT)) AS eq
+      FROM embeddings
     )"""
-    update = """
-    c{n} AS (
-      SELECT cid, list(mu ORDER BY pos) AS ce FROM (
-        SELECT cid, pos, CAST(floor(CAST(sum(v) AS DOUBLE) / count(*)) AS BIGINT) AS mu
-        FROM (
-          SELECT a.cid, u.pos, a.eq[u.pos] AS v
-          FROM a{n} a CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS pos) u
-        )
-        GROUP BY cid, pos
-      ) GROUP BY cid
-    )"""
+
+
+def _grid_emb(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
+    """(vec_id, keep…, eq): the embeddings on the 1e-4 grid."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", *keep, _grid("embedding").alias("eq")
+    )
+
+
+def _fold_sum(arr: str | Column) -> Column:
+    """Σ of a BIGINT array as an exact BIGINT fold."""
+    return F.aggregate(arr, F.lit(0).cast("bigint"), lambda acc, x: acc + x)
+
+
+def _dot_i(a: str, b: str) -> Column:
+    """Exact BIGINT dot product of two grid arrays."""
+    return _fold_sum(F.zip_with(a, b, lambda x, y: x * y))
+
+
+def _n2_i(a: str) -> Column:
+    """Exact BIGINT squared norm of a grid array."""
+    return _fold_sum(F.transform(a, lambda x: x * x))
+
+
+def _dot_sql(a: str, b: str, n: int) -> str:
+    """The SQL twin of `_dot_i` over arrays of length ``n``."""
+    return (
+        f"CAST(list_sum(list_transform(generate_series(1, {n}),"
+        f" i -> {a}[i] * {b}[i])) AS BIGINT)"
+    )
+
+
+def _n2_sql(a: str) -> str:
+    """The SQL twin of `_n2_i`."""
+    return f"CAST(list_sum(list_transform({a}, x -> x * x)) AS BIGINT)"
+
+
+def _floor_mean_sql(src: str, keys: str, arr: str, out: str) -> str:
+    """The SQL twin of `_dim_mean` (exact): per ``keys`` group of
+    ``src``, the position-wise exact-floor mean of the ``arr`` arrays as
+    ``out``."""
+    return f"""
+      SELECT {keys}, list(mu ORDER BY pos) AS {out} FROM (
+        SELECT {keys}, pos,
+               CAST(floor(CAST(sum(v) AS DOUBLE) / count(*)) AS BIGINT) AS mu
+        FROM (SELECT {keys}, generate_subscripts({arr}, 1) AS pos,
+                     unnest({arr}) AS v FROM {src})
+        GROUP BY {keys}, pos
+      ) GROUP BY {keys}"""
+
+
+def _assign_sql(points: str, cb: str, dims: int, by: str = "") -> str:
+    """Each ``points``(vec_id, [by,] sq) row's nearest ``cb``(cid, [by,]
+    ce) entry — exact BIGINT squared distance d2, (d2, cid) argmin taken
+    as the top-1 of −d2 — as (vec_id, [by,] cid, sq, d2)."""
+    d2 = (
+        f"list_sum(list_transform(generate_series(1, {dims}),"
+        " i -> (s.sq[i] - c.ce[i]) * (s.sq[i] - c.ce[i])))"
+    )
+    ids = f"s.vec_id, s.{by}" if by else "s.vec_id"
+    best = _top_k_sql(
+        f"{points} s JOIN {cb} c ON {f'c.{by} = s.{by}' if by else 'TRUE'}",
+        1,
+        f"-{d2}",
+        tie="c.cid",
+        by=ids,
+        cols=f"{ids}, c.cid, s.sq, {d2} AS d2",
+    )
+    return f"SELECT * EXCLUDE (rn) FROM {best}"
+
+
+def _lloyd_sql(points: str, k: int, dims: int, iters: int, by: str = "") -> str:
+    """Unrolled Lloyd rounds as CTEs over ``points``(vec_id, [by,] sq):
+    seeds (the vectors with vec_id < ``k``, numbered by vec_id over the
+    whole table, so an id absent from ``points`` leaves a gap), c0 (their
+    vectors), then per round a{n} (`_assign_sql`) and c{n} (the
+    exact-floor mean update; an entry that loses all members drops)."""
+    keys = f"{by}, cid" if by else "cid"
     parts = [
         f"""
-    eq AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {KMEANS_SCALE}) AS BIGINT)) AS eq
-      FROM embeddings
+    seeds AS (
+      SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS cid, vec_id
+      FROM eq WHERE vec_id < {k}
     ),
     c0 AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS cid, eq AS ce
-      FROM eq WHERE vec_id < {KMEANS_K}
+      SELECT {f's.{by}, ' if by else ''}d.cid, s.sq AS ce
+      FROM {points} s JOIN seeds d USING (vec_id)
     )"""
     ]
-    for it in range(KMEANS_ITERS):
-        parts.append(assign.format(n=it + 1, m=it, d2=d2))
-        parts.append(update.format(n=it + 1))
-    final = f"""
-    SELECT cid AS cluster_id,
-           CAST(count(*) AS BIGINT) AS n_members,
-           CAST(sum(d2) AS BIGINT)  AS inertia_q,
-           CAST(min(vec_id) AS BIGINT) AS min_member
-    FROM a{KMEANS_ITERS} GROUP BY cid
-    """
-    return "WITH " + ",".join(parts) + final
-
-
-def _km_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * KMEANS_SCALE).cast("bigint"),
-        ).alias("eq"),
-    )
+    for n in range(1, iters + 1):
+        parts.append(f"""
+    a{n} AS ({_assign_sql(points, f"c{n - 1}", dims, by)}),
+    c{n} AS ({_floor_mean_sql(f"a{n}", keys, "sq", "ce")})""")
+    return ",".join(parts)
 
 
 def _lloyd_points_fit_driver(sf_dir: str) -> bool:
@@ -804,7 +827,7 @@ def _lloyd_points_fit_driver(sf_dir: str) -> bool:
 
 def _lloyd_local(X, ids, cids, C, iters: int):
     """Driver-side Lloyd rounds over int64 grid points — the numpy twin
-    of the (_km_assign → _km_update) / (_pq_assign → _pq_update)
+    of the (_km_assign → _dim_mean) / (_pq_assign → _dim_mean)
     iteration, bit-identical by construction:
 
       - assign: exact int64 squared distance (the ‖x−c‖² expansion the
@@ -846,11 +869,7 @@ def _lloyd_local(X, ids, cids, C, iters: int):
 def _km_assign(points: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the K centroids, exact
     integer squared distance, deterministic (d2, cid) argmin."""
-    d2 = F.aggregate(
-        F.zip_with("eq", "ce", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    d2 = _fold_sum(F.zip_with("eq", "ce", lambda x, y: (x - y) * (x - y)))
     scored = points.crossJoin(F.broadcast(centroids)).select(
         "vec_id", "eq", "cid", d2.alias("d2")
     )
@@ -863,30 +882,20 @@ def _km_assign(points: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def _km_update(assigned: DataFrame) -> DataFrame:
-    """Centroid update on the same 1e-4 grid: per-dimension exact
-    integer mean via floor(sum/count) — identical on both engines, so
-    the next iteration's distances are bit-identical too."""
-    dims = assigned.select(
-        "cid", F.posexplode("eq").alias("pos", "v")
-    ).groupBy("cid", "pos").agg(
-        F.sum("v").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    # |s| ≤ 2000 members × 5e4 grid ≈ 1e8 — double-exact, plain floor OK
-    mu = F.floor(F.col("s").cast("double") / F.col("n")).cast("bigint")
-    return (
-        dims.select("cid", "pos", mu.alias("mu"))
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                lambda x: x["mu"],
-            ).alias("ce")
-        )
-    )
-
-
-@register("embedding_kmeans_lloyd", oracle=_kmeans_oracle(), bench=True)
+@register(
+    "embedding_kmeans_lloyd",
+    oracle=f"""
+    WITH {_EQ_SQL},
+    pts AS (SELECT vec_id, eq AS sq FROM eq),
+    {_lloyd_sql("pts", KMEANS_K, 64, KMEANS_ITERS).strip()}
+    SELECT cid AS cluster_id,
+           CAST(count(*) AS BIGINT) AS n_members,
+           CAST(sum(d2) AS BIGINT)  AS inertia_q,
+           CAST(min(vec_id) AS BIGINT) AS min_member
+    FROM a{KMEANS_ITERS} GROUP BY cid
+    """,
+    bench=True,
+)
 def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means clustering of the embedding corpus — Lloyd's algorithm,
     K=4, two unrolled iterations, deterministic seeding (the first K
@@ -909,7 +918,7 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB is exactly this shape in Spark MLlib too; here it is pure
     DataFrame ops with an oracle.
     """
-    pts = _km_quantized(spark, sf_dir)
+    pts = _grid_emb(spark, sf_dir)
     # ADAPTIVE KERNEL DISPATCH (the bpe_train_merges pattern):
     # the Lloyd rounds are driver-synchronous anyway (each assignment
     # broadcasts the previous round's K×64-int codebook), so when the
@@ -967,7 +976,7 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = None
     for _ in range(KMEANS_ITERS):
         assigned = _km_assign(pts, cents)
-        cents = _km_update(assigned)
+        cents = _dim_mean(assigned, ["cid"], "eq", "ce")
     return assigned.groupBy(F.col("cid").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum("d2").alias("inertia_q"),
@@ -980,41 +989,8 @@ IVF_NPROBE = 2
 
 @register(
     "ann_ivf_nprobe_topk",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings),
-    dims AS (
-      SELECT label, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v FROM e
-    ),
-    cent AS (
-      SELECT label, list(av ORDER BY dim) AS centroid
-      FROM (SELECT label, dim, avg(v) AS av FROM dims GROUP BY label, dim)
-      GROUP BY label
-    ),
-    q AS (SELECT vec_id AS q_vec_id, emb AS qe FROM e WHERE vec_id < {N_QUERIES}),
-    assign AS (
-      SELECT q_vec_id, qe, label,
-             row_number() OVER (
-               PARTITION BY q_vec_id
-               ORDER BY round(list_cosine_similarity(qe, centroid), 6) DESC, label
-             ) AS crn
-      FROM q, cent
-    ),
-    routed AS (SELECT q_vec_id, qe, label FROM assign WHERE crn <= {IVF_NPROBE}),
-    sims AS (
-      SELECT r.q_vec_id, e.vec_id,
-             round(list_cosine_similarity(r.qe, e.emb), 6) AS cosine_sim
-      FROM routed r JOIN e ON e.label = r.label AND e.vec_id <> r.q_vec_id
-    ),
-    ranked AS (
-      SELECT q_vec_id, vec_id, cosine_sim,
-             row_number() OVER (
-               PARTITION BY q_vec_id ORDER BY cosine_sim DESC, vec_id
-             ) AS rn
-      FROM sims
-    )
-    SELECT q_vec_id, vec_id AS neighbor_id, cosine_sim, rn
-    FROM ranked WHERE rn <= {IVF_TOP_K}
-    """,
+    oracle=f"""WITH {_ivf_sims_sql(nprobe=IVF_NPROBE)}
+    {_neighbors_sql('sims', IVF_TOP_K, 'cosine_sim')}""",
 )
 def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search with nprobe=2 — the standard recall/cost dial: route
@@ -1028,57 +1004,8 @@ def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, candidate scan bounded by nprobe/n_partitions, per-query
     top-k window over the candidate rows only.
     """
-    emb = _emb(spark, sf_dir)
-    cent = (
-        emb.select("label", F.posexplode("emb").alias("dim", "v"))
-        .groupBy("label", "dim")
-        .agg(F.avg("v").alias("av"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "av"))), lambda s: s["av"]
-            ).alias("centroid")
-        )
-    )
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb")
-    )
-    assign_w = W.partitionBy("q_vec_id").orderBy(F.desc("c_sim"), F.asc("label"))
-    routed = (
-        q.join(F.broadcast(cent))
-        .select(
-            "q_vec_id",
-            "q_emb",
-            "label",
-            F.round(cosine(F.col("q_emb"), F.col("centroid")), 6).alias("c_sim"),
-        )
-        .select(
-            "q_vec_id",
-            "q_emb",
-            F.col("label").alias("q_label"),
-            F.row_number().over(assign_w).alias("crn"),
-        )
-        .where(F.col("crn") <= IVF_NPROBE)
-        .drop("crn")
-    )
-    sims = (
-        emb.join(
-            F.broadcast(routed),
-            (F.col("label") == F.col("q_label"))
-            & (F.col("vec_id") != F.col("q_vec_id")),
-        )
-        .select(
-            "q_vec_id",
-            "vec_id",
-            F.round(cosine(F.col("q_emb"), F.col("emb")), 6).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-    return (
-        sims.select("q_vec_id", F.col("vec_id").alias("neighbor_id"), "cosine_sim",
-                    F.row_number().over(w).alias("rn"))
-        .where(F.col("rn") <= IVF_TOP_K)
-    )
+    sims = _ivf_cell_sims(_emb(spark, sf_dir), nprobe=IVF_NPROBE)
+    return _neighbors(sims, IVF_TOP_K, "cosine_sim")
 
 
 PCA_OUT_SCALE = 1_000_000  # direction reported in integer millionths
@@ -1088,12 +1015,7 @@ def _pca_oracle() -> str:
     """Unrolled SQL twin of the two exact power-iteration steps —
     HUGEINT where the Spark side runs decimal(38,0)."""
     return f"""
-    WITH eq AS (
-      SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * {KMEANS_SCALE}) AS BIGINT)) AS eq
-      FROM embeddings
-    ),
+    WITH {_EQ_SQL},
     comp AS (
       SELECT vec_id, d.d AS pos, eq[d.d] AS x
       FROM eq, (SELECT unnest(generate_series(1, 64)) AS d) d
@@ -1155,14 +1077,11 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     iterated broadcast-matvec shape MLlib's SVD uses. Iteration count
     is fixed (2); production loops the same stages to convergence.
     """
-    pts = _km_quantized(spark, sf_dir)
+    pts = _grid_emb(spark, sf_dir)
     comp = pts.select("vec_id", F.posexplode("eq").alias("pos0", "x")).select(
         "vec_id", (F.col("pos0") + 1).alias("pos"), "x"
     )
-    s1 = pts.select(
-        "vec_id",
-        F.aggregate("eq", F.lit(0).cast("bigint"), lambda a, x: a + x).alias("s"),
-    )
+    s1 = pts.select("vec_id", _fold_sum("eq").alias("s"))
     u1 = (
         comp.join(s1, "vec_id")
         .groupBy("pos")
@@ -1214,25 +1133,25 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
 KNN_GRAPH_K = 5
 
 
+def _knn_edges_sql() -> str:
+    """(vec_id, neighbor_id, cosine_sim, rn): every vector's
+    within-label top-KNN_GRAPH_K cosine neighbors over CTE e, as a
+    relation."""
+    return _top_k_sql(
+        """(SELECT a.vec_id, b.vec_id AS neighbor_id,
+                   round(list_cosine_similarity(a.emb, b.emb), 6) AS cosine_sim
+            FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id)""",
+        KNN_GRAPH_K,
+        "cosine_sim",
+        tie="neighbor_id",
+        by="vec_id",
+    )
+
+
 @register(
     "ann_knn_graph_edges",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings),
-    sims AS (
-      SELECT a.vec_id, b.vec_id AS neighbor_id,
-             round(list_cosine_similarity(a.emb, b.emb), 6) AS cosine_sim
-      FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id
-    ),
-    ranked AS (
-      SELECT vec_id, neighbor_id, cosine_sim,
-             row_number() OVER (
-               PARTITION BY vec_id ORDER BY cosine_sim DESC, neighbor_id
-             ) AS rn
-      FROM sims
-    )
-    SELECT vec_id, neighbor_id, cosine_sim, rn
-    FROM ranked WHERE rn <= {KNN_GRAPH_K}
-    """,
+    oracle=f"WITH {_E_SQL} SELECT vec_id, neighbor_id, cosine_sim, rn"
+    f" FROM {_knn_edges_sql()}",
 )
 def ann_knn_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide kNN GRAPH construction (every vector × its top-5
@@ -1290,115 +1209,157 @@ def ann_knn_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    sims = emb.select("vec_id", "emb", "label").groupBy("label").applyInPandas(
-        cell_topk, "vec_id long, neighbor_id long, cosine_sim_raw double"
+    sims = (
+        emb.select("vec_id", "emb", "label")
+        .groupBy("label")
+        .applyInPandas(cell_topk, "vec_id long, neighbor_id long, cosine_sim_raw double")
+        .select("vec_id", "neighbor_id", F.round("cosine_sim_raw", 6).alias("cosine_sim"))
     )
-    w = W.partitionBy("vec_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        sims.select(
-            "vec_id", "neighbor_id", F.round("cosine_sim_raw", 6).alias("cosine_sim")
-        )
-        .select("vec_id", "neighbor_id", "cosine_sim", F.row_number().over(w).alias("rn"))
-        .where(F.col("rn") <= KNN_GRAPH_K)
-    )
+    return _top_k(sims, KNN_GRAPH_K, "cosine_sim", tie="neighbor_id", by="vec_id")
 
 
 GREEDY_HOPS = 3
+COARSE_K = 3  # coarse-layer kNN degree over the cell representatives
+COARSE_HOPS = 2  # unrolled greedy hops on the coarse layer
 
-_GREEDY_EDGES_CTE = f"""
-    e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings),
-    sims AS (
-      SELECT a.vec_id, b.vec_id AS neighbor_id,
-             round(list_cosine_similarity(a.emb, b.emb), 6) AS cosine_sim
-      FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id
-    ),
-    g AS (
-      SELECT vec_id, neighbor_id FROM (
-        SELECT vec_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY vec_id ORDER BY cosine_sim DESC, neighbor_id
-               ) AS rn
-        FROM sims
-      ) WHERE rn <= {KNN_GRAPH_K}
-    ),
+# the walk oracles' shared prefix: the per-cell kNN graph g and queries q
+_WALK_CTE = f"""{_E_SQL},
+    g AS (SELECT vec_id, neighbor_id FROM {_knn_edges_sql()}),
     q AS (
       SELECT vec_id AS qid, emb AS qe, label AS qlabel
       FROM e WHERE vec_id < {N_QUERIES}
-    ),
+    )"""
+
+
+def _entry_sql(cells: str) -> str:
+    """CTE s0, the layer-0 walk state at its entry: each query's cell
+    (``cells``(qid, cell)) entered at its min vertex that is not the
+    query."""
+    return f"""
     s0 AS (
       SELECT q.qid, ent.cur,
              round(list_cosine_similarity(q.qe, ee.emb), 6) AS cur_cos
       FROM q
       JOIN (
-        SELECT q2.qid, min(e2.vec_id) AS cur
-        FROM q q2 JOIN e e2 ON e2.label = q2.qlabel AND e2.vec_id <> q2.qid
-        GROUP BY q2.qid
+        SELECT d.qid, min(e2.vec_id) AS cur
+        FROM {cells} d JOIN e e2 ON e2.label = d.cell AND e2.vec_id <> d.qid
+        GROUP BY d.qid
       ) ent ON ent.qid = q.qid
       JOIN e ee ON ee.vec_id = ent.cur
     )"""
 
 
-def _greedy_hop_sql(i: int) -> str:
-    p, c = f"s{i - 1}", f"s{i}"
-    return f"""
-    b{i} AS (
-      SELECT qid, cand, cand_cos FROM (
-        SELECT {p}.qid, g.neighbor_id AS cand,
-               round(list_cosine_similarity(q.qe, ce.emb), 6) AS cand_cos,
-               row_number() OVER (
-                 PARTITION BY {p}.qid
-                 ORDER BY round(list_cosine_similarity(q.qe, ce.emb), 6) DESC,
-                          g.neighbor_id
-               ) AS rn
-        FROM {p}
+def _hop_sql(i: int, layer: str, graph: str, exclude_query: bool) -> str:
+    """Greedy hop ``i`` over ``graph``(vec_id, neighbor_id), the SQL
+    twin of one `_greedy_walk` step: state {layer}{i−1} → {layer}{i},
+    best candidate by (round(cos, 6) DESC, id), strict-ascent advance.
+    ``exclude_query`` drops the query vertex from the candidates."""
+    p, c, b = f"{layer}{i - 1}", f"{layer}{i}", f"{layer}b{i}"
+    cos = "round(list_cosine_similarity(q.qe, ce.emb), 6)"
+    excl = f" AND g.neighbor_id <> {p}.qid" if exclude_query else ""
+    best = _top_k_sql(
+        f"""{p}
         JOIN q ON q.qid = {p}.qid
-        JOIN g ON g.vec_id = {p}.cur AND g.neighbor_id <> {p}.qid
-        JOIN e ce ON ce.vec_id = g.neighbor_id
-      ) WHERE rn = 1
-    ),
+        JOIN {graph} g ON g.vec_id = {p}.cur{excl}
+        JOIN e ce ON ce.vec_id = g.neighbor_id""",
+        1,
+        cos,
+        tie="g.neighbor_id",
+        by=f"{p}.qid",
+        cols=f"{p}.qid, g.neighbor_id AS cand, {cos} AS cand_cos",
+    )
+    adv = (
+        f"{b}.cand IS NOT NULL AND ({b}.cand_cos > {p}.cur_cos"
+        f" OR ({b}.cand_cos = {p}.cur_cos AND {b}.cand < {p}.cur))"
+    )
+    return f"""
+    {b} AS (SELECT qid, cand, cand_cos FROM {best}),
     {c} AS (
       SELECT {p}.qid,
-             CASE WHEN b{i}.cand IS NOT NULL AND (b{i}.cand_cos > {p}.cur_cos
-                    OR (b{i}.cand_cos = {p}.cur_cos AND b{i}.cand < {p}.cur))
-                  THEN b{i}.cand ELSE {p}.cur END AS cur,
-             CASE WHEN b{i}.cand IS NOT NULL AND (b{i}.cand_cos > {p}.cur_cos
-                    OR (b{i}.cand_cos = {p}.cur_cos AND b{i}.cand < {p}.cur))
-                  THEN b{i}.cand_cos ELSE {p}.cur_cos END AS cur_cos
-      FROM {p} LEFT JOIN b{i} USING (qid)
+             CASE WHEN {adv} THEN {b}.cand ELSE {p}.cur END AS cur,
+             CASE WHEN {adv} THEN {b}.cand_cos ELSE {p}.cur_cos END AS cur_cos
+      FROM {p} LEFT JOIN {b} USING (qid)
     )"""
 
 
-_GREEDY_ORACLE = (
-    "WITH "
-    + _GREEDY_EDGES_CTE
-    + ","
-    + ",".join(_greedy_hop_sql(i) for i in range(1, GREEDY_HOPS + 1))
-    + f"""
+def _walk_sql(*ctes: str) -> str:
+    """A walk oracle: the shared prefix, ``ctes`` ending in the layer-0
+    entry s0, then GREEDY_HOPS query-excluding hops over g."""
+    hops = [_hop_sql(i, "s", "g", True) for i in range(1, GREEDY_HOPS + 1)]
+    return (
+        "WITH "
+        + ",".join([_WALK_CTE, *ctes, *hops])
+        + f"""
     SELECT qid AS q_vec_id, cur AS found_id, cur_cos AS cosine_sim
     FROM s{GREEDY_HOPS}
     """
+    )
+
+
+_GREEDY_ORACLE = _walk_sql(_entry_sql("(SELECT qid, qlabel AS cell FROM q)"))
+
+# layer 1: one representative per cell (its min vec_id), a COARSE_K-NN
+# graph rg over them and the walk state t0 at the globally-minimal rep;
+# the layer-0 entry is in the cell the coarse walk reaches (dest), not
+# the query's stored label
+_HIER_ORACLE = _walk_sql(
+    f"""
+    reps AS (SELECT label, min(vec_id) AS rep FROM e GROUP BY label),
+    re AS (
+      SELECT r.rep, r.label, e2.emb
+      FROM reps r JOIN e e2 ON e2.vec_id = r.rep
+    ),
+    rsims AS (
+      SELECT a.rep, b.rep AS nrep,
+             round(list_cosine_similarity(a.emb, b.emb), 6) AS cs
+      FROM re a JOIN re b ON a.rep <> b.rep
+    ),
+    rg AS (
+      SELECT rep AS vec_id, nrep AS neighbor_id
+      FROM {_top_k_sql("rsims", COARSE_K, "cs", tie="nrep", by="rep")}
+    ),
+    gent AS (SELECT min(rep) AS rep0 FROM reps),
+    t0 AS (
+      SELECT q.qid, gent.rep0 AS cur,
+             round(list_cosine_similarity(q.qe, ee.emb), 6) AS cur_cos
+      FROM q CROSS JOIN gent JOIN e ee ON ee.vec_id = gent.rep0
+    )""",
+    *[_hop_sql(i, "t", "rg", False) for i in range(1, COARSE_HOPS + 1)],
+    f"""
+    dest AS (
+      SELECT t{COARSE_HOPS}.qid, r.label AS cell
+      FROM t{COARSE_HOPS} JOIN reps r ON r.rep = t{COARSE_HOPS}.cur
+    )""",
+    _entry_sql("dest"),
 )
 
 
-def _fold_cosine(a, b):
-    """Cosine as sequential left-to-right folds — the SAME summation
-    order DuckDB's list_cosine_similarity applies, so the double result
-    is bit-identical cross-engine (unlike the einsum lanes, which
-    accept a documented ulp-boundary residual). Interpreted
-    higher-order functions are the slow path for millions of pairs
-    (similarity module notes) — here the walk scores <= queries x K
-    pairs per hop, where exactness is worth far more than vectorization.
-    """
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
+def _walk_state(qcur: DataFrame, emb: DataFrame) -> DataFrame:
+    """(q_vec_id, q_emb, cur, cur_cos): the walk state of each
+    ``qcur``(q_vec_id, q_emb, cur) row at vertex ``cur``."""
+    return qcur.join(
+        emb.select(F.col("vec_id").alias("cur"), F.col("emb").alias("cur_emb")), "cur"
+    ).select(
+        "q_vec_id",
+        "q_emb",
+        "cur",
+        F.round(cosine(F.col("q_emb"), F.col("cur_emb")), 6).alias("cur_cos"),
     )
-    na = F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, v: s + v)
+
+
+def _cell_entry(cells: DataFrame, emb: DataFrame) -> DataFrame:
+    """(q_vec_id, cur): each query's cell (``cells``(q_vec_id, cell))
+    entered at its min vertex that is not the query — deterministic,
+    no similarity computation."""
+    return (
+        cells.join(
+            emb.select(F.col("vec_id").alias("cur"), F.col("label").alias("cell")),
+            "cell",
+        )
+        .where(F.col("cur") != F.col("q_vec_id"))
+        .groupBy("q_vec_id")
+        .agg(F.min("cur").alias("cur"))
     )
-    nb = F.sqrt(
-        F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda s, v: s + v)
-    )
-    return dot / (na * nb)
 
 
 @register("ann_graph_greedy_search", oracle=_GREEDY_ORACLE)
@@ -1451,36 +1412,10 @@ def ann_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "neighbor_id")
         .localCheckpoint(eager=False)  # one graph build serves all hops
     )
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("label").alias("q_label"),
-    )
-    # entry: the query's cell's min non-query... min vertex that is not
-    # the query itself — deterministic, needs no similarity computation
-    entry = (
-        q.join(
-            emb.select(F.col("vec_id").alias("cur"), F.col("label").alias("q_label")),
-            "q_label",
-        )
-        .where(F.col("cur") != F.col("q_vec_id"))
-        .groupBy("q_vec_id")
-        .agg(F.min("cur").alias("cur"))
-    )
-    cand_emb = emb.select(
-        F.col("vec_id").alias("cand"), F.col("emb").alias("cand_emb")
-    )
-    state = (
-        q.join(entry, "q_vec_id")
-        .join(cand_emb.withColumnRenamed("cand", "cur").withColumnRenamed("cand_emb", "cur_emb"), "cur")
-        .select(
-            "q_vec_id",
-            "q_emb",
-            "cur",
-            F.round(_fold_cosine(F.col("q_emb"), F.col("cur_emb")), 6).alias("cur_cos"),
-        )
-    )
-    state = _greedy_walk(state, edges, cand_emb, GREEDY_HOPS, exclude_query=True)
+    q = _queries(emb, q_emb="emb", q_label="label")
+    entry = _cell_entry(q.select("q_vec_id", F.col("q_label").alias("cell")), emb)
+    state = _walk_state(q.join(entry, "q_vec_id"), emb)
+    state = _greedy_walk(state, edges, emb, GREEDY_HOPS, exclude_query=True)
     return state.select(
         "q_vec_id",
         F.col("cur").alias("found_id"),
@@ -1491,7 +1426,7 @@ def ann_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _greedy_walk(
     state: DataFrame,
     edges: DataFrame,
-    cand_emb: DataFrame,
+    emb: DataFrame,
     hops: int,
     exclude_query: bool,
 ) -> DataFrame:
@@ -1499,11 +1434,12 @@ def _greedy_walk(
     (vec_id → neighbor_id), shared by the flat and hierarchical walks.
     ``state`` carries (q_vec_id, q_emb, cur, cur_cos); the advance rule
     is the strict ascent (cosine up, or id down at equal cosine) on
-    round(fold-cosine, 6) — the bit-reproducible walk arithmetic the
-    flat query documents. ``exclude_query`` drops the query vertex from
+    round(cosine, 6) — the bit-reproducible walk arithmetic the flat
+    query documents. ``exclude_query`` drops the query vertex from
     candidates (layer 0, where found_id must not be the query); the
     coarse layer keeps it — landing on the query's own rep is ideal
     routing, not degeneracy."""
+    cand_emb = emb.select(F.col("vec_id").alias("cand"), F.col("emb").alias("cand_emb"))
     for _ in range(hops):
         scored = state.join(
             edges.select(
@@ -1516,9 +1452,7 @@ def _greedy_walk(
         scored = scored.join(cand_emb, "cand").select(
             "q_vec_id",
             "cand",
-            F.round(_fold_cosine(F.col("q_emb"), F.col("cand_emb")), 6).alias(
-                "cand_cos"
-            ),
+            F.round(cosine(F.col("q_emb"), F.col("cand_emb")), 6).alias("cand_cos"),
         )
         # deterministic argmax: max cosine, then min id — packed so one
         # max struct comparison implements both
@@ -1550,126 +1484,6 @@ def _greedy_walk(
     return state
 
 
-COARSE_K = 3  # coarse-layer kNN degree over the cell representatives
-COARSE_HOPS = 2  # unrolled greedy hops on the coarse layer
-
-
-def _coarse_hop_sql(i: int) -> str:
-    """Coarse-layer twin of ``_greedy_hop_sql``: same scoring
-    (round(cos, 6) DESC, min id) and the same strict-ascent advance
-    rule, over the rep graph ``rg`` — no query exclusion (landing on
-    the query's own rep is ideal routing)."""
-    p, c = f"t{i - 1}", f"t{i}"
-    return f"""
-    cb{i} AS (
-      SELECT qid, cand, cand_cos FROM (
-        SELECT {p}.qid, rg.nrep AS cand,
-               round(list_cosine_similarity(q.qe, ce.emb), 6) AS cand_cos,
-               row_number() OVER (
-                 PARTITION BY {p}.qid
-                 ORDER BY round(list_cosine_similarity(q.qe, ce.emb), 6) DESC,
-                          rg.nrep
-               ) AS rn
-        FROM {p}
-        JOIN q ON q.qid = {p}.qid
-        JOIN rg ON rg.rep = {p}.cur
-        JOIN e ce ON ce.vec_id = rg.nrep
-      ) WHERE rn = 1
-    ),
-    {c} AS (
-      SELECT {p}.qid,
-             CASE WHEN cb{i}.cand IS NOT NULL AND (cb{i}.cand_cos > {p}.cur_cos
-                    OR (cb{i}.cand_cos = {p}.cur_cos AND cb{i}.cand < {p}.cur))
-                  THEN cb{i}.cand ELSE {p}.cur END AS cur,
-             CASE WHEN cb{i}.cand IS NOT NULL AND (cb{i}.cand_cos > {p}.cur_cos
-                    OR (cb{i}.cand_cos = {p}.cur_cos AND cb{i}.cand < {p}.cur))
-                  THEN cb{i}.cand_cos ELSE {p}.cur_cos END AS cur_cos
-      FROM {p} LEFT JOIN cb{i} USING (qid)
-    )"""
-
-
-# e/sims/g/q are identical to the flat walk's CTE prefix; s0 differs —
-# the layer-0 entry comes from the cell the COARSE WALK discovered, not
-# the query's stored label
-_HIER_BASE_CTE = f"""
-    e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings),
-    sims AS (
-      SELECT a.vec_id, b.vec_id AS neighbor_id,
-             round(list_cosine_similarity(a.emb, b.emb), 6) AS cosine_sim
-      FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id
-    ),
-    g AS (
-      SELECT vec_id, neighbor_id FROM (
-        SELECT vec_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY vec_id ORDER BY cosine_sim DESC, neighbor_id
-               ) AS rn
-        FROM sims
-      ) WHERE rn <= {KNN_GRAPH_K}
-    ),
-    q AS (
-      SELECT vec_id AS qid, emb AS qe, label AS qlabel
-      FROM e WHERE vec_id < {N_QUERIES}
-    ),
-    reps AS (SELECT label, min(vec_id) AS rep FROM e GROUP BY label),
-    re AS (
-      SELECT r.rep, r.label, e2.emb
-      FROM reps r JOIN e e2 ON e2.vec_id = r.rep
-    ),
-    rsims AS (
-      SELECT a.rep, b.rep AS nrep,
-             round(list_cosine_similarity(a.emb, b.emb), 6) AS cs
-      FROM re a JOIN re b ON a.rep <> b.rep
-    ),
-    rg AS (
-      SELECT rep, nrep FROM (
-        SELECT rep, nrep,
-               row_number() OVER (
-                 PARTITION BY rep ORDER BY cs DESC, nrep
-               ) AS rn
-        FROM rsims
-      ) WHERE rn <= {COARSE_K}
-    ),
-    gent AS (SELECT min(rep) AS rep0 FROM reps),
-    t0 AS (
-      SELECT q.qid, gent.rep0 AS cur,
-             round(list_cosine_similarity(q.qe, ee.emb), 6) AS cur_cos
-      FROM q CROSS JOIN gent JOIN e ee ON ee.vec_id = gent.rep0
-    )"""
-
-_HIER_DESCENT_CTE = f"""
-    dest AS (
-      SELECT t{COARSE_HOPS}.qid, r.label AS dlabel
-      FROM t{COARSE_HOPS} JOIN reps r ON r.rep = t{COARSE_HOPS}.cur
-    ),
-    s0 AS (
-      SELECT q.qid, ent.cur,
-             round(list_cosine_similarity(q.qe, ee.emb), 6) AS cur_cos
-      FROM q
-      JOIN (
-        SELECT d.qid, min(e2.vec_id) AS cur
-        FROM dest d JOIN e e2 ON e2.label = d.dlabel AND e2.vec_id <> d.qid
-        GROUP BY d.qid
-      ) ent ON ent.qid = q.qid
-      JOIN e ee ON ee.vec_id = ent.cur
-    )"""
-
-_HIER_ORACLE = (
-    "WITH "
-    + _HIER_BASE_CTE
-    + ","
-    + ",".join(_coarse_hop_sql(i) for i in range(1, COARSE_HOPS + 1))
-    + ","
-    + _HIER_DESCENT_CTE
-    + ","
-    + ",".join(_greedy_hop_sql(i) for i in range(1, GREEDY_HOPS + 1))
-    + f"""
-    SELECT qid AS q_vec_id, cur AS found_id, cur_cos AS cosine_sim
-    FROM s{GREEDY_HOPS}
-    """
-)
-
-
 @register("ann_graph_hierarchical_search", oracle=_HIER_ORACLE)
 def ann_graph_hierarchical_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO-LAYER graph search — the actual HNSW entry shape,
@@ -1693,9 +1507,9 @@ def ann_graph_hierarchical_search(spark: SparkSession, sf_dir: str) -> DataFrame
     candidates per query at EACH layer, never a corpus scan. The
     determinism discipline is the flat walk's, verbatim: every
     comparison on round(cos, 6) with min-id (min-rep) tie-break,
-    strict-ascent advance at both layers, fold-cosine (DuckDB's exact
+    strict-ascent advance at both layers, `cosine` (DuckDB's exact
     summation order) for every score the walk compares, and the oracle
-    replays both layers as unrolled SQL hops over identical CTEs. The
+    replays both layers as unrolled SQL hops (`_hop_sql`). The
     same edge-set caveat as the flat walk applies to layer 0 (the kNN
     builder's documented ulp residual, margin-pinned in pytest);
     layer-1 edges (rsims) are fold-exact on both engines.
@@ -1721,78 +1535,35 @@ def ann_graph_hierarchical_search(spark: SparkSession, sf_dir: str) -> DataFrame
         .select(
             "rep",
             "nrep",
-            F.round(_fold_cosine(F.col("rep_emb"), F.col("nemb")), 6).alias("cs"),
+            F.round(cosine(F.col("rep_emb"), F.col("nemb")), 6).alias("cs"),
         )
     )
-    wr = W.partitionBy("rep").orderBy(F.desc("cs"), F.asc("nrep"))
-    rg = (
-        rpairs.select("rep", "nrep", F.row_number().over(wr).alias("rn"))
-        .where(F.col("rn") <= COARSE_K)
-        .select(
-            F.col("rep").alias("vec_id"), F.col("nrep").alias("neighbor_id")
-        )
+    rg = _top_k(rpairs, COARSE_K, "cs", tie="nrep", by="rep").select(
+        F.col("rep").alias("vec_id"), F.col("nrep").alias("neighbor_id")
     )
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb")
-    )
-    cand_emb = emb.select(
-        F.col("vec_id").alias("cand"), F.col("emb").alias("cand_emb")
-    )
-    cur_emb = emb.select(F.col("vec_id").alias("cur"), F.col("emb").alias("cur_emb"))
+    q = _queries(emb, q_emb="emb")
     # coarse entry: the globally-minimal rep, one broadcast row
     rep0 = reps.agg(F.min("rep").alias("cur"))
-    tstate = (
-        q.crossJoin(F.broadcast(rep0))
-        .join(cur_emb, "cur")
-        .select(
-            "q_vec_id",
-            "q_emb",
-            "cur",
-            F.round(_fold_cosine(F.col("q_emb"), F.col("cur_emb")), 6).alias(
-                "cur_cos"
-            ),
-        )
-    )
-    tstate = _greedy_walk(tstate, rg, cand_emb, COARSE_HOPS, exclude_query=False)
+    tstate = _walk_state(q.crossJoin(F.broadcast(rep0)), emb)
+    tstate = _greedy_walk(tstate, rg, emb, COARSE_HOPS, exclude_query=False)
     # ---- descend: reached rep's cell; enter at its min non-query id ----
     dest = tstate.join(
-        reps.select(F.col("rep").alias("cur"), F.col("label").alias("dlabel")),
+        reps.select(F.col("rep").alias("cur"), F.col("label").alias("cell")),
         "cur",
-    ).select("q_vec_id", "dlabel")
-    entry = (
-        dest.join(
-            emb.select(F.col("vec_id").alias("cur"), F.col("label").alias("dlabel")),
-            "dlabel",
-        )
-        .where(F.col("cur") != F.col("q_vec_id"))
-        .groupBy("q_vec_id")
-        .agg(F.min("cur").alias("cur"))
-    )
-    state = (
-        q.join(entry, "q_vec_id")
-        .join(cur_emb, "cur")
-        .select(
-            "q_vec_id",
-            "q_emb",
-            "cur",
-            F.round(_fold_cosine(F.col("q_emb"), F.col("cur_emb")), 6).alias(
-                "cur_cos"
-            ),
-        )
-    )
+    ).select("q_vec_id", "cell")
+    state = _walk_state(q.join(_cell_entry(dest, emb), "q_vec_id"), emb)
     # ---- layer 0: the flat walk over the per-cell kNN graph ----
     edges = (
         ann_knn_graph_edges(spark, sf_dir)
         .select("vec_id", "neighbor_id")
         .localCheckpoint(eager=False)
     )
-    state = _greedy_walk(state, edges, cand_emb, GREEDY_HOPS, exclude_query=True)
+    state = _greedy_walk(state, edges, emb, GREEDY_HOPS, exclude_query=True)
     return state.select(
         "q_vec_id",
         F.col("cur").alias("found_id"),
         F.col("cur_cos").alias("cosine_sim"),
     )
-
 
 
 # ---------------------------------------------------------------------------
@@ -1805,83 +1576,88 @@ PQ_K = 32    # codebook entries per subspace
 PQ_ITERS = 2  # Lloyd refinements per subspace codebook
 
 
+def _split(frame: DataFrame, arr: str, out: str, *keep: str) -> DataFrame:
+    """(keep…, m, out): each ``frame`` row's ``arr`` split into its
+    PQ_M subvectors of PQ_SUB elements, m = 0..PQ_M−1."""
+    ms = frame.sparkSession.range(PQ_M).select(F.col("id").cast("bigint").alias("m"))
+    return frame.crossJoin(F.broadcast(ms)).select(
+        *keep, "m", F.expr(f"slice({arr}, m * {PQ_SUB} + 1, {PQ_SUB})").alias(out)
+    )
+
+
+def _split_sql(src: str, arr: str, out: str, keep: str) -> str:
+    """The SQL twin of `_split`, as a relation."""
+    return f"""(
+      SELECT {keep}, m, {arr}[m*{PQ_SUB}+1 : m*{PQ_SUB}+{PQ_SUB}] AS {out}
+      FROM {src} CROSS JOIN (SELECT unnest(generate_series(0, {PQ_M - 1})) AS m)
+    )"""
+
+
+def _slot(m: Column, cid: Column) -> Column:
+    """The LUT key of codebook entry ``cid`` in subspace ``m``."""
+    return m * (PQ_K + 1) + cid
+
+
+def _code_fold(lut: str) -> Column:
+    """ADC: Σ_m ``lut``[slot(m, code[m])] over a row's PQ_M-code array
+    — an exact BIGINT fold of PQ_M map lookups."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
+        F.lit(0).cast("bigint"),
+        lambda acc, m: acc
+        + F.element_at(F.col(lut), _slot(m.cast("bigint"), F.element_at("code", m + 1))),
+    )
+
+
+def _lut(qsub: DataFrame, cb: DataFrame) -> DataFrame:
+    """(q_vec_id, lut): per query, the ADC lookup table slot(m, cid) →
+    qsq·ce over every codebook entry, from the query subvectors
+    ``qsub``(q_vec_id, m, qsq) and the broadcast codebook ``cb``."""
+    return (
+        qsub.join(F.broadcast(cb), "m")
+        .select(
+            "q_vec_id",
+            _slot(F.col("m"), F.col("cid")).alias("slot"),
+            _dot_i("qsq", "ce").alias("dotq"),
+        )
+        .groupBy("q_vec_id")
+        .agg(F.map_from_entries(F.collect_list(F.struct("slot", "dotq"))).alias("lut"))
+    )
+
+
+def _pq_tables_sql(cb: str, qsub: str) -> str:
+    """The PQ oracles' shared CTEs over the codebook ``cb`` and CTE
+    sub(vec_id, m, sq): codes (each subvector's nearest entry), cn2
+    (each entry's squared norm) and lut (every ``qsub``(q_vec_id, m,
+    qsq) query subvector dotted with every entry)."""
+    return f"""
+    codes AS (SELECT vec_id, m, cid FROM ({_assign_sql("sub", cb, PQ_SUB, "m")})),
+    cn2 AS (SELECT m, cid, {_n2_sql("ce")} AS n2 FROM {cb}),
+    lut AS (
+      SELECT s.q_vec_id, s.m, c.cid, {_dot_sql("s.qsq", "c.ce", PQ_SUB)} AS dotq
+      FROM {qsub} s JOIN {cb} c ON c.m = s.m
+    )"""
+
+
 def _pq_oracle() -> str:
     """Unrolled PQ pipeline as DuckDB SQL: grid-quantize → split into
     subvectors → seed per-subspace codebooks → PQ_ITERS Lloyd
     refinements → encode → per-query LUT → exact-integer ADC dot +
     reconstructed norms → cosine rank → top-k."""
-    d2 = (
-        "list_sum(list_transform(generate_series(1, {n}),"
-        " i -> (s.sq[i] - c.ce[i]) * (s.sq[i] - c.ce[i])))"
-    ).format(n=PQ_SUB)
-    assign = f"""
-    a{{n}} AS (
-      SELECT vec_id, m, cid, sq FROM (
-        SELECT s.vec_id, s.m, c.cid, s.sq,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                                  ORDER BY {d2}, c.cid) AS rn
-        FROM sub s JOIN c{{p}} c ON c.m = s.m
-      ) WHERE rn = 1
-    )"""
-    update = f"""
-    c{{n}} AS (
-      SELECT m, cid, list(mu ORDER BY pos) AS ce FROM (
-        SELECT a.m, a.cid, u.pos,
-               CAST(floor(CAST(sum(a.sq[u.pos]) AS DOUBLE) / count(*)) AS BIGINT) AS mu
-        FROM a{{n}} a CROSS JOIN (SELECT unnest(generate_series(1, {PQ_SUB})) AS pos) u
-        GROUP BY a.m, a.cid, u.pos
-      ) GROUP BY m, cid
-    )"""
-    parts = [f"""
-    eq AS (
-      SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * {KMEANS_SCALE}) AS BIGINT)) AS eq
-      FROM embeddings
-    ),
-    sub AS (
-      SELECT vec_id, m, eq[m*{PQ_SUB}+1 : m*{PQ_SUB}+{PQ_SUB}] AS sq
-      FROM eq CROSS JOIN (SELECT unnest(generate_series(0, {PQ_M - 1})) AS m)
-    ),
-    seeds AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS cid, vec_id
-      FROM eq WHERE vec_id < {PQ_K}
-    ),
-    c0 AS (SELECT s.m, d.cid, s.sq AS ce FROM sub s JOIN seeds d USING (vec_id))"""]
-    for it in range(PQ_ITERS):
-        parts.append(assign.format(n=it + 1, p=it))
-        parts.append(update.format(n=it + 1))
-    final_cb = f"c{PQ_ITERS}"
-    return "WITH " + ",".join(parts) + f""",
-    codes AS (
-      SELECT vec_id, m, cid FROM (
-        SELECT s.vec_id, s.m, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                                  ORDER BY {d2}, c.cid) AS rn
-        FROM sub s JOIN {final_cb} c ON c.m = s.m
-      ) WHERE rn = 1
-    ),
-    cn2 AS (
-      SELECT m, cid,
-             CAST(list_sum(list_transform(ce, x -> x * x)) AS BIGINT) AS n2
-      FROM {final_cb}
-    ),
+    qsub = f"(SELECT vec_id AS q_vec_id, m, sq AS qsq FROM sub WHERE vec_id < {N_QUERIES})"
+    return f"""
+    WITH {_EQ_SQL},
+    sub AS {_split_sql("eq", "eq", "sq", "vec_id")},
+    {_lloyd_sql("sub", PQ_K, PQ_SUB, PQ_ITERS, "m").strip()},
+    {_pq_tables_sql(f"c{PQ_ITERS}", qsub).strip()},
     xn2 AS (
       SELECT k.vec_id, CAST(sum(c.n2) AS BIGINT) AS n2hat
       FROM codes k JOIN cn2 c ON c.m = k.m AND c.cid = k.cid
       GROUP BY k.vec_id
     ),
     qn2 AS (
-      SELECT vec_id AS q_vec_id,
-             CAST(list_sum(list_transform(eq, x -> x * x)) AS BIGINT) AS n2
+      SELECT vec_id AS q_vec_id, {_n2_sql("eq")} AS n2
       FROM eq WHERE vec_id < {N_QUERIES}
-    ),
-    lut AS (
-      SELECT s.vec_id AS q_vec_id, s.m, c.cid,
-             CAST(list_sum(list_transform(generate_series(1, {PQ_SUB}),
-                                          i -> s.sq[i] * c.ce[i])) AS BIGINT) AS dotq
-      FROM sub s JOIN {final_cb} c ON c.m = s.m
-      WHERE s.vec_id < {N_QUERIES}
     ),
     scores AS (
       SELECT l.q_vec_id, k.vec_id, CAST(sum(l.dotq) AS BIGINT) AS pq_dot
@@ -1890,34 +1666,19 @@ def _pq_oracle() -> str:
       GROUP BY 1, 2
     ),
     sims AS (
-      SELECT s.q_vec_id, s.vec_id,
-             round(CAST(s.pq_dot AS DOUBLE)
-                   / (sqrt(CAST(q.n2 AS DOUBLE)) * sqrt(CAST(x.n2hat AS DOUBLE))),
-                   6) AS pq_sim
+      SELECT s.q_vec_id, s.vec_id, {_int_cos_sql("s.pq_dot", "q.n2", "x.n2hat")} AS pq_sim
       FROM scores s
       JOIN qn2 q ON q.q_vec_id = s.q_vec_id
       JOIN xn2 x ON x.vec_id = s.vec_id
-    ),
-    ranked AS (
-      SELECT q_vec_id, vec_id, pq_sim,
-             row_number() OVER (PARTITION BY q_vec_id
-                                ORDER BY pq_sim DESC, vec_id) AS rn
-      FROM sims
     )
-    SELECT q_vec_id, vec_id AS neighbor_id, pq_sim, rn
-    FROM ranked WHERE rn <= {IVF_TOP_K}
+    {_neighbors_sql("sims", IVF_TOP_K, "pq_sim")}
     """
 
 
 def _pq_subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, m, sq): the 1e-4-grid vector split into PQ_M
     subvectors of PQ_SUB dims each."""
-    pts = _km_quantized(spark, sf_dir)
-    ms = spark.range(PQ_M).select(F.col("id").cast("bigint").alias("m"))
-    return pts.crossJoin(F.broadcast(ms)).select(
-        "vec_id", "m",
-        F.expr(f"slice(eq, m * {PQ_SUB} + 1, {PQ_SUB})").alias("sq"),
-    )
+    return _split(_grid_emb(spark, sf_dir), "eq", "sq", "vec_id")
 
 
 def _pq_assign(
@@ -2004,7 +1765,7 @@ def _pq_train(spark: SparkSession, sf_dir: str, sub: DataFrame) -> DataFrame:
     from minimapreduce_spark.operators.ordered import with_bounded_rank
 
     seeds = (
-        _km_quantized(spark, sf_dir)
+        _grid_emb(spark, sf_dir)
         .where(F.col("vec_id") < PQ_K)
         .select(F.col("vec_id").alias("seed_id"))
     )
@@ -2049,33 +1810,8 @@ def _pq_train(spark: SparkSession, sf_dir: str, sub: DataFrame) -> DataFrame:
         "m", "cid", F.col("sq").alias("ce")
     )
     for _ in range(PQ_ITERS):
-        cb = _pq_update(_pq_assign(sub, cb, keep_sq=True))
+        cb = _dim_mean(_pq_assign(sub, cb, keep_sq=True), ["m", "cid"], "sq", "ce")
     return cb.localCheckpoint(eager=False)
-
-
-def _pq_update(assigned: DataFrame) -> DataFrame:
-    """Codebook update on the same grid: exact-floor integer means per
-    (subspace, entry, dim) — the `embedding_kmeans_lloyd` discipline.
-    Entries that lose all members simply drop out (the codebook
-    shrinks); both engines compute the identical shrink, so the chain
-    stays bit-exact cross-engine."""
-    dims = (
-        assigned.select("m", "cid", F.posexplode("sq").alias("pos", "v"))
-        .groupBy("m", "cid", "pos")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
-    # |s| ≤ corpus × grid-magnitude ≈ 1e8 — double-exact, plain floor OK
-    mu = F.floor(F.col("s").cast("double") / F.col("n")).cast("bigint")
-    return (
-        dims.select("m", "cid", "pos", mu.alias("mu"))
-        .groupBy("m", "cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                lambda x: x["mu"],
-            ).alias("ce")
-        )
-    )
 
 
 @register("ann_pq_adc_topk", oracle=_pq_oracle(), bench=True)
@@ -2123,102 +1859,36 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = _pq_assign(sub, cb, keep_sq=False)
     # one PQ_M-code array per vector, ordered by subspace, plus the
     # exact reconstructed norm² from the per-entry norm table
-    sq_n2 = F.aggregate(
-        F.transform("ce", lambda x: x * x),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    cn2 = cb.select("m", "cid", sq_n2.alias("n2"))
+    cn2 = cb.select("m", "cid", _n2_i("ce").alias("n2"))
     xn2 = (
         codes.join(F.broadcast(cn2), ["m", "cid"])
         .groupBy("vec_id")
         .agg(F.sum("n2").alias("n2hat"))
     )
     code_arr = (
-        codes.groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("m", "cid"))),
-                lambda x: x["cid"],
-            ).alias("code")
-        )
-        .join(xn2, "vec_id")
+        codes.groupBy("vec_id").agg(_by_pos("m", "cid").alias("code")).join(xn2, "vec_id")
     )
-    dotq = F.aggregate(
-        F.zip_with("sq", "ce", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
+    lut_maps = _lut(_queries(sub, m="m", qsq="sq"), cb).join(
+        _queries(_grid_emb(spark, sf_dir), qn2=_n2_i("eq")), "q_vec_id"
     )
-    qn2 = _km_quantized(spark, sf_dir).where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"),
-        F.aggregate(
-            F.transform("eq", lambda x: x * x),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        ).alias("qn2"),
+    scored = code_arr.join(
+        F.broadcast(lut_maps), code_arr["vec_id"] != lut_maps["q_vec_id"]
+    ).select(
+        "q_vec_id", "vec_id", _int_cos(_code_fold("lut"), "qn2", "n2hat").alias("pq_sim")
     )
-    lut = (
-        sub.where(F.col("vec_id") < N_QUERIES)
-        .join(F.broadcast(cb), "m")
-        .select(
-            F.col("vec_id").alias("q_vec_id"),
-            (F.col("m") * (PQ_K + 1) + F.col("cid")).alias("slot"),
-            dotq.alias("dotq"),
-        )
-    )
-    lut_maps = (
-        lut.groupBy("q_vec_id")
-        .agg(F.map_from_entries(F.collect_list(F.struct("slot", "dotq"))).alias("lut"))
-        .join(qn2, "q_vec_id")
-    )
-    # ADC: exact BIGINT fold of PQ_M broadcast-map lookups per vector
-    pq_dot = F.aggregate(
-        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, m: acc
-        + F.element_at(
-            F.col("lut"),
-            m.cast("bigint") * (PQ_K + 1) + F.element_at("code", m + 1),
-        ),
-    )
-    scored = (
-        code_arr.join(
-            F.broadcast(lut_maps),
-            code_arr["vec_id"] != lut_maps["q_vec_id"],
-        )
-        .select(
-            "q_vec_id",
-            "vec_id",
-            F.round(
-                pq_dot.cast("double")
-                / (F.sqrt(F.col("qn2").cast("double"))
-                   * F.sqrt(F.col("n2hat").cast("double"))),
-                6,
-            ).alias("pq_sim"),
-        )
-    )
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("pq_sim"), F.asc("vec_id"))
-    return (
-        scored.select(
-            "q_vec_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "pq_sim",
-            F.row_number().over(w).alias("rn"),
-        )
-        .where(F.col("rn") <= IVF_TOP_K)
-    )
+    return _neighbors(scored, IVF_TOP_K, "pq_sim")
 
 
-def _ivfpq_oracle(nprobe: int = 1, train_pred: str | None = None) -> str:
-    """Unrolled residual IVF-PQ as DuckDB SQL: grid-quantize → per-label
-    grid centroids (exact-floor means) → residuals → per-subspace
-    codebooks on residuals (seed + PQ_ITERS Lloyd refinements, the
-    _pq_oracle chain verbatim over residual subvectors) → encode →
-    cosine-route each query to its top-``nprobe`` cells → ADC over the
-    routed cells' members only, with the exact decomposition
-    dot(q, x̂) = dot(q, c_cell) + Σ_m LUT_q(m, code_m) and
-    ‖x̂‖² = ‖c‖² + 2·Σ_m c_m·ce + Σ_m ‖ce‖² (the constant term is
-    per-cell, so it rides the route rows).
+def _ivfpq_ctes(nprobe: int = 1, train_pred: str | None = None) -> str:
+    """Unrolled residual IVF-PQ as DuckDB CTEs ending in
+    sims(q_vec_id, vec_id, ivfpq_sim): grid-quantize → per-label grid
+    centroids (exact-floor means) → residuals → per-subspace codebooks
+    on residuals (`_lloyd_sql`, the _pq_oracle chain over the training
+    residual subvectors) → encode → cosine-route each query to its
+    top-``nprobe`` cells → ADC over the routed cells' members only,
+    with the exact decomposition dot(q, x̂) = dot(q, c_cell) +
+    Σ_m LUT_q(m, code_m) and ‖x̂‖² = ‖c‖² + 2·Σ_m c_m·ce + Σ_m ‖ce‖²
+    (the constant term is per-cell, so it rides the route rows).
 
     ``train_pred`` (SQL predicate on vec_id/label) restricts the
     TRAINING population — centroid means, seed membership (seeds are
@@ -2227,99 +1897,37 @@ def _ivfpq_oracle(nprobe: int = 1, train_pred: str | None = None) -> str:
     encoding, routing and serving still cover the full corpus: the
     frozen-index append contract of `ann_ivfpq_append_serve`."""
     tp = train_pred or "TRUE"
-    d2 = (
-        "list_sum(list_transform(generate_series(1, {n}),"
-        " i -> (s.sq[i] - c.ce[i]) * (s.sq[i] - c.ce[i])))"
-    ).format(n=PQ_SUB)
-    assign = f"""
-    a{{n}} AS (
-      SELECT vec_id, m, cid, sq FROM (
-        SELECT s.vec_id, s.m, c.cid, s.sq,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                                  ORDER BY {d2}, c.cid) AS rn
-        FROM sub_t s JOIN c{{p}} c ON c.m = s.m
-      ) WHERE rn = 1
-    )"""
-    update = f"""
-    c{{n}} AS (
-      SELECT m, cid, list(mu ORDER BY pos) AS ce FROM (
-        SELECT a.m, a.cid, u.pos,
-               CAST(floor(CAST(sum(a.sq[u.pos]) AS DOUBLE) / count(*)) AS BIGINT) AS mu
-        FROM a{{n}} a CROSS JOIN (SELECT unnest(generate_series(1, {PQ_SUB})) AS pos) u
-        GROUP BY a.m, a.cid, u.pos
-      ) GROUP BY m, cid
-    )"""
-    dot64 = (
-        "CAST(list_sum(list_transform(generate_series(1, 64),"
-        " i -> {a}[i] * {b}[i])) AS BIGINT)"
+    cb = f"c{PQ_ITERS}"
+    route = _top_k_sql(
+        """q JOIN qn2 qn ON qn.q_vec_id = q.q_vec_id
+        CROSS JOIN cg g JOIN celln2 cl ON cl.label = g.label""",
+        nprobe,
+        _int_cos_sql(_dot_sql("q.qe", "g.cg", 64), "qn.qn2", "cl.cn2cell"),
+        tie="g.label",
+        by="q.q_vec_id",
+        rn="crn",
+        cols="q.q_vec_id, g.label",
     )
-    parts = [f"""
-    eq AS (
-      SELECT vec_id, label,
-             list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * {KMEANS_SCALE}) AS BIGINT)) AS eq
-      FROM embeddings
-    ),
-    cg AS (
-      SELECT label, list(mu ORDER BY dim) AS cg FROM (
-        SELECT label, dim,
-               CAST(floor(CAST(sum(v) AS DOUBLE) / count(*)) AS BIGINT) AS mu
-        FROM (SELECT label, generate_subscripts(eq, 1) AS dim, unnest(eq) AS v
-              FROM eq WHERE {tp})
-        GROUP BY label, dim
-      ) GROUP BY label
-    ),
+    return f"""{_EQ_SQL},
+    cg AS ({_floor_mean_sql(f"(SELECT * FROM eq WHERE {tp})", "label", "eq", "cg")}),
     res AS (
       SELECT e.vec_id, e.label,
              list_transform(generate_series(1, 64), i -> e.eq[i] - g.cg[i]) AS rq
       FROM eq e JOIN cg g USING (label)
     ),
-    sub AS (
-      SELECT vec_id, m, rq[m*{PQ_SUB}+1 : m*{PQ_SUB}+{PQ_SUB}] AS sq
-      FROM res CROSS JOIN (SELECT unnest(generate_series(0, {PQ_M - 1})) AS m)
-    ),
+    sub AS {_split_sql("res", "rq", "sq", "vec_id")},
     sub_t AS (
       SELECT s.vec_id, s.m, s.sq
       FROM sub s JOIN (SELECT vec_id FROM eq WHERE {tp}) t USING (vec_id)
     ),
-    seeds AS (
-      SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS cid, vec_id
-      FROM eq WHERE vec_id < {PQ_K}
-    ),
-    c0 AS (SELECT s.m, d.cid, s.sq AS ce FROM sub_t s JOIN seeds d USING (vec_id))"""]
-    for it in range(PQ_ITERS):
-        parts.append(assign.format(n=it + 1, p=it))
-        parts.append(update.format(n=it + 1))
-    cb = f"c{PQ_ITERS}"
-    return "WITH " + ",".join(parts) + f""",
-    codes AS (
-      SELECT vec_id, m, cid FROM (
-        SELECT s.vec_id, s.m, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                                  ORDER BY {d2}, c.cid) AS rn
-        FROM sub s JOIN {cb} c ON c.m = s.m
-      ) WHERE rn = 1
-    ),
-    cn2 AS (
-      SELECT m, cid,
-             CAST(list_sum(list_transform(ce, x -> x * x)) AS BIGINT) AS n2
-      FROM {cb}
-    ),
-    csub AS (
-      SELECT label, m, cg[m*{PQ_SUB}+1 : m*{PQ_SUB}+{PQ_SUB}] AS csq
-      FROM cg CROSS JOIN (SELECT unnest(generate_series(0, {PQ_M - 1})) AS m)
-    ),
+    {_lloyd_sql("sub_t", PQ_K, PQ_SUB, PQ_ITERS, "m").strip()},
+    q AS (SELECT vec_id AS q_vec_id, eq AS qe FROM eq WHERE vec_id < {N_QUERIES}),
+    {_pq_tables_sql(cb, _split_sql("q", "qe", "qsq", "q_vec_id")).strip()},
     cdot AS (
-      SELECT s.label, s.m, c.cid,
-             CAST(list_sum(list_transform(generate_series(1, {PQ_SUB}),
-                                          i -> s.csq[i] * c.ce[i])) AS BIGINT) AS cd
-      FROM csub s JOIN {cb} c ON c.m = s.m
+      SELECT s.label, s.m, c.cid, {_dot_sql("s.csq", "c.ce", PQ_SUB)} AS cd
+      FROM {_split_sql("cg", "cg", "csq", "label")} s JOIN {cb} c ON c.m = s.m
     ),
-    celln2 AS (
-      SELECT label,
-             CAST(list_sum(list_transform(cg, x -> x * x)) AS BIGINT) AS cn2cell
-      FROM cg
-    ),
+    celln2 AS (SELECT label, {_n2_sql("cg")} AS cn2cell FROM cg),
     xn2 AS (
       SELECT p.vec_id, p.label,
              CAST(p.part + cl.cn2cell AS BIGINT) AS n2hat
@@ -2332,38 +1940,10 @@ def _ivfpq_oracle(nprobe: int = 1, train_pred: str | None = None) -> str:
         GROUP BY k.vec_id, e.label
       ) p JOIN celln2 cl ON cl.label = p.label
     ),
-    q AS (SELECT vec_id AS q_vec_id, eq AS qe FROM eq WHERE vec_id < {N_QUERIES}),
-    qn2 AS (
-      SELECT q_vec_id,
-             CAST(list_sum(list_transform(qe, x -> x * x)) AS BIGINT) AS qn2
-      FROM q
-    ),
-    route AS (
-      SELECT q_vec_id, label FROM (
-        SELECT q.q_vec_id, g.label,
-               row_number() OVER (
-                 PARTITION BY q.q_vec_id
-                 ORDER BY round(CAST({dot64.format(a="q.qe", b="g.cg")} AS DOUBLE)
-                                / (sqrt(CAST(qn.qn2 AS DOUBLE))
-                                   * sqrt(CAST(cl.cn2cell AS DOUBLE))), 6) DESC,
-                          g.label
-               ) AS crn
-        FROM q, cg g, qn2 qn, celln2 cl
-        WHERE qn.q_vec_id = q.q_vec_id AND cl.label = g.label
-      ) WHERE crn <= {nprobe}
-    ),
-    qsubs AS (
-      SELECT q_vec_id, m, qe[m*{PQ_SUB}+1 : m*{PQ_SUB}+{PQ_SUB}] AS qsq
-      FROM q CROSS JOIN (SELECT unnest(generate_series(0, {PQ_M - 1})) AS m)
-    ),
-    lut AS (
-      SELECT s.q_vec_id, s.m, c.cid,
-             CAST(list_sum(list_transform(generate_series(1, {PQ_SUB}),
-                                          i -> s.qsq[i] * c.ce[i])) AS BIGINT) AS dotq
-      FROM qsubs s JOIN {cb} c ON c.m = s.m
-    ),
+    qn2 AS (SELECT q_vec_id, {_n2_sql("qe")} AS qn2 FROM q),
+    route AS (SELECT q_vec_id, label FROM {route}),
     qdotc AS (
-      SELECT r.q_vec_id, r.label, {dot64.format(a="q.qe", b="g.cg")} AS qc
+      SELECT r.q_vec_id, r.label, {_dot_sql("q.qe", "g.cg", 64)} AS qc
       FROM route r
       JOIN q ON q.q_vec_id = r.q_vec_id
       JOIN cg g ON g.label = r.label
@@ -2379,23 +1959,20 @@ def _ivfpq_oracle(nprobe: int = 1, train_pred: str | None = None) -> str:
     ),
     sims AS (
       SELECT s.q_vec_id, s.vec_id,
-             round(CAST(s.rdot + qc.qc AS DOUBLE)
-                   / (sqrt(CAST(qn.qn2 AS DOUBLE)) * sqrt(CAST(x.n2hat AS DOUBLE))),
-                   6) AS ivfpq_sim
+             {_int_cos_sql("s.rdot + qc.qc", "qn.qn2", "x.n2hat")} AS ivfpq_sim
       FROM scores s
       JOIN qdotc qc ON qc.q_vec_id = s.q_vec_id AND qc.label = s.label
       JOIN qn2 qn ON qn.q_vec_id = s.q_vec_id
       JOIN xn2 x ON x.vec_id = s.vec_id
-    ),
-    ranked AS (
-      SELECT q_vec_id, vec_id, ivfpq_sim,
-             row_number() OVER (PARTITION BY q_vec_id
-                                ORDER BY ivfpq_sim DESC, vec_id) AS rn
-      FROM sims
+    )"""
+
+
+def _ivfpq_oracle(nprobe: int = 1, train_pred: str | None = None) -> str:
+    """The residual IVF-PQ top-k as DuckDB SQL (`_ivfpq_ctes`)."""
+    return (
+        f"WITH {_ivfpq_ctes(nprobe, train_pred)}"
+        f" {_neighbors_sql('sims', IVF_TOP_K, 'ivfpq_sim')}"
     )
-    SELECT q_vec_id, vec_id AS neighbor_id, ivfpq_sim, rn
-    FROM ranked WHERE rn <= {IVF_TOP_K}
-    """
 
 
 def _ivfpq_topk_plan(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
@@ -2459,25 +2036,14 @@ def _ivfpq_rsub(
     inline build, the base-artifact build, and the physical append
     path (which residualizes ONLY an arrival batch against the
     artifact's centroids), factored so the three can never drift."""
-    embq = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * KMEANS_SCALE).cast("bigint"),
-        ).alias("eq"),
-    )
+    embq = _grid_emb(spark, sf_dir, "label")
     if pred is not None:
         embq = embq.where(pred)
     res = embq.join(F.broadcast(cg), "label").select(
         "vec_id", "label",
         F.zip_with("eq", "cg", lambda x, y: x - y).alias("rq"),
     )
-    ms = spark.range(PQ_M).select(F.col("id").cast("bigint").alias("m"))
-    return res.crossJoin(F.broadcast(ms)).select(
-        "vec_id", "label", "m",
-        F.expr(f"slice(rq, m * {PQ_SUB} + 1, {PQ_SUB})").alias("sq"),
-    )
+    return _split(res, "rq", "sq", "vec_id", "label")
 
 
 def _ivfpq_index_frames(
@@ -2503,33 +2069,11 @@ def _ivfpq_index_frames(
     predicate for both, so the artifact contains only base-corpus
     codes and the batch's codes arrive later via the physical append
     (`ivfpq_index_append`)."""
-    embq = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * KMEANS_SCALE).cast("bigint"),
-        ).alias("eq"),
-    )
+    embq = _grid_emb(spark, sf_dir, "label")
     embq_t = embq.where(train_pred) if train_pred is not None else embq
-    # 1. per-label grid centroids: exact-floor integer means (TRAIN set)
-    cg = (
-        embq_t.select("label", F.posexplode("eq").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select(
-            "label", "pos",
-            F.floor(F.col("s").cast("double") / F.col("n")).cast("bigint").alias("mu"),
-        )
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                lambda x: x["mu"],
-            ).alias("cg")
-        )
-        .localCheckpoint(eager=False)  # feeds residuals, cell tables, routing
-    )
+    # 1. per-label grid centroids: exact-floor integer means (TRAIN set);
+    # they feed residuals, cell tables and routing
+    cg = _dim_mean(embq_t, ["label"], "eq", "cg").localCheckpoint(eager=False)
     # 2. residuals and their subvectors; codebooks via the shared chain
     rsub = _ivfpq_rsub(spark, sf_dir, cg)
     rsub_t = (
@@ -2540,69 +2084,41 @@ def _ivfpq_index_frames(
     # stays oracle-identical under any predicate
     cb = _pq_train(spark, sf_dir, rsub_t.drop("label"))
     rsub_e = rsub.where(encode_pred) if encode_pred is not None else rsub
-    return cg, cb, _ivfpq_encode(spark, rsub_e, cg, cb)
+    return cg, cb, _ivfpq_encode(rsub_e, cg, cb)
 
 
-def _ivfpq_encode(
-    spark: SparkSession, rsub: DataFrame, cg: DataFrame, cb: DataFrame
-) -> DataFrame:
+def _ivfpq_encode(rsub: DataFrame, cg: DataFrame, cb: DataFrame) -> DataFrame:
     """ENCODE under FROZEN quantizers: (vec_id, label, code, n2hat)
     for the residual-subvector frame ``rsub(vec_id, label, m, sq)``
     given fixed centroids + codebooks. Steps 3-4 of the chain, factored
-    so the append path and the append-cost probe can encode an
-    ARBITRARY frame (a daily arrival batch) without touching the
-    corpus — the encode's inputs are the batch rows plus two bounded
-    broadcasts, so its cost is ∝ batch at any corpus size."""
-    ms = spark.range(PQ_M).select(F.col("id").cast("bigint").alias("m"))
+    so the append path can encode an ARBITRARY frame (a daily arrival
+    batch) without touching the corpus — the encode's inputs are the
+    batch rows plus two bounded broadcasts, so its cost is ∝ batch at
+    any corpus size."""
     # 3. encode, with the cell id riding along (no corpus-side re-join)
     codes = _pq_assign(rsub, cb, keep_sq=False, extra=("label",))
     # 4. exact reconstructed norm², fused into ONE per-label broadcast
     # map: val(label, m, cid) = ‖ce‖² + 2·c_m·ce, so per vector
     # n2hat = ‖c‖² + Σ_m val[slot(m, code_m)]
-    fold_sum = lambda col: F.aggregate(  # noqa: E731
-        col, F.lit(0).cast("bigint"), lambda acc, x: acc + x
-    )
-    arr_n2 = lambda col: fold_sum(F.transform(col, lambda x: x * x))  # noqa: E731
-    slot = F.col("m") * (PQ_K + 1) + F.col("cid")
-    csub = cg.crossJoin(F.broadcast(ms)).select(
-        "label", "m",
-        F.expr(f"slice(cg, m * {PQ_SUB} + 1, {PQ_SUB})").alias("csq"),
-    )
     cells = (
-        csub.join(cb, "m")
+        _split(cg, "cg", "csq", "label")
+        .join(cb, "m")
         .select(
             "label",
-            slot.alias("slot"),
-            (
-                arr_n2("ce")
-                + 2 * fold_sum(F.zip_with("csq", "ce", lambda x, y: x * y))
-            ).alias("val"),
+            _slot(F.col("m"), F.col("cid")).alias("slot"),
+            (_n2_i("ce") + 2 * _dot_i("csq", "ce")).alias("val"),
         )
         .groupBy("label")
         .agg(F.map_from_entries(F.collect_list(F.struct("slot", "val"))).alias("vmap"))
-        .join(cg.select("label", arr_n2("cg").alias("cn2cell")), "label")
-    )
-    code_fold = lambda mapcol: F.aggregate(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, m: acc
-        + F.element_at(
-            F.col(mapcol),
-            m.cast("bigint") * (PQ_K + 1) + F.element_at("code", m + 1),
-        ),
+        .join(cg.select("label", _n2_i("cg").alias("cn2cell")), "label")
     )
     return (
         codes.groupBy("vec_id", "label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("m", "cid"))),
-                lambda x: x["cid"],
-            ).alias("code")
-        )
+        .agg(_by_pos("m", "cid").alias("code"))
         .join(F.broadcast(cells), "label")
         .select(
             "vec_id", "label", "code",
-            (F.col("cn2cell") + code_fold("vmap")).alias("n2hat"),
+            (F.col("cn2cell") + _code_fold("vmap")).alias("n2hat"),
         )
     )
 
@@ -2629,29 +2145,6 @@ def _ivfpq_serve(
     the hook that lets the ONLINE serving path
     (`stream_ann_serve_ivfpq`) score each micro-batch of arriving
     queries through the identical routing/LUT/ADC half."""
-    embq = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * KMEANS_SCALE).cast("bigint"),
-        ).alias("eq"),
-    )
-    ms = spark.range(PQ_M).select(F.col("id").cast("bigint").alias("m"))
-    fold_sum = lambda col: F.aggregate(  # noqa: E731
-        col, F.lit(0).cast("bigint"), lambda acc, x: acc + x
-    )
-    arr_n2 = lambda col: fold_sum(F.transform(col, lambda x: x * x))  # noqa: E731
-    slot = F.col("m") * (PQ_K + 1) + F.col("cid")
-    code_fold = lambda mapcol: F.aggregate(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, m: acc
-        + F.element_at(
-            F.col(mapcol),
-            m.cast("bigint") * (PQ_K + 1) + F.element_at("code", m + 1),
-        ),
-    )
     # 5. routing: grid cosine to the nearest cell centroid; the routed
     # row KEEPS the exact query·centroid dot (the ADC constant term).
     # The query frame is bounded (N_QUERIES rows) and feeds routing AND
@@ -2660,81 +2153,32 @@ def _ivfpq_serve(
     qsrc = (
         query_frame.select("q_vec_id", "qe")
         if query_frame is not None
-        else embq.where(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("q_vec_id"), F.col("eq").alias("qe")
-        )
+        else _queries(_grid_emb(spark, sf_dir), qe="eq")
     )
-    q = qsrc.select(
-        "q_vec_id", "qe", arr_n2("qe").alias("qn2")
-    ).localCheckpoint(eager=False)
-    assign_w = W.partitionBy("q_vec_id").orderBy(F.desc("c_sim"), F.asc("label"))
-    routed = (
-        q.crossJoin(F.broadcast(cg))
-        .join(F.broadcast(cg.select("label", arr_n2("cg").alias("cn2cell"))), "label")
-        .select(
-            "q_vec_id", "label", "qn2",
-            fold_sum(F.zip_with("qe", "cg", lambda x, y: x * y)).alias("qc"),
-            "cn2cell",
-        )
-        .select(
-            "q_vec_id", "label", "qn2", "qc",
-            F.round(
-                F.col("qc").cast("double")
-                / (F.sqrt(F.col("qn2").cast("double"))
-                   * F.sqrt(F.col("cn2cell").cast("double"))),
-                6,
-            ).alias("c_sim"),
-        )
-        .select(
-            "q_vec_id", "qn2", "qc",
-            F.col("label").alias("q_label"),
-            F.row_number().over(assign_w).alias("crn"),
-        )
-        .where(F.col("crn") <= nprobe)
-        .drop("crn")
+    q = qsrc.select("q_vec_id", "qe", _n2_i("qe").alias("qn2")).localCheckpoint(
+        eager=False
     )
+    scored = q.crossJoin(
+        F.broadcast(cg.select("label", "cg", _n2_i("cg").alias("cn2cell")))
+    ).select("q_vec_id", "label", "qn2", _dot_i("qe", "cg").alias("qc"), "cn2cell")
+    routed = _top_k(
+        scored.withColumn("c_sim", _int_cos("qc", "qn2", "cn2cell")),
+        nprobe,
+        "c_sim",
+        tie="label",
+        rn="crn",
+    ).select("q_vec_id", "qn2", "qc", F.col("label").alias("q_label"))
     # 6. ADC: per-query LUT map + the kept query·centroid term
-    qsub = q.crossJoin(F.broadcast(ms)).select(
-        "q_vec_id", "m",
-        F.expr(f"slice(qe, m * {PQ_SUB} + 1, {PQ_SUB})").alias("qsq"),
-    )
-    lut = qsub.join(F.broadcast(cb), "m").select(
+    q_side = _lut(_split(q, "qe", "qsq", "q_vec_id"), cb).join(routed, "q_vec_id")
+    scored = code_arr.join(
+        F.broadcast(q_side),
+        (F.col("label") == F.col("q_label")) & (F.col("vec_id") != F.col("q_vec_id")),
+    ).select(
         "q_vec_id",
-        slot.alias("slot"),
-        fold_sum(F.zip_with("qsq", "ce", lambda x, y: x * y)).alias("dotq"),
+        "vec_id",
+        _int_cos(_code_fold("lut") + F.col("qc"), "qn2", "n2hat").alias("ivfpq_sim"),
     )
-    q_side = (
-        lut.groupBy("q_vec_id")
-        .agg(F.map_from_entries(F.collect_list(F.struct("slot", "dotq"))).alias("lut"))
-        .join(routed, "q_vec_id")
-    )
-    scored = (
-        code_arr.join(
-            F.broadcast(q_side),
-            (F.col("label") == F.col("q_label"))
-            & (F.col("vec_id") != F.col("q_vec_id")),
-        )
-        .select(
-            "q_vec_id",
-            "vec_id",
-            F.round(
-                (code_fold("lut") + F.col("qc")).cast("double")
-                / (F.sqrt(F.col("qn2").cast("double"))
-                   * F.sqrt(F.col("n2hat").cast("double"))),
-                6,
-            ).alias("ivfpq_sim"),
-        )
-    )
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("ivfpq_sim"), F.asc("vec_id"))
-    return (
-        scored.select(
-            "q_vec_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "ivfpq_sim",
-            F.row_number().over(w).alias("rn"),
-        )
-        .where(F.col("rn") <= IVF_TOP_K)
-    )
+    return _neighbors(scored, IVF_TOP_K, "ivfpq_sim")
 
 
 @register("ann_ivfpq_topk", oracle=_ivfpq_oracle(), bench=True)
@@ -3015,7 +2459,7 @@ def ivfpq_index_append(
     def write(stage: str) -> None:
         cg, cb, _ = read_ivfpq_index(spark, base_root)
         rsub_b = _ivfpq_rsub(spark, sf_dir, cg, pred=batch_pred)
-        _write_ivfpq_codes(stage, _ivfpq_encode(spark, rsub_b, cg, cb))
+        _write_ivfpq_codes(stage, _ivfpq_encode(rsub_b, cg, cb))
         link_parent_files(stage, base_root, ("codes", "centroids", "codebook"))
 
     return publish_derived(
@@ -3113,12 +2557,7 @@ def _kcenter_oracle(k: int = KC_K) -> str:
         " i -> (e.eq[i] - c.ce[i]) * (e.eq[i] - c.ce[i])))"
     )
     parts = [f"""
-    eq AS (
-      SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * {KMEANS_SCALE}) AS BIGINT)) AS eq
-      FROM embeddings
-    ),
+    {_EQ_SQL},
     c1 AS (SELECT vec_id, eq AS ce FROM eq
            WHERE vec_id = (SELECT min(vec_id) FROM eq))"""]
     prev_d = None
@@ -3167,7 +2606,7 @@ def kcenter_select(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 
     register_self_by_value()
 
-    pts = _km_quantized(spark, sf_dir).localCheckpoint(eager=False)
+    pts = _grid_emb(spark, sf_dir).localCheckpoint(eager=False)
     seed = pts.orderBy("vec_id").limit(1).collect()[0]  # bounded: 1 row
     sc = spark.sparkContext
     rows = [(1, int(seed["vec_id"]), None)]
@@ -3260,79 +2699,31 @@ MMR_CANDS = 12  # relevance candidates fed to the re-ranker, per query
 MMR_K = 5       # re-ranked results returned per query
 
 
-# Candidate-stage CTE chains for the MMR oracle. Each must define
-# e(vec_id, emb[, …]) and end with cand(q_vec_id, vec_id, rel) = the
-# top-MMR_CANDS relevance pool per query; the shared greedy-hop suffix
-# (_mmr_oracle) is candidate-source-agnostic — exactly mirroring the
-# Spark side, where _mmr_greedy reranks whatever candidate frame the
-# serving rung produced.
-_MMR_BRUTE_CAND_SQL = f"""
-    e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    q AS MATERIALIZED (SELECT vec_id AS q_vec_id, emb AS qe FROM e WHERE vec_id < {N_QUERIES}),
-    relranked AS MATERIALIZED (
-      SELECT q_vec_id, e.vec_id,
-             round(list_cosine_similarity(qe, e.emb), 6) AS rel,
-             row_number() OVER (
-               PARTITION BY q_vec_id
-               ORDER BY round(list_cosine_similarity(qe, e.emb), 6) DESC, e.vec_id
-             ) AS rn
-      FROM q JOIN e ON e.vec_id <> q.q_vec_id
-    ),
-    cand AS MATERIALIZED (SELECT q_vec_id, vec_id, rel FROM relranked WHERE rn <= {MMR_CANDS})"""
-
-# IVF-routed candidates: the same centroid/routing SQL as
-# ann_ivf_topk's oracle (kept literal there — this copy adds the
-# MATERIALIZED hints the greedy suffix requires), with the relevance
-# pool cut at MMR_CANDS inside the routed cell only.
-_MMR_IVF_CAND_SQL = f"""
-    e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings),
-    dims AS MATERIALIZED (
-      SELECT label, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v FROM e
-    ),
-    cent AS MATERIALIZED (
-      SELECT label, list(av ORDER BY dim) AS centroid
-      FROM (SELECT label, dim, avg(v) AS av FROM dims GROUP BY label, dim)
-      GROUP BY label
-    ),
-    q AS MATERIALIZED (SELECT vec_id AS q_vec_id, emb AS qe FROM e WHERE vec_id < {N_QUERIES}),
-    assign AS MATERIALIZED (
-      SELECT q_vec_id, qe, label,
-             row_number() OVER (
-               PARTITION BY q_vec_id
-               ORDER BY round(list_cosine_similarity(qe, centroid), 6) DESC, label
-             ) AS crn
-      FROM q, cent
-    ),
-    routed AS MATERIALIZED (SELECT q_vec_id, qe, label FROM assign WHERE crn = 1),
-    relranked AS MATERIALIZED (
-      SELECT r.q_vec_id, e.vec_id,
-             round(list_cosine_similarity(r.qe, e.emb), 6) AS rel,
-             row_number() OVER (
-               PARTITION BY r.q_vec_id
-               ORDER BY round(list_cosine_similarity(r.qe, e.emb), 6) DESC, e.vec_id
-             ) AS rn
-      FROM routed r JOIN e ON e.label = r.label AND e.vec_id <> r.q_vec_id
-    ),
-    cand AS MATERIALIZED (SELECT q_vec_id, vec_id, rel FROM relranked WHERE rn <= {MMR_CANDS})"""
-
-
-def _mmr_oracle(cand_sql: str = _MMR_BRUTE_CAND_SQL) -> str:
-    """Unrolled MMR as DuckDB SQL over the given candidate CTE chain:
-    top-MMR_CANDS relevance candidates per query → pairwise candidate
-    sims → MMR_K greedy hops, each one (score = 0.5·rel −
-    0.5·maxsim-to-selected, argmax with vec_id tie-break, running
-    maxsim via greatest).
+def _mmr_oracle(sims: str, ctes: str = _E_SQL) -> str:
+    """Unrolled MMR as DuckDB SQL over a candidate source: ``ctes``
+    (defining e(vec_id, emb, …) and whatever ``sims`` reads) and the
+    relation ``sims``(q_vec_id, vec_id, cosine_sim), cut here to the
+    top-MMR_CANDS relevance pool per query → pairwise candidate sims →
+    MMR_K greedy hops, each one (score = 0.5·rel − 0.5·maxsim-to-
+    selected, argmax with vec_id tie-break, running maxsim via
+    greatest). The greedy suffix is candidate-source-agnostic, exactly
+    like the Spark side, where _mmr_greedy reranks whatever candidate
+    frame the serving rung produced.
 
     Every multiply-referenced CTE is AS MATERIALIZED: DuckDB 1.0
     inlines CTEs by default, so the m1→…→m{{K-1}} greedy chain (each
     hop referencing both its predecessor and `pairs`) re-expands
-    `pairs`→`cand`→`relranked` EXPONENTIALLY in MMR_K — ~40
+    `pairs`→`cand`→ the candidate scoring EXPONENTIALLY in MMR_K — ~40
     instantiations of the queries×corpus cosine join, each carrying
     two 64-double lists per row. Invisible at sf0.01 (40k-row join);
     at the 40× scale fixture it spilled >60 GB of DuckDB temp and ran
     >15 min, vs 20 s materialized (same rows, same hash — a pure
     planner hint)."""
-    parts = [cand_sql + """,
+    cand = _top_k_sql(
+        sims, MMR_CANDS, "cosine_sim", cols="q_vec_id, vec_id, cosine_sim AS rel"
+    )
+    parts = [ctes + f""",
+    cand AS MATERIALIZED (SELECT q_vec_id, vec_id, rel FROM {cand}),
     pairs AS MATERIALIZED (
       SELECT a.q_vec_id, a.vec_id AS va, b.vec_id AS vb,
              round(list_cosine_similarity(ea.emb, eb.emb), 6) AS sim
@@ -3342,12 +2733,7 @@ def _mmr_oracle(cand_sql: str = _MMR_BRUTE_CAND_SQL) -> str:
       JOIN e eb ON eb.vec_id = b.vec_id
     ),
     s1 AS MATERIALIZED (
-      SELECT q_vec_id, vec_id, rel AS score FROM (
-        SELECT q_vec_id, vec_id, rel,
-               row_number() OVER (PARTITION BY q_vec_id
-                                  ORDER BY rel DESC, vec_id) AS rn
-        FROM cand
-      ) WHERE rn = 1
+      SELECT q_vec_id, vec_id, rel AS score FROM {_top_k_sql("cand", 1, "rel")}
     ),
     m1 AS MATERIALIZED (
       SELECT c.q_vec_id, c.vec_id, c.rel, p.sim AS ms
@@ -3356,16 +2742,13 @@ def _mmr_oracle(cand_sql: str = _MMR_BRUTE_CAND_SQL) -> str:
       JOIN pairs p ON p.q_vec_id = c.q_vec_id AND p.va = c.vec_id
                   AND p.vb = s1.vec_id
     )"""]
+    score = "0.5 * rel - 0.5 * ms"
     for r in range(2, MMR_K + 1):
+        best = _top_k_sql(
+            f"m{r - 1}", 1, score, cols=f"q_vec_id, vec_id, {score} AS score"
+        )
         parts.append(f"""
-    s{r} AS MATERIALIZED (
-      SELECT q_vec_id, vec_id, score FROM (
-        SELECT q_vec_id, vec_id, 0.5 * rel - 0.5 * ms AS score,
-               row_number() OVER (PARTITION BY q_vec_id
-                                  ORDER BY 0.5 * rel - 0.5 * ms DESC, vec_id) AS rn
-        FROM m{r - 1}
-      ) WHERE rn = 1
-    )""")
+    s{r} AS MATERIALIZED (SELECT q_vec_id, vec_id, score FROM {best})""")
         if r < MMR_K:
             parts.append(f"""
     m{r} AS MATERIALIZED (
@@ -3386,7 +2769,7 @@ def _mmr_oracle(cand_sql: str = _MMR_BRUTE_CAND_SQL) -> str:
     return "WITH " + ",".join(parts) + "\n" + "\nUNION ALL ".join(unions)
 
 
-@register("ann_mmr_rerank", oracle=_mmr_oracle())
+@register("ann_mmr_rerank", oracle=_mmr_oracle(_brute_sims_sql()))
 def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal-marginal-relevance re-ranking — the diversity-aware
     retrieval stage between ANN candidate generation and final results
@@ -3414,39 +2797,26 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     one task per query. Corpus cost is the candidate stage's; the
     rerank is O(queries · C²) regardless of corpus size.
     """
+    emb = _emb(spark, sf_dir)
+    return _mmr_greedy(_brute_topk(emb, MMR_CANDS), emb)
+
+
+def _mmr_greedy(ranked: DataFrame, emb: DataFrame) -> DataFrame:
+    """The candidate-source-agnostic MMR core: pairwise sims among each
+    query's candidates, then the greedy 0.5·rel − 0.5·maxsim selection
+    as a cogrouped applyInPandas (one task per query). ``ranked`` is a
+    (q_vec_id, vec_id, cosine_sim, …) top-k frame — at most MMR_CANDS
+    rows per query, cosine_sim already on the 6-dp grid — whose cosine
+    becomes the relevance rel. ``emb`` supplies (vec_id, emb) for the
+    pair cosines."""
+    import pandas as pd
+
     from minimapreduce_spark._pickle import register_self_by_value
 
     register_self_by_value()
-
-    emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("qe")
-    )
-    rel_w = W.partitionBy("q_vec_id").orderBy(F.desc("rel"), F.asc("vec_id"))
-    cand = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("q_vec_id"))
-        .select(
-            "q_vec_id", "vec_id",
-            F.round(cosine(F.col("qe"), F.col("emb")), 6).alias("rel"),
-        )
-        .select("q_vec_id", "vec_id", "rel", F.row_number().over(rel_w).alias("rn"))
-        .where(F.col("rn") <= MMR_CANDS)
-        .drop("rn")
-        .localCheckpoint(eager=False)  # feeds pairs AND the cogroup
-    )
-    return _mmr_greedy(cand, emb)
-
-
-def _mmr_greedy(cand: DataFrame, emb: DataFrame) -> DataFrame:
-    """The candidate-source-agnostic MMR core: pairwise sims among each
-    query's candidates, then the greedy 0.5·rel − 0.5·maxsim selection
-    as a cogrouped applyInPandas (one task per query). ``cand`` must
-    have columns (q_vec_id, vec_id, rel) — at most MMR_CANDS rows per
-    query, rel already on the 6-dp grid — and SHOULD be
-    localCheckpoint'd by the caller (it feeds both the pair self-join
-    and the cogroup). ``emb`` supplies (vec_id, emb) for the pair
-    cosines."""
-    import pandas as pd
+    cand = ranked.select(
+        "q_vec_id", "vec_id", F.col("cosine_sim").alias("rel")
+    ).localCheckpoint(eager=False)  # feeds pairs AND the cogroup
 
     a, b = cand.alias("a"), cand.alias("b")
     ea = emb.select(F.col("vec_id").alias("va"), F.col("emb").alias("emb_a"))
@@ -3521,7 +2891,7 @@ def _mmr_greedy(cand: DataFrame, emb: DataFrame) -> DataFrame:
     )
 
 
-@register("ann_ivf_mmr_rerank", oracle=_mmr_oracle(_MMR_IVF_CAND_SQL), bench=True)
+@register("ann_ivf_mmr_rerank", oracle=_mmr_oracle("sims", _ivf_sims_sql()), bench=True)
 def ann_ivf_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed production serving path: IVF-route each query to
     its nearest centroid cell, take the exact top-MMR_CANDS relevance
@@ -3535,11 +2905,11 @@ def ann_ivf_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same greedy core composed behind the routing that a real
     vector-serving deployment uses (FAISS-style IVF → rerank).
 
-    Reuses `_ivf_cell_sims` (byte-identical routing to ann_ivf_topk)
-    and `_mmr_greedy` (byte-identical greedy core to ann_mmr_rerank),
-    so the composition adds no new arithmetic — only the new wiring is
-    under test, and the oracle mirrors it: ann_ivf_topk's routing SQL
-    chained into the same unrolled greedy-hop suffix.
+    Reuses `_ivf_cell_sims` (ann_ivf_topk's routed candidates) and
+    `_mmr_greedy` (ann_mmr_rerank's greedy core), so the composition
+    adds no new arithmetic — only the new wiring is under test, and the
+    oracle mirrors it: `_ivf_sims_sql` chained into the same unrolled
+    greedy-hop suffix.
 
     Scale posture: the candidate stage inherits ann_ivf_topk's
     contract (route via a broadcast centroid join, scan one cell —
@@ -3547,21 +2917,8 @@ def ann_ivf_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank ships MMR_CANDS rows + MMR_CANDS² pair sims per query to
     one task per query regardless of corpus size.
     """
-    from minimapreduce_spark._pickle import register_self_by_value
-
-    register_self_by_value()
-
     emb = _emb(spark, sf_dir)
-    rel_w = W.partitionBy("q_vec_id").orderBy(F.desc("rel"), F.asc("vec_id"))
-    cand = (
-        _ivf_cell_sims(emb)
-        .select("q_vec_id", "vec_id", F.col("cosine_sim").alias("rel"))
-        .select("q_vec_id", "vec_id", "rel", F.row_number().over(rel_w).alias("rn"))
-        .where(F.col("rn") <= MMR_CANDS)
-        .drop("rn")
-        .localCheckpoint(eager=False)  # feeds pairs AND the cogroup
-    )
-    return _mmr_greedy(cand, emb)
+    return _mmr_greedy(_top_k(_ivf_cell_sims(emb), MMR_CANDS, "cosine_sim"), emb)
 
 
 # ---------------------------------------------------------------------------
@@ -3596,67 +2953,16 @@ _HY_LEX_CTES = f"""
       WHERE q.doc_id < {HY_NQ} AND c.doc_id >= {HY_NQ}
       GROUP BY 1, 2
     ),
-    lex AS (
-      SELECT ldots.q_doc_id, ldots.doc_id,
-             row_number() OVER (
-               PARTITION BY q_doc_id
-               ORDER BY round(CAST(dot AS DOUBLE)
-                              / (sqrt(CAST(nq.nsq AS DOUBLE))
-                                 * sqrt(CAST(nc.nsq AS DOUBLE))), 6) DESC,
-                        ldots.doc_id
-             ) AS lex_rank
-      FROM ldots
-      JOIN norms nq ON ldots.q_doc_id = nq.doc_id
-      JOIN norms nc ON ldots.doc_id = nc.doc_id
-    ),
-    lexk AS (SELECT * FROM lex WHERE lex_rank <= {HY_CAND_K})"""
-
-# brute-force semantic channel: every query scored against the corpus
-_HY_SEM_BRUTE_CTES = f"""
-    e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    sem AS (
-      SELECT q.vec_id AS q_doc_id, c.vec_id AS doc_id,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY round(list_cosine_similarity(q.emb, c.emb), 6) DESC,
-                        c.vec_id
-             ) AS sem_rank
-      FROM e q JOIN e c ON q.vec_id < {HY_NQ} AND c.vec_id >= {HY_NQ}
-    ),
-    semk AS (SELECT * FROM sem WHERE sem_rank <= {HY_CAND_K})"""
-
-# IVF-routed semantic channel: ann_ivf_topk's routing SQL with the
-# hybrid's query set and query docs excluded from the candidates
-_HY_SEM_IVF_CTES = f"""
-    e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings),
-    dims AS (
-      SELECT label, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v FROM e
-    ),
-    cent AS (
-      SELECT label, list(av ORDER BY dim) AS centroid
-      FROM (SELECT label, dim, avg(v) AS av FROM dims GROUP BY label, dim)
-      GROUP BY label
-    ),
-    q AS (SELECT vec_id AS q_doc_id, emb AS qe FROM e WHERE vec_id < {HY_NQ}),
-    assign AS (
-      SELECT q_doc_id, qe, label,
-             row_number() OVER (
-               PARTITION BY q_doc_id
-               ORDER BY round(list_cosine_similarity(qe, centroid), 6) DESC, label
-             ) AS crn
-      FROM q, cent
-    ),
-    routed AS (SELECT q_doc_id, qe, label FROM assign WHERE crn = 1),
-    sem AS (
-      SELECT r.q_doc_id, e.vec_id AS doc_id,
-             row_number() OVER (
-               PARTITION BY r.q_doc_id
-               ORDER BY round(list_cosine_similarity(r.qe, e.emb), 6) DESC,
-                        e.vec_id
-             ) AS sem_rank
-      FROM routed r JOIN e ON e.label = r.label AND e.vec_id >= {HY_NQ}
-    ),
-    semk AS (SELECT q_doc_id, doc_id, sem_rank FROM sem WHERE sem_rank <= {HY_CAND_K})"""
+    lexk AS (SELECT q_doc_id, doc_id, lex_rank FROM {_top_k_sql(
+      "ldots JOIN norms nq ON ldots.q_doc_id = nq.doc_id"
+      " JOIN norms nc ON ldots.doc_id = nc.doc_id",
+      HY_CAND_K,
+      _int_cos_sql("dot", "nq.nsq", "nc.nsq"),
+      tie="ldots.doc_id",
+      by="q_doc_id",
+      rn="lex_rank",
+      cols="ldots.q_doc_id, ldots.doc_id",
+    )})"""
 
 _HY_FUSE_TAIL = f"""
     fused AS (
@@ -3668,13 +2974,6 @@ _HY_FUSE_TAIL = f"""
                AS rrf_score
       FROM lexk l
       FULL JOIN semk s ON l.q_doc_id = s.q_doc_id AND l.doc_id = s.doc_id
-    ),
-    ranked AS (
-      SELECT q_doc_id, doc_id, lex_rank, sem_rank, rrf_score,
-             row_number() OVER (
-               PARTITION BY q_doc_id ORDER BY rrf_score DESC, doc_id
-             ) AS fused_rank
-      FROM fused
     )
     SELECT CAST(q_doc_id AS BIGINT) AS q_doc_id,
            CAST(doc_id AS BIGINT) AS doc_id,
@@ -3682,16 +2981,31 @@ _HY_FUSE_TAIL = f"""
            CAST(sem_rank AS INT) AS sem_rank,
            CAST(rrf_score AS BIGINT) AS rrf_score,
            CAST(fused_rank AS INT) AS fused_rank
-    FROM ranked WHERE fused_rank <= {HY_TOPK}"""
+    FROM {_top_k_sql(
+      "fused", HY_TOPK, "rrf_score", tie="doc_id", by="q_doc_id", rn="fused_rank"
+    )}"""
 
 
-def _hy_oracle(sem_ctes: str) -> str:
-    return "WITH " + _HY_LEX_CTES.strip() + ",\n" + sem_ctes.strip() + ",\n" + _HY_FUSE_TAIL.strip()
-
-
-def _hy_chan_w():
-    # built lazily: WindowSpec construction needs an active session
-    return W.partitionBy("q_doc_id")
+def _hy_oracle(sims: str, ctes: str = "") -> str:
+    """The hybrid oracle over a semantic source: ``ctes`` (if any)
+    define what the relation ``sims``(q_vec_id, vec_id, cosine_sim)
+    reads; its non-query docs are cut to the top-HY_CAND_K semantic
+    channel, fused with the lexical channel."""
+    semk = _top_k_sql(
+        f"(SELECT * FROM {sims} WHERE vec_id >= {HY_NQ})",
+        HY_CAND_K,
+        "cosine_sim",
+        rn="sem_rank",
+        cols="q_vec_id AS q_doc_id, vec_id AS doc_id, cosine_sim",
+    )
+    return (
+        "WITH "
+        + _HY_LEX_CTES.strip()
+        + ",\n"
+        + (ctes.strip() + ",\n" if ctes else "")
+        + f"semk AS (SELECT q_doc_id, doc_id, sem_rank FROM {semk}),\n"
+        + _HY_FUSE_TAIL.strip()
+    )
 
 
 def _hybrid_lex_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3731,44 +3045,27 @@ def _hybrid_lex_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nq = norms.select(F.col("doc_id").alias("q_doc_id"), F.col("nsq").alias("nsq_q"))
     nc = norms.select("doc_id", F.col("nsq").alias("nsq_c"))
-    lex_cos = F.round(
-        F.col("dot").cast("double")
-        / (F.sqrt(F.col("nsq_q").cast("double")) * F.sqrt(F.col("nsq_c").cast("double"))),
-        6,
-    )
-    return (
+    lex = (
         ldots.join(F.broadcast(nq), "q_doc_id")
         .join(nc, "doc_id")
-        .select(
-            "q_doc_id",
-            "doc_id",
-            F.row_number()
-            .over(_hy_chan_w().orderBy(lex_cos.desc(), F.asc("doc_id")))
-            .alias("lex_rank"),
-        )
-        .where(F.col("lex_rank") <= HY_CAND_K)
+        .withColumn("lex_cos", _int_cos("dot", "nsq_q", "nsq_c"))
     )
+    return _top_k(
+        lex, HY_CAND_K, "lex_cos", tie="doc_id", by="q_doc_id", rn="lex_rank"
+    ).select("q_doc_id", "doc_id", "lex_rank")
 
 
-def _hybrid_sem_topk(sims: DataFrame) -> DataFrame:
-    """(q_doc_id, doc_id, sem_rank) from a (q_doc_id, doc_id, sem_cos)
-    frame — the family's rounded-cosine-then-id rank, top-HY_CAND_K."""
-    return (
-        sims.select(
-            "q_doc_id",
-            "doc_id",
-            F.row_number()
-            .over(_hy_chan_w().orderBy(F.desc("sem_cos"), F.asc("doc_id")))
-            .alias("sem_rank"),
-        )
-        .where(F.col("sem_rank") <= HY_CAND_K)
+def _hybrid_fuse(lexk: DataFrame, sims: DataFrame) -> DataFrame:
+    """Integer RRF fusion of the lexical channel ``lexk`` with the
+    semantic channel — ``sims``(q_vec_id, vec_id, cosine_sim) cut to
+    each query's top-HY_CAND_K non-query docs (full-outer on (query,
+    doc); a channel miss contributes exactly 0), fused rank by (score
+    DESC, doc_id), cut to HY_TOPK."""
+    semk = _top_k(
+        sims.where(F.col("vec_id") >= HY_NQ), HY_CAND_K, "cosine_sim", rn="sem_rank"
+    ).select(
+        F.col("q_vec_id").alias("q_doc_id"), F.col("vec_id").alias("doc_id"), "sem_rank"
     )
-
-
-def _hybrid_fuse(lexk: DataFrame, semk: DataFrame) -> DataFrame:
-    """Integer RRF fusion of the two channel rankings (full-outer on
-    (query, doc); a channel miss contributes exactly 0), fused rank by
-    (score DESC, doc_id), cut to HY_TOPK."""
     contrib = lambda r: F.coalesce(  # noqa: E731
         F.expr(f"CAST({HY_RRF_SCALE} AS BIGINT) DIV (CAST({r} AS BIGINT) + {HY_RRF_K})"),
         F.lit(0).cast("bigint"),
@@ -3776,24 +3073,19 @@ def _hybrid_fuse(lexk: DataFrame, semk: DataFrame) -> DataFrame:
     fused = lexk.join(semk, ["q_doc_id", "doc_id"], "full_outer").withColumn(
         "rrf_score", contrib("lex_rank") + contrib("sem_rank")
     )
-    return (
-        fused.withColumn(
-            "fused_rank",
-            F.row_number().over(_hy_chan_w().orderBy(F.desc("rrf_score"), F.asc("doc_id"))),
-        )
-        .where(F.col("fused_rank") <= HY_TOPK)
-        .select(
-            F.col("q_doc_id").cast("bigint").alias("q_doc_id"),
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            F.col("lex_rank").cast("int").alias("lex_rank"),
-            F.col("sem_rank").cast("int").alias("sem_rank"),
-            F.col("rrf_score").cast("bigint").alias("rrf_score"),
-            F.col("fused_rank").cast("int").alias("fused_rank"),
-        )
+    return _top_k(
+        fused, HY_TOPK, "rrf_score", tie="doc_id", by="q_doc_id", rn="fused_rank"
+    ).select(
+        F.col("q_doc_id").cast("bigint").alias("q_doc_id"),
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.col("lex_rank").cast("int").alias("lex_rank"),
+        F.col("sem_rank").cast("int").alias("sem_rank"),
+        F.col("rrf_score").cast("bigint").alias("rrf_score"),
+        F.col("fused_rank").cast("int").alias("fused_rank"),
     )
 
 
-@register("hybrid_rrf_retrieval", oracle=_hy_oracle(_HY_SEM_BRUTE_CTES), bench=True)
+@register("hybrid_rrf_retrieval", oracle=_hy_oracle(_brute_sims_sql(HY_NQ)), bench=True)
 def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval with reciprocal-rank fusion — the standard RAG
     serving shape the ledger's two channels feed but never composed:
@@ -3835,49 +3127,30 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     window. No reference analog (the reference's closest surface is
     the indexer app, mrapps/indexer.go:15-30).
     """
-    lexk = _hybrid_lex_channel(spark, sf_dir)
-    sem = (
-        _brute_sims_numpy(spark, _emb(spark, sf_dir), HY_NQ)
-        .where(F.col("vec_id") >= HY_NQ)
-        .select(
-            F.col("q_vec_id").alias("q_doc_id"),
-            F.col("vec_id").alias("doc_id"),
-            F.round("cosine_sim_raw", 6).alias("sem_cos"),
-        )
-    )
-    return _hybrid_fuse(lexk, _hybrid_sem_topk(sem))
+    sims = _brute_sims_numpy(spark, _emb(spark, sf_dir), HY_NQ)
+    return _hybrid_fuse(_hybrid_lex_channel(spark, sf_dir), sims)
 
 
-@register("hybrid_ivf_rrf_retrieval", oracle=_hy_oracle(_HY_SEM_IVF_CTES))
+@register("hybrid_ivf_rrf_retrieval", oracle=_hy_oracle("sims", _ivf_sims_sql(HY_NQ)))
 def hybrid_ivf_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB serving shape of `hybrid_rrf_retrieval`, registered:
     the semantic channel swaps the brute-force scorer for IVF routing —
-    `_ivf_cell_sims`, byte-identical to ann_ivf_topk's candidate stage
-    (route each query to its nearest centroid via a broadcast join,
-    score only that cell) — and everything else reuses the hybrid
-    helpers verbatim (`_hybrid_lex_channel`, `_hybrid_sem_topk`,
-    `_hybrid_fuse`), so only the wiring is new, the ann_ivf_mmr_rerank
-    composition discipline. Recall trades exactly as IVF always does
-    (candidates come from one cell); the fused output schema and all
-    integer-RRF semantics are unchanged, and the oracle chains
-    ann_ivf_topk's routing SQL into the same lexical + fusion CTEs.
+    `_ivf_cell_sims`, ann_ivf_topk's candidate stage (route each query
+    to its nearest centroid via a broadcast join, score only that cell)
+    — and everything else reuses the hybrid helpers verbatim
+    (`_hybrid_lex_channel`, `_hybrid_fuse`), so only the wiring is new,
+    the ann_ivf_mmr_rerank composition discipline. Recall trades exactly
+    as IVF always does (candidates come from one cell); the fused output
+    schema and all integer-RRF semantics are unchanged, and the oracle
+    chains `_ivf_sims_sql` into the same lexical + fusion CTEs.
 
     Scale posture: the lexical channel is unchanged (query term vectors
     broadcast); the semantic channel now scans 1/n_cells of the corpus
     per query once bucketed by cell — the IVF contract — instead of the
     brute channel's full pass; fusion stays bounded at Q×2K rows.
     """
-    lexk = _hybrid_lex_channel(spark, sf_dir)
-    sims = (
-        _ivf_cell_sims(_emb(spark, sf_dir), HY_NQ)
-        .where(F.col("vec_id") >= HY_NQ)
-        .select(
-            F.col("q_vec_id").alias("q_doc_id"),
-            F.col("vec_id").alias("doc_id"),
-            F.col("cosine_sim").alias("sem_cos"),
-        )
-    )
-    return _hybrid_fuse(lexk, _hybrid_sem_topk(sims))
+    sims = _ivf_cell_sims(_emb(spark, sf_dir), HY_NQ)
+    return _hybrid_fuse(_hybrid_lex_channel(spark, sf_dir), sims)
 
 
 # ---------------------------------------------------------------------------
@@ -3891,38 +3164,31 @@ def _bitext_tail_sql() -> str:
     """The margin + mutual-argmax CTE tail, shared verbatim between the
     brute and IVF-routed bitext oracles — everything downstream of the
     ``pairs(a_id, b_id, cos_u)`` candidate CTE."""
+    ra = _top_k_sql("pairs", BM_K, "cos_u", tie="b_id", by="a_id")
+    rb = _top_k_sql("pairs", BM_K, "cos_u", tie="a_id", by="b_id")
+    ba = _top_k_sql("m", 1, "margin DESC, cos_u", tie="b_id", by="a_id", rn="ka")
+    bb = _top_k_sql("m", 1, "margin DESC, cos_u", tie="a_id", by="b_id", rn="kb")
     return f"""
-    ra AS (SELECT *, row_number() OVER (PARTITION BY a_id
-                                        ORDER BY cos_u DESC, b_id) AS rn
-           FROM pairs),
-    rb AS (SELECT *, row_number() OVER (PARTITION BY b_id
-                                        ORDER BY cos_u DESC, a_id) AS rn
-           FROM pairs),
-    sx AS (SELECT a_id, CAST(sum(cos_u) AS BIGINT) AS sum_x FROM ra
-           WHERE rn <= {BM_K} GROUP BY 1),
-    sy AS (SELECT b_id, CAST(sum(cos_u) AS BIGINT) AS sum_y FROM rb
-           WHERE rn <= {BM_K} GROUP BY 1),
+    ra AS {ra},
+    rb AS {rb},
+    sx AS (SELECT a_id, CAST(sum(cos_u) AS BIGINT) AS sum_x FROM ra GROUP BY 1),
+    sy AS (SELECT b_id, CAST(sum(cos_u) AS BIGINT) AS sum_y FROM rb GROUP BY 1),
     cand AS (
-      SELECT a_id, b_id, cos_u FROM ra WHERE rn <= {BM_K}
+      SELECT a_id, b_id, cos_u FROM ra
       UNION
-      SELECT a_id, b_id, cos_u FROM rb WHERE rn <= {BM_K}
+      SELECT a_id, b_id, cos_u FROM rb
     ),
     m AS (
       SELECT c.a_id, c.b_id, c.cos_u, sx.sum_x, sy.sum_y,
              round(CAST(c.cos_u AS DOUBLE) * {2 * BM_K}
                    / (sx.sum_x + sy.sum_y), 6) AS margin
       FROM cand c JOIN sx USING (a_id) JOIN sy USING (b_id)
-    ),
-    ba AS (SELECT *, row_number() OVER (PARTITION BY a_id
-             ORDER BY margin DESC, cos_u DESC, b_id) AS ka FROM m),
-    bb AS (SELECT a_id, b_id, row_number() OVER (PARTITION BY b_id
-             ORDER BY margin DESC, cos_u DESC, a_id) AS kb FROM m)
+    )
     SELECT ba.a_id AS src_vec_id, ba.b_id AS tgt_vec_id,
            round(CAST(ba.cos_u AS DOUBLE) / 1000000, 6) AS cosine_sim,
            ba.margin AS margin,
            ba.sum_x AS sum_x, ba.sum_y AS sum_y
-    FROM ba JOIN bb ON ba.a_id = bb.a_id AND ba.b_id = bb.b_id
-    WHERE ba.ka = 1 AND bb.kb = 1
+    FROM {ba} ba JOIN {bb} bb ON ba.a_id = bb.a_id AND ba.b_id = bb.b_id
     """
 
 
@@ -3946,35 +3212,16 @@ def _bitext_oracle() -> str:
 
 
 def _bitext_ivf_oracle(nprobe: int = 1) -> str:
-    """The IVF-routed bitext oracle: ann_ivf_topk's centroid/routing
-    SQL assigns EVERY vector (both parities) to its ``nprobe`` nearest
-    per-label mean centroids, the pairs CTE scores A×B pairs sharing
+    """The IVF-routed bitext oracle: `_ivf_route_sql` assigns EVERY
+    vector (both parities) to its ``nprobe`` nearest per-label mean
+    centroids, the pairs CTE scores A×B pairs sharing
     at least one routed cell (DISTINCT — a two-shared-cell pair scores
     identically in both), and the margin/mutual tail is
     `_bitext_tail_sql()` verbatim."""
     return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings),
-    dims AS (
-      SELECT label, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v FROM e
-    ),
-    cent AS (
-      SELECT label, list(av ORDER BY dim) AS centroid
-      FROM (SELECT label, dim, avg(v) AS av FROM dims GROUP BY label, dim)
-      GROUP BY label
-    ),
-    assign AS (
-      SELECT vec_id, emb, cell FROM (
-        SELECT e.vec_id, e.emb, c.label AS cell,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY round(list_cosine_similarity(e.emb, c.centroid), 6)
-                   DESC, c.label
-               ) AS crn
-        FROM e, cent c
-      ) WHERE crn <= {nprobe}
-    ),
-    a AS (SELECT vec_id, emb AS e, cell FROM assign WHERE vec_id % 2 = 0),
-    b AS (SELECT vec_id, emb AS e, cell FROM assign WHERE vec_id % 2 = 1),
+    WITH {_E_SQL},{_ivf_route_sql("e", nprobe, by="vec_id", vec="emb")},
+    a AS (SELECT vec_id, emb AS e, cell FROM routed WHERE vec_id % 2 = 0),
+    b AS (SELECT vec_id, emb AS e, cell FROM routed WHERE vec_id % 2 = 1),
     pairs AS (
       SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id,
              CAST(round(list_cosine_similarity(a.e, b.e) * 1000000) AS BIGINT)
@@ -4089,10 +3336,8 @@ def _bitext_margin_stages(pairs: DataFrame) -> DataFrame:
     per-endpoint bounded aggregation + two rank windows regardless of
     how the pairs were scored."""
     pairs = pairs.localCheckpoint(eager=False)  # scored once; 4 consumers
-    wa = W.partitionBy("a_id").orderBy(F.desc("cos_u"), F.asc("b_id"))
-    wb = W.partitionBy("b_id").orderBy(F.desc("cos_u"), F.asc("a_id"))
-    ra = pairs.withColumn("rn", F.row_number().over(wa)).where(F.col("rn") <= BM_K)
-    rb = pairs.withColumn("rn", F.row_number().over(wb)).where(F.col("rn") <= BM_K)
+    ra = _top_k(pairs, BM_K, "cos_u", tie="b_id", by="a_id")
+    rb = _top_k(pairs, BM_K, "cos_u", tie="a_id", by="b_id")
     sx = ra.groupBy("a_id").agg(F.sum("cos_u").alias("sum_x"))
     sy = rb.groupBy("b_id").agg(F.sum("cos_u").alias("sum_y"))
     cand = ra.select("a_id", "b_id", "cos_u").union(
@@ -4111,14 +3356,8 @@ def _bitext_margin_stages(pairs: DataFrame) -> DataFrame:
         )
         .localCheckpoint(eager=False)  # read by both mutual-rank sides
     )
-    mwa = W.partitionBy("a_id").orderBy(
-        F.desc("margin"), F.desc("cos_u"), F.asc("b_id")
-    )
-    mwb = W.partitionBy("b_id").orderBy(
-        F.desc("margin"), F.desc("cos_u"), F.asc("a_id")
-    )
-    ba = m.withColumn("ka", F.row_number().over(mwa)).where(F.col("ka") == 1)
-    bb = m.withColumn("kb", F.row_number().over(mwb)).where(F.col("kb") == 1)
+    ba = _top_k(m, 1, ["margin", "cos_u"], tie="b_id", by="a_id", rn="ka")
+    bb = _top_k(m, 1, ["margin", "cos_u"], tie="a_id", by="b_id", rn="kb")
     return (
         ba.join(bb.select("a_id", "b_id"), ["a_id", "b_id"])
         .select(
@@ -4161,28 +3400,16 @@ def bitext_margin_mining_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFra
 
 def _ivf_assign(emb: DataFrame, nprobe: int = 1) -> DataFrame:
     """(vec_id, emb, cell): EVERY vector routed to its ``nprobe``
-    nearest per-label mean centroids — the corpus-side counterpart of
-    `_ivf_cell_sims`' query routing (same rounded-cosine-then-label
-    assignment text; one output row per routed cell). At 100 TB this
+    nearest per-label mean centroids — the corpus-side use of the
+    router `_ivf_route` that routes `_ivf_cell_sims`' queries (one
+    output row per routed cell). At 100 TB this
     is the index-build pass: one scan of the corpus against a
     broadcast centroid table, after which the corpus is written
     bucketed by cell and every cell-local operator (bitext, ANN serve,
     dedup) reads co-located buckets; nprobe > 1 is the multi-probe
     replication dial (each vector lands in nprobe buckets)."""
-    cent = _ivf_centroids(emb)
-    assign_w = W.partitionBy("vec_id").orderBy(F.desc("c_sim"), F.asc("cell"))
-    return (
-        emb.select("vec_id", "emb")
-        .join(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "emb",
-            F.col("label").alias("cell"),
-            F.round(cosine(F.col("emb"), F.col("centroid")), 6).alias("c_sim"),
-        )
-        .withColumn("crn", F.row_number().over(assign_w))
-        .where(F.col("crn") <= nprobe)
-        .select("vec_id", "emb", "cell")
+    return _ivf_route(
+        emb, emb.select("vec_id", "emb"), nprobe, by="vec_id", vec="emb", cell="cell"
     )
 
 
@@ -4193,8 +3420,8 @@ def bitext_margin_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides route through the IVF machinery before any scoring, the
     standard CCMatrix sharding. `_ivf_assign` routes every
     vector (both parities) to its nearest per-label mean centroid — the
-    same broadcast-centroid + rounded-cosine assignment text as
-    `_ivf_cell_sims`' query routing — and the A×B score matrix is
+    router `_ivf_route` that `_ivf_cell_sims` routes queries with — and
+    the A×B score matrix is
     computed ONLY within matching cells: an equi-join of the two sides
     on the cell id, so each vector scores |its cell|'s opposite-parity
     members instead of the whole opposite collection, and NOTHING is
@@ -4202,7 +3429,7 @@ def bitext_margin_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     it collects side A). The margin + mutual-argmax stages are
     `_bitext_margin_stages` — the brute twin's tail, shared verbatim,
     because they only ever see the bounded candidate frame; the oracle
-    likewise chains ann_ivf_topk's routing SQL into `_bitext_tail_sql`.
+    likewise chains `_ivf_route_sql` into `_bitext_tail_sql`.
 
     Recall trades exactly as IVF always does: a true pair split across
     two cells is unmined (the candidate frame never scores it) — the
@@ -4344,28 +3571,14 @@ HN_K = 5  # positives and hard negatives kept per query
 
 
 _HN_ORACLE = f"""
-    WITH q AS (
-      SELECT vec_id AS q_vec_id, label AS q_label, embedding::DOUBLE[] AS qe
-      FROM embeddings WHERE vec_id < {N_QUERIES}
-    ),
-    c AS (SELECT vec_id, label, embedding::DOUBLE[] AS ce FROM embeddings),
-    sims AS (
-      SELECT q_vec_id, vec_id,
-             CASE WHEN c.label = q.q_label THEN 'pos' ELSE 'neg' END AS kind,
-             round(list_cosine_similarity(qe, ce), 6) AS cosine_sim
-      FROM q, c
-      WHERE c.vec_id <> q.q_vec_id
-    ),
-    ranked AS (
-      SELECT q_vec_id, vec_id, kind, cosine_sim,
-             row_number() OVER (
-               PARTITION BY q_vec_id, kind
-               ORDER BY cosine_sim DESC, vec_id
-             ) AS rn
-      FROM sims
+    WITH sims AS (
+      SELECT s.*, CASE WHEN c.label = q.label THEN 'pos' ELSE 'neg' END AS kind
+      FROM {_brute_sims_sql()} s
+      JOIN embeddings q ON q.vec_id = s.q_vec_id
+      JOIN embeddings c ON c.vec_id = s.vec_id
     )
     SELECT q_vec_id, vec_id AS cand_id, kind, cosine_sim, rn
-    FROM ranked WHERE rn <= {HN_K}
+    FROM {_top_k_sql("sims", HN_K, "cosine_sim", by="q_vec_id, kind")}
     """
 
 
@@ -4395,35 +3608,21 @@ def ann_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow matmul scoring (`_brute_sims_numpy`) — the fold path paid
     # 32.6 s at 40× where one BLAS pass is scan-bound; labels join back
     # from two bounded/broadcastable projections
-    q_labels = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("label").alias("q_label")
-    )
     sims = (
         _brute_sims_numpy(spark, emb, N_QUERIES)
         .join(emb.select("vec_id", "label"), "vec_id")
-        .join(F.broadcast(q_labels), "q_vec_id")
+        .join(F.broadcast(_queries(emb, q_label="label")), "q_vec_id")
         .select(
             "q_vec_id",
             "vec_id",
             F.when(F.col("label") == F.col("q_label"), "pos")
             .otherwise("neg")
             .alias("kind"),
-            F.round("cosine_sim_raw", 6).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("q_vec_id", "kind").orderBy(
-        F.desc("cosine_sim"), F.asc("vec_id")
-    )
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= HN_K)
-        .select(
-            "q_vec_id",
-            F.col("vec_id").alias("cand_id"),
-            "kind",
             "cosine_sim",
-            "rn",
         )
+    )
+    return _top_k(sims, HN_K, "cosine_sim", by=("q_vec_id", "kind")).select(
+        "q_vec_id", F.col("vec_id").alias("cand_id"), "kind", "cosine_sim", "rn"
     )
 
 
@@ -4448,15 +3647,10 @@ _MRL_ORACLE = f"""
       FROM dims d, q, c
       WHERE c.vec_id <> q.q_vec_id
     ),
-    ranked AS (
-      SELECT dim, q_vec_id, vec_id,
-             row_number() OVER (
-               PARTITION BY dim, q_vec_id
-               ORDER BY cosine_sim DESC, vec_id
-             ) AS rn
-      FROM sims
+    topk AS (
+      SELECT dim, q_vec_id, vec_id
+      FROM {_top_k_sql("sims", IVF_TOP_K, "cosine_sim", by="dim, q_vec_id")}
     ),
-    topk AS (SELECT dim, q_vec_id, vec_id FROM ranked WHERE rn <= {IVF_TOP_K}),
     truth AS (SELECT q_vec_id, vec_id FROM topk WHERE dim = 64),
     hits AS (
       SELECT t.dim, count(*) AS hits
@@ -4504,12 +3698,12 @@ def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raw cosines per batch (4 BLAS matmuls on prefix slices — the fold
     # path paid 103 s at 40× for the same numbers); quantization stays
     # JVM-side (HALF_UP, matching the oracle)
-    q_rows = emb.where(F.col("vec_id") < N_QUERIES).select("vec_id", "emb").collect()
+    q_rows = _queries(emb, emb="emb").collect()
     if not q_rows:
         return spark.createDataFrame(
             [], "dim int, n_queries bigint, hits bigint, recall double"
         )
-    q_ids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
+    q_ids = np.array([r.q_vec_id for r in q_rows], dtype=np.int64)
     Q = np.stack([np.asarray(r.emb, dtype=np.float64) for r in q_rows])
     bc = spark.sparkContext.broadcast((q_ids, Q))
 
@@ -4550,12 +3744,8 @@ def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("cos_raw", 6).alias("cosine_sim"),
         )
     )
-    w = W.partitionBy("dim", "q_vec_id").orderBy(
-        F.desc("cosine_sim"), F.asc("vec_id")
-    )
     topk = (
-        sims.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= IVF_TOP_K)
+        _top_k(sims, IVF_TOP_K, "cosine_sim", by=("dim", "q_vec_id"))
         .select("dim", "q_vec_id", "vec_id")
         .localCheckpoint(eager=False)  # read twice: truth + all dims
     )
@@ -4592,61 +3782,21 @@ def ndcg_discounts(k: int = IVF_TOP_K) -> list[int]:
     return [round(NDCG_SCALE / math.log2(i + 1)) for i in range(1, k + 1)]
 
 
-def _retrieval_eval_oracle() -> str:
+def _retrieval_eval_sql(ctes: str, sims: str, score: str) -> str:
+    """Per-query recall@K / MRR / NDCG@K as DuckDB SQL, the twin of
+    `_retrieval_metrics`: ``ctes`` define the system's scored relation
+    ``sims``(q_vec_id, vec_id, ``score``), whose top-IVF_TOP_K is
+    scored against the exact float top-IVF_TOP_K truth."""
     disc = ndcg_discounts()
-    idcg = sum(disc)
     disc_rows = ", ".join(f"({i + 1}, {d})" for i, d in enumerate(disc))
     return f"""
-    WITH disc(pos, d) AS (VALUES {disc_rows}),
-    e AS (SELECT vec_id, embedding::DOUBLE[] AS emb, label FROM embeddings),
-    tq AS (SELECT vec_id AS q_vec_id, emb AS qe FROM e WHERE vec_id < {N_QUERIES}),
-    tsims AS (
-      SELECT q_vec_id, vec_id,
-             round(list_cosine_similarity(qe, emb), 6) AS cs
-      FROM tq, e WHERE vec_id <> q_vec_id
-    ),
-    truth AS (
-      SELECT q_vec_id, vec_id FROM (
-        SELECT q_vec_id, vec_id,
-               row_number() OVER (PARTITION BY q_vec_id
-                                  ORDER BY cs DESC, vec_id) AS rn
-        FROM tsims
-      ) WHERE rn <= {IVF_TOP_K}
-    ),
-    dims AS (
-      SELECT label, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v FROM e
-    ),
-    cent AS (
-      SELECT label, list(av ORDER BY dim) AS centroid
-      FROM (SELECT label, dim, avg(v) AS av FROM dims GROUP BY label, dim)
-      GROUP BY label
-    ),
-    assign AS (
-      SELECT q_vec_id, qe, label,
-             row_number() OVER (
-               PARTITION BY q_vec_id
-               ORDER BY round(list_cosine_similarity(qe, centroid), 6) DESC, label
-             ) AS crn
-      FROM tq, cent
-    ),
-    routed AS (SELECT q_vec_id, qe, label FROM assign WHERE crn = 1),
-    isims AS (
-      SELECT r.q_vec_id, e.vec_id,
-             round(list_cosine_similarity(r.qe, e.emb), 6) AS cs
-      FROM routed r JOIN e ON e.label = r.label AND e.vec_id <> r.q_vec_id
-    ),
-    sys AS (
-      SELECT q_vec_id, vec_id, rn FROM (
-        SELECT q_vec_id, vec_id,
-               row_number() OVER (PARTITION BY q_vec_id
-                                  ORDER BY cs DESC, vec_id) AS rn
-        FROM isims
-      ) WHERE rn <= {IVF_TOP_K}
-    ),
+    WITH {ctes},
+    disc(pos, d) AS (VALUES {disc_rows}),
     hits AS (
       SELECT s.q_vec_id, s.rn,
              CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-      FROM sys s LEFT JOIN truth t
+      FROM {_top_k_sql(sims, IVF_TOP_K, score)} s
+      LEFT JOIN {_top_k_sql(_brute_sims_sql(), IVF_TOP_K, "cosine_sim")} t
         ON t.q_vec_id = s.q_vec_id AND t.vec_id = s.vec_id
     )
     SELECT h.q_vec_id,
@@ -4657,13 +3807,15 @@ def _retrieval_eval_oracle() -> str:
                 ELSE round(1.0 / min(CASE WHEN h.hit = 1 THEN h.rn END), 6)
            END AS mrr,
            round(CAST(sum(CASE WHEN h.hit = 1 THEN d.d ELSE 0 END) AS DOUBLE)
-                 / {idcg}, 6) AS ndcg_at_k
+                 / {sum(disc)}, 6) AS ndcg_at_k
     FROM hits h JOIN disc d ON d.pos = h.rn
     GROUP BY h.q_vec_id
     """
 
 
-@register("retrieval_eval_ivf", oracle=_retrieval_eval_oracle())
+@register(
+    "retrieval_eval_ivf", oracle=_retrieval_eval_sql(_ivf_sims_sql(), "sims", "cosine_sim")
+)
 def retrieval_eval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RETRIEVAL-QUALITY EVALUATION in-engine — the IR-metric readout
     the evaluation suite (AUC/CV/calibration/WOE for classifiers) had
@@ -4692,40 +3844,14 @@ def retrieval_eval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics are per-query bounded aggregations over Q×K rows. No
     reference analog."""
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb")
-    )
-    tsims = emb.join(F.broadcast(q), F.col("vec_id") != F.col("q_vec_id")).select(
-        "q_vec_id",
-        "vec_id",
-        F.round(cosine(F.col("q_emb"), F.col("emb")), 6).alias("cs"),
-    )
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("cs"), F.asc("vec_id"))
-    truth = (
-        tsims.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= IVF_TOP_K)
-        .select("q_vec_id", "vec_id")
-    )
-    sys_ = (
-        _ivf_cell_sims(emb)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("q_vec_id").orderBy(
-                    F.desc("cosine_sim"), F.asc("vec_id")
-                )
-            ),
-        )
-        .where(F.col("rn") <= IVF_TOP_K)
-        .select("q_vec_id", "vec_id", "rn")
-    )
-    return _retrieval_metrics(sys_, truth)
+    return _retrieval_metrics(_top_k(_ivf_cell_sims(emb), IVF_TOP_K, "cosine_sim"), emb)
 
 
-def _retrieval_metrics(sys_: DataFrame, truth: DataFrame) -> DataFrame:
-    """Per-query recall@K / MRR / NDCG@K of ``sys_(q_vec_id, vec_id,
-    rn)`` against ``truth(q_vec_id, vec_id)`` — the shared metric tail
-    of `retrieval_eval_ivf` (routing loss) and `retrieval_eval_ivfpq`
+def _retrieval_metrics(sys_: DataFrame, emb: DataFrame) -> DataFrame:
+    """Per-query recall@K / MRR / NDCG@K of the system's ranking
+    ``sys_``(q_vec_id, vec_id, rn) against the exact float top-K truth
+    of ``emb`` (`_brute_topk`) — the shared metric tail of
+    `retrieval_eval_ivf` (routing loss) and `retrieval_eval_ivfpq`
     (routing + quantization loss): exact BIGINT DCG sums over the
     Python-inlined discount table, one rounded double per metric."""
     disc = ndcg_discounts()
@@ -4733,13 +3859,16 @@ def _retrieval_metrics(sys_: DataFrame, truth: DataFrame) -> DataFrame:
     disc_map = F.create_map(
         *[F.lit(x) for i, d in enumerate(disc) for x in (i + 1, d)]
     )
+    truth = _brute_topk(emb, IVF_TOP_K).select(
+        F.col("q_vec_id").alias("t_q_vec_id"), F.col("vec_id").alias("t_vec_id")
+    )
     hits = sys_.join(
-        truth.withColumnRenamed("vec_id", "t_vec_id"),
-        (sys_.q_vec_id == truth.q_vec_id)
-        & (sys_.vec_id == F.col("t_vec_id")),
+        truth,
+        (F.col("q_vec_id") == F.col("t_q_vec_id"))
+        & (F.col("vec_id") == F.col("t_vec_id")),
         "left",
     ).select(
-        sys_.q_vec_id.alias("q_vec_id"),
+        "q_vec_id",
         "rn",
         F.when(F.col("t_vec_id").isNotNull(), 1).otherwise(0).alias("hit"),
     )
@@ -4767,59 +3896,10 @@ def _retrieval_metrics(sys_: DataFrame, truth: DataFrame) -> DataFrame:
     )
 
 
-def _retrieval_eval_ivfpq_oracle() -> str:
-    """Oracle for `retrieval_eval_ivfpq`: the FULL residual-IVFPQ
-    chain (`_ivfpq_oracle`, its final SELECT swapped for a system CTE)
-    + an independent brute-truth chain + the shared metric CTEs —
-    so routing AND quantization losses are both inside the hash."""
-    disc = ndcg_discounts()
-    idcg = sum(disc)
-    disc_rows = ", ".join(f"({i + 1}, {d})" for i, d in enumerate(disc))
-    base = _ivfpq_oracle(1)
-    cut = base.rindex("SELECT q_vec_id, vec_id AS neighbor_id")
-    head = base[:cut].rstrip()
-    return f"""{head}
-    , disc(pos, d) AS (VALUES {disc_rows}),
-    sysv AS (
-      SELECT q_vec_id, vec_id, rn FROM ranked WHERE rn <= {IVF_TOP_K}
-    ),
-    te AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    ttq AS (SELECT vec_id AS q_vec_id, emb AS qe FROM te
-            WHERE vec_id < {N_QUERIES}),
-    ttsims AS (
-      SELECT q_vec_id, vec_id,
-             round(list_cosine_similarity(qe, emb), 6) AS cs
-      FROM ttq, te WHERE vec_id <> q_vec_id
-    ),
-    ttruth AS (
-      SELECT q_vec_id, vec_id FROM (
-        SELECT q_vec_id, vec_id,
-               row_number() OVER (PARTITION BY q_vec_id
-                                  ORDER BY cs DESC, vec_id) AS rn
-        FROM ttsims
-      ) WHERE rn <= {IVF_TOP_K}
-    ),
-    hits AS (
-      SELECT s.q_vec_id, s.rn,
-             CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-      FROM sysv s LEFT JOIN ttruth t
-        ON t.q_vec_id = s.q_vec_id AND t.vec_id = s.vec_id
-    )
-    SELECT h.q_vec_id,
-           CAST(sum(h.hit) AS BIGINT) AS n_hits,
-           round(CAST(sum(h.hit) AS DOUBLE) / {IVF_TOP_K}, 6) AS recall_at_k,
-           CAST(min(CASE WHEN h.hit = 1 THEN h.rn END) AS BIGINT) AS rank_first,
-           CASE WHEN sum(h.hit) = 0 THEN 0.0
-                ELSE round(1.0 / min(CASE WHEN h.hit = 1 THEN h.rn END), 6)
-           END AS mrr,
-           round(CAST(sum(CASE WHEN h.hit = 1 THEN d.d ELSE 0 END) AS DOUBLE)
-                 / {idcg}, 6) AS ndcg_at_k
-    FROM hits h JOIN disc d ON d.pos = h.rn
-    GROUP BY h.q_vec_id
-    """
-
-
-@register("retrieval_eval_ivfpq", oracle=_retrieval_eval_ivfpq_oracle())
+@register(
+    "retrieval_eval_ivfpq",
+    oracle=_retrieval_eval_sql(_ivfpq_ctes(1), "sims", "ivfpq_sim"),
+)
 def retrieval_eval_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IR metrics for the COMPRESSED system — `retrieval_eval_ivf`'s
     twin over the residual-IVFPQ serving chain, so the readout now
@@ -4834,29 +3914,14 @@ def retrieval_eval_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: the system ranking is the full `_ivfpq_topk_plan`
     (integer-exact ADC chain, round-6dp-then-id); truth and the metric
     tail are shared with the IVF eval (`_retrieval_metrics`, inlined
-    integer DCG discounts). The oracle embeds the complete IVFPQ SQL
-    chain with its final SELECT swapped for a system CTE, plus an
-    independent brute-truth chain — both losses inside one hash.
+    integer DCG discounts). The oracle is `_retrieval_eval_sql` over
+    the complete IVFPQ SQL chain (`_ivfpq_ctes`) and the brute truth —
+    both losses inside one hash.
 
     Scale posture: system pass = the served IVFPQ cost; truth = the
     exact-search pass every offline recall eval pays (sampled queries
     at 100 TB); metrics bounded at Q×K rows."""
-    emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb")
-    )
-    tsims = emb.join(F.broadcast(q), F.col("vec_id") != F.col("q_vec_id")).select(
-        "q_vec_id",
-        "vec_id",
-        F.round(cosine(F.col("q_emb"), F.col("emb")), 6).alias("cs"),
-    )
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("cs"), F.asc("vec_id"))
-    truth = (
-        tsims.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= IVF_TOP_K)
-        .select("q_vec_id", "vec_id")
-    )
     sys_ = _ivfpq_topk_plan(spark, sf_dir, 1).select(
         "q_vec_id", F.col("neighbor_id").alias("vec_id"), "rn"
     )
-    return _retrieval_metrics(sys_, truth)
+    return _retrieval_metrics(sys_, _emb(spark, sf_dir))

@@ -58,10 +58,10 @@ from minimapreduce_spark.operators.relational import (
     untombstoned,
 )
 from minimapreduce_spark.operators.similarity import (
-    KMEANS_SCALE,
-    N_QUERIES,
+    _grid,
     _ivfpq_oracle,
     _ivfpq_serve,
+    _queries,
     ivfpq_index_build,
     read_ivfpq_index,
 )
@@ -211,16 +211,9 @@ def stream_ann_serve_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_dir = os.path.join(work, "results")
         ckpt = os.path.join(work, "ckpt")
 
-        qstream = (
-            table_stream_sharded(spark, sf_dir, "embeddings", n_shards=4)
-            .where(F.col("vec_id") < N_QUERIES)
-            .select(
-                F.col("vec_id").alias("q_vec_id"),
-                F.transform(
-                    "embedding",
-                    lambda x: F.round(x.cast("double") * KMEANS_SCALE).cast("bigint"),
-                ).alias("qe"),
-            )
+        qstream = _queries(
+            table_stream_sharded(spark, sf_dir, "embeddings", n_shards=4),
+            qe=_grid("embedding"),
         )
 
         def serve_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -142,7 +142,7 @@ def test_vacuum_chain_keeps_only_leaf_and_compact_serves(spark, tmp_path):
 
 
 def test_vacuum_sibling_name_extension_is_not_superseded(spark, tmp_path):
-    """The round-10 ADVICE false positive, pinned dead: a PUBLISHED
+    """A name-prefix false positive, pinned dead: a PUBLISHED
     root whose name extends another's but that was built independently
     (no ``_PARENT`` claim — the ivfpq ``_base13`` shape, whose data the
     sibling does NOT hardlink-protect) must never mark the shorter
@@ -172,7 +172,7 @@ def test_vacuum_sibling_name_extension_is_not_superseded(spark, tmp_path):
 
 
 def test_vacuum_grace_window_runs_from_supersession_not_publish(spark, tmp_path):
-    """Round-10 ADVICE: an OLD base superseded SECONDS ago must get the
+    """An OLD base superseded SECONDS ago must get the
     full grace window — age runs from the newest claiming child's
     mtime, not the candidate's own publish time (under the old rule a
     base published days before its first append was deleted on the
@@ -565,6 +565,80 @@ def test_pair_merge_tokenizer_defined_once():
     assert sorted(map_in_pandas) == ["_greedy_token_counts", "_uni_segment"], (
         map_in_pandas
     )
+
+
+def test_vector_search_primitives_defined_once():
+    """Each vector-search step of ``operators/similarity.py`` is written
+    once: the 1e-4 grid cast (``KMEANS_SCALE`` read by one Column
+    expression and one SQL template), the coarse quantizer's SQL
+    (``list(av ORDER BY``), the rank window (the one ``W.partitionBy``,
+    in ``_top_k``), the PQ subvector split (the one ``.range(PQ_M)``)
+    and the ADC fold (the one ``F.element_at("code", …)``). The
+    streaming IVF-PQ server in ``streaming/upsert.py`` multiplies by no
+    ``KMEANS_SCALE`` of its own."""
+    import ast
+
+    sim = [
+        (name, node)
+        for rel, name, node in _engine_nodes()
+        if rel == "operators/similarity.py"
+    ]
+    in_sql = {
+        inner
+        for _name, node in sim
+        if isinstance(node, ast.JoinedStr)
+        for inner in ast.walk(node)
+    }
+    grid_col, grid_sql, quantizer_sql, windows, splits, adc = [], [], [], [], [], []
+    for name, node in sim:
+        if (
+            isinstance(node, ast.Name)
+            and node.id == "KMEANS_SCALE"
+            and isinstance(node.ctx, ast.Load)
+        ):
+            (grid_sql if node in in_sql else grid_col).append(name)
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "list(av ORDER BY" in node.value
+        ):
+            quantizer_sql.append(name)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            func, args = node.func, node.args
+            if (
+                func.attr == "partitionBy"
+                and isinstance(func.value, ast.Name)
+                and func.value.id == "W"
+            ):
+                windows.append(name)
+            if func.attr == "range" and any(
+                isinstance(a, ast.Name) and a.id == "PQ_M" for a in args
+            ):
+                splits.append(name)
+            if (
+                func.attr == "element_at"
+                and args
+                and isinstance(args[0], ast.Constant)
+                and args[0].value == "code"
+            ):
+                adc.append(name)
+    scaled = [
+        f"{name}:{node.lineno}"
+        for rel, name, node in _engine_nodes()
+        if rel == "streaming/upsert.py"
+        and isinstance(node, ast.BinOp)
+        and isinstance(node.op, ast.Mult)
+        and any(
+            isinstance(side, ast.Name) and side.id == "KMEANS_SCALE"
+            for side in (node.left, node.right)
+        )
+    ]
+    assert (grid_col, grid_sql) == (["_grid"], ["<module>"]), (grid_col, grid_sql)
+    assert quantizer_sql == ["_ivf_route_sql"], quantizer_sql
+    assert windows == ["_top_k"], windows
+    assert splits == ["_split"], splits
+    assert adc == ["_code_fold"], adc
+    assert scaled == [], scaled
 
 
 _ROOT_INPUTS = {

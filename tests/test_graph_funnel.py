@@ -153,7 +153,7 @@ def test_pattern_match_negation_and_overlap_semantics(spark, tmp_path):
 
 def test_pattern_match_windowed_cross_window_nonmatch(spark, tmp_path):
     """The windowed variant's defining semantics difference, planted
-    (the round-9 verdict's done-criterion): a signup at 23:50 and a
+    (what makes the windowed variant a distinct query): a signup at 23:50 and a
     purchase at 00:10 the NEXT day match the UNWINDOWED pattern query
     but NOT the per-(user, day) windowed one — windowed
     MATCH_RECOGNIZE never matches across window boundaries. A second

@@ -412,7 +412,7 @@ def test_cli_crash_loop_e2e(tmp_path):
 
 def test_line_mode_passes_real_filenames(spark, tmp_path):
     """mr/worker.go:68 always hands mapf the real input filename; the
-    line-split source must preserve that (round-1 verdict: it passed a
+    line-split source must preserve that (a first cut passed a
     synthetic "line" constant)."""
     from minimapreduce_spark.mapreduce import run_job
 

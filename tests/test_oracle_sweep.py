@@ -1,10 +1,9 @@
 """Registry-wide oracle sweep — the structural guarantee that EVERY
 registered oracle gets a value comparison in CI.
 
-Round-2 ADVICE found nine operators whose oracles sat outside every
-parametrize list, so they were only parse-checked: a regression in the
-operator OR its oracle would have gone undetected until the driver's
-window rotated onto them. This module closes that class of gap for
+Nine operators once had oracles outside every parametrize list, so
+they were only parse-checked: a regression in the operator OR its
+oracle would have gone undetected by the suite. This module closes that class of gap for
 good: any oracle-bearing query NOT claimed by a dedicated module's
 parametrize list is swept here through the same ``run_and_compare``
 protocol. Registering a new query with an oracle and forgetting to

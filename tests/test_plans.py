@@ -215,8 +215,9 @@ def test_surrogate_keys_never_single_partition_the_table(spark):
 
 
 WEAK_LIST_FIXED = [
-    # round-1 verdict's single-partition-window scale-killers, re-planned
-    # onto the two-phase offset pattern (operators/ordered.py)
+    # global-order queries that once ran a single-partition window (a
+    # scale-killer), re-planned onto the two-phase offset pattern
+    # (operators/ordered.py)
     "histogram_equidepth_prices",
     "customer_rfm_segments",
     "abc_part_classification",
@@ -226,7 +227,7 @@ WEAK_LIST_FIXED = [
     "sessions_peak_concurrency",
     "surrogate_keys_documents",
     "text_unigram_logprob",
-    # round-7: the two-phase prefix-max (skyline) and prefix-sum (AUC)
+    # the two-phase prefix-max (skyline) and prefix-sum (AUC)
     # consumers — global order, never a single-partition window
     "skyline_price_size",
     "probe_auc_roc",
@@ -249,8 +250,8 @@ def test_multimodal_decode_chains_are_shuffle_free(spark):
         assert n == 0, f"{name}: {n} exchanges in a narrow pipeline"
 
 
-def test_new_round2_shuffle_budgets(spark):
-    """Pin shuffle counts of the round-2 operators: 2 Lloyd iterations
+def test_lloyd_ttr_nprobe_shuffle_budgets(spark):
+    """Pin shuffle counts of k-means, TTR and nprobe IVF: 2 Lloyd iterations
     = (assign-agg + update-agg) × 2 + seed/final rollups ≤ 6; TTR = the
     (doc,word) agg + doc rollup; nprobe IVF = centroid build + routed
     window + top-k window."""
@@ -351,7 +352,7 @@ def test_quantile_sketch_bounded_probes(spark):
 
 
 def test_planted_hotkey_salting_bounds_per_task_input(spark):
-    """The planted-90%-hot-key query (round-6 verdict stretch 9): the
+    """The planted-90%-hot-key query: the
     bounded-per-task contract, asserted arithmetically on the stage-1
     grouping the salted agg actually runs. The HOT key must (a) own
     ~90% of the table (the plant worked), (b) split across ALL

@@ -323,7 +323,7 @@ def test_money_grid_sum_exact_where_float_sum_flips(spark, tmp_path):
     partitioning AND from DuckDB's mirrored SQL (the integer sum is
     order-free), and that value must be the true decimal answer —
     which is precisely why the 12 fact-slice money sums were converted
-    (SCALING.md round 5 — q1's 160× flip)."""
+    (SCALING.md "the q1 class fixed repo-wide" — q1's 160× flip)."""
     import duckdb
     import pyspark.sql.functions as F
 
@@ -879,8 +879,8 @@ def test_catalog_stats_analyze_contracts(spark):
 
 
 def test_catalog_stats_prod_lane_matches_md5_twin_exactly(spark):
-    """The production-hash ANALYZE lane (`catalog_stats_lineitem_prod`,
-    round-9 verdict item 4) must agree with the portable-md5 twin on
+    """The production-hash ANALYZE lane (`catalog_stats_lineitem_prod`)
+    must agree with the portable-md5 twin on
     EVERY exact column — n_rows, n_nulls, n_distinct, min_v, max_v —
     because the two lanes share the melt and differ only in the sketch
     hash; and every ndv_within_tol bit must be TRUE (the self-check

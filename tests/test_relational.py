@@ -144,7 +144,7 @@ def test_incremental_join_view_terms_disjoint_and_artifact(spark, tmp_path):
 
 def test_incremental_join_view_upserts_tombstones(spark):
     """The update/delete IVM contracts (`incremental_join_view_upserts`
-    — the round-9 verdict's tombstone extension): (a) maintenance ≡
+    — the tombstone extension of the join-view IVM): (a) maintenance ≡
     full recompute against the dim's END-OF-DAY state; (b) the three
     terms partition the output — no view row is produced twice
     (o_orderkey unique); (c) the tombstone semantics, spot-pinned on

@@ -1,6 +1,6 @@
 """The scale-experiment fixture builder must produce what its design
 claims — dup groups of EXACTLY the copy count, and variants that are
-token-disjoint under the dedup operators' OWN tokenizer. Round 3's 40×
+token-disjoint under the dedup operators' OWN tokenizer. A 40×
 dry run caught the digit-prefix collapse (variants 'v1'/'v2' became
 token-identical because the shingle tokenizer splits on [^A-Za-z]+);
 this test makes that class of fixture bug impossible to reintroduce."""

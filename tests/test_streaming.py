@@ -347,7 +347,7 @@ def _write_psi_events(tmp_path, shifted: bool) -> str:
 
 
 def test_stream_psi_drift_detects_planted_shift(spark, tmp_path):
-    """Planted-drift gate for stream_psi_drift (round-3 verdict item 1):
+    """Planted-drift gate for stream_psi_drift:
     a total shift of the live window's value distribution must push the
     summed PSI far past the classic 0.2 'significant drift' alarm
     threshold, while an identically-distributed live window must stay
@@ -406,7 +406,7 @@ def test_exactly_once_ingest_collapses_planted_redelivery(spark):
 
 
 def test_exactly_once_watermarked_dedups_and_evicts(spark):
-    """The bounded-ledger exactly-once variant (round-4 verdict item 7)
+    """The bounded-ledger exactly-once variant
     must do BOTH halves of its contract on the planted-redelivery
     source: (1) dedup — the drained sink equals the clean batch table
     despite a nonzero redelivery volume (asserted non-vacuous), and
@@ -415,8 +415,8 @@ def test_exactly_once_watermarked_dedups_and_evicts(spark):
     stream_exactly_once_ingest would hold exactly n_events rows; a key
     is evicted once the watermark passes event_time + the delay, and
     the watermark lags one batch, so the live window is
-    ~(2*delay + batch span). Round 12: delay 96 → 84 h and 2 files/
-    trigger, live window ~13 of 30 days — measured peaks 47.2%
+    ~(2*delay + batch span). With delay 84 h (was 96) and 2 files/
+    trigger, the live window is ~13 of 30 days — measured peaks 47.2%
     (sf0.001) / 43.5% (sf0.01, sf0.1), under the <50% contract pinned
     below; 3 files/trigger under the old delay measured 57% and is
     excluded by it)."""
@@ -1101,7 +1101,7 @@ def test_stream_ivm_rebuild_one_scan_and_idempotent(spark, tmp_path):
 
 
 def test_stream_state_width_derivation(spark):
-    """Round-12 (r11 verdict item 4): streaming state width is a
+    """Streaming state width is a
     bounded function of per-batch volume, not a fixture constant —
     floor 2, linear in rows/STREAM_STATE_ROWS_PER_SHARD, clamped to
     the session's shuffle width (at production volumes the clamp

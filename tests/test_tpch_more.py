@@ -1,4 +1,4 @@
-"""Round-1 widened relational coverage vs the DuckDB oracle."""
+"""Widened relational coverage (TPC-H and beyond) vs the DuckDB oracle."""
 
 import pytest
 

@@ -1,17 +1,17 @@
 #!/usr/bin/env python
 """Full-registry foreign-cwd drive: the driver's correctness protocol,
-run in-repo and COMMITTED as an artifact (round-6 verdict item 7 — the
-round-5 failure mode was a driver artifact that never landed, leaving
-25 queries unverifiable by a later judge; this file makes the evidence
-reproducible and reviewable regardless of driver bookkeeping).
+run in-repo so its evidence is a committed, reviewable artifact. A
+drive result that lives only outside the repository can fail to land
+and leave queries unverifiable; this file makes the evidence
+reproducible from the repository alone.
 
 For every registered query it runs the Spark plan AND the DuckDB oracle
 at --sf (default sf0.01, the driver's scale) and records per-query
 rows_match / schema_match / value_match / err, plus a sha256 of the
 normalized Spark result for audit. Run it from ANY cwd:
 
-    python /root/repo/tools/full_registry_drive.py \
-        --sf /root/testdata/sf0.01 --out DRIVE_r07.json
+    python tools/full_registry_drive.py \
+        --sf /path/to/sf0.01 --out drive.json
 
 The compare is tests/conftest's: columns sorted by name, rows sorted by
 non-float columns, floats matched at rtol/atol 1e-9, arrays as tuples.
@@ -84,7 +84,7 @@ def _frame_sha(pdf: pd.DataFrame) -> str:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", required=True, help="e.g. DRIVE_r11.json — no default: a stale default once nearly overwrote a committed round artifact")
+    ap.add_argument("--out", required=True, help="output JSON path; no default, so a run never overwrites a committed drive result")
     ap.add_argument("--only", nargs="*", help="subset of query names")
     args = ap.parse_args()
 

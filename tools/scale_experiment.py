@@ -2,7 +2,7 @@
 """Dedup/ANN scale-up experiment: build an N× dup-heavy corpus from
 sf0.1 and time + oracle-verify the dedup/similarity family on it.
 
-Round 2's 10× run (SCALING.md) was built ad hoc; this tool commits the
+The first 10× run (SCALING.md) was built ad hoc; this tool commits the
 methodology. Design choices that make the result mean something:
 
 - **Dup-group size stays fixed at 10** while the number of groups
@@ -88,15 +88,15 @@ QUERIES = [
     "sample_dsir_importance_topk",
     "unigram_train_pieces",
     "unigram_apply_token_stats",
-    # round-9: the position-marked WordPiece pair (vocab-scale rounds;
+    # the position-marked WordPiece pair (vocab-scale merge rounds;
     # the marked alphabet is a ≤2× constant on bounded frames) and the
     # dedup band-index family's served probe (probe cost ∝ batch —
-    # SCALING.md "Round 9: persisted band index for incremental dedup"
-    # carries the dedicated octave)
+    # SCALING.md "persisted band index for incremental dedup" carries
+    # the dedicated octave)
     "wordpiece_train_marked",
     "wordpiece_apply_marked_stats",
     "dedup_minhash_index_probe",
-    # round-7 evaluation suite: one corpus scan + tiny broadcast state
+    # the evaluation suite: one corpus scan + tiny broadcast state
     # each — the probe family's scale posture, measured on its metrics
     "probe_auc_roc",
     "probe_kfold_cv",
@@ -105,8 +105,8 @@ QUERIES = [
 ]
 
 # Excluded past 10×:
-# - (UN-EXCLUDED in round 4: dedup_ngram_jaccard + dedup_clusters.
-#   Round 3 excluded the full-Jaccard inverted-index pair because
+# - (UN-EXCLUDED: dedup_ngram_jaccard + dedup_clusters. The
+#   full-Jaccard inverted-index pair was once excluded because
 #   duplicate copies multiplied every hot-shingle bucket — Σ bucket²
 #   projected 66 BILLION joined rows at 40×. The content-group front
 #   end collapses byte-identical copies before the inverted index, so
@@ -142,13 +142,12 @@ ORACLE_SKIP_PAST_10X = {
     # filters to batch-touching), so the oracle is intractable exactly
     # where dedup_minhash's is; the Spark side stays measured, and the
     # batch-cost-independence claim has its own octave (SCALING.md
-    # "Round 6: incremental dedup — batch-driven cost, measured")
+    # "incremental dedup — batch-driven cost, measured")
     "dedup_minhash_incremental",
     # same restricted exact-Jaccard oracle as the inline incremental —
     # intractable oracle-side exactly where its twin's is; the SERVED
-    # probe's scale claim carries its own octave (SCALING.md "Round 9:
-    # persisted band index for incremental dedup": candidates constant
-    # under 16×)
+    # probe's scale claim carries its own octave (SCALING.md "persisted
+    # band index for incremental dedup": candidates constant under 16×)
     "dedup_minhash_index_probe",
     "dedup_ngram_jaccard",
     # same full doc-level shingle self-join oracle shape as
@@ -168,8 +167,8 @@ ORACLE_SKIP_PAST_10X = {
     # 10-label cell structure (real IVF grows nlist with the corpus;
     # the ann_knn_graph_edges exclusion note documents the same
     # fixture artifact). Hash-matched at 1x and 10x; the GROWN-nlist
-    # experiment the caveat calls for is in SCALING.md's round-9 table
-    # (its script is deleted): nlist = round(sqrt(N)) at 10x/40x,
+    # experiment the caveat calls for is in SCALING.md's "nlist ∝ √N
+    # octave for routed bitext" table (its script is deleted): nlist = round(sqrt(N)) at 10x/40x,
     # emitted candidates measured exactly proportional to N, output
     # replay-matched at both scales.
     "bitext_margin_mining_ivf",
@@ -177,7 +176,7 @@ ORACLE_SKIP_PAST_10X = {
 
 # Oracle skipped past 40×: the registered dedup_embedding_lsh's full
 # DuckDB oracle needed 644.5 s at 40× (hash-matched there — SCALING.md
-# round-4 table); at 160× the same computation projects to ~1 h of
+# "the definitive 40× dedup/ANN run" table); at 160× the same computation projects to ~1 h of
 # single-node DuckDB, which is an oracle-resource limit, not an engine
 # one. The 160× linearity claim for embedding-LSH dedup rests on the
 # STRICT-REGIME run below, whose oracle stays tractable and is
@@ -272,7 +271,7 @@ def build_fixture(mult: int, out_dir: str) -> None:
     )
 
 
-# Relational/events 40× run (round-3 verdict item 5): the bench
+# Relational/events 40× run: the bench
 # headliners beyond dedup/ANN, re-timed and re-oracle-verified at the
 # scaled fixture. documents-family text queries are NOT in this list —
 # plain replication turns hot terms into bucket² artifacts (the same
@@ -300,36 +299,36 @@ RELATIONAL_QUERIES = [
     "sketch_kmv_distinct_users",
     "sketch_cms_heavy_hitters",
     "sketch_quantile_prices",
-    # round-9: ANALYZE-surface stats (11-struct melt over the fact),
+    # ANALYZE-surface stats (11-struct melt over the fact),
     # row-pattern matching (one user_id shuffle + regex scans), and
     # the DP geometric release (bounded group frame)
     "catalog_stats_lineitem",
     "events_pattern_match",
     "privacy_dp_geometric_release",
-    # round-7: theta set-ops — replicas share user_ids, so the sketch
+    # theta set-ops — replicas share user_ids, so the sketch
     # columns must be SCALE-INVARIANT (same 10 rows at any mult) while
     # the scan grows linearly: the bounded-state claim, measured
     "sketch_kmv_set_ops",
-    # round-7: planted 90%-hot-key salted agg — the skew mitigation
+    # planted 90%-hot-key salted agg — the skew mitigation
     # under 40x the hot volume
     "agg_salted_hotkey_planted",
-    # round-7: register-form HLL — replicas share user_ids, so the
+    # register-form HLL — replicas share user_ids, so the
     # 5-number sketch row per type must be SCALE-INVARIANT while the
     # scan grows linearly (the 64-register state bound, measured)
     "sketch_hll_distinct_users",
-    # round-7: its streaming twin — the same 64-register bound held
+    # its streaming twin — the same 64-register bound held
     # through 4 real micro-batches at fixture scale
     "stream_hll_distinct_users",
-    # round-7: skyline — dominance work on the distinct-price frame,
+    # skyline — dominance work on the distinct-price frame,
     # which the replicated fixture holds CONSTANT while parts grow
     "skyline_price_size",
-    # round-7: the zero-shuffle SMB join — the one-time bucketed write
+    # the zero-shuffle SMB join — the one-time bucketed write
     # plus the exchange-free join, timed end to end
     "join_bucketed_smb",
-    # round-7: watermark-finalized LEFT OUTER stream-stream join —
+    # watermark-finalized LEFT OUTER stream-stream join —
     # bounded join state across 4 micro-batches at 16M events
     "stream_left_outer_views",
-    # round-7: AMS F2 — all-integer sign sums; the sketch never
+    # AMS F2 — all-integer sign sums; the sketch never
     # shuffles on the key, so wall should track the scan alone
     "sketch_ams_f2_join_size",
     # streaming twins: the events table replayed through 4 real
@@ -364,17 +363,17 @@ MONEY_QUERIES = [
     # lineitem-only and integer end to end — the exact class the money
     # probe exists for; its B-counter state bound is scale-independent
     "sketch_quantile_prices",
-    # round-7: the planted 90%-hot key at 384M rows (~346M on ONE key)
+    # the planted 90%-hot key at 384M rows (~346M on ONE key)
     # — the skew mitigation's largest octave; integer grid sums, so
     # bit-identical at any scale
     "agg_salted_hotkey_planted",
-    # round-7: theta set-ops — events-only; the 10-row output must be
+    # theta set-ops — events-only; the 10-row output must be
     # byte-stable at 640× while the scan does 640× the work
     "sketch_kmv_set_ops",
-    # round-7: AMS F2 at 384M rows — X_d² approaches the documented
+    # AMS F2 at 384M rows — X_d² approaches the documented
     # ~1e16 envelope bound exactly where the probe should stress it
     "sketch_ams_f2_join_size",
-    # round-7: register-form HLL at 64M events — 64 registers per type
+    # register-form HLL at 64M events — 64 registers per type
     # regardless; the whole sketch row must be byte-stable vs 1×
     "sketch_hll_distinct_users",
 ]
@@ -486,7 +485,7 @@ def run_money(args, out_dir: str) -> None:
 
 def build_relational_fixture(mult: int, out_dir: str) -> None:
     """Fact-side replication with key offsets, dims shared — the
-    round-2 10× recipe, committed: orders/lineitem replicate with
+    first 10× run's recipe, committed: orders/lineitem replicate with
     orderkey += i·10^7 (FK-coherent per replica), events with
     event_id += i·10^6; region/nation/customer/supplier/part are
     copied unscaled (they are dims — broadcast candidates at any SF);
@@ -675,7 +674,7 @@ def main() -> None:
         names = [n for n in names if n in only]
     run_strict = only is None or "strict" in only
 
-    # STRICT-REGIME LSH dedup (round-3 verdict item 4): the registered
+    # STRICT-REGIME LSH dedup: the registered
     # query's 8×8-bit/0.30 regime makes TRUE pairs quadratic on this
     # fixture (~0.8% of ALL pairs qualify by geometry), so its wall can
     # never demonstrate linearity. The production near-dup regime —
